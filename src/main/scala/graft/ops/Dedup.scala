@@ -7,13 +7,15 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators (SURVEY §2 D1/D2), each designed as shuffle-native
-  * DataFrame transforms with no driver-side materialization:
+  * DataFrame transforms; only plan decisions and size-capped relations
+  * touch the driver:
   *
   *   - exact: hash-groupBy keeping the min-tiebreaker row (2-phase agg);
   *   - n-gram Jaccard: token-postings self-join — the classic inverted-index
   *     pair generation; skew-guarded by a document-frequency cap;
   *   - MinHash-LSH: signature → banded bucket join → verified candidates →
-  *     iterative connected components (no collect);
+  *     connected components (driver union-find under a size cap, iterative
+  *     label propagation above it);
   *   - SimHash: 60-bit md5-derived signature, oracle-checkable.
   */
 object Dedup {
@@ -161,16 +163,29 @@ object Dedup {
         raw.join(broadcast(dfreqAll.filter(col("df") > maxDocFreq)), Seq("w"), "left_anti")
           .localCheckpoint(true, ckptLevel(rawPlan)),
         dfreqAll.filter(col("df") <= maxDocFreq))
-    // cost-based strategy choice from one tiny scalar aggregate (vocabulary
-    // count rides the same row — it gates the dfreq broadcast below)
-    val stats = dfreq.agg(sum(col("df") * col("df")).as("df2"), sum(col("df")).as("dfs"),
-      count(lit(1)).as("nw")).head()
-    val fanout = stats.getLong(0).toDouble / math.max(1L, stats.getLong(1))
+    // every plan decision from ONE pass over the vocabulary checkpoint's
+    // rows (sum df², sum df, count of the capped vocabulary; a plain RDD
+    // job, so no aggregate query is compiled per call): the fanout picks
+    // the strategy, the vocabulary count gates the prefix path's dfreq
+    // broadcast, and the posting count (sum of df) bounds the naive path's
+    // doc count, which gates its sizes broadcast. Overflow fails the call,
+    // as the ANSI sum did.
+    val dfAt = dfreqAll.schema.fieldIndex("df")
+    val cap = if (maxDocFreq <= 0) Long.MaxValue else maxDocFreq
+    val Array(df2, dfs, nw) = checkpointRows(dfreqAll).mapPartitions { rows =>
+      var df2, dfs, nw = 0L
+      rows.foreach { r =>
+        val d = r.getLong(dfAt)
+        if (d <= cap) { df2 = Math.addExact(df2, Math.multiplyExact(d, d)); dfs += d; nw += 1 }
+      }
+      Iterator.single(Array(df2, dfs, nw))
+    }.fold(Array(0L, 0L, 0L))((x, y) => Array(Math.addExact(x(0), y(0)), x(1) + y(1), x(2) + y(2)))
+    val fanout = df2.toDouble / math.max(1L, dfs)
     val usePrefix = fanout >= PrefixFanoutThreshold
     System.err.println(
       f"[ngram] expected self-join fanout $fanout%.1f -> ${if (usePrefix) "prefix-filter" else "naive"} path")
-    if (!usePrefix) jaccardFromPosts(posts, threshold)
-    else prefixFromPosts(posts, dfreq, threshold, stats.getLong(2))
+    if (!usePrefix) jaccardFromPosts(posts, threshold, dfs)
+    else prefixFromPosts(posts, dfreq, threshold, nw)
   }
 
   /** Prefix-filtered path (forced) — see [[ngramJaccardPairs]]. */
@@ -268,7 +283,7 @@ object Dedup {
     */
   def ngramJaccardPairsNaive(docs: DataFrame, idCol: String, textCol: String, threshold: Double): DataFrame = {
     val posts = shinglePostings(docs, idCol, textCol)
-    jaccardFromPosts(posts.localCheckpoint(true, ckptLevel(posts)), threshold)
+    jaccardFromPosts(posts.localCheckpoint(true, ckptLevel(posts)), threshold, Long.MaxValue)
   }
 
   /** Docs-count ceiling for broadcasting the per-doc sizes table. Below it
@@ -299,14 +314,18 @@ object Dedup {
     * shingle), and the old shape re-shuffled it through two sort-merge
     * joins; sz is functionally dependent on the doc key, so min() recovers
     * it exactly in the same aggregation that counts the intersection.
+    *
+    * `nPostings` is an upper bound on the postings' row count (a doc has at
+    * least one posting, so it also bounds the doc count).
     */
-  private def jaccardFromPosts(posts: DataFrame, threshold: Double): DataFrame = {
+  private def jaccardFromPosts(posts: DataFrame, threshold: Double, nPostings: Long): DataFrame = {
     val sizes = posts.groupBy("doc").agg(count(lit(1)).as("sz"))
-    // counting the partial-agged sizes is a ~16 B/doc shuffle — cheap price
-    // for knowing whether the 9 GB postings-by-doc shuffle can be skipped
-    val nDocs = sizes.count()
+    // the exact doc count (a ~16 B/doc shuffle — cheap price for knowing
+    // whether the 9 GB postings-by-doc shuffle can be skipped) runs only
+    // when the posting count alone does not settle it
+    val maxDocs = broadcastSizesMaxDocs(posts)
     val postsSz =
-      if (nDocs <= broadcastSizesMaxDocs(posts)) posts.join(broadcast(sizes), "doc")
+      if (nPostings <= maxDocs || sizes.count() <= maxDocs) posts.join(broadcast(sizes), "doc")
       else posts.join(sizes, "doc")
     val inter = postsSz
       .as("a")
@@ -601,20 +620,50 @@ object Dedup {
     * document (most tokens, ties → lowest id) and drops the rest. Returns
     * (comp, doc, n_tokens) of the survivors.
     *
-    * The ranking window partitions by component — clusters are small by
-    * construction (they are near-DUP groups), so no skewed partition; the
-    * docs join is a hash join on doc id.
+    * Components solved on the driver (under the [[duplicateClusters]] cap)
+    * are ranked there too; loop-sized components go through a ranking
+    * window partitioned by component — clusters are small by construction
+    * (they are near-DUP groups), so no skewed partition; the docs join is a
+    * hash join on doc id.
     */
   def keepCanonical(pairs: DataFrame, docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val comp = duplicateClusters(pairs)
-    val sized = comp.join(
-      docs.select(col(idCol).as("doc"), TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens")),
-      "doc")
-    val w = Window.partitionBy(col("comp")).orderBy(col("n_tokens").desc, col("doc"))
-    sized
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") === 1)
-      .select(col("comp"), col("doc"), col("n_tokens"))
+    val sizedDocs =
+      docs.select(col(idCol).as("doc"), TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens"))
+    components(pairs) match {
+      case Right(local) => canonicalOnDriver(local, sizedDocs)
+      case Left(comp) =>
+        val w = Window.partitionBy(col("comp")).orderBy(col("n_tokens").desc, col("doc"))
+        comp.join(sizedDocs, "doc")
+          .withColumn("_rk", row_number().over(w))
+          .filter(col("_rk") === 1)
+          .select(col("comp"), col("doc"), col("n_tokens"))
+    }
+  }
+
+  /** [[keepCanonical]] over driver-side components: only the member docs'
+    * (doc, n_tokens) rows cross to the driver (a broadcast semi join picks
+    * them out of the scan), and the per-component pick — most tokens, nulls
+    * last, ties → lowest id, the window's order — runs there. No shuffle,
+    * no window, and no per-call generated classes beyond the scan's.
+    */
+  private def canonicalOnDriver(local: LocalComponents, sizedDocs: DataFrame): DataFrame = {
+    val spark = sizedDocs.sparkSession
+    import spark.implicits._
+    val sized = sizedDocs.join(broadcast(local.docs.toSeq.toDF("doc")), Seq("doc"), "left_semi")
+      .select(col("doc").cast("long"), col("n_tokens"))
+      .queryExecution.toRdd
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+      .collect()
+    // comp -> (doc, n_tokens) of the best row so far
+    val best = scala.collection.mutable.HashMap.empty[Long, (Long, Option[Long])]
+    for ((doc, n) <- sized) {
+      val c = local.compOf(doc)
+      val better = best.get(c).forall { case (bd, bn) =>
+        if (n != bn) n.exists(x => bn.forall(x > _)) else doc < bd
+      }
+      if (better) best(c) = (doc, n)
+    }
+    best.toSeq.map { case (c, (doc, n)) => (c, doc, n) }.toDF("comp", "doc", "n_tokens")
   }
 
   /** DuckDB mirror of [[keepCanonical]] over the `documents` table. */
@@ -628,19 +677,6 @@ object Dedup {
        |QUALIFY ROW_NUMBER() OVER (PARTITION BY comp ORDER BY n_tokens DESC, doc) = 1
        |ORDER BY comp""".stripMargin
 
-  /** Connected components over dup pairs by iterative min-label propagation —
-    * converges in O(log(diameter)) joins, all distributed (no driver graph).
-    * Returns (doc, component) where component = min doc id in the cluster.
-    *
-    * Checkpointing each iteration truncates lineage so iteration i does not
-    * re-execute the (potentially huge) pair-generation plan i times.
-    * `reliableCheckpoint = true` writes iterations to the SparkContext's
-    * checkpoint directory instead of executor block storage: on a long
-    * many-iteration run over 100 TB, an executor loss then replays from the
-    * last checkpoint file rather than recomputing the whole label chain
-    * (localCheckpoint blocks die with their executor). Requires
-    * `sc.setCheckpointDir` on a fault-tolerant FS.
-    */
   /** Reliable-checkpoint dir of a checkpointed frame (None for local
     * checkpoints — Spark only reports files for reliable ones).
     */
@@ -670,24 +706,140 @@ object Dedup {
     * The width is derived from the measured edge count each run (scale-
     * adaptive, guide §2.2: fewer, larger partitions), clamped to the session
     * width so a genuinely huge edge set still gets the full fan-out.
+    *
+    * The same figure caps the driver path: an edge set that fits in ONE
+    * such partition is collected and solved on the driver instead of
+    * looping (≲ 16 MB of longs at the cap: only half of the symmetric
+    * edges cross).
     */
   private val CcRowsPerPartitionDefault = 2000000L
 
+  /** Connected components over dup pairs (`d1`, `d2`: non-null doc ids).
+    * Returns (doc, comp) for every doc in a pair, where comp = the min doc
+    * id of its component.
+    *
+    * Two paths, chosen from the edge count (the edges are checkpointed and
+    * counted first, so pair generation runs once on either path):
+    *
+    *   - below `spark.graft.cc.rowsPerPartition` edges (one loop
+    *     partition), the edges are collected into primitive long arrays and
+    *     solved by union-find on the driver — exact for any diameter, in
+    *     three Spark jobs (checkpoint, count, collect) where the loop pays a
+    *     checkpoint and a convergence probe per iteration. The count and
+    *     the collect read the checkpointed RDD directly, so the path
+    *     compiles no query code per call. The result is a local relation.
+    *   - at or above it, distributed min-label propagation: each iteration
+    *     moves a label one hop, so a component converges after at most its
+    *     diameter iterations. `maxIter` caps the loop and truncates
+    *     silently: a doc more than `maxIter` hops from its component's min
+    *     id keeps a larger label (a split component).
+    *
+    * Checkpointing each iteration truncates lineage so iteration i does not
+    * re-execute the (potentially huge) pair-generation plan i times.
+    * `reliableCheckpoint = true` writes iterations to the SparkContext's
+    * checkpoint directory instead of executor block storage: on a long
+    * many-iteration run over 100 TB, an executor loss then replays from the
+    * last checkpoint file rather than recomputing the whole label chain
+    * (localCheckpoint blocks die with their executor). Requires
+    * `sc.setCheckpointDir` on a fault-tolerant FS.
+    */
   def duplicateClusters(pairs: DataFrame, maxIter: Int = 10,
-                        reliableCheckpoint: Boolean = false): DataFrame = {
+                        reliableCheckpoint: Boolean = false): DataFrame =
+    components(pairs, maxIter, reliableCheckpoint) match {
+      case Right(local) => local.toDF(pairs.sparkSession)
+      case Left(labels) => labels
+    }
+
+  /** Components of a driver-side [[duplicateClusters]] run: `docs`
+    * ascending, `comps(i)` the component (min doc id) of `docs(i)`.
+    */
+  private final case class LocalComponents(docs: Array[Long], comps: Array[Long]) {
+    def compOf(doc: Long): Long = comps(java.util.Arrays.binarySearch(docs, doc))
+    def toDF(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+      import spark.implicits._
+      docs.indices.map(i => (docs(i), comps(i))).toDF("doc", "comp")
+    }
+  }
+
+  /** The path choice of [[duplicateClusters]]: the pairs' (d1, d2) are
+    * checkpointed once and counted; under the cap the components come back
+    * as [[LocalComponents]], otherwise as the label-propagation frame.
+    */
+  private def components(pairs: DataFrame, maxIter: Int = 10,
+                         reliableCheckpoint: Boolean = false): Either[DataFrame, LocalComponents] = {
     val ck: DataFrame => DataFrame =
       if (reliableCheckpoint) df => df.checkpoint(eager = true)
       else df => df.localCheckpoint(true, ckptLevel(df))
-    val spark = pairs.sparkSession
-    val edges0 = ck(pairs
-      .select(col("d1").as("a"), col("d2").as("b"))
-      .union(pairs.select(col("d2").as("a"), col("d1").as("b"))))
-    // edge count is in hand anyway (the checkpoint is eager); derive the
-    // iteration shuffle width from it instead of the session conf, which is
-    // sized for the corpus-volume pair generation, not this loop
-    val nEdges = edges0.count()
-    val rowsPerPart = spark.conf
+    val ends = ck(pairs.select(col("d1").as("a"), col("d2").as("b")))
+    // every edge is one (a, b) row and its mirror
+    val nEdges = 2 * checkpointRows(ends).count()
+    val rowsPerPart = pairs.sparkSession.conf
       .get("spark.graft.cc.rowsPerPartition", CcRowsPerPartitionDefault.toString).toLong
+    if (nEdges < rowsPerPart) {
+      val comps = componentsOnDriver(ends)
+      dropCheckpoint(ends)
+      Right(comps)
+    } else {
+      // the loop re-checkpoints the symmetric edges partitioned by b and
+      // then drops `ends`' checkpoint
+      val edges0 = ends.union(ends.select(col("b").as("a"), col("a").as("b")))
+      Left(labelPropagation(edges0, nEdges, rowsPerPart, maxIter, ck))
+    }
+  }
+
+  /** The rows of a checkpointed frame, read straight from its checkpointed
+    * RDD: a driver-side count or collect over them plans and compiles no
+    * query.
+    */
+  private[ops] def checkpointRows(df: DataFrame): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      case _ => df.queryExecution.toRdd
+    }
+
+  /** Union-find over a checkpointed (a, b) edge table, on the driver. One
+    * job collects each partition as ONE primitive long array of interleaved
+    * (a, b); doc ids are then sorted into dense indices, and every union
+    * links the larger root under the smaller, so a root is its component's
+    * min index — its min doc id.
+    */
+  private def componentsOnDriver(edges: DataFrame): LocalComponents = {
+    val chunks = checkpointRows(edges).mapPartitions { rows =>
+      val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+      rows.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }
+      Iterator.single(buf.result())
+    }.collect()
+    val ends = Array.concat(chunks.toIndexedSeq: _*)
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    // dedupe in place: ids(0 until n) become the distinct doc ids, ascending
+    var n = 0
+    for (x <- ids) if (n == 0 || ids(n - 1) != x) { ids(n) = x; n += 1 }
+    val parent = Array.tabulate(n)(identity)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < ends.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, 0, n, ends(e)))
+      val rb = find(java.util.Arrays.binarySearch(ids, 0, n, ends(e + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      e += 2
+    }
+    val docs = java.util.Arrays.copyOf(ids, n)
+    LocalComponents(docs, Array.tabulate(n)(i => docs(find(i))))
+  }
+
+  /** The distributed path of [[duplicateClusters]]: iterative min-label
+    * propagation over the checkpointed symmetric edges `edges0`.
+    */
+  private def labelPropagation(edges0: DataFrame, nEdges: Long, rowsPerPart: Long, maxIter: Int,
+                               ck: DataFrame => DataFrame): DataFrame = {
+    val spark = edges0.sparkSession
+    // the iteration shuffle width comes from the edge count, not the
+    // session conf, which is sized for the corpus-volume pair generation
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // floor at the core count (clamped to the session width): a tiny edge
     // set must not serialize the iterations onto one core — measured at 700×
@@ -739,12 +891,6 @@ object Dedup {
         .join(nbrMin, Seq("doc"), "left")
         .select(col("doc"), least(col("comp"), coalesce(col("nbrComp"), col("comp"))).as("comp"))
       val updated = ck(updatedPlan)
-      // plan evidence hook: the eager checkpoint above has executed the
-      // iteration, so the (AQE-final) physical plan of one full iteration is
-      // in hand — printed once, first iteration only
-      if (i == 0 && spark.conf.get("spark.graft.cc.debugPlans", "false").toBoolean)
-        System.err.println("[cc] iteration-1 executed plan:\n" +
-          updatedPlan.queryExecution.executedPlan.toString)
       val newSum = updated.agg(sum(col("comp"))).head().getLong(0)
       converged = newSum == prevSum
       prevSum = newSum

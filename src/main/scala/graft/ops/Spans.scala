@@ -343,7 +343,7 @@ object Spans {
     * a plain min/max aggregate — partial-combines map-side, never plans the
     * two-exchange distinct expansion.
     */
-  private def hotKeyPlan(posts: DataFrame): DataFrame =
+  private[ops] def hotKeyPlan(posts: DataFrame): DataFrame =
     posts
       .groupBy(col("w"))
       .agg(min(col("doc")).as("_mn"), max(col("doc")).as("_mx"))
@@ -361,22 +361,24 @@ object Spans {
     * a boilerplate-dominated corpus whose hot set outgrows the driver
     * degrades to the shuffled-join plan, it never OOMs and never errors.
     */
-  private def hotKeysOrPlan(posts: DataFrame, what: String,
-                            maxKeys: Long = HotBroadcastMaxKeys): Either[DataFrame, Array[Long]] = {
-    // COUNT before collecting (checkpoint so the agg runs once): a
-    // boilerplate-dominated corpus must hit the clean size guard, not OOM
-    // the driver materializing tens of millions of boxed rows first
+  private[ops] def hotKeysOrPlan(posts: DataFrame, what: String,
+                                 maxKeys: Long = HotBroadcastMaxKeys): Either[DataFrame, Array[Long]] = {
+    // checkpoint so the agg runs once, then ONE bounded take of primitive
+    // longs straight from the checkpointed rows (no limit query to compile):
+    // maxKeys + 1 keys tell "fits" from "over the cap", so a
+    // boilerplate-dominated corpus hits the clean size guard instead of
+    // OOMing the driver materializing tens of millions of keys
     val hotPlan0 = hotKeyPlan(posts)
     val hotPlan = hotPlan0.localCheckpoint(true, Dedup.ckptLevel(hotPlan0))
-    val n = hotPlan.count()
-    if (n > maxKeys) {
+    val keys = Dedup.checkpointRows(hotPlan).map(_.getLong(0))
+      .take(math.min(maxKeys + 1, Int.MaxValue.toLong).toInt)
+    if (keys.length > maxKeys) {
       System.err.println(
-        s"[spans] hot-span set for $what has $n keys (> $maxKeys): " +
+        s"[spans] hot-span set for $what has more than $maxKeys keys: " +
           "falling back to the exchange plan (shuffled semi join + window islands)")
       Left(hotPlan)
     } else {
-      System.err.println(s"[spans] hot-span set for $what: $n keys -> map-side islands")
-      val keys = hotPlan.collect().map(_.getLong(0))
+      System.err.println(s"[spans] hot-span set for $what: ${keys.length} keys -> map-side islands")
       java.util.Arrays.sort(keys)
       Right(keys)
     }
@@ -429,7 +431,7 @@ object Spans {
     * with no wall-time gain; doc-major single-domain postings compress
     * better than they cost in a second scan.)
     */
-  private def seedPostings(docs: DataFrame, idCol: String, textCol: String,
+  private[ops] def seedPostings(docs: DataFrame, idCol: String, textCol: String,
                            kSeed: Int, kExt: Int, hexBelow: Int): DataFrame =
     docs
       .select(col(idCol).as("doc"), TextAnalysis.tokens(col(textCol)).as("_toks"))

@@ -252,6 +252,31 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(viaBroadcast.nonEmpty, "corpus should contain at least one rewritten doc")
   }
 
+  test("removeDupSpansVarK: the bounded hot-key collect switches plans exactly at the cap") {
+    // a cap equal to the larger hot set keeps both sets on the broadcast
+    // path; one key less sends the op to the exchange plan. Both must equal
+    // the default run.
+    val corpus = docs.limit(300)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, String)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSet
+    val default = rows(
+      Spans.removeDupSpansVarK(corpus, "doc_id", "text", kSeed = 24, kExt = 8, minRunTokens = 12))
+    def varK(cap: Long) = rows(Spans.removeDupSpansVarK(corpus, "doc_id", "text",
+      kSeed = 24, kExt = 8, minRunTokens = 12, hotBroadcastMaxKeys = cap))
+    val extPosts = Spans.spanPostings(corpus, "doc_id", "text", 8)
+    val seedPosts = Spans.seedPostings(corpus, "doc_id", "text", 24, 8, 8)
+    val nExt = Spans.hotKeyPlan(extPosts).count()
+    val nSeed = Spans.hotKeyPlan(seedPosts).count()
+    val cap = math.max(nExt, nSeed)
+    assert(cap > 0, "corpus should share spans")
+    val big = if (nExt >= nSeed) extPosts else seedPosts
+    assert(Spans.hotKeysOrPlan(big, "at cap", cap).toOption.map(_.length).contains(cap))
+    assert(Spans.hotKeysOrPlan(big, "under cap", cap - 1).isLeft)
+    assert(default.nonEmpty, "corpus should contain at least one rewritten doc")
+    assert(varK(cap) == default)
+    assert(varK(cap - 1) == default)
+  }
+
   test("crossNearDupPairs finds planted batch-vs-corpus near-dups and nothing within a set") {
     import spark.implicits._
     val corpus = docs.filter(size(split($"text", " ")) >= 20)

@@ -80,16 +80,27 @@ class OpsSpec extends AnyFunSuite {
     assert(Seq(10L, 11L).map(comp) == Seq(10L, 10L))
   }
 
+  private def comps(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** `body` with the CC driver-path cap at one edge: every non-empty edge
+    * set takes the label-propagation loop.
+    */
+  private def withForcedCcLoop[T](body: => T): T = {
+    spark.conf.set("spark.graft.cc.rowsPerPartition", "1")
+    try body
+    finally spark.conf.unset("spark.graft.cc.rowsPerPartition")
+  }
+
   test("duplicateClusters with reliable checkpointing matches local-checkpoint result") {
     import spark.implicits._
     val ckDir = java.nio.file.Files.createTempDirectory("ccck").toString
     spark.sparkContext.setCheckpointDir(ckDir)
     val pairs = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (5L, 6L, 1.0), (6L, 7L, 1.0), (7L, 8L, 1.0))
       .toDF("d1", "d2", "jaccard")
-    val local = Dedup.duplicateClusters(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val reliable = Dedup.duplicateClusters(pairs, reliableCheckpoint = true).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (local, reliable) = withForcedCcLoop(
+      (comps(Dedup.duplicateClusters(pairs)),
+        comps(Dedup.duplicateClusters(pairs, reliableCheckpoint = true))))
     assert(reliable == local)
     assert(reliable(3L) == 1L && reliable(8L) == 5L)
     // checkpoint FILES were actually written (executor-loss survivable
@@ -102,6 +113,59 @@ class OpsSpec extends AnyFunSuite {
     }
     assert(rddDirs.nonEmpty, "reliable checkpoint must write to the checkpoint dir")
     assert(rddDirs.length == 1, s"superseded checkpoints must be deleted, found ${rddDirs.map(_.getName)}")
+  }
+
+  test("duplicateClusters: driver union-find equals the forced label-propagation loop") {
+    import spark.implicits._
+    // random graphs whose components have at most 8 docs (diameter ≤ 7, under
+    // the default maxIter = 10, so the loop converges); sparse ids, random
+    // extra edges, some reversed (d1 > d2) and some repeated
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((1 to 2000).map(_.toLong * 37 + rnd.nextInt(37)).distinct).take(300)
+      val groups = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+      var rest = ids
+      while (rest.nonEmpty) {
+        val (g, tail) = rest.splitAt(1 + rnd.nextInt(8))
+        groups += g
+        rest = tail
+      }
+      val pairs = groups.toSeq.filter(_.size > 1).flatMap { g =>
+        val tree = (1 until g.size).map(i => (g(rnd.nextInt(i)), g(i)))
+        val extra = Seq.fill(rnd.nextInt(3))((g(rnd.nextInt(g.size)), g(rnd.nextInt(g.size))))
+        (tree ++ extra).map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
+      }
+      val df = (pairs ++ pairs.take(5)).map { case (a, b) => (a, b, 1.0) }.toDF("d1", "d2", "jaccard")
+      val driver = comps(Dedup.duplicateClusters(df))
+      val loop = withForcedCcLoop(comps(Dedup.duplicateClusters(df)))
+      assert(driver == loop, s"seed $seed")
+      val expected = groups.toSeq.filter(_.size > 1).flatMap(g => g.map(_ -> g.min)).toMap
+      assert(driver == expected, s"seed $seed")
+    }
+  }
+
+  test("duplicateClusters: a 12-doc chain is one component, as in the recursive-CTE oracle") {
+    import spark.implicits._
+    val pairs = (1L to 11L).map(i => (i, i + 1, 1.0)).toDF("d1", "d2", "jaccard")
+    pairs.createOrReplaceTempView("cc_chain_pairs")
+    // the reach/comp part of the DuckDB oracle (Dedup.componentsSqlPrefix).
+    // Spark's recursive CTEs take only UNION ALL, so walks are bounded at 11
+    // hops, the longest shortest path among 12 docs: same reach set.
+    val oracle = comps(spark.sql(
+      """WITH RECURSIVE edges AS (
+        |  SELECT d1 AS a, d2 AS b FROM cc_chain_pairs UNION SELECT d2, d1 FROM cc_chain_pairs
+        |), reach(a, b, hops) AS (
+        |  SELECT a, b, 1 FROM edges
+        |  UNION ALL
+        |  SELECT r.a, e.b, r.hops + 1 FROM reach r JOIN edges e ON r.b = e.a WHERE r.hops < 11
+        |)
+        |SELECT a AS doc, LEAST(a, MIN(b)) AS comp FROM reach GROUP BY a""".stripMargin))
+    assert(oracle == (1L to 12L).map(_ -> 1L).toMap)
+    assert(comps(Dedup.duplicateClusters(pairs)) == oracle)
+    // the loop moves a label one hop per iteration: doc 12 is 11 hops from
+    // doc 1, so maxIter = 10 truncates it at doc 2's label
+    val loop = withForcedCcLoop(comps(Dedup.duplicateClusters(pairs)))
+    assert(loop(12L) == 2L && (1L to 11L).forall(loop(_) == 1L))
   }
 
   test("vec_cosine expression matches built-in computation and is codegen'd") {
@@ -431,6 +495,25 @@ class OpsSpec extends AnyFunSuite {
       val best = members.map(d => (toks(d), -d)).max
       assert((n, -doc) == best, s"component $c kept $doc ($n tokens), expected ${-best._2}")
     }
+  }
+
+  test("keepCanonical: driver-side pick equals the ranking window, ties and null texts included") {
+    import spark.implicits._
+    // component 1: docs 1..4, docs 2 and 3 tie on the max token count (3);
+    // component 10: doc 10 has a null text (null n_tokens ranks last) and
+    // doc 12 is absent from docs; component 20: every member has a null text
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (20L, 21L))
+      .map { case (a, b) => (a, b, 1.0) }.toDF("d1", "d2", "jaccard")
+    val docs = Seq[(Long, String)]((1L, "a b"), (2L, "a b c"), (3L, "x y z"), (4L, "q"),
+      (10L, null), (11L, "one"), (20L, null), (21L, null), (99L, "not in any pair"))
+      .toDF("doc_id", "text")
+    def kept(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Option[Long])] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long]))).toSet
+    val driver = kept(Dedup.keepCanonical(pairs, docs, "doc_id", "text"))
+    val window = withForcedCcLoop(kept(Dedup.keepCanonical(pairs, docs, "doc_id", "text")))
+    assert(driver == window)
+    assert(driver.map(k => (k._1, k._2)) == Set((1L, 2L), (10L, 11L), (20L, 20L)))
+    assert(driver.exists(_ == ((1L, 2L, Some(3L)))) && driver.exists(_ == ((10L, 11L, Some(1L)))))
   }
 
   test("packedBins is invariant to the partition count (distributed prefix sum is exact)") {
