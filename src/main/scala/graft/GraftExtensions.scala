@@ -22,6 +22,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // MIN/MAX/COUNT(*) from 4mc footer zone maps (parquet-style aggregate
     // pushdown); disable with spark.graft.fourmc.aggPushdown=false
     ext.injectOptimizerRule(_ => graft.plans.McAggregatePushdown)
+    // the rewritten aggregate runs on the driver, with no Spark job, while
+    // its file list and the blocks it must decode stay small
+    ext.injectPlannerStrategy(_ => graft.plans.McFooterAggregateStrategy)
     // join-driven 4mc block pruning: broadcast-small build sides inject a
     // RuntimeKeyFilter into the probe scan (the fact-side analog of DPP);
     // disable with spark.graft.fourmc.runtimeKeyFilter.inject=false.

@@ -125,13 +125,12 @@ object McAggregatePushdown extends Rule[LogicalPlan] {
 
   /** One-footer driver probe: does the FIRST data file's stats segment carry
     * v4 dict histograms for `col` on at least half of its value-bearing
-    * blocks?  O(1) per query (not per file), cached on the file's identity;
-    * refusal keeps the vectorized scan — a high-cardinality column would
+    * blocks?  O(1) per query (not per file); the footer comes through the
+    * shared index cache ([[FourMcFileFormat.footerIndex]]), so the probe,
+    * the driver-side aggregate and the tasks read each footer once.
+    * Refusal keeps the vectorized scan — a high-cardinality column would
     * otherwise decode every block through the slower per-line fallback.
     */
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, String), java.lang.Boolean]
-
   private def probeDictCoverage(fsRel: HadoopFsRelation, cols: Seq[Int]): Boolean = {
     try {
       val acceptAny = fsRel.options.get("acceptAnyExtension").exists(_.toBoolean)
@@ -142,58 +141,35 @@ object McAggregatePushdown extends Rule[LogicalPlan] {
           acceptAny || n.endsWith(".4mc") || n.endsWith(".4mz")
         }
         .getOrElse(return false)
-      val key = (status.getPath.toString, status.getLen, status.getModificationTime,
-        cols.mkString(","))
-      val cached = probeCache.get(key)
-      if (cached != null) return cached.booleanValue()
-      if (probeCache.size > 4096) probeCache.clear()
+      val file = org.apache.spark.sql.execution.PartitionedFileUtil.getPartitionedFile(
+        status, status.getPath, org.apache.spark.sql.catalyst.InternalRow.empty, 0, status.getLen)
       val conf = fsRel.sparkSession.sessionState.newHadoopConfWithOptions(fsRel.options)
-      val path = status.getPath
-      val fs = path.getFileSystem(conf) match {
-        case cfs: org.apache.hadoop.fs.ChecksumFileSystem => cfs.getRawFileSystem
-        case other                                        => other
-      }
-      val stream = fs.open(path)
-      val ok =
-        try {
-          val len = status.getLen
-          val in = new graft.format.McInput {
-            def length: Long = len
-            def readFully(pos: Long, buf: Array[Byte], off: Int, n: Int): Unit =
-              stream.readFully(pos, buf, off, n)
-            def close(): Unit = stream.close()
-          }
-          graft.sources.FourMcScanMetrics.footerReads.increment()
-          val idx = graft.format.FourMcReader.readIndex(in)
-          idx.stats match {
-            case Some(st) if st.nCols == fsRel.dataSchema.length =>
-              // single column: v4 per-column histograms on ≥ half the
-              // value-bearing blocks; pair: v5 JOINT histograms on ≥ half
-              // the line-bearing blocks (joints cover nulls too)
-              var covered = 0
-              var withVals = 0
-              var b = 0
-              while (b < st.nBlocks) {
-                if (cols.length == 2) {
-                  if (st.lineCount(b) > 0) {
-                    withVals += 1
-                    if (st.jointAt(b, cols(0), cols(1)) != null) covered += 1
-                  }
-                } else {
-                  val k = b * st.nCols + cols(0)
-                  if (st.lineCount(b) - st.nullCount(k) > 0) {
-                    withVals += 1
-                    if (st.dictCountsAt(k) != null) covered += 1
-                  }
-                }
-                b += 1
+      FourMcFileFormat.footerIndex(file, conf).stats match {
+        case Some(st) if st.nCols == fsRel.dataSchema.length =>
+          // single column: v4 per-column histograms on ≥ half the
+          // value-bearing blocks; pair: v5 JOINT histograms on ≥ half
+          // the line-bearing blocks (joints cover nulls too)
+          var covered = 0
+          var withVals = 0
+          var b = 0
+          while (b < st.nBlocks) {
+            if (cols.length == 2) {
+              if (st.lineCount(b) > 0) {
+                withVals += 1
+                if (st.jointAt(b, cols(0), cols(1)) != null) covered += 1
               }
-              withVals > 0 && covered * 2 >= withVals
-            case _ => false
+            } else {
+              val k = b * st.nCols + cols(0)
+              if (st.lineCount(b) - st.nullCount(k) > 0) {
+                withVals += 1
+                if (st.dictCountsAt(k) != null) covered += 1
+              }
+            }
+            b += 1
           }
-        } finally stream.close()
-      probeCache.put(key, java.lang.Boolean.valueOf(ok))
-      ok
+          withVals > 0 && covered * 2 >= withVals
+        case _ => false
+      }
     } catch { case scala.util.control.NonFatal(_) => false }
   }
 
@@ -519,14 +495,13 @@ object McAggregatePushdown extends Rule[LogicalPlan] {
       if (groups.isEmpty && filterCond.isEmpty && manifestCountEnabled &&
           !fsRel.options.get("acceptAnyExtension").exists(_.toBoolean)) {
         manifestExactCount(fsRel).foreach { total =>
-          val newOut: Seq[NamedExpression] = outs.map {
-            case Agg(al, ReqCnt) =>
-              Alias(Literal(total, LongType), al.name)(exprId = al.exprId,
-                qualifier = al.qualifier, explicitMetadata = Some(al.metadata))
-            case _ => return None
+          val attrs = outs.map {
+            case Agg(al, ReqCnt) => al.toAttribute
+            case _               => return None
           }
-          return Some(org.apache.spark.sql.catalyst.plans.logical.Project(newOut,
-            org.apache.spark.sql.catalyst.plans.logical.OneRowRelation()))
+          // a local relation: collected on the driver with no Spark job
+          return Some(org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+            attrs, Seq(org.apache.spark.sql.catalyst.InternalRow.fromSeq(attrs.map(_ => total)))))
         }
       }
       return None

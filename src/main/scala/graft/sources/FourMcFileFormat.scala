@@ -739,8 +739,12 @@ object FourMcScanMetrics {
   /** Corrupt blocks skipped by permissive scans (ignoreCorruptBlocks). */
   val corruptSkipped = new java.util.concurrent.atomic.LongAdder
   /** Cold footer-index reads (cache misses) — the many-small-files bench
-    * gate asserts this stays ZERO during driver-side planning: footers are
-    * task-side I/O, never on the planning critical path.
+    * gate asserts this stays ZERO while planning a plain scan: footers are
+    * task-side I/O there. The one bounded driver-side exception is a
+    * footer-answered aggregate over at most
+    * [[graft.plans.McFooterAggregateStrategy.MaxFiles]] files
+    * ([[graft.plans.McFooterAggregateExec]]), which reads those footers
+    * while planning, through the same cache.
     */
   val footerReads = new java.util.concurrent.atomic.LongAdder
   /** Rows answered from stats metadata alone (COUNT(*) fast path — no
@@ -933,11 +937,25 @@ object FourMcFileFormat {
     }
   }
 
-  private[sources] def cachedIndex(file: PartitionedFile, in: McInput): FourMcIndex = {
+  private[sources] def cachedIndex(file: PartitionedFile, in: McInput): FourMcIndex =
+    cached(file)(FourMcReader.readIndex(in))
+
+  /** Footer index of one listed file through the same cache, opening the
+    * file only on a miss: the driver-side readers of footers (the dict
+    * coverage probe, the footer-aggregate sweep) share the tasks' cache and
+    * their `footerReads` count.
+    */
+  private[graft] def footerIndex(file: PartitionedFile, conf: Configuration): FourMcIndex =
+    cached(file) {
+      val in = openInput(file, conf)
+      try FourMcReader.readIndex(in) finally in.close()
+    }
+
+  private def cached(file: PartitionedFile)(read: => FourMcIndex): FourMcIndex = {
     if (indexCache.size > 4096) indexCache.clear()
     indexCache.computeIfAbsent(
       (file.urlEncodedPath, file.fileSize, file.modificationTime),
-      _ => { FourMcScanMetrics.footerReads.increment(); FourMcReader.readIndex(in) }
+      _ => { FourMcScanMetrics.footerReads.increment(); read }
     )
   }
 

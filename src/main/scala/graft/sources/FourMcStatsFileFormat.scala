@@ -34,7 +34,11 @@ import org.apache.spark.util.SerializableConfiguration
   * emitted by the split that owns the block header, so any partition of the
   * byte range partitions the aggregate inputs exactly (same ownership rule
   * as [[FourMcFileFormat.ownedLineCount]]). Footer reads stay task-side —
-  * planning this relation lists files only.
+  * planning this relation lists files only — with one bounded exception:
+  * when the file list and the decode load are small,
+  * [[graft.plans.McFooterAggregateExec]] reads the footers while planning
+  * (through the shared index cache) and runs [[reader]] on the driver,
+  * with no Spark job.
   *
   * `preds` (data-column range predicates compiled by the rule) extend the
   * pushdown to FILTERED aggregates (`MIN(ts) WHERE ts >= X`): each owned
@@ -91,19 +95,26 @@ class FourMcStatsFileFormat(
   ): PartitionedFile => Iterator[InternalRow] = {
     val broadcastConf =
       sparkSession.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
-    val delim = CsvPayload.delimiterOf(options.getOrElse("delimiter", "|"))
-    val tsFmt = options.getOrElse("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSS")
-    val acceptAny = options.get("acceptAnyExtension").exists(_.toBoolean)
-    val totalFields = origSchema.length
+    reader(requiredSchema, options, () => broadcastConf.value.value)
+  }
+
+  private def accepts(file: PartitionedFile, options: Map[String, String]): Boolean = {
+    val p = file.toPath.getName
+    options.get("acceptAnyExtension").exists(_.toBoolean) || p.endsWith(".4mc") || p.endsWith(".4mz")
+  }
+
+  /** What one required schema asks of the footers, and the per-block
+    * verdicts that follow from it. Shared by the reader and [[sweep]], so
+    * planning classifies every block exactly as the reader will.
+    */
+  private final class Layout(requiredSchema: StructType) extends Serializable {
+    import FourMcStatsFileFormat.FieldSpec
+    val totalFields: Int = origSchema.length
     val origTags: Array[Int] = origSchema.fields.map(f => CsvPayload.tagOf(f.dataType))
-    val origScale: Array[Int] = origSchema.fields.map(f => CsvPayload.scaleOf(f.dataType))
-    val origPrec: Array[Int] = origSchema.fields.map(f => CsvPayload.precisionOf(f.dataType))
-    val tsMicroDigits = CsvPayload.fixedPatternFracDigits(tsFmt)
 
     // decode the synthetic field names: _min_<i>/_max_<i>/_nn_<i>/_sum_<i>/_cnt,
     // plus (dict-group mode) the GROUP column(s) themselves under their
     // original names
-    final case class FieldSpec(kind: Int, col: Int) // 0=min 1=max 2=cnt 3=non-null cnt 4=sum 5=group value
     val groupNames: Map[String, Int] =
       grpCols.map(c => origSchema.fields(c).name -> c).toMap
     val specs: Array[FieldSpec] = requiredSchema.fields.map { f =>
@@ -118,8 +129,8 @@ class FourMcStatsFileFormat(
           throw new IllegalArgumentException(s"unexpected stats-relation field $other")
       }
     }
-    val groupMode = grpCols.nonEmpty
-    val jointMode = grpCols.length == 2
+    val groupMode: Boolean = grpCols.nonEmpty
+    val jointMode: Boolean = grpCols.length == 2
     val needMin: Set[Int] = specs.filter(_.kind == 0).map(_.col).toSet
     val needMax: Set[Int] = specs.filter(_.kind == 1).map(_.col).toSet
     val needNn: Set[Int] = specs.filter(_.kind == 3).map(_.col).toSet
@@ -140,73 +151,208 @@ class FourMcStatsFileFormat(
     val needsValue: Array[Boolean] = neededCols.map(c =>
       boundsCols.contains(c) || needSum.contains(c) || predCols.contains(c) ||
         groupCols.contains(c))
-    val neededFields = if (neededCols.isEmpty) 0 else neededCols.max + 1
+    val neededFields: Int = if (neededCols.isEmpty) 0 else neededCols.max + 1
     val predArr: Array[FourMcStatsFileFormat.StatsPred] = preds.toArray
 
+    /** Per-FILE effective tags: micros-encoded timestamps carry tag 14 in
+      * this file's stats segment (identity mapping — origTags indexes
+      * data-schema ordinals directly).
+      */
+    def fileTags(index: FourMcIndex): Array[Int] =
+      CsvPayload.fileTags(origTags, Array.tabulate(origTags.length)(identity), index.stats)
+
+    /** Does the segment describe THIS read schema? A file written with a
+      * different column set (text-payload compaction of a csv dir, schema
+      * evolution, mixed-writer dirs) carries a stats segment whose [block ×
+      * col] arrays would MIS-INDEX under this schema's ordinals — silently
+      * wrong bounds, not just a crash. Mismatched files degrade to the
+      * per-line decode branch, value-exact. (The data scan's pruning has the
+      * same guard in McStatsPruning.keepBlocks; this is the aggregate twin.)
+      * int→long type widening (r16) keeps the stats path: int-tagged zone
+      * bounds, null counts, and sums already live in the long domain, so
+      * they answer a LongType read column exactly.
+      */
+    def statsMatch(st: McBlockStats, effTags: Array[Int]): Boolean =
+      st.nCols == totalFields && st.tags.indices.forall { i =>
+        st.tags(i) == effTags(i) ||
+          (st.tags(i) == CsvPayload.TagInt && effTags(i) == CsvPayload.TagLong)
+      }
+
+    /** Can block `b`'s stats answer every requested bound EXACTLY?
+      * (nn-only columns impose no condition: nullCount is stored
+      * exactly for every column whenever the stats segment exists.)
+      */
+    def statsUsable(st: McBlockStats, b: Int, effTags: Array[Int]): Boolean = {
+      if (jointMode) {
+        // two-column dict-group mode: the block must carry a v5 JOINT
+        // histogram for the pair — exact and complete by construction
+        // (Σ entry counts == owned lines, nulls included); blocks
+        // without one (v≤4 files, entry-cap overflow, dict death)
+        // decode instead
+        if (st.lineCount(b) > 0 && st.jointAt(b, grpCols(0), grpCols(1)) == null)
+          return false
+      } else if (groupMode) {
+        // dict-group mode: the block's exact value histogram (v4 dict
+        // counts) must cover the group column — or the block has no
+        // non-null group values at all (only the null-group row, whose
+        // count is the always-exact nullCount)
+        val k = b * st.nCols + grpCols(0)
+        if (st.lineCount(b) - st.nullCount(k) > 0 && st.dictCountsAt(k) == null)
+          return false
+      }
+      var ci = 0
+      while (ci < neededCols.length) {
+        val c = neededCols(ci)
+        val k = b * st.nCols + c
+        val nonNull = st.lineCount(b) - st.nullCount(k)
+        if (isBoundsCol(ci) && nonNull > 0) {
+          if (!st.hasBounds(k)) return false // NaN-poisoned / custom-ts
+          if (effTags(c) == CsvPayload.TagString) {
+            // truncated (inexact) bounds are still answerable EXACTLY
+            // when the block carries a complete value dictionary
+            // (r16): min/max over its ≤32 exact entries
+            val dictless = st.dictAt(k) == null
+            if (needMin.contains(c) && !st.minExact(k) && dictless) return false
+            if (needMax.contains(c) && !st.maxExact(k) && dictless) return false
+          }
+        }
+        // v1 segments carry no sums: decode those blocks instead
+        if (isSumCol(ci) && nonNull > 0 && !st.sumAt(k)) return false
+        ci += 1
+      }
+      true
+    }
+
+    /** Bloom ordinal per equality predicate (−1 when the file has no
+      * bloom for that column): an OpEq conjunct whose key misses the
+      * block's filter proves NO row passes — the block skips entirely,
+      * even where the zone range (domain-spanning on unsorted keys)
+      * cannot refute. `MIN/SUM/COUNT … WHERE key = K` becomes a bloom
+      * sweep + one or two block decodes.
+      */
+    def predBloomOrds(blooms: Option[graft.format.McBlockBlooms]): Array[Int] =
+      predArr.map { p =>
+        if (p.op == FourMcStatsFileFormat.OpEq && !p.isDouble)
+          blooms.map(_.ordOf(p.col)).getOrElse(-1)
+        else -1
+      }
+
+    /** Classify block `b` against the pushed predicates' zone maps (and
+      * blooms for equality conjuncts):
+      * 0 = every row passes (stats row usable as-is), 1 = straddling
+      * (decode + per-line eval), 2 = no row passes (skip the block).
+      */
+    def filterState(st: McBlockStats, b: Int, blooms: Option[graft.format.McBlockBlooms],
+        bloomOrds: Array[Int]): Int = {
+      var all = true
+      var pi = 0
+      while (pi < predArr.length) {
+        val p = predArr(pi)
+        val k = b * st.nCols + p.col
+        val nonNull = st.lineCount(b) - st.nullCount(k)
+        if (nonNull == 0) return 2 // only nulls (or empty): nothing passes
+        if (bloomOrds(pi) >= 0 && !blooms.get.mayContain(b, bloomOrds(pi), p.litL))
+          return 2 // no non-null value equals the key; nulls fail Eq too
+        if (p.op == FourMcStatsFileFormat.OpNotNull) {
+          if (st.nullCount(k) > 0) all = false
+        } else if (!st.hasBounds(k)) {
+          all = false // NaN-poisoned zone: undecidable, decode
+        } else {
+          val isDbl = p.isDouble
+          // stored bits → comparable domain (doubles ride raw bits)
+          val cLo =
+            if (isDbl)
+              java.lang.Double.compare(
+                java.lang.Double.longBitsToDouble(st.minLong(k)), p.litD)
+            else java.lang.Long.compare(st.minLong(k), p.litL)
+          val cHi =
+            if (isDbl)
+              java.lang.Double.compare(
+                java.lang.Double.longBitsToDouble(st.maxLong(k)), p.litD)
+            else java.lang.Long.compare(st.maxLong(k), p.litL)
+          val (allTrue, noneTrue) = (p.op: @scala.annotation.switch) match {
+            case FourMcStatsFileFormat.OpGe => (cLo >= 0, cHi < 0)
+            case FourMcStatsFileFormat.OpGt => (cLo > 0, cHi <= 0)
+            case FourMcStatsFileFormat.OpLe => (cHi <= 0, cLo > 0)
+            case FourMcStatsFileFormat.OpLt => (cHi < 0, cLo >= 0)
+            case FourMcStatsFileFormat.OpEq =>
+              (cLo == 0 && cHi == 0, cLo > 0 || cHi < 0)
+          }
+          if (noneTrue) return 2 // non-null rows all fail; null rows fail too
+          // "all rows pass" additionally needs zero nulls — null fails
+          if (!allTrue || st.nullCount(k) > 0) all = false
+        }
+        pi += 1
+      }
+      if (all) 0 else 1
+    }
+
+    /** Per-block verdict for the owned ordinals [ordStart, ordEnd):
+      * [[FourMcStatsFileFormat.Answered]] from the footer,
+      * [[FourMcStatsFileFormat.Decode]] (straddling the pushed predicates,
+      * or stats that cannot answer exactly) or
+      * [[FourMcStatsFileFormat.Skipped]] (no row passes); 0 elsewhere.
+      */
+    def classify(st: McBlockStats, effTags: Array[Int], blooms: Option[McBlockBlooms],
+        ordStart: Int, ordEnd: Int): Array[Byte] = {
+      val verdict = new Array[Byte](st.nBlocks)
+      val bloomOrds = predBloomOrds(blooms)
+      var b = ordStart
+      while (b < ordEnd) {
+        val fs = if (predArr.isEmpty) 0 else filterState(st, b, blooms, bloomOrds)
+        verdict(b) =
+          if (fs == 2) FourMcStatsFileFormat.Skipped
+          else if (fs == 0 && statsUsable(st, b, effTags)) FourMcStatsFileFormat.Answered
+          else FourMcStatsFileFormat.Decode
+        b += 1
+      }
+      verdict
+    }
+  }
+
+  /** The per-file reader behind [[buildReader]], minus its broadcast:
+    * [[graft.plans.McFooterAggregateExec]] calls it on the driver with the
+    * session's own hadoop conf. Each file's input closes when its rows are
+    * exhausted, when its footer read throws, on `close()` of the returned
+    * iterator (the driver's `finally`), and at task completion inside a
+    * task.
+    */
+  private[graft] def reader(
+      requiredSchema: StructType,
+      options: Map[String, String],
+      conf: () => Configuration
+  ): PartitionedFile => Iterator[InternalRow] = {
+    val delim = CsvPayload.delimiterOf(options.getOrElse("delimiter", "|"))
+    val tsFmt = options.getOrElse("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSS")
+    val origScale: Array[Int] = origSchema.fields.map(f => CsvPayload.scaleOf(f.dataType))
+    val origPrec: Array[Int] = origSchema.fields.map(f => CsvPayload.precisionOf(f.dataType))
+    val tsMicroDigits = CsvPayload.fixedPatternFracDigits(tsFmt)
+    val layout = new Layout(requiredSchema)
+    import layout._
+
     (file: PartitionedFile) => {
-      val p = file.toPath.getName
-      if (!acceptAny && !p.endsWith(".4mc") && !p.endsWith(".4mz")) Iterator.empty
+      if (!accepts(file, options)) Iterator.empty
       else {
-        val conf = broadcastConf.value.value
-        val in = FourMcFileFormat.openInput(file, conf)
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-        val index = FourMcFileFormat.cachedIndex(file, in)
+        val in = FourMcFileFormat.openInput(file, conf())
+        // blocks decoded so far, set by the decode branch below; reported
+        // once, when the input closes
+        var decodedBlocks: () => Long = () => 0L
+        var finished = false
+        def finish(): Unit = if (!finished) {
+          finished = true
+          try FourMcScanMetrics.blocksRead.add(decodedBlocks()) finally in.close()
+        }
+        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => finish()))
+        val index =
+          try FourMcFileFormat.cachedIndex(file, in)
+          catch { case e: Throwable => finish(); throw e }
         val alignedStart = index.nextBlockAt(math.max(file.start, FourMc.HeaderLen.toLong))
         val splitEnd = file.start + file.length
         val alignedEnd =
           if (splitEnd >= index.eosPos) index.eosPos else index.nextBlockAt(splitEnd)
         val ordStart = index.ordAt(alignedStart)
         val ordEnd = index.ordAt(alignedEnd) // exclusive
-        // per-FILE effective tags: micros-encoded timestamps carry tag 14
-        // in this file's stats segment (identity mapping — origTags indexes
-        // data-schema ordinals directly)
-        val effTags = CsvPayload.fileTags(
-          origTags, Array.tabulate(origTags.length)(identity), index.stats)
-
-        /** Can block `b`'s stats answer every requested bound EXACTLY?
-          * (nn-only columns impose no condition: nullCount is stored
-          * exactly for every column whenever the stats segment exists.)
-          */
-        def statsUsable(st: McBlockStats, b: Int): Boolean = {
-          if (jointMode) {
-            // two-column dict-group mode: the block must carry a v5 JOINT
-            // histogram for the pair — exact and complete by construction
-            // (Σ entry counts == owned lines, nulls included); blocks
-            // without one (v≤4 files, entry-cap overflow, dict death)
-            // decode instead
-            if (st.lineCount(b) > 0 && st.jointAt(b, grpCols(0), grpCols(1)) == null)
-              return false
-          } else if (groupMode) {
-            // dict-group mode: the block's exact value histogram (v4 dict
-            // counts) must cover the group column — or the block has no
-            // non-null group values at all (only the null-group row, whose
-            // count is the always-exact nullCount)
-            val k = b * st.nCols + grpCols(0)
-            if (st.lineCount(b) - st.nullCount(k) > 0 && st.dictCountsAt(k) == null)
-              return false
-          }
-          var ci = 0
-          while (ci < neededCols.length) {
-            val c = neededCols(ci)
-            val k = b * st.nCols + c
-            val nonNull = st.lineCount(b) - st.nullCount(k)
-            if (isBoundsCol(ci) && nonNull > 0) {
-              if (!st.hasBounds(k)) return false // NaN-poisoned / custom-ts
-              if (effTags(c) == CsvPayload.TagString) {
-                // truncated (inexact) bounds are still answerable EXACTLY
-                // when the block carries a complete value dictionary
-                // (r16): min/max over its ≤32 exact entries
-                val dictless = st.dictAt(k) == null
-                if (needMin.contains(c) && !st.minExact(k) && dictless) return false
-                if (needMax.contains(c) && !st.maxExact(k) && dictless) return false
-              }
-            }
-            // v1 segments carry no sums: decode those blocks instead
-            if (isSumCol(ci) && nonNull > 0 && !st.sumAt(k)) return false
-            ci += 1
-          }
-          true
-        }
+        val effTags = fileTags(index)
 
         def statBound(st: McBlockStats, b: Int, c: Int, isMax: Boolean): Any = {
           val k = b * st.nCols + c
@@ -477,70 +623,6 @@ class FourMcStatsFileFormat(
           new GenericInternalRow(vals)
         }
 
-        /** Bloom ordinal per equality predicate (−1 when the file has no
-          * bloom for that column): an OpEq conjunct whose key misses the
-          * block's filter proves NO row passes — the block skips entirely,
-          * even where the zone range (domain-spanning on unsorted keys)
-          * cannot refute. `MIN/SUM/COUNT … WHERE key = K` becomes a bloom
-          * sweep + one or two block decodes.
-          */
-        def predBloomOrds(blooms: Option[graft.format.McBlockBlooms]): Array[Int] =
-          predArr.map { p =>
-            if (p.op == FourMcStatsFileFormat.OpEq && !p.isDouble)
-              blooms.map(_.ordOf(p.col)).getOrElse(-1)
-            else -1
-          }
-
-        /** Classify block `b` against the pushed predicates' zone maps (and
-          * blooms for equality conjuncts):
-          * 0 = every row passes (stats row usable as-is), 1 = straddling
-          * (decode + per-line eval), 2 = no row passes (skip the block).
-          */
-        def filterState(st: McBlockStats, b: Int, blooms: Option[graft.format.McBlockBlooms],
-            bloomOrds: Array[Int]): Int = {
-          var all = true
-          var pi = 0
-          while (pi < predArr.length) {
-            val p = predArr(pi)
-            val k = b * st.nCols + p.col
-            val nonNull = st.lineCount(b) - st.nullCount(k)
-            if (nonNull == 0) return 2 // only nulls (or empty): nothing passes
-            if (bloomOrds(pi) >= 0 && !blooms.get.mayContain(b, bloomOrds(pi), p.litL))
-              return 2 // no non-null value equals the key; nulls fail Eq too
-            if (p.op == FourMcStatsFileFormat.OpNotNull) {
-              if (st.nullCount(k) > 0) all = false
-            } else if (!st.hasBounds(k)) {
-              all = false // NaN-poisoned zone: undecidable, decode
-            } else {
-              val isDbl = p.isDouble
-              // stored bits → comparable domain (doubles ride raw bits)
-              val cLo =
-                if (isDbl)
-                  java.lang.Double.compare(
-                    java.lang.Double.longBitsToDouble(st.minLong(k)), p.litD)
-                else java.lang.Long.compare(st.minLong(k), p.litL)
-              val cHi =
-                if (isDbl)
-                  java.lang.Double.compare(
-                    java.lang.Double.longBitsToDouble(st.maxLong(k)), p.litD)
-                else java.lang.Long.compare(st.maxLong(k), p.litL)
-              val (allTrue, noneTrue) = (p.op: @scala.annotation.switch) match {
-                case FourMcStatsFileFormat.OpGe => (cLo >= 0, cHi < 0)
-                case FourMcStatsFileFormat.OpGt => (cLo > 0, cHi <= 0)
-                case FourMcStatsFileFormat.OpLe => (cHi <= 0, cLo > 0)
-                case FourMcStatsFileFormat.OpLt => (cHi < 0, cLo >= 0)
-                case FourMcStatsFileFormat.OpEq =>
-                  (cLo == 0 && cHi == 0, cLo > 0 || cHi < 0)
-              }
-              if (noneTrue) return 2 // non-null rows all fail; null rows fail too
-              // "all rows pass" additionally needs zero nulls — null fails
-              if (!allTrue || st.nullCount(k) > 0) all = false
-            }
-            pi += 1
-          }
-          if (all) 0 else 1
-        }
-
         // Columnar files decode their fallback blocks through the cursor +
         // synthesized lines ([[graft.format.McColumnarLineSynth]]) — the
         // row-layout line iterators would feed multi-stream payloads to the
@@ -550,63 +632,34 @@ class FourMcStatsFileFormat(
           val needed = neededCols.filter(_ < fileCols)
           val cur = new graft.format.McColumnarCursor(in, index, fileCols, needed,
             file.start, splitEnd, keepArr, permissive = false)
-          Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-            FourMcScanMetrics.blocksRead.add(cur.blocksRead)
-          })
+          decodedBlocks = () => cur.blocksRead
           new graft.format.McColumnarLineSynth(
             cur, math.min(totalFields, fileCols), needed, delim)
         }
 
-        index.stats match {
-          // the segment must describe THIS read schema: a file written with
-          // a different column set (text-payload compaction of a csv dir,
-          // schema evolution, mixed-writer dirs) carries a stats segment
-          // whose [block × col] arrays would MIS-INDEX under this schema's
-          // ordinals — silently wrong bounds, not just a crash. Mismatched
-          // files degrade to the per-line decode branch, value-exact.
-          // (The data scan's pruning has the same guard in
-          // McStatsPruning.keepBlocks; this is the aggregate twin.)
-          // int→long type widening (r16) keeps the stats path: int-tagged
-          // zone bounds, null counts, and sums already live in the long
-          // domain, so they answer a LongType read column exactly.
-          case Some(st) if st.nCols == totalFields && st.tags.indices.forall { i =>
-              st.tags(i) == effTags(i) ||
-                (st.tags(i) == CsvPayload.TagInt && effTags(i) == CsvPayload.TagLong)
-            } =>
+        val rows: Iterator[InternalRow] = index.stats match {
+          case Some(st) if statsMatch(st, effTags) =>
             // split blocks into stats-answered, decode-fallback, and (with
             // pushed predicates) refuted sets
-            val keep = new Array[Boolean](index.numBlocks) // true = must decode
-            var statsBlocks = 0
-            var decodeBlocks = 0
-            var skippedBlocks = 0
-            val statsSet = new Array[Boolean](index.numBlocks)
-            val bloomOrds = predBloomOrds(index.blooms)
-            var b = ordStart
-            while (b < ordEnd) {
-              val fs = if (predArr.isEmpty) 0 else filterState(st, b, index.blooms, bloomOrds)
-              if (fs == 2) skippedBlocks += 1
-              else if (fs == 0 && statsUsable(st, b)) { statsSet(b) = true; statsBlocks += 1 }
-              else { keep(b) = true; decodeBlocks += 1 }
-              b += 1
-            }
+            val verdict = classify(st, effTags, index.blooms, ordStart, ordEnd)
+            val keep = verdict.map(_ == FourMcStatsFileFormat.Decode) // true = must decode
+            val statsBlocks = verdict.count(_ == FourMcStatsFileFormat.Answered)
+            val skippedBlocks = verdict.count(_ == FourMcStatsFileFormat.Skipped)
             FourMcScanMetrics.statsAggBlocks.add(statsBlocks)
             if (skippedBlocks > 0) FourMcScanMetrics.blocksSkipped.add(skippedBlocks)
+            def answered = (ordStart until ordEnd).iterator
+              .filter(verdict(_) == FourMcStatsFileFormat.Answered)
             val synthesized: Iterator[InternalRow] =
-              if (jointMode)
-                (ordStart until ordEnd).iterator.filter(statsSet(_)).flatMap(jointRows(st, _))
-              else if (groupMode)
-                (ordStart until ordEnd).iterator.filter(statsSet(_)).flatMap(groupRows(st, _))
-              else
-                (ordStart until ordEnd).iterator.filter(statsSet(_)).map(statsRow(st, _))
+              if (jointMode) answered.flatMap(jointRows(st, _))
+              else if (groupMode) answered.flatMap(groupRows(st, _))
+              else answered.map(statsRow(st, _))
             val decoded: Iterator[InternalRow] =
-              if (decodeBlocks == 0) Iterator.empty
+              if (!keep.contains(true)) Iterator.empty
               else if (st.columnar)
                 columnarLines(keep).map { case (_, bytes) => lineRow(bytes) }.filter(_ != null)
               else {
                 val it = new FourMcPrunedLineIterator(in, index, file.start, splitEnd, keep)
-                Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-                  FourMcScanMetrics.blocksRead.add(it.blocksRead)
-                })
+                decodedBlocks = () => it.blocksRead
                 it.map { case (_, bytes) => lineRow(bytes) }.filter(_ != null)
               }
             synthesized ++ decoded
@@ -619,12 +672,42 @@ class FourMcStatsFileFormat(
             // stats-less or schema-mismatched file: decode every owned line
             // (predicates, if any, evaluate per line)
             val it = new FourMcLineIterator(in, index, file.start, splitEnd, permissive = false)
-            Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-              FourMcScanMetrics.blocksRead.add(ordEnd - ordStart)
-            })
+            decodedBlocks = () => (ordEnd - ordStart).toLong
             it.map { case (_, bytes) => lineRow(bytes) }.filter(_ != null)
         }
+        org.apache.spark.sql.graftbridge.PlanBridge.completionIterator(rows)(finish())
       }
+    }
+  }
+
+  /** Planning-time census of whole files, for
+    * [[graft.plans.McFooterAggregateExec]]'s bounds: blocks answered from
+    * the footers, decoded and skipped, and the stored bytes of the decoded
+    * ones — the verdicts [[reader]] reaches on the same files.
+    */
+  private[graft] def sweep(
+      files: Seq[PartitionedFile],
+      indexOf: PartitionedFile => FourMcIndex,
+      requiredSchema: StructType,
+      options: Map[String, String]): FourMcStatsFileFormat.Sweep = {
+    val layout = new Layout(requiredSchema)
+    files.filter(accepts(_, options)).foldLeft(FourMcStatsFileFormat.Sweep()) { (acc, file) =>
+      val index = indexOf(file)
+      val n = index.numBlocks
+      def bytes(b: Int): Long =
+        (if (b + 1 < n) index.blockOffsets(b + 1) else index.eosPos) - index.blockOffsets(b)
+      val effTags = layout.fileTags(index)
+      val verdict = index.stats match {
+        case Some(st) if layout.statsMatch(st, effTags) =>
+          layout.classify(st, effTags, index.blooms, 0, n)
+        case _ => Array.fill(n)(FourMcStatsFileFormat.Decode)
+      }
+      val decoded = (0 until n).filter(verdict(_) == FourMcStatsFileFormat.Decode)
+      acc.copy(
+        answered = acc.answered + verdict.count(_ == FourMcStatsFileFormat.Answered),
+        decoded = acc.decoded + decoded.length,
+        skipped = acc.skipped + verdict.count(_ == FourMcStatsFileFormat.Skipped),
+        decodedBytes = acc.decodedBytes + decoded.map(bytes).sum)
     }
   }
 }
@@ -645,6 +728,18 @@ object FourMcStatsFileFormat {
     * else (long/int/timestamp/boolean) via `litL`.
     */
   final case class StatsPred(col: Int, op: Int, isDouble: Boolean, litL: Long, litD: Double)
+
+  /** One relation field: kind 0=min 1=max 2=cnt 3=non-null cnt 4=sum 5=group value. */
+  private[sources] final case class FieldSpec(kind: Int, col: Int)
+
+  // per-block verdicts of Layout.classify (0 = block outside the split)
+  private[sources] final val Answered: Byte = 1
+  private[sources] final val Decode: Byte = 2
+  private[sources] final val Skipped: Byte = 3
+
+  /** Block census of a set of whole files (see `sweep`). */
+  final case class Sweep(
+      answered: Long = 0, decoded: Long = 0, skipped: Long = 0, decodedBytes: Long = 0)
 
   /** Synthetic schema for the rule: bounds for each (colIdx, needMin,
     * needMax) target, a `_nn_<i>` per-block non-null count for each

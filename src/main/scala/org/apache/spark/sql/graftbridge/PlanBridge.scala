@@ -12,4 +12,24 @@ object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Spark's `CompletionIterator` (`private[spark]`) over `rows`, running
+    * `done` when they are exhausted; `close()` runs it too, for a consumer
+    * outside a task that stops early or fails (inside a task a completion
+    * listener does that), so `done` must be safe to run twice.
+    */
+  def completionIterator[A](rows: Iterator[A])(done: => Unit): Iterator[A] with java.io.Closeable =
+    new org.apache.spark.util.CompletionIterator[A, Iterator[A]](rows) with java.io.Closeable {
+      def completion(): Unit = done
+      def close(): Unit = done
+    }
+
+  /** The error a file scan task raises for a file it cannot read
+    * (`QueryExecutionErrors` is `private[sql]`).
+    */
+  def cannotReadFile(path: String, e: Throwable): Throwable = e match {
+    case missing: java.io.FileNotFoundException =>
+      org.apache.spark.sql.errors.QueryExecutionErrors.fileNotExistError(path, missing)
+    case _ => org.apache.spark.sql.errors.QueryExecutionErrors.cannotReadFilesError(e, path)
+  }
 }

@@ -998,4 +998,297 @@ class McAggPushdownSpec extends AnyFunSuite {
     assert(FourMcScanMetrics.blocksRead.sum() > 0L,
       "overflow-poisoned blocks must decode (no stored sum)")
   }
+
+  // ---- driver-side footer aggregates (McFooterAggregateExec): the driver
+  // node, the forced job plan and the plain scan agree ----
+
+  private def driverNodes(df: DataFrame): Int =
+    df.queryExecution.executedPlan.collect { case n: McFooterAggregateExec => n }.length
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    spark.conf.set(key, value)
+    try body finally spark.conf.unset(key)
+  }
+
+  /** Under `ignoreMissingFiles` the driver node declines and Spark plans
+    * the stats job; on files that stay put the setting changes nothing else.
+    */
+  private def onJobPlan[T](body: => T): T =
+    withConf("spark.sql.files.ignoreMissingFiles", "true")(body)
+
+  /** Runs one footer-answered shape three ways — the driver node, the job
+    * plan, and the plain scan — and asserts equal rows and zero Spark jobs
+    * on the driver node. Returns the driver node's plan string.
+    */
+  private def threeWays(label: String)(q: => DataFrame): String = {
+    val plan = q.queryExecution.executedPlan.toString
+    assert(driverNodes(q) == 1, s"$label: expected the driver node:\n$plan")
+    def blockCounts = Seq(FourMcScanMetrics.statsAggBlocks, FourMcScanMetrics.blocksRead,
+      FourMcScanMetrics.blocksSkipped).map(_.sum())
+    var driver = Seq.empty[String]
+    FourMcScanMetrics.reset()
+    val jobs = graft.JobCount.jobsOf(spark) { driver = sortedRows(q) }
+    assert(jobs == 0, s"$label: the driver node must run no Spark job, ran $jobs")
+    val driverBlocks = blockCounts
+    val forced = onJobPlan {
+      val plan = q.queryExecution.executedPlan.toString
+      assert(driverNodes(q) == 0 && plan.contains("4MC-STATS"),
+        s"$label: ignoreMissingFiles must keep the stats job plan:\n$plan")
+      FourMcScanMetrics.reset()
+      val rows = sortedRows(q)
+      assert(blockCounts == driverBlocks,
+        s"$label: stats/read/skipped blocks $driverBlocks on the driver, $blockCounts in tasks")
+      rows
+    }
+    val scanned = withConf("spark.graft.fourmc.aggPushdown", "false") {
+      assert(!q.queryExecution.executedPlan.toString.contains("4MC-STATS"))
+      sortedRows(q)
+    }
+    assert(driver == forced, s"$label: driver $driver != job plan $forced")
+    assert(driver == scanned, s"$label: driver $driver != plain scan $scanned")
+    plan
+  }
+
+  test("driver-side footer aggregates equal the job plan and the plain scan, with zero jobs") {
+    val sample = tmpDir()
+    writeSample(sample)
+    val plan = threeWays("global min/max/count")(theAgg(scan(sample)))
+    assert(plan.contains("McFooterAggregate 4MC-STATS driver sweep: files=") &&
+      plan.contains("blocks from stats=") && plan.contains("blocks decoded="),
+      s"the driver node must show its decision:\n$plan")
+
+    val sums = tmpDir()
+    writeSumSample(sums)
+    threeWays("sum long/int/double")(sumScan(sums).agg(sum(col("k")).as("sk"),
+      sum(col("i")).as("si"), sum(col("v")).as("sv"), count(col("v")).as("nv"),
+      count(lit(1)).as("n")))
+    threeWays("avg double")(sumScan(sums).agg(avg(col("v")).as("av"), count(lit(1)).as("n")))
+
+    val decimals = tmpDir()
+    val dSchema = StructType(Seq(StructField("k", LongType), StructField("m", DecimalType(12, 2))))
+    val dRows = (1 to 3000).map { i =>
+      org.apache.spark.sql.Row(i.toLong,
+        if (i % 13 == 2) null else java.math.BigDecimal.valueOf(i.toLong * 104729L - 5000000L, 2))
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(dRows, 1), dSchema)
+      .write.format("4mc").option("payload", "csv")
+      .option("blockBytes", (16 * 1024).toString).mode("overwrite").save(decimals)
+    threeWays("sum decimal")(spark.read.format("4mc").option("payload", "csv").schema(dSchema)
+      .load(decimals).agg(sum(col("m")).as("sm"), count(col("m")).as("nm")))
+
+    import spark.implicits._
+    val sorted = tmpDir()
+    (1 to 40000).map(i => (i.toLong, i / 3.0)).toDF("k", "v")
+      .coalesce(1).sortWithinPartitions("k")
+      .write.format("4mc").option("payload", "csv")
+      .option("blockBytes", (16 * 1024).toString).mode("overwrite").save(sorted)
+    val sortedSchema = StructType(Seq(StructField("k", LongType), StructField("v", DoubleType)))
+    def straddled = spark.read.format("4mc").option("payload", "csv").schema(sortedSchema)
+      .load(sorted).filter(col("k") >= 30000L && col("k") < 35000L)
+      .agg(sum(col("k")).as("sk"), min(col("v")).as("mn"), count(lit(1)).as("n"))
+    val straddlePlan = threeWays("filtered with straddlers")(straddled)
+    assert(!straddlePlan.contains("blocks decoded=0 "),
+      s"the range edges must decode straddling blocks:\n$straddlePlan")
+
+    val parts = tmpDir()
+    writePartitioned(parts)
+    threeWays("partition-grouped")(partScan(parts).groupBy(col("p")).agg(
+      min(col("k")).as("mn"), max(col("k")).as("mx"), count(col("s")).as("n_s"),
+      sum(col("k")).as("sk")))
+    threeWays("partition-filtered")(partScan(parts).filter(col("p") =!= "part3")
+      .agg(min(col("k")).as("mn"), count(lit(1)).as("n")))
+
+    val grouped = tmpDir()
+    writeGrouped(grouped)
+    threeWays("one-column dict group")(gScan(grouped).groupBy("g").agg(count(lit(1)).as("n"),
+      count(col("g")).as("nn"), min(col("g")).as("mn"), max(col("g")).as("mx")))
+    val grouped2 = tmpDir()
+    writeGrouped2(grouped2)
+    threeWays("two-column dict group")(g2Scan(grouped2).groupBy("g1", "g2")
+      .agg(count(lit(1)).as("n"), count(col("g1")).as("nn1")))
+  }
+
+  test("the driver node reads each footer once, compiles nothing, and counts the scan layer") {
+    import spark.implicits._
+    val dir = tmpDir()
+    (1 to 5000).map(i => (i.toLong, if (i % 11 == 0) null else s"g${i % 5}", i / 7.0))
+      .toDF("k", "g", "v").repartition(3)
+      .write.format("4mc").option("payload", "csv")
+      .option("blockBytes", (16 * 1024).toString).mode("overwrite").save(dir)
+    def q = gScan(dir).groupBy("g").agg(count(lit(1)).as("n"), max(col("g")).as("mx"))
+    // the dict probe, the planning sweep and the reader share one cache:
+    // a fresh directory costs one footer read per file, not one more
+    FourMcScanMetrics.reset()
+    val df = q
+    assert(driverNodes(df) == 1)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val rows = df.queryExecution.executedPlan.executeCollect()
+    assert(org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "the driver node must fold with interpreted projections")
+    assert(rows.length == 6)
+    assert(FourMcScanMetrics.footerReads.sum() == 3L,
+      s"one footer read per file, read ${FourMcScanMetrics.footerReads.sum()}")
+    assert(FourMcScanMetrics.statsAggBlocks.sum() > 0L && FourMcScanMetrics.blocksRead.sum() == 0L)
+  }
+
+  test("DISTINCT aggregates, long file lists and heavy decode loads keep the job plan") {
+    val grouped = tmpDir()
+    writeGrouped(grouped)
+    def distinct = gScan(grouped).agg(countDistinct(col("g")).as("d"), count(lit(1)).as("n"))
+    assert(distinct.queryExecution.executedPlan.toString.contains("4MC-STATS"))
+    assert(driverNodes(distinct) == 0, "COUNT(DISTINCT) must keep the job plan")
+    var got = Seq.empty[String]
+    assert(graft.JobCount.jobsOf(spark) { got = sortedRows(distinct) } > 0)
+    assert(got == withConf("spark.graft.fourmc.aggPushdown", "false")(sortedRows(distinct)))
+
+    // one file past the driver node's file bound
+    import spark.implicits._
+    val many = tmpDir()
+    val nFiles = McFooterAggregateStrategy.MaxFiles + 1
+    (1 to 4000).map(i => (i.toLong, s"str${i % 97}", i / 7.0,
+      java.sql.Timestamp.valueOf("2024-01-01 10:00:00"))).toDF("k", "s", "v", "t")
+      .repartition(nFiles).write.format("4mc").option("payload", "csv").mode("overwrite").save(many)
+    assert(new java.io.File(many).listFiles.count(_.getName.endsWith(".4mc")) == nFiles)
+    def wide = theAgg(scan(many))
+    assert(wide.queryExecution.executedPlan.toString.contains("4MC-STATS"))
+    assert(driverNodes(wide) == 0, s"$nFiles files must keep the job plan")
+    assert(wide.collect().toSeq ==
+      withConf("spark.graft.fourmc.aggPushdown", "false")(theAgg(scan(many)).collect().toSeq))
+
+    // random `v`: every block straddles `v > 500`, so the query decodes the
+    // whole stored size, past the byte bound
+    val heavy = tmpDir()
+    spark.range(0, 160000, 1, 2).select(col("id").as("k"), (rand(5) * 1000).as("v"))
+      .write.format("4mc").option("payload", "csv").save(heavy)
+    val stored = new java.io.File(heavy).listFiles.filter(_.getName.endsWith(".4mc")).map(_.length).sum
+    assert(stored > McFooterAggregateStrategy.MaxDecodedBytes, s"fixture too small: $stored B")
+    assert(kvQuery(heavy).queryExecution.executedPlan.toString.contains("4MC-STATS"))
+    assert(driverNodes(kvQuery(heavy)) == 0, "a decode load over the bound must keep the job plan")
+    assert(sortedRows(kvQuery(heavy)) ==
+      withConf("spark.graft.fourmc.aggPushdown", "false")(sortedRows(kvQuery(heavy))))
+  }
+
+  test("concurrent footer-answered queries on one session each get their own answer") {
+    val a = tmpDir()
+    writeSample(a)
+    val b = tmpDir()
+    writeSumSample(b)
+    def qa = theAgg(scan(a))
+    def qb = sumScan(b).agg(sum(col("k")).as("sk"), count(col("v")).as("nv"))
+    assert(driverNodes(qa) == 1 && driverNodes(qb) == 1)
+    val (wantA, wantB) = (qa.collect().toSeq, qb.collect().toSeq)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val futures = (0 until 16).map { i =>
+        pool.submit(new java.util.concurrent.Callable[Boolean] {
+          def call(): Boolean =
+            if (i % 2 == 0) qa.collect().toSeq == wantA else qb.collect().toSeq == wantB
+        })
+      }
+      assert(futures.forall(_.get()), "every concurrent query must see its own answer")
+    } finally pool.shutdown()
+  }
+
+  /** Two single-file writes of random `v`: `v > 500` straddles every
+    * block, so the query decodes them all, and a bad first block costs its
+    * file every row on each path that skips the file.
+    */
+  private def twoRandomFiles(): (String, Seq[java.io.File]) = {
+    import spark.implicits._
+    val dir = tmpDir()
+    val rnd = new scala.util.Random(11)
+    for ((from, mode) <- Seq(1 -> "overwrite", 3001 -> "append"))
+      (from until from + 3000).map(i => (i.toLong, rnd.nextDouble() * 1000)).toDF("k", "v")
+        .coalesce(1).write.format("4mc").option("payload", "csv")
+        .option("blockBytes", (16 * 1024).toString).mode(mode).save(dir)
+    val files = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".4mc")).sortBy(_.getName)
+    assert(files.length == 2)
+    (dir, files.toSeq)
+  }
+
+  private val kvSchema = StructType(Seq(StructField("k", LongType), StructField("v", DoubleType)))
+
+  private def kvQuery(path: String): DataFrame =
+    spark.read.format("4mc").option("payload", "csv").schema(kvSchema).load(path)
+      .filter(col("v") > 500.0).agg(count(lit(1)).as("n"), sum(col("k")).as("sk"))
+
+  private def causes(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.toString).mkString(" | ")
+
+  private def rootCause(e: Throwable): Throwable =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
+
+  test("a corrupt straddling block fails the driver node as it fails the job; " +
+      "ignoreCorruptFiles keeps the job plan") {
+    val (dir, files) = twoRandomFiles()
+    val bad = files.head.toPath
+    val idx = {
+      val in = graft.format.McInput.local(bad)
+      try graft.format.FourMcReader.readIndex(in) finally in.close()
+    }
+    val raf = new java.io.RandomAccessFile(bad.toFile, "rw")
+    try {
+      val at = idx.blockOffsets(0) + 12 + 3
+      raf.seek(at); val b = raf.read(); raf.seek(at); raf.write(b ^ 0x10)
+    } finally raf.close()
+
+    def q = kvQuery(dir)
+    assert(driverNodes(q) == 1, "a small decode load plans the driver node")
+    val onDriver = intercept[org.apache.spark.SparkException](q.collect())
+    val onJob = onJobPlan {
+      assert(driverNodes(q) == 0)
+      intercept[org.apache.spark.SparkException](q.collect())
+    }
+    for ((path, e) <- Seq("driver" -> onDriver, "job" -> onJob))
+      assert(causes(e).contains("FAILED_READ_FILE.NO_HINT"), s"$path: ${causes(e).take(400)}")
+    assert(rootCause(onDriver).toString == rootCause(onJob).toString)
+
+    withConf("spark.sql.files.ignoreCorruptFiles", "true") {
+      assert(driverNodes(q) == 0, "ignoreCorruptFiles must keep the job plan")
+      val clean = withConf("spark.graft.fourmc.aggPushdown", "false")(
+        sortedRows(kvQuery(files(1).getPath)))
+      assert(sortedRows(q) == clean, "the corrupt file is skipped from its first block")
+    }
+  }
+
+  test("a file deleted after planning fails the driver node as it fails the job; " +
+      "ignoreMissingFiles keeps the job plan") {
+    val (dir, files) = twoRandomFiles()
+    val onDriver = kvQuery(dir)
+    assert(driverNodes(onDriver) == 1)
+    val onScan = withConf("spark.graft.fourmc.aggPushdown", "false") {
+      val df = kvQuery(dir)
+      df.queryExecution.executedPlan
+      df
+    }
+    val (skipping, clean) = onJobPlan {
+      val df = kvQuery(dir)
+      assert(driverNodes(df) == 0, "ignoreMissingFiles must keep the job plan")
+      (df, withConf("spark.graft.fourmc.aggPushdown", "false")(
+        sortedRows(kvQuery(files(1).getPath))))
+    }
+    assert(files.head.delete())
+    for ((path, df) <- Seq("driver" -> onDriver, "plain scan" -> onScan)) {
+      val e = intercept[org.apache.spark.SparkException](df.collect())
+      assert(causes(e).contains("FAILED_READ_FILE.FILE_NOT_EXIST") &&
+        rootCause(e).isInstanceOf[java.io.FileNotFoundException], s"$path: ${causes(e).take(400)}")
+    }
+    onJobPlan(assert(sortedRows(skipping) == clean, "the deleted file is skipped"))
+  }
+
+  test("a manifest-covered COUNT(*) is a local relation: zero Spark jobs") {
+    import spark.implicits._
+    val dir = tmpDir()
+    (1 to 3000).map(i => (i.toLong, s"s${i % 7}", i / 7.0,
+      java.sql.Timestamp.valueOf("2024-01-01 10:00:00"))).toDF("k", "s", "v", "t")
+      .repartition(3).write.format("4mc").option("payload", "csv")
+      .option("manifest", "true").mode("overwrite").save(dir)
+    def q = scan(dir).agg(count(lit(1)).as("n"))
+    assert(q.queryExecution.executedPlan.collect {
+      case l: org.apache.spark.sql.execution.LocalTableScanExec => l
+    }.length == 1, q.queryExecution.executedPlan.toString)
+    var n = -1L
+    assert(graft.JobCount.jobsOf(spark) { n = q.collect().head.getLong(0) } == 0)
+    assert(n == 3000L)
+  }
 }

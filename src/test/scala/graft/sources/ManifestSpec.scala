@@ -168,7 +168,7 @@ class ManifestSpec extends AnyFunSuite {
     graft.format.McManifest.write(dir, hconf)
     def q() = scan(dir).agg(count(lit(1)).as("n"))
     // numFilesRead returns -1 when NO file scan exists in the plan — the
-    // count came from the manifest via Project(literal, OneRowRelation)
+    // count came from the manifest as a local relation
     assert(q().collect().head.getLong(0) == 20000L)
     assert(numFilesRead(q()) == -1L,
       "covered count must plan with no file scan at all")
