@@ -415,9 +415,8 @@ object Bench {
     // 1M-row signature/embedding fixture (16-long sig + 64-float emb per
     // row): element-mass aggregate over (a) the vectorized 4mc array scan,
     // (b) its parquet twin — A/B-interleaved median-of-5 (the r11 twin
-    // protocol) — plus the row-reader ratio and the on-disk byte ratio
-    // (text-encoded floats cost bytes; the gate keeps that trade-off
-    // visible). SPARK_GRAFT_ARRAYS=0 skips.
+    // protocol) — plus the on-disk byte ratio (text-encoded floats cost
+    // bytes; the gate keeps that trade-off visible). SPARK_GRAFT_ARRAYS=0 skips.
     val arraysGate: Option[String] =
       if (sys.env.get("SPARK_GRAFT_ARRAYS").contains("0")) None
       else try {
@@ -455,15 +454,10 @@ object Bench {
         val samples = (1 to 5).map(_ => (time(mcScan()), time(pqScan())))
         val mcSecs = median(samples.map(_._1))
         val pqSecs = median(samples.map(_._2))
-        val rowSecs = {
-          spark.conf.set("spark.graft.fourmc.vectorized", "false")
-          try { mcScan(); median((1 to 3).map(_ => time(mcScan()))) }
-          finally spark.conf.unset("spark.graft.fourmc.vectorized")
-        }
         def dirBytes(d: java.io.File): Long =
           d.listFiles().filter(f => !f.getName.startsWith("_")).map(_.length).sum
         Some(
-          f"""{"rows":$n,"mc_bytes":${dirBytes(mcDir)},"pq_bytes":${dirBytes(pqDir)},"array_scan_secs":$mcSecs%.3f,"array_scan_parquet_secs":$pqSecs%.3f,"array_twin_ratio":${mcSecs / math.max(pqSecs, 1e-9)}%.2f,"array_row_reader_secs":$rowSecs%.3f,"array_vec_speedup":${rowSecs / math.max(mcSecs, 1e-9)}%.2f}""")
+          f"""{"rows":$n,"mc_bytes":${dirBytes(mcDir)},"pq_bytes":${dirBytes(pqDir)},"array_scan_secs":$mcSecs%.3f,"array_scan_parquet_secs":$pqSecs%.3f,"array_twin_ratio":${mcSecs / math.max(pqSecs, 1e-9)}%.2f}""")
       } catch {
         case e: Exception =>
           System.err.println(s"[bench] arrays gate failed: ${e.getMessage}")

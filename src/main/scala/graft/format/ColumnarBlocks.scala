@@ -285,16 +285,16 @@ object ColumnarBlocks {
   }
 }
 
-/** Row-path adapter: presents a columnar file as an [[McLineStream]] by
+/** Line adapter: presents a columnar file as an [[McLineStream]] by
   * SYNTHESIZING one delimited line per row — needed columns' stored bytes
   * (already escaped) at their field positions, every other field empty.
-  * The csv row parser only ever slices the fields it projects, and empty
+  * A csv line parser only ever slices the fields it projects, and empty
   * fields parse exactly like the row layout's missing trailing fields, so
   * the synthesized line is indistinguishable from a real one FOR THE
-  * PROJECTION AT HAND. This keeps the non-vectorized reader (maps,
-  * `_metadata`, vectorized=false) at one parse implementation; the
-  * vectorized path reads the column streams directly and never pays the
-  * synthesis copy.
+  * PROJECTION AT HAND. This keeps the straddling-block decode of the
+  * aggregate-pushdown relation ([[graft.sources.FourMcStatsFileFormat]])
+  * at one parse implementation for both layouts; the scan reader reads the
+  * column streams directly and never pays the synthesis copy.
   *
   * @param lineFields number of fields to emit per line (min(read-schema
   *   width, file width) — the parser's boundary scan is bounded by the read
@@ -438,7 +438,7 @@ final class McColumnarCursor(
 
   /** Dict view of needed-column `j`'s current stream, or null when the
     * stream is plain (vectorized readers use it for the dictionary-id
-    * lane; [[valStart]]/[[valEnd]] already resolve through it, so row-path
+    * lane; [[valStart]]/[[valEnd]] already resolve through it, so other
     * consumers never need to look).
     */
   def dictOf(j: Int): ColumnarBlocks.DictStream = colDict(j)

@@ -62,448 +62,6 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
       path: Path
   ): Boolean = true
 
-  override def buildReader(
-      sparkSession: SparkSession,
-      dataSchema: StructType,
-      partitionSchema: StructType,
-      requiredSchema: StructType,
-      filters: Seq[Filter],
-      options: Map[String, String],
-      hadoopConf: Configuration
-  ): PartitionedFile => Iterator[InternalRow] = {
-    val broadcastConf = sparkSession.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
-    val payload = options.getOrElse("payload", "text")
-    val binary = payload == "binary"
-    // Reference semantics (FourMcInputFormatUtil.java:50-62): only
-    // .4mc/.4mz files are container data; anything else in the directory is
-    // skipped rather than failing the scan. option("acceptAnyExtension",
-    // true) reads every listed file regardless of name.
-    val acceptAny = options.get("acceptAnyExtension").exists(_.toBoolean)
-    def extOk(file: PartitionedFile): Boolean = {
-      if (acceptAny) true
-      else {
-        val p = file.toPath.getName
-        p.endsWith(".4mc") || p.endsWith(".4mz")
-      }
-    }
-    // option("ignoreCorruptBlocks", true): the block-granular analog of
-    // spark.sql.files.ignoreCorruptFiles. A failed block (checksum,
-    // structure, codec) is skipped by resyncing to the FOOTER INDEX's next
-    // boundary — the self-describing index is what makes recovery precise —
-    // and only the lines touching the corruption are lost (never
-    // duplicated: ownership semantics are unchanged, so other splits still
-    // skip their first partial line). At 100 TB a single flipped bit must
-    // cost one block's lines, not the job. Text/csv payloads only; counted
-    // in FourMcScanMetrics.corruptSkipped.
-    val permissive = options.get("ignoreCorruptBlocks").exists(_.toBoolean)
-
-    if (payload == "csv") {
-      // typed delimited parse INSIDE the reader: only the required columns
-      // are converted (projection pushdown into the parse), the rest of each
-      // line is skipped byte-wise — the roundtrip fast path
-      val delim = CsvPayload.delimiterOf(options.getOrElse("delimiter", "|"))
-      val tsFmt = options.getOrElse("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSS")
-      val fieldIdx = requiredSchema.fields.map(f => dataSchema.fieldIndex(f.name))
-      val fieldTypes = requiredSchema.fields.map(_.dataType)
-      val nFields = requiredSchema.length
-      val totalFields = dataSchema.length
-      // Precompiled parse tags: the hot loop dispatches on an Int jump table
-      // instead of re-matching DataType case objects per value.
-      val fieldTags: Array[Int] = fieldTypes.map(CsvPayload.tagOf)
-      require(!fieldTags.contains(CsvPayload.TagArrInt),
-        "csv payload stores array<int> widened to array<long>; declare array<long> in the read schema")
-      // Boundary scan can stop after the last REQUIRED field: a projection of
-      // the first k columns never walks the tail of the line.
-      val neededFields = if (fieldIdx.isEmpty) 0 else fieldIdx.max + 1
-      // ... and popcount-skip the delimiters BELOW the first required field
-      // (see the sparse scanBoundaries form)
-      val firstField = if (fieldIdx.isEmpty) 1 else math.max(1, fieldIdx.min)
-      val fieldScale: Array[Int] = requiredSchema.fields.map(f => CsvPayload.scaleOf(f.dataType))
-      val fieldPrec: Array[Int] = requiredSchema.fields.map(f => CsvPayload.precisionOf(f.dataType))
-      val tsMicroDigits = CsvPayload.fixedPatternFracDigits(tsFmt)
-      // Pushed-filter evaluation INSIDE the parse: filter-bound fields parse
-      // first and each predicate runs as soon as its value exists, so a row
-      // that fails a selective scan predicate never parses the remaining
-      // columns. Spark re-applies every pushed filter above the scan, so the
-      // compiled subset only has to be sound, not complete.
-      val fieldPreds = CsvPayload.compileFilters(filters, requiredSchema, fieldTags)
-      val parseOrder: Array[Int] =
-        (0 until nFields).sortBy(k => (if (fieldPreds(k).nonEmpty) 0 else 1, k)).toArray
-      // Block-level pruning: when the file carries a stats segment and the
-      // pushed filters refute whole blocks, skip their I/O + decompression
-      // entirely (the container analog of parquet row-group pruning).
-      val statsEnabled = options.getOrElse("blockStats", "true").toBoolean
-      // Join-driven pruning: a runtime key set from a join's broadcast side
-      // ([[RuntimeKeyFilter]]) refutes blocks by zone map with NO static
-      // filter on this scan. Broadcast (not closure-captured): the decoded
-      // array can reach ~1M longs and is shared by every task.
-      val rkfOpt: Option[(String, org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)] =
-        options.get(RuntimeKeyFilter.OptionKey)
-          .map(FourMcFileFormat.rkfBroadcast(sparkSession, _))
-      (file: PartitionedFile) => if (!extOk(file)) Iterator.empty else {
-        val conf = broadcastConf.value.value
-        val in = FourMcFileFormat.openInput(file, conf)
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-        val index = FourMcFileFormat.cachedIndex(file, in)
-        // metadata-only COUNT(*) — see FourMcVectorizedReader for the
-        // batch twin and the rationale; this is the row-reader fallback
-        if (nFields == 0 && filters.isEmpty && statsEnabled && !permissive &&
-            rkfOpt.isEmpty && index.stats.isDefined) {
-          val n = FourMcFileFormat.ownedLineCount(index, file)
-          FourMcScanMetrics.metadataCountRows.add(n)
-          FourMcFileFormat.emptyRows(n)
-        } else {
-        // formatter fallback only for timestamp patterns the fixed-layout
-        // fast parser doesn't cover
-        lazy val fmt = java.time.format.DateTimeFormatter.ofPattern(tsFmt)
-          .withZone(java.time.ZoneOffset.UTC)
-        val lines: graft.format.McLineStream =
-          if (index.stats.exists(_.columnar)) {
-            // columnar file on the row path: synthesize lines carrying only
-            // the needed columns' (already-escaped) bytes — one parse
-            // implementation for both layouts ([[McColumnarLineSynth]])
-            val fileCols = index.stats.get.tags.length
-            val needed = fieldIdx.filter(_ < fileCols).distinct.sorted
-            val cursor = FourMcFileFormat.columnarCursor(
-              in, index, file, needed, dataSchema, filters, statsEnabled, permissive, rkfOpt)
-            new graft.format.McColumnarLineSynth(
-              cursor, math.min(totalFields, fileCols), needed, delim)
-          } else FourMcFileFormat.csvLines(
-            in, index, file, dataSchema, filters, statsEnabled, permissive, rkfOpt)
-        // per-FILE parse tags: timestamp columns written as micros carry
-        // tag 14 in the file's stats segment (see CsvPayload.fileTags)
-        val tags = CsvPayload.fileTags(fieldTags, fieldIdx, index.stats)
-        val starts = new Array[Int](totalFields + 1)
-        // One UnsafeRowWriter reused for every line (the same pattern as
-        // Spark's text source): primitives land in the row buffer unboxed,
-        // and downstream operators consume UnsafeRow directly instead of
-        // converting a boxed GenericInternalRow per row. Consumers that
-        // buffer rows copy them (Spark's reader contract), so reuse is safe.
-        val writer = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(nFields)
-        // array fields write through UnsafeArrayWriter children of the SAME
-        // row buffer (zero intermediate allocation); one per element width
-        val arrWriter8 = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeArrayWriter(writer, 8)
-        val arrWriter4 = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeArrayWriter(writer, 4)
-        def pass(ps: Array[Any => Boolean], v: Any): Boolean = {
-          var pi = 0
-          while (pi < ps.length) {
-            if (!ps(pi)(v)) return false
-            pi += 1
-          }
-          true
-        }
-        // map columns write straight into the row buffer in UnsafeMapData's
-        // layout — [keyArrayNumBytes(8)][key UnsafeArrayData][value
-        // UnsafeArrayData] — exactly the sequence GenerateUnsafeProjection's
-        // writeMapToBuffer emits (grow 8, write keys, backfill the size,
-        // write values, setOffsetAndSizeFromPreviousCursor), so map-bearing
-        // projections keep the zero-allocation unsafe path (r13 advice: the
-        // old fallback boxed EVERY column of the row into a
-        // GenericInternalRow whenever a map was projected)
-        def parseSliceGeneric(bytes: Array[Byte], from: Int, to: Int): InternalRow = {
-          CsvPayload.scanBoundaries(bytes, delim, starts, 0, neededFields, totalFields, from, to,
-            firstField)
-          val vals = new Array[Any](nFields)
-          var k = 0
-          while (k < nFields) {
-            val src = fieldIdx(k)
-            val s = starts(src)
-            val e = CsvPayload.fieldEnd(bytes, delim, starts, 0, src, s, neededFields, totalFields, to)
-            val tag = tags(k)
-            vals(k) =
-              // s > to: the field is MISSING (not merely empty) — the line
-              // has fewer fields than the read schema, i.e. an older-
-              // generation file under positional schema evolution → null
-              if (s > to || CsvPayload.isNullMarker(bytes, s, e) ||
-                  (s >= e && tag != CsvPayload.TagString && tag != CsvPayload.TagMap &&
-                    !CsvPayload.isArrayTag(tag))) null
-              else tag match {
-                case CsvPayload.TagString =>
-                  if (s >= e) UTF8String.EMPTY_UTF8 else CsvPayload.unescape(bytes, s, e, delim)
-                case CsvPayload.TagLong    => java.lang.Long.valueOf(CsvPayload.parseLong(bytes, s, e))
-                case CsvPayload.TagInt     => java.lang.Integer.valueOf(CsvPayload.parseInt(bytes, s, e))
-                case CsvPayload.TagDouble  => java.lang.Double.valueOf(CsvPayload.parseDouble(bytes, s, e))
-                case CsvPayload.TagFloat   => java.lang.Float.valueOf(CsvPayload.parseFloat(bytes, s, e))
-                case CsvPayload.TagBoolean => java.lang.Boolean.valueOf(bytes(s) == 't' || bytes(s) == 'T')
-                case CsvPayload.TagDate    => java.lang.Integer.valueOf(CsvPayload.parseDateDays(bytes, s, e))
-                case CsvPayload.TagDecimal =>
-                  org.apache.spark.sql.types.Decimal(
-                    CsvPayload.parseDecimalUnscaled(bytes, s, e, fieldScale(k)),
-                    fieldPrec(k), fieldScale(k))
-                case CsvPayload.TagTimestampMicros =>
-                  java.lang.Long.valueOf(CsvPayload.parseLong(bytes, s, e))
-                case CsvPayload.TagMap => CsvPayload.parseMap(bytes, s, e, delim)
-                case CsvPayload.TagArrLong | CsvPayload.TagArrFloat | CsvPayload.TagArrDouble =>
-                  val cnt = CsvPayload.countElems(bytes, s, e)
-                  val arr = new Array[Any](cnt)
-                  var ts = s
-                  var j = 0
-                  while (j < cnt) {
-                    var te = ts
-                    while (te < e && bytes(te) != CsvPayload.ElemSep) te += 1
-                    arr(j) =
-                      if (CsvPayload.isNullElem(bytes, ts, te)) null
-                      else if (tag == CsvPayload.TagArrLong)
-                        java.lang.Long.valueOf(CsvPayload.parseLong(bytes, ts, te))
-                      else if (tag == CsvPayload.TagArrFloat)
-                        java.lang.Float.valueOf(CsvPayload.parseFloat(bytes, ts, te))
-                      else java.lang.Double.valueOf(CsvPayload.parseDouble(bytes, ts, te))
-                    ts = te + 1
-                    j += 1
-                  }
-                  new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
-                case _ =>
-                  val x =
-                    if (tsMicroDigits >= 0 && CsvPayload.isFixedLayout(bytes, s, e))
-                      CsvPayload.parseTimestampMicros(bytes, s, e)
-                    else {
-                      val inst = java.time.Instant.from(fmt.parse(CsvPayload.ascii(bytes, s, e)))
-                      inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-                    }
-                  java.lang.Long.valueOf(x)
-              }
-            k += 1
-          }
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-        }
-
-        // zero-copy slice mode (see McLineStream): parse runs in place on
-        // the decompressed block buffer — no per-line array or tuple
-        def parseSlice(bytes: Array[Byte], from: Int, to: Int): InternalRow = {
-          CsvPayload.scanBoundaries(bytes, delim, starts, 0, neededFields, totalFields, from, to,
-            firstField)
-          writer.reset()
-          writer.zeroOutNullBytes()
-          var keep = true
-          var oi = 0
-          while (oi < nFields && keep) {
-            val k = parseOrder(oi)
-            val src = fieldIdx(k)
-            val s = starts(src)
-            val e = CsvPayload.fieldEnd(bytes, delim, starts, 0, src, s, neededFields, totalFields, to)
-            val fp = fieldPreds(k)
-            val ps = fp.rest
-            val tag = tags(k)
-            if (s > to || CsvPayload.isNullMarker(bytes, s, e) ||
-              (s >= e && tag != CsvPayload.TagString && tag != CsvPayload.TagMap &&
-                !CsvPayload.isArrayTag(tag))) {
-              // s > to = MISSING trailing field (older-generation file
-              // under positional schema evolution): null, not empty
-              keep = fp.nullPasses // empty pred set precomputes to true
-              if (keep) writer.setNullAt(k)
-            } else {
-              // numeric/timestamp decode straight off the byte slice — no
-              // per-field String for the hot types, Int-tag jump table
-              // instead of a DataType match per value; long-domain ranges
-              // compare unboxed, residual predicates box only for
-              // filter-bound fields
-              (tag: @scala.annotation.switch) match {
-                case CsvPayload.TagString =>
-                  val u =
-                    if (s >= e) UTF8String.EMPTY_UTF8 // empty field = empty string, not null
-                    else CsvPayload.unescape(bytes, s, e, delim)
-                  keep = ps.length == 0 || pass(ps, u)
-                  if (keep) writer.write(k, u)
-                case CsvPayload.TagLong =>
-                  val x = CsvPayload.parseLong(bytes, s, e)
-                  keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                  if (keep) writer.write(k, x)
-                case CsvPayload.TagInt =>
-                  val x = CsvPayload.parseInt(bytes, s, e)
-                  keep = fp.rangeOk(x.toLong) && (ps.length == 0 || pass(ps, x))
-                  if (keep) writer.write(k, x)
-                case CsvPayload.TagDouble =>
-                  val x = CsvPayload.parseDouble(bytes, s, e)
-                  keep = ps.length == 0 || pass(ps, x)
-                  if (keep) writer.write(k, x)
-                case CsvPayload.TagFloat =>
-                  val x = CsvPayload.parseFloat(bytes, s, e)
-                  keep = ps.length == 0 || pass(ps, x)
-                  if (keep) writer.write(k, x)
-                case CsvPayload.TagBoolean =>
-                  val x = bytes(s) == 't' || bytes(s) == 'T'
-                  keep = ps.length == 0 || pass(ps, x)
-                  if (keep) writer.write(k, x)
-                case CsvPayload.TagDate =>
-                  val x = CsvPayload.parseDateDays(bytes, s, e)
-                  keep = fp.rangeOk(x.toLong) && (ps.length == 0 || pass(ps, x))
-                  if (keep) writer.write(k, x)
-                case CsvPayload.TagDecimal =>
-                  val un = CsvPayload.parseDecimalUnscaled(bytes, s, e, fieldScale(k))
-                  keep = fp.rangeOk(un) && (ps.length == 0 ||
-                    pass(ps, org.apache.spark.sql.types.Decimal(un, fieldPrec(k), fieldScale(k))))
-                  if (keep)
-                    writer.write(k,
-                      org.apache.spark.sql.types.Decimal(un, fieldPrec(k), fieldScale(k)),
-                      fieldPrec(k), fieldScale(k))
-                case CsvPayload.TagTimestampMicros =>
-                  val x = CsvPayload.parseLong(bytes, s, e)
-                  keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                  if (keep) writer.write(k, x)
-                // map<string,string>: UnsafeMapData layout written in place
-                // — 8-byte key-array size, key UnsafeArrayData, value
-                // UnsafeArrayData (two passes over the ';'-split entries:
-                // keys first, values second — the layout stores the arrays
-                // contiguously, not interleaved). Maps are never
-                // filter-bound (compileFilters refuses them).
-                case CsvPayload.TagMap =>
-                  val cnt = CsvPayload.countEntries(bytes, s, e)
-                  val prev = writer.cursor()
-                  writer.grow(8)
-                  writer.increaseCursor(8)
-                  val keysStart = writer.cursor()
-                  arrWriter8.initialize(cnt)
-                  var ts = s
-                  var j = 0
-                  while (j < cnt) {
-                    val te = CsvPayload.entryEnd(bytes, ts, e)
-                    val eq = CsvPayload.kvSplit(bytes, ts, te)
-                    val ke = if (eq < 0) te else eq
-                    if (ts >= ke) arrWriter8.write(j, UTF8String.EMPTY_UTF8)
-                    else arrWriter8.write(j, CsvPayload.unescape(bytes, ts, ke, delim))
-                    ts = te + 1
-                    j += 1
-                  }
-                  org.apache.spark.unsafe.Platform.putLong(
-                    writer.getBuffer, keysStart - 8, (writer.cursor() - keysStart).toLong)
-                  arrWriter8.initialize(cnt)
-                  ts = s
-                  j = 0
-                  while (j < cnt) {
-                    val te = CsvPayload.entryEnd(bytes, ts, e)
-                    val eq = CsvPayload.kvSplit(bytes, ts, te)
-                    val vs0 = if (eq < 0) te else eq + 1
-                    if (eq >= 0 && CsvPayload.isNullMarker(bytes, vs0, te))
-                      arrWriter8.setNull8Bytes(j)
-                    else if (vs0 >= te) arrWriter8.write(j, UTF8String.EMPTY_UTF8)
-                    else arrWriter8.write(j, CsvPayload.unescape(bytes, vs0, te, delim))
-                    ts = te + 1
-                    j += 1
-                  }
-                  writer.setOffsetAndSizeFromPreviousCursor(k, prev)
-                // arrays: elements parse in place, ';'-split, straight into
-                // the row buffer's array region. No predicates ever compile
-                // for array fields (compileFilters refuses them), so `keep`
-                // stays true here — Spark's Filter above the scan applies
-                // anything pushed.
-                case CsvPayload.TagArrLong | CsvPayload.TagArrDouble =>
-                  val n = CsvPayload.countElems(bytes, s, e)
-                  val prev = writer.cursor()
-                  arrWriter8.initialize(n)
-                  var j = 0
-                  var ts = s
-                  while (j < n) {
-                    var te = ts
-                    while (te < e && bytes(te) != CsvPayload.ElemSep) te += 1
-                    if (CsvPayload.isNullElem(bytes, ts, te)) arrWriter8.setNull8Bytes(j)
-                    else if (tag == CsvPayload.TagArrLong)
-                      arrWriter8.write(j, CsvPayload.parseLong(bytes, ts, te))
-                    else arrWriter8.write(j, CsvPayload.parseDouble(bytes, ts, te))
-                    ts = te + 1
-                    j += 1
-                  }
-                  writer.setOffsetAndSizeFromPreviousCursor(k, prev)
-                case CsvPayload.TagArrFloat =>
-                  val n = CsvPayload.countElems(bytes, s, e)
-                  val prev = writer.cursor()
-                  arrWriter4.initialize(n)
-                  var j = 0
-                  var ts = s
-                  while (j < n) {
-                    var te = ts
-                    while (te < e && bytes(te) != CsvPayload.ElemSep) te += 1
-                    if (CsvPayload.isNullElem(bytes, ts, te)) arrWriter4.setNull4Bytes(j)
-                    else arrWriter4.write(j, CsvPayload.parseFloat(bytes, ts, te))
-                    ts = te + 1
-                    j += 1
-                  }
-                  writer.setOffsetAndSizeFromPreviousCursor(k, prev)
-                case _ =>
-                  val x =
-                    if (tsMicroDigits >= 0 && CsvPayload.isFixedLayout(bytes, s, e))
-                      CsvPayload.parseTimestampMicros(bytes, s, e)
-                    else {
-                      val inst = java.time.Instant.from(fmt.parse(CsvPayload.ascii(bytes, s, e)))
-                      inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-                    }
-                  keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                  if (keep) writer.write(k, x)
-              }
-            }
-            oi += 1
-          }
-          (if (keep) writer.getRow else null): InternalRow
-        }
-        new Iterator[InternalRow] {
-          private var nextRow: InternalRow = _
-          private var primed = false
-          private def advance(): Unit = {
-            nextRow = null
-            while (nextRow == null && lines.advanceSlice())
-              nextRow = parseSlice(lines.sliceBytes, lines.sliceStart, lines.sliceEnd)
-          }
-          override def hasNext: Boolean = {
-            if (!primed) { advance(); primed = true }
-            nextRow != null
-          }
-          override def next(): InternalRow = {
-            if (!hasNext) throw new NoSuchElementException
-            primed = false
-            nextRow
-          }
-        }
-        }
-      }
-    } else {
-      val wantOffset = requiredSchema.fieldNames.contains("offset")
-      val wantValue = requiredSchema.fieldNames.contains("value")
-      val offsetFirst = requiredSchema.fieldNames.headOption.contains("offset")
-      val nFields = requiredSchema.length
-      val ebProto = payload == "eb-proto"
-      val ebMarker = graft.format.EbBlocks.parseMarker(options.get("ebMarker"))
-      val binaryValue = binary || ebProto
-
-      (file: PartitionedFile) => if (!extOk(file)) Iterator.empty else {
-        val conf = broadcastConf.value.value
-        val in = FourMcFileFormat.openInput(file, conf)
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
-        val index = FourMcFileFormat.cachedIndex(file, in)
-        val raw: Iterator[(Long, Array[Byte])] =
-          if (ebProto) new graft.format.FourMcEbBlockIterator(in, index, file.start, file.start + file.length, ebMarker)
-          else if (binary) {
-            val it = new FourMcRecordIterator(in, index, file.start, file.start + file.length,
-              permissive = permissive)
-            if (permissive) Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-              FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped)
-            })
-            it
-          }
-          else {
-            val it = new FourMcLineIterator(in, index, file.start, file.start + file.length,
-              permissive = permissive)
-            if (permissive) Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-              FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped)
-            })
-            it
-          }
-        // reused writer, as in the csv branch: value bytes are copied into
-        // the row buffer once (UTF8String and BinaryType share the byte[]
-        // representation inside UnsafeRow)
-        val writer = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(nFields)
-        val valueOrd = if (wantOffset && wantValue) (if (offsetFirst) 1 else 0) else 0
-        val offsetOrd = if (wantOffset && wantValue) (if (offsetFirst) 0 else 1) else 0
-        raw.map { case (off, bytes) =>
-          writer.reset()
-          if (nFields > 0) {
-            if (wantValue) writer.write(valueOrd, bytes, 0, bytes.length)
-            if (wantOffset) writer.write(offsetOrd, off)
-          }
-          writer.getRow: InternalRow
-        }
-      }
-    }
-  }
-
   override def prepareWrite(
       sparkSession: SparkSession,
       job: Job,
@@ -640,17 +198,15 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
     }
   }
 
-  /** Vectorized output: every scan whose output schema (required +
-    * partition columns) fits our vectors emits ColumnarBatch — the planner
-    * inserts ColumnarToRow and the parse runs column-major
-    * ([[FourMcVectorizedReader]]). `spark.graft.fourmc.vectorized=false`
-    * restores the row reader (both paths share the line iterators, so
-    * results are identical by construction).
+  /** Batch output: every scan whose output schema (required + partition
+    * columns) fits our vectors plans as ColumnarBatch — the planner inserts
+    * ColumnarToRow and the parse runs column-major
+    * ([[FourMcVectorizedReader]]). Spark can still ask for rows (no
+    * whole-stage codegen, or more output fields than
+    * `spark.sql.codegen.maxFields`); the same reader serves them.
     */
   override def supportBatch(sparkSession: SparkSession, schema: StructType): Boolean =
-    sparkSession.sessionState.conf
-      .getConfString("spark.graft.fourmc.vectorized", "true").toBoolean &&
-      FourMcVectorizedReader.vectorizable(schema)
+    FourMcVectorizedReader.vectorizable(schema)
 
   override def vectorTypes(
       requiredSchema: StructType,
@@ -662,6 +218,11 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
       Seq.fill(partitionSchema.length)(
         classOf[org.apache.spark.sql.execution.vectorized.ConstantColumnVector].getName))
 
+  /** The one decoder for every payload: [[FourMcVectorizedReader]] builds
+    * batches, returned as they are when the scan plans `Batched: true`
+    * (`FileFormat.OPTION_RETURNING_BATCH`) and flattened to `UnsafeRow`s
+    * otherwise.
+    */
   override def buildReaderWithPartitionValues(
       sparkSession: SparkSession,
       dataSchema: StructType,
@@ -671,18 +232,24 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
       options: Map[String, String],
       hadoopConf: Configuration
   ): PartitionedFile => Iterator[InternalRow] = {
-    val outSchema = StructType(requiredSchema.fields ++ partitionSchema.fields)
-    if (!supportBatch(sparkSession, outSchema))
-      super.buildReaderWithPartitionValues(
-        sparkSession, dataSchema, partitionSchema, requiredSchema, filters, options, hadoopConf)
-    else {
-      val broadcastConf =
-        sparkSession.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
-      val payload = options.getOrElse("payload", "text")
-      val acceptAny = options.get("acceptAnyExtension").exists(_.toBoolean)
-      val extOk = (file: PartitionedFile) =>
-        acceptAny || { val p = file.toPath.getName; p.endsWith(".4mc") || p.endsWith(".4mz") }
-      val permissive = options.get("ignoreCorruptBlocks").exists(_.toBoolean)
+    val broadcastConf =
+      sparkSession.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+    val payload = options.getOrElse("payload", "text")
+    // Reference semantics (FourMcInputFormatUtil.java:50-62): only
+    // .4mc/.4mz files are container data; anything else in the directory is
+    // skipped rather than failing the scan. option("acceptAnyExtension",
+    // true) reads every listed file regardless of name.
+    val acceptAny = options.get("acceptAnyExtension").exists(_.toBoolean)
+    val extOk = (file: PartitionedFile) =>
+      acceptAny || { val p = file.toPath.getName; p.endsWith(".4mc") || p.endsWith(".4mz") }
+    // option("ignoreCorruptBlocks", true): the block-granular analog of
+    // spark.sql.files.ignoreCorruptFiles. A failed block (checksum,
+    // structure, codec) is skipped by resyncing to the footer index's next
+    // boundary, and only the lines touching the corruption are lost (never
+    // duplicated: ownership is unchanged, so other splits still skip their
+    // first partial line). Counted in FourMcScanMetrics.corruptSkipped.
+    val permissive = options.get("ignoreCorruptBlocks").exists(_.toBoolean)
+    val batches =
       if (payload == "csv") {
         val rkfOpt = options.get(RuntimeKeyFilter.OptionKey)
           .map(FourMcFileFormat.rkfBroadcast(sparkSession, _))
@@ -703,7 +270,9 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
           broadcastConf = broadcastConf,
           extOk = extOk)
       }
-    }
+    if (options.get(FileFormat.OPTION_RETURNING_BATCH).contains("true")) batches
+    else new FourMcVectorizedReader.BatchRows(
+      StructType(requiredSchema.fields ++ partitionSchema.fields), batches)
   }
 
   override def supportDataType(dataType: DataType): Boolean = dataType match {
@@ -808,11 +377,6 @@ object FourMcFileFormat {
     n
   }
 
-  /** The csv-payload line stream for one split: block pruning (static
-    * filters ∧ runtime key set) against the stats segment when available,
-    * scan metrics wired — SHARED by the row-based and vectorized readers so
-    * the two paths cannot drift in pruning or corruption semantics.
-    */
   /** Per-block keep flags from stats/bloom pruning (static filters ∧ runtime
     * key set); None = nothing to skip — shared by the row-layout line
     * streams and the columnar cursor so pruning semantics are one
@@ -845,8 +409,7 @@ object FourMcFileFormat {
     else None
 
   /** Pruned, metrics-wired cursor over one split of a COLUMNAR csv file —
-    * the columnar twin of [[csvLines]], shared by the vectorized fast path
-    * and the row reader's synthesized-line fallback.
+    * the columnar twin of [[csvLines]].
     */
   private[sources] def columnarCursor(
       in: McInput,
@@ -870,6 +433,10 @@ object FourMcFileFormat {
     cur
   }
 
+  /** The csv-payload line stream for one split of a rows-layout file:
+    * block pruning (static filters ∧ runtime key set) against the stats
+    * segment when available, scan metrics wired.
+    */
   private[sources] def csvLines(
       in: McInput,
       index: FourMcIndex,
@@ -900,7 +467,7 @@ object FourMcFileFormat {
   }
 
   // Driver-side broadcast cache for runtime key filters, keyed by the full
-  // option spec string: repeated buildReader calls with the same injected
+  // option spec string: repeated reader builds with the same injected
   // key set (re-planned queries, AQE re-optimization, the same dim reused
   // across queries in a session) reuse ONE broadcast of the decoded array
   // (~8 MB at the 1M-key cap) instead of minting a fresh one per call.
@@ -918,23 +485,6 @@ object FourMcFileFormat {
     val b = rkfCache.computeIfAbsent(
       spec, s => spark.sparkContext.broadcast(RuntimeKeyFilter.decode(s)._2))
     (spec.substring(0, spec.indexOf(':')), b, RuntimeKeyFilter.isHashed(spec))
-  }
-
-  /** Long-counted stream of `n` zero-column rows for the metadata COUNT(*)
-    * fast path. A split's owned-line count is a Long (a single split of a
-    * highly compressible file can own >2^31 lines under a pathological
-    * `maxPartitionBytes`), so the emitter must count in Long — an
-    * `Iterator.fill(n.toInt)` would silently under-count instead of
-    * failing.
-    */
-  private[sources] def emptyRows(n: Long): Iterator[InternalRow] = {
-    val empty = new org.apache.spark.sql.catalyst.expressions.UnsafeRow(0)
-    empty.pointTo(new Array[Byte](8), 8)
-    new Iterator[InternalRow] {
-      private[this] var remaining: Long = n
-      override def hasNext: Boolean = remaining > 0L
-      override def next(): InternalRow = { remaining -= 1L; empty }
-    }
   }
 
   private[sources] def cachedIndex(file: PartitionedFile, in: McInput): FourMcIndex =
@@ -1506,8 +1056,8 @@ object CsvPayload {
     * field's slice is `[start, nextStart - 1)` clipped to the line — a
     * missing field reads as empty). A '\' escapes the next byte, so
     * escaped delimiters inside values don't split fields. SHARED by the
-    * row and vectorized readers (base = 0 resp. rowSlot * stride) — one
-    * boundary semantics, two consumers, no drift.
+    * scan reader (base = rowSlot * stride) and the stats relation's
+    * straddling-block decode (base = 0) — one boundary semantics.
     *
     * Plain-byte runs are skipped 8 bytes per iteration via
     * [[SwarScan.nextSpecial]]; only delimiter/escape bytes (and the <8-byte
@@ -1739,51 +1289,12 @@ object CsvPayload {
     -1
   }
 
-  /** Parse a whole map field slice into boxed catalyst map data — the
-    * row-reader fallback for map-bearing schemas (the vectorized reader
-    * decodes straight into child vectors instead).
-    */
-  def parseMap(b: Array[Byte], s: Int, e: Int,
-               delim: Byte): org.apache.spark.sql.catalyst.util.ArrayBasedMapData = {
-    import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-    val n = countEntries(b, s, e)
-    val keys = new Array[Any](n)
-    val vals = new Array[Any](n)
-    var ts = s
-    var j = 0
-    while (j < n) {
-      val te = entryEnd(b, ts, e)
-      val eq = kvSplit(b, ts, te)
-      val ke = if (eq < 0) te else eq
-      keys(j) = if (ts >= ke) UTF8String.EMPTY_UTF8 else unescape(b, ts, ke, delim)
-      val vs0 = if (eq < 0) te else eq + 1
-      vals(j) =
-        if (eq >= 0 && isNullMarker(b, vs0, te)) null
-        else if (vs0 >= te) UTF8String.EMPTY_UTF8
-        else unescape(b, vs0, te, delim)
-      ts = te + 1
-      j += 1
-    }
-    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
-  }
-
   /** True when element token [s, e) is the null-element marker `N`. */
   @inline def isNullElem(b: Array[Byte], s: Int, e: Int): Boolean =
     e - s == 1 && b(s) == 'N'
 
-  /** Number of ';'-separated element tokens in field slice [s, e); 0 for an
-    * empty field (= empty array).
-    */
-  def countElems(b: Array[Byte], s: Int, e: Int): Int = {
-    if (s >= e) return 0
-    var n = 1
-    var i = s
-    while (i < e) { if (b(i) == ElemSep) n += 1; i += 1 }
-    n
-  }
-
-  /** The parse tag for one csv-payload column type (shared by the row and
-    * vectorized readers — one dispatch table, two consumers).
+  /** The parse tag for one csv-payload column type (shared by the writer,
+    * the readers and the stats segment — one dispatch table).
     */
   def tagOf(dt: DataType): Int = dt match {
     case StringType                       => TagString

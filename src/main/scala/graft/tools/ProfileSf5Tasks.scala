@@ -65,9 +65,6 @@ object ProfileSf5Tasks {
     report("4mc sum length rf (noAggPush)") { mc().agg(sum(length(col("l_returnflag")))) }
     spark.conf.set("spark.graft.fourmc.aggPushdown", "true")
     report("4mc group linenum (1 int)") { mc().groupBy(col("l_linenumber")).agg(count(lit(1))) }
-    spark.conf.set("spark.graft.fourmc.vectorized", "false")
-    report("4mc group rf ROW reader") { mc().groupBy(col("l_returnflag")).agg(count(lit(1))) }
-    spark.conf.set("spark.graft.fourmc.vectorized", "true")
     // isolate the double-parse term: grouped on a DATA column (pushdown
     // refuses), count-only parses 1 int; +4 doubles / +2 strings / +1 ts
     // deltas attribute the scan stage's CPU to per-type parse costs

@@ -134,15 +134,18 @@ class ArrayPayloadSpec extends AnyFunSuite {
     assert(arrayPlan.contains("Batched: true"),
       s"array projection should vectorize too:\n$arrayPlan")
     val vectorized = withArray.collect().map(r => r.toString).sorted
-    // row-reader equivalence: the two decoders share slice/boundary/token
-    // semantics by construction — pin it by value
-    spark.conf.set("spark.graft.fourmc.vectorized", "false")
+    val want = spark.createDataFrame(spark.sparkContext.parallelize(fixtureRows(2000), 1), schema)
+      .select(col("id"), col("sig"), col("emb"), col("vals")).collect().map(_.toString).sorted
+    assert(vectorized.sameElements(want), "batch decode drift on arrays")
+    // rows served from the same batches (Spark asks for rows without
+    // whole-stage codegen) carry the same values
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {
       val rowBased = read().select(col("id"), col("sig"), col("emb"), col("vals"))
       assert(rowBased.queryExecution.executedPlan.toString.contains("Batched: false"))
       val rows = rowBased.collect().map(r => r.toString).sorted
-      assert(rows.sameElements(vectorized), "vectorized vs row reader drift on arrays")
-    } finally spark.conf.unset("spark.graft.fourmc.vectorized")
+      assert(rows.sameElements(want), "rows served from batches drift on arrays")
+    } finally spark.conf.unset("spark.sql.codegen.wholeStage")
   }
 
   test("scalar zone-map pruning still fires on tables that carry array columns") {

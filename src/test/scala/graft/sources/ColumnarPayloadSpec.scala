@@ -11,8 +11,8 @@ import java.nio.file.Files
   * decompresses only its columns. These tests pin round-trip equality over
   * the full type surface, split invariance, pruning/bloom/runtime-filter
   * interop, the metadata COUNT(*) path, strict/permissive corruption
-  * semantics, the row-path (vectorized=false) fallback, and the block
-  * overflow path.
+  * semantics, rows served from batches (no whole-stage codegen), and the
+  * block overflow path.
   */
 class ColumnarPayloadSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
@@ -259,17 +259,17 @@ class ColumnarPayloadSpec extends AnyFunSuite {
     val df = fixtureDf(3000)
     val dir = tmpDir()
     writeColumnar(df, dir)
-    val want = canon(readBack(dir))
-    spark.conf.set("spark.graft.fourmc.vectorized", "false")
+    val want = canon(df)
+    def filtered(d: DataFrame) = d.filter(col("id") % 3 === 0).select("id", "sv", "mp")
+    val wantFiltered = canon(filtered(df))
+    assert(canon(readBack(dir)) == want)
+    assert(canon(filtered(readBack(dir))) == wantFiltered)
+    // rows served from the same batches (no whole-stage codegen)
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {
-      val got = readBack(dir)
-      assert(canon(got) == want)
-      // filtered projection down the row path too
-      val f = readBack(dir).filter(col("id") % 3 === 0).select("id", "sv", "mp")
-      val fv = canon(f)
-      spark.conf.set("spark.graft.fourmc.vectorized", "true")
-      assert(canon(readBack(dir).filter(col("id") % 3 === 0).select("id", "sv", "mp")) == fv)
-    } finally spark.conf.set("spark.graft.fourmc.vectorized", "true")
+      assert(canon(readBack(dir)) == want)
+      assert(canon(filtered(readBack(dir))) == wantFiltered)
+    } finally spark.conf.unset("spark.sql.codegen.wholeStage")
   }
 
   test("columnar block overflow: a row that would breach 4 MiB moves whole to the next block") {
@@ -392,10 +392,12 @@ class ColumnarPayloadSpec extends AnyFunSuite {
     assert(elidedNn > 0 && elidedNn < readNn,
       s"null-bearing blocks must not be certain (read=$readNn elided=$elidedNn)")
 
-    // row-path (vectorized=false) takes no elision but must agree
-    val rowPath = spark.read.format("4mc").option("payload", "csv")
-      .option("vectorized", "false").schema(s).load(dir)
-      .filter(col("k") <= 59999L).agg(sum(col("v") * lit(2))).head().getLong(0)
+    // rows served from the same batches (no whole-stage codegen) agree
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    val rowPath =
+      try spark.read.format("4mc").option("payload", "csv").schema(s).load(dir)
+        .filter(col("k") <= 59999L).agg(sum(col("v") * lit(2))).head().getLong(0)
+      finally spark.conf.unset("spark.sql.codegen.wholeStage")
     assert(rowPath == rows.map(_.getInt(2).toLong * 2).sum)
   }
 }

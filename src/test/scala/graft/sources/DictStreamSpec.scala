@@ -11,8 +11,8 @@ import java.nio.file.Files
   * [[ColumnarBlocks.DictFlag]]): a low-cardinality column stream stores
   * codes + an inline dictionary instead of repeated `value\n` bytes when
   * strictly smaller. These tests pin the encode eligibility rules, the
-  * on-disk flag, round-trip equality down both reader paths (vectorized
-  * dictionary-id lane and row-path synthesis), predicates over dict
+  * on-disk flag, round-trip equality as batches (the vectorized
+  * dictionary-id lane) and as rows served from them, predicates over dict
   * columns, mixed dict/plain blocks, the opt-out, corruption handling of
   * bad codes, and fsck validation.
   */
@@ -231,14 +231,15 @@ class DictStreamSpec extends AnyFunSuite {
   test("row-path fallback (vectorized=false) reads dict streams identically") {
     val dir = tmpDir()
     writeDf(8000, dir)
-    val want = canon(readBack(dir))
-    spark.conf.set("spark.graft.fourmc.vectorized", "false")
+    val src = spark.createDataFrame(spark.sparkContext.parallelize(fixtureRows(8000), 1), schema)
+    assert(canon(readBack(dir)) == canon(src))
+    // rows served from the same batches (no whole-stage codegen)
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {
-      assert(canon(readBack(dir)) == want)
+      assert(canon(readBack(dir)) == canon(src))
       assert(canon(readBack(dir).filter(col("qty") <= 7).select("flag", "qty")) ==
-        canon(spark.createDataFrame(spark.sparkContext.parallelize(fixtureRows(8000), 1), schema)
-          .filter(col("qty") <= 7).select("flag", "qty")))
-    } finally spark.conf.set("spark.graft.fourmc.vectorized", "true")
+        canon(src.filter(col("qty") <= 7).select("flag", "qty")))
+    } finally spark.conf.unset("spark.sql.codegen.wholeStage")
   }
 
   test("corrupt dict code: strict throws loudly, permissive drops the block") {

@@ -21,6 +21,14 @@ class FourMcFileFormatSpec extends AnyFunSuite {
     d.getAbsolutePath
   }
 
+  /** Runs `body` with whole-stage codegen off: Spark then plans every scan
+    * without `Batched: true` and asks the reader for rows.
+    */
+  private def withoutWholeStage[T](body: => T): T = {
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try body finally spark.conf.unset("spark.sql.codegen.wholeStage")
+  }
+
   test("write + read roundtrip preserves every line (lz4 and zstd)") {
     import spark.implicits._
     val lines = (0 until 20000).map(i => s"row-$i|payload-${i % 997}|${"x" * (i % 50)}")
@@ -589,31 +597,33 @@ class FourMcFileFormatSpec extends AnyFunSuite {
     val plan = scan.filter($"l_quantity" > 25).queryExecution.executedPlan.toString
     assert(plan.contains("Batched: true"), s"scan must be columnar:\n${plan.take(800)}")
     assert(plan.contains("ColumnarToRow"), s"planner must insert ColumnarToRow:\n${plan.take(800)}")
-    // row-path equivalence, including pushed filters and projections
+    // the parquet source's answer, batched and served as rows, including
+    // pushed filters and projections
     val q = (df: org.apache.spark.sql.DataFrame) =>
       df.filter($"l_quantity" > 25 && $"l_returnflag" === "R")
         .groupBy($"l_linestatus")
         .agg(count(lit(1)).as("n"), sum($"l_extendedprice".cast("decimal(18,2)")).as("s"))
         .orderBy($"l_linestatus")
-    val vectorized = q(scan).collect().map(_.toString).toSeq
-    spark.conf.set("spark.graft.fourmc.vectorized", "false")
-    try {
+    val want = q(li).collect().map(_.toString).toSeq
+    assert(q(scan).collect().map(_.toString).toSeq == want)
+    withoutWholeStage {
       val rowPlan = q(scan).queryExecution.executedPlan.toString
-      assert(!rowPlan.contains("Batched: true"), "conf off must restore the row reader")
-      assert(q(scan).collect().map(_.toString).toSeq == vectorized)
-    } finally spark.conf.set("spark.graft.fourmc.vectorized", "true")
+      assert(!rowPlan.contains("Batched: true"), s"rows were asked for:\n${rowPlan.take(800)}")
+      assert(q(scan).collect().map(_.toString).toSeq == want)
+    }
     // null handling: the \\N marker and empty trailing fields decode the same
     val dir2 = tmpDir()
-    Seq((1L, Some("a"), Some(1.5)), (2L, None, None), (3L, Some(""), Some(0.0)))
-      .toDF("k", "s", "v").write.format("4mc").option("payload", "csv").save(dir2)
+    val src2 = Seq((1L, Some("a"), Some(1.5)), (2L, None, None), (3L, Some(""), Some(0.0)))
+      .toDF("k", "s", "v")
+    src2.write.format("4mc").option("payload", "csv").save(dir2)
     import org.apache.spark.sql.types._
     val sch2 = StructType(Seq(StructField("k", LongType), StructField("s", StringType),
       StructField("v", DoubleType)))
     def read2 = spark.read.format("4mc").option("payload", "csv").schema(sch2).load(dir2)
       .orderBy("k").collect().map(_.toString).toSeq
-    val vec2 = read2
-    spark.conf.set("spark.graft.fourmc.vectorized", "false")
-    try assert(read2 == vec2) finally spark.conf.set("spark.graft.fourmc.vectorized", "true")
+    val want2 = src2.orderBy("k").collect().map(_.toString).toSeq
+    assert(read2 == want2)
+    withoutWholeStage(assert(read2 == want2))
   }
 
   test("metadata-only COUNT(*): answered from stats, exact under any split layout") {
@@ -638,13 +648,12 @@ class FourMcFileFormatSpec extends AnyFunSuite {
       assert(scan.count() == rows)
       assert(m.metadataCountRows.sum() == rows)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", (128 * 1024 * 1024).toString)
-    // row reader (vectorized off) shares the fast path
-    spark.conf.set("spark.graft.fourmc.vectorized", "false")
-    try {
+    // rows served from the same batches share the fast path
+    withoutWholeStage {
       m.reset()
       assert(scan.count() == rows)
       assert(m.metadataCountRows.sum() == rows)
-    } finally spark.conf.set("spark.graft.fourmc.vectorized", "true")
+    }
     // a pushed filter disables it (rows must be parsed); count stays right
     m.reset()
     assert(scan.filter($"k" < 1000).count() == 1000)
@@ -771,11 +780,11 @@ class FourMcFileFormatSpec extends AnyFunSuite {
   }
 
   test("property: row and vectorized readers agree over randomized escapes and missing fields") {
-    // The two readers share scanBoundaries/fieldEnd (CsvPayload), but the
-    // downstream parse paths are separate — pin equivalence over adversarial
-    // lines: escaped delimiters, escaped escapes, \N markers, empty fields,
-    // and MISSING trailing fields (written through the raw writer, which a
-    // DataFrame round-trip can never produce).
+    // Batches and the rows served from them both equal a plain-Scala model
+    // of the payload grammar over adversarial lines: escaped delimiters,
+    // escaped escapes, \N markers, empty fields, and MISSING trailing
+    // fields (written through the raw writer, which a DataFrame round-trip
+    // can never produce).
     import org.apache.spark.sql.types._
     val rnd = new scala.util.Random(42)
     def strField(): String = {
@@ -823,13 +832,32 @@ class FourMcFileFormatSpec extends AnyFunSuite {
       df => df.select("a", "c"),                   // last scanned field != last schema field
       df => df.filter(col("d") > 0).select("a"),   // pushed filter on unprojected col
       df => df.filter(col("b").isNull).select("c", "e"))
+    // the model: unescaped '|' splits fields, '\' takes the next byte
+    // literally, `\N` is null, a missing field is null, an empty field is
+    // "" for strings and null otherwise
+    def model(line: String): org.apache.spark.sql.Row = {
+      val fields = scala.collection.mutable.ArrayBuffer(new StringBuilder)
+      var i = 0
+      while (i < line.length) {
+        val c = line(i)
+        if (c == '\\' && i + 1 < line.length) { fields.last.append(c).append(line(i + 1)); i += 2 }
+        else { if (c == '|') fields += new StringBuilder else fields.last.append(c); i += 1 }
+      }
+      def raw(k: Int): Option[String] =
+        Option.when(k < fields.length)(fields(k).toString).filter(_ != "\\N")
+      def str(k: Int): String = raw(k).map(_.replaceAll("\\\\(.)", "$1")).orNull
+      def num(k: Int): Option[String] = raw(k).filter(_.nonEmpty)
+      org.apache.spark.sql.Row(str(0), num(1).map(x => java.lang.Long.valueOf(x)).orNull, str(2),
+        num(3).map(x => java.lang.Double.valueOf(x)).orNull, str(4))
+    }
+    val expected = spark.createDataFrame(
+      spark.sparkContext.parallelize(lines.map(model), 1), sch)
     for ((q, qi) <- shapes.zipWithIndex) {
-      val vec = q(scan).collect().map(_.toString).sorted.toSeq
-      spark.conf.set("spark.graft.fourmc.vectorized", "false")
-      try {
-        val row = q(scan).collect().map(_.toString).sorted.toSeq
-        assert(row == vec, s"shape $qi: row/vectorized outputs differ")
-      } finally spark.conf.set("spark.graft.fourmc.vectorized", "true")
+      val want = q(expected).collect().map(_.toString).sorted.toSeq
+      assert(q(scan).collect().map(_.toString).sorted.toSeq == want, s"shape $qi: batches")
+      withoutWholeStage {
+        assert(q(scan).collect().map(_.toString).sorted.toSeq == want, s"shape $qi: rows")
+      }
     }
   }
 
@@ -838,11 +866,12 @@ class FourMcFileFormatSpec extends AnyFunSuite {
     // a pathological maxPartitionBytes; the fast-path emitter must not clamp
     // (Iterator.fill(Int) would return a silently wrong count).
     val n = Int.MaxValue.toLong + 3L
-    val it = FourMcFileFormat.emptyRows(n)
+    val batch = new org.apache.spark.sql.vectorized.ColumnarBatch(Array.empty)
+    val it = FourMcVectorizedReader.countBatches(batch, n)
     var c = 0L
-    while (it.hasNext) { it.next(); c += 1L }
+    while (it.hasNext) c += it.next().numRows()
     assert(c == n, s"emitted $c rows, expected $n")
-    assert(FourMcFileFormat.emptyRows(0L).isEmpty)
+    assert(FourMcVectorizedReader.countBatches(batch, 0L).isEmpty)
   }
 
   test("statsVersion option pins the stats segment for older read floors") {
@@ -885,5 +914,106 @@ class FourMcFileFormatSpec extends AnyFunSuite {
       assert(spark.read.format("4mc").option("payload", "csv").schema(sch)
         .load(d).as[(Long, String)].collect().sorted.toSeq ==
         (0 until 2000).map(i => (i.toLong, if (i % 3 == 0) "A" else "B")))
+  }
+
+  // ---- rows served from batches ------------------------------------------
+  // Spark asks a file scan for rows, not batches, when whole-stage codegen
+  // is off or the output has more than spark.sql.codegen.maxFields fields,
+  // and passes those rows on as they are.
+
+  private def sortedStrings(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("rows served from batches: csv scan with a pushed filter, no whole-stage codegen") {
+    import spark.implicits._
+    val dir = tmpDir()
+    val src = (0 until 20000).map(i => (i.toLong, s"s${i % 97}", i * 0.25)).toDF("k", "s", "v")
+    src.write.format("4mc").option("payload", "csv").save(dir)
+    def q = spark.read.format("4mc").option("payload", "csv").schema(src.schema).load(dir)
+      .filter($"k" >= 15000L && $"s" === "s3").select("k", "v")
+    val batchPlan = q.queryExecution.executedPlan.toString
+    assert(batchPlan.contains("Batched: true"), batchPlan)
+    assert(batchPlan.contains("GreaterThanOrEqual(k,15000)"), batchPlan)
+    val batched = sortedStrings(q)
+    assert(batched == sortedStrings(src.filter($"k" >= 15000L && $"s" === "s3").select("k", "v")))
+    withoutWholeStage {
+      val plan = q.queryExecution.executedPlan.toString
+      assert(!plan.contains("Batched: true"), plan)
+      assert(plan.contains("GreaterThanOrEqual(k,15000)"), plan)
+      assert(sortedStrings(q) == batched)
+    }
+  }
+
+  test("rows served from batches: a 120-column csv scan (past spark.sql.codegen.maxFields)") {
+    val dir = tmpDir()
+    val src = spark.range(0, 3000, 1, 2).select((0 until 120).map(c => (col("id") * c).as(s"c$c")): _*)
+    src.write.format("4mc").option("payload", "csv").save(dir)
+    def scan = spark.read.format("4mc").option("payload", "csv").schema(src.schema).load(dir)
+    val plan = scan.queryExecution.executedPlan.toString
+    assert(!plan.contains("Batched: true"), plan.take(800))
+    val rows = sortedStrings(scan)
+    assert(rows == sortedStrings(src))
+    // the batched answer: with room for 120 fields Spark asks for batches
+    spark.conf.set("spark.sql.codegen.maxFields", "200")
+    try {
+      assert(scan.queryExecution.executedPlan.toString.contains("Batched: true"))
+      assert(sortedStrings(scan) == rows)
+    } finally spark.conf.unset("spark.sql.codegen.maxFields")
+  }
+
+  test("rows served from batches: text payload withOffsets, no whole-stage codegen") {
+    import spark.implicits._
+    val dir = tmpDir()
+    val lines = (0 until 30000).map(i => s"line-$i")
+    lines.toDF("value").repartition(2).write.format("4mc").save(dir)
+    def scan = spark.read.format("4mc").option("withOffsets", "true").load(dir)
+    val batched = sortedStrings(scan)
+    assert(scan.select("value").as[String].collect().sorted.toSeq == lines.sorted)
+    withoutWholeStage {
+      val plan = scan.queryExecution.executedPlan.toString
+      assert(!plan.contains("Batched: true"), plan)
+      assert(sortedStrings(scan) == batched)
+    }
+  }
+
+  test("rows served from batches are UnsafeRows: the scan feeds a shuffle, no whole-stage codegen") {
+    import spark.implicits._
+    val dir = tmpDir()
+    val src = (0 until 20000).map(i => (i.toLong, s"g${i % 13}", i % 5)).toDF("k", "g", "n")
+    src.write.format("4mc").option("payload", "csv").save(dir)
+    // repartition puts the exchange straight over the scan: the shuffle
+    // writer's UnsafeRowSerializer takes the scan's rows as they are
+    def q(df: org.apache.spark.sql.DataFrame) =
+      df.repartition(4, $"g").groupBy("g").agg(count(lit(1)).as("c"), sum("n").as("s"))
+    def scan = spark.read.format("4mc").option("payload", "csv").schema(src.schema).load(dir)
+    val batched = sortedStrings(q(scan))
+    assert(batched == sortedStrings(q(src)))
+    withoutWholeStage {
+      val plan = q(scan).queryExecution.executedPlan.toString
+      assert(!plan.contains("Batched: true"), plan)
+      assert(plan.contains("Exchange hashpartitioning(g"), plan)
+      assert(sortedStrings(q(scan)) == batched)
+    }
+  }
+
+  test("a decimal(20,0) partition column plans batched and reads exactly") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val dir = tmpDir()
+    val big = "12345678901234567890"
+    (0 until 1000).map(i => (i.toLong, s"v$i")).toDF("k", "s")
+      .write.format("4mc").option("payload", "csv").save(s"$dir/p=$big")
+    (1000 until 1500).map(i => (i.toLong, s"v$i")).toDF("k", "s")
+      .write.format("4mc").option("payload", "csv").save(s"$dir/p=1")
+    val sch = StructType(Seq(StructField("k", LongType), StructField("s", StringType)))
+    def scan = spark.read.format("4mc").option("payload", "csv").schema(sch).load(dir)
+    assert(scan.schema("p").dataType == DecimalType(20, 0))
+    val plan = scan.queryExecution.executedPlan.toString
+    assert(plan.contains("Batched: true"), plan)
+    val want = ((0 until 1000).map(i => s"[$i,v$i,$big]") ++
+      (1000 until 1500).map(i => s"[$i,v$i,1]")).sorted
+    assert(sortedStrings(scan) == want)
+    assert(scan.filter($"k" === 7L).head().getDecimal(2) == new java.math.BigDecimal(big))
+    withoutWholeStage(assert(sortedStrings(scan) == want))
   }
 }

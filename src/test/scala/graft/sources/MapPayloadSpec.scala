@@ -110,12 +110,23 @@ class MapPayloadSpec extends AnyFunSuite {
     val df = fixtureDf(1500)
     val dir = tmpDir()
     df.write.format("4mc").option("payload", "csv").save(dir)
-    val vectorized = spark.read.format("4mc").option("payload", "csv").schema(schema).load(dir)
-    // _metadata forces supportBatch=false → the generic row fallback
-    val viaRow = spark.read.format("4mc").option("payload", "csv").schema(schema).load(dir)
+    // `_metadata` fields ride as constant columns Spark appends to each
+    // batch: the scan stays batched
+    def withFileName = spark.read.format("4mc").option("payload", "csv").schema(schema).load(dir)
       .select(col("id"), col("props"), col("note"), col("_metadata.file_name"))
-      .drop("file_name")
-    assert(canon(viaRow) == canon(vectorized))
+    def check(): Unit = {
+      val rows = withFileName.collect()
+      assert(rows.forall(_.getString(3).endsWith(".4mc")))
+      assert(canon(withFileName) == canon(df))
+    }
+    assert(withFileName.queryExecution.executedPlan.toString.contains("Batched: true"))
+    check()
+    // rows served from the same batches (no whole-stage codegen)
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try {
+      assert(withFileName.queryExecution.executedPlan.toString.contains("Batched: false"))
+      check()
+    } finally spark.conf.unset("spark.sql.codegen.wholeStage")
   }
 
   test("typed compaction preserves map columns entry-exactly") {

@@ -60,7 +60,8 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     test(s"two-generation dir reads with nulls for absent columns (layout=$layout vectorized=$vec)") {
       val dir = tmpDir()
       writeTwoGen(dir, layout)
-      spark.conf.set("spark.graft.fourmc.vectorized", vec)
+      // vectorized=false: whole-stage codegen off, so the scan serves rows
+      spark.conf.set("spark.sql.codegen.wholeStage", vec)
       try {
         val t = readAll(dir)
         assert(t.count() == 2000L)
@@ -73,7 +74,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
         assert(t.filter(col("props") === "p1500").count() == 1L)
         assert(t.agg(sum(col("id") * lit(2))).head().getLong(0) == 2000L * 1999L)
         assert(t.filter(col("name") === "n500").select("props").head().isNullAt(0))
-      } finally spark.conf.set("spark.graft.fourmc.vectorized", "true")
+      } finally spark.conf.unset("spark.sql.codegen.wholeStage")
     }
   }
 
@@ -147,7 +148,8 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     test(s"type widening int->long + decimal growth reads exactly (layout=$layout vectorized=$vec)") {
       val dir = tmpDir()
       writeWidened(dir, layout)
-      spark.conf.set("spark.graft.fourmc.vectorized", vec)
+      // vectorized=false: whole-stage codegen off, so the scan serves rows
+      spark.conf.set("spark.sql.codegen.wholeStage", vec)
       try {
       val t = spark.read.format("4mc").option("payload", "csv")
         .schema(genLongSchema).load(dir)
@@ -165,7 +167,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
       // null semantics survive widening
       assert(t.filter(col("ln").isNull).count() ==
         (0L until 1000L).count(_ % 17 == 3).toLong)
-      } finally spark.conf.set("spark.graft.fourmc.vectorized", "true")
+      } finally spark.conf.unset("spark.sql.codegen.wholeStage")
     }
   }
 

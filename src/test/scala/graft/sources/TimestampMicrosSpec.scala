@@ -67,11 +67,11 @@ class TimestampMicrosSpec extends AnyFunSuite {
         .option("codec", "zstd-1").save(dir)
       val back = spark.read.format("4mc").option("payload", "csv").schema(schema).load(dir)
       assert(canon(back) == want, s"layout=$layout")
-      // row path agrees
-      spark.conf.set("spark.graft.fourmc.vectorized", "false")
+      // rows served from the same batches (no whole-stage codegen) agree
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
       try assert(canon(
         spark.read.format("4mc").option("payload", "csv").schema(schema).load(dir)) == want)
-      finally spark.conf.set("spark.graft.fourmc.vectorized", "true")
+      finally spark.conf.unset("spark.sql.codegen.wholeStage")
     }
     // the text encoding at the default .SSS pattern is NOT micros-exact —
     // that asymmetry is what the micros tag exists to close
