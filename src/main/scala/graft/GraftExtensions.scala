@@ -22,9 +22,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // MIN/MAX/COUNT(*) from 4mc footer zone maps (parquet-style aggregate
     // pushdown); disable with spark.graft.fourmc.aggPushdown=false
     ext.injectOptimizerRule(_ => graft.plans.McAggregatePushdown)
-    // the rewritten aggregate runs on the driver, with no Spark job, while
-    // its file list and the blocks it must decode stay small
-    ext.injectPlannerStrategy(_ => graft.plans.McFooterAggregateStrategy)
+    // small metadata-selective reads (footer-answered and filtered
+    // aggregates, pruned lookups) run on the driver, with no Spark job,
+    // while their file list and the lines they must decode stay small
+    ext.injectPlannerStrategy(_ => graft.plans.McDriverScanStrategy)
     // join-driven 4mc block pruning: broadcast-small build sides inject a
     // RuntimeKeyFilter into the probe scan (the fact-side analog of DPP);
     // disable with spark.graft.fourmc.runtimeKeyFilter.inject=false.

@@ -20,6 +20,9 @@ import org.apache.spark.storage.StorageLevel
   */
 object Dedup {
 
+  // plan decisions (which data-dependent path an op took), one INFO line each
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup")
+
   /** D1: exact dedup on `keys`, keeping the row with the smallest `tie`.
     * groupBy + min_by(struct) = partial-aggregated, one shuffle on the key
     * hash — at 100 TB this is the cheapest possible exact dedup.
@@ -182,7 +185,7 @@ object Dedup {
     }.fold(Array(0L, 0L, 0L))((x, y) => Array(Math.addExact(x(0), y(0)), x(1) + y(1), x(2) + y(2)))
     val fanout = df2.toDouble / math.max(1L, dfs)
     val usePrefix = fanout >= PrefixFanoutThreshold
-    System.err.println(
+    log.info(
       f"[ngram] expected self-join fanout $fanout%.1f -> ${if (usePrefix) "prefix-filter" else "naive"} path")
     if (!usePrefix) jaccardFromPosts(posts, threshold, dfs)
     else prefixFromPosts(posts, dfreq, threshold, nw)

@@ -29,6 +29,9 @@ import org.apache.spark.sql.functions._
   */
 object Spans {
 
+  // plan decisions (which data-dependent path an op took), one INFO line each
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Spans")
+
   /** (doc, pos) packed into one 64-bit corpus position — doc id in the high
     * 39 bits, token position in the low 25 — the same layout suffix-array
     * dedup tools use for corpus offsets. UnsafeRow pads every shuffle field
@@ -373,12 +376,12 @@ object Spans {
     val keys = Dedup.checkpointRows(hotPlan).map(_.getLong(0))
       .take(math.min(maxKeys + 1, Int.MaxValue.toLong).toInt)
     if (keys.length > maxKeys) {
-      System.err.println(
+      log.info(
         s"[spans] hot-span set for $what has more than $maxKeys keys: " +
           "falling back to the exchange plan (shuffled semi join + window islands)")
       Left(hotPlan)
     } else {
-      System.err.println(s"[spans] hot-span set for $what: ${keys.length} keys -> map-side islands")
+      log.info(s"[spans] hot-span set for $what: ${keys.length} keys -> map-side islands")
       java.util.Arrays.sort(keys)
       Right(keys)
     }

@@ -5,7 +5,6 @@ import graft.format._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{
@@ -234,14 +233,31 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
   ): PartitionedFile => Iterator[InternalRow] = {
     val broadcastConf =
       sparkSession.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
+    val rkfOpt = options.get(RuntimeKeyFilter.OptionKey)
+      .map(FourMcFileFormat.rkfBroadcast(sparkSession, _))
+    val batches = batchReader(dataSchema, partitionSchema, requiredSchema, filters, options,
+      rkfOpt, () => broadcastConf.value.value)
+    if (options.get(FileFormat.OPTION_RETURNING_BATCH).contains("true")) batches
+    else new FourMcVectorizedReader.BatchRows(
+      StructType(requiredSchema.fields ++ partitionSchema.fields), batches)
+  }
+
+  /** The per-file batch reader behind [[buildReaderWithPartitionValues]],
+    * minus its broadcasts: [[graft.plans.McDriverScanExec]] calls it on the
+    * driver with the session's own hadoop conf and no runtime key filter.
+    * Each file's iterator is `Closeable`.
+    */
+  private[graft] def batchReader(
+      dataSchema: StructType,
+      partitionSchema: StructType,
+      requiredSchema: StructType,
+      filters: Seq[Filter],
+      options: Map[String, String],
+      rkfOpt: Option[(String, org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)],
+      conf: () => Configuration
+  ): PartitionedFile => Iterator[InternalRow] = {
     val payload = options.getOrElse("payload", "text")
-    // Reference semantics (FourMcInputFormatUtil.java:50-62): only
-    // .4mc/.4mz files are container data; anything else in the directory is
-    // skipped rather than failing the scan. option("acceptAnyExtension",
-    // true) reads every listed file regardless of name.
-    val acceptAny = options.get("acceptAnyExtension").exists(_.toBoolean)
-    val extOk = (file: PartitionedFile) =>
-      acceptAny || { val p = file.toPath.getName; p.endsWith(".4mc") || p.endsWith(".4mz") }
+    val extOk = (file: PartitionedFile) => FourMcFileFormat.accepts(file, options)
     // option("ignoreCorruptBlocks", true): the block-granular analog of
     // spark.sql.files.ignoreCorruptFiles. A failed block (checksum,
     // structure, codec) is skipped by resyncing to the footer index's next
@@ -249,30 +265,56 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
     // duplicated: ownership is unchanged, so other splits still skip their
     // first partial line). Counted in FourMcScanMetrics.corruptSkipped.
     val permissive = options.get("ignoreCorruptBlocks").exists(_.toBoolean)
-    val batches =
-      if (payload == "csv") {
-        val rkfOpt = options.get(RuntimeKeyFilter.OptionKey)
-          .map(FourMcFileFormat.rkfBroadcast(sparkSession, _))
-        FourMcVectorizedReader.csvReader(
-          requiredSchema, partitionSchema, dataSchema, filters,
-          delim = CsvPayload.delimiterOf(options.getOrElse("delimiter", "|")),
-          tsFmt = options.getOrElse("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSS"),
-          statsEnabled = options.getOrElse("blockStats", "true").toBoolean,
-          permissive = permissive,
-          rkfOpt = rkfOpt,
-          broadcastConf = broadcastConf,
-          extOk = extOk)
-      } else {
-        FourMcVectorizedReader.rawReader(
-          requiredSchema, partitionSchema, payload,
-          ebMarkerOpt = options.get("ebMarker"),
-          permissive = permissive,
-          broadcastConf = broadcastConf,
-          extOk = extOk)
-      }
-    if (options.get(FileFormat.OPTION_RETURNING_BATCH).contains("true")) batches
-    else new FourMcVectorizedReader.BatchRows(
-      StructType(requiredSchema.fields ++ partitionSchema.fields), batches)
+    if (payload == "csv")
+      FourMcVectorizedReader.csvReader(
+        requiredSchema, partitionSchema, dataSchema, filters,
+        delim = CsvPayload.delimiterOf(options.getOrElse("delimiter", "|")),
+        tsFmt = options.getOrElse("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSS"),
+        statsEnabled = options.getOrElse("blockStats", "true").toBoolean,
+        permissive = permissive,
+        rkfOpt = rkfOpt,
+        conf = conf,
+        extOk = extOk)
+    else
+      FourMcVectorizedReader.rawReader(
+        requiredSchema, partitionSchema, payload,
+        ebMarkerOpt = options.get("ebMarker"),
+        permissive = permissive,
+        conf = conf,
+        extOk = extOk)
+  }
+
+  /** Planning-time census of a whole-file read of `files`, from their
+    * footers, for [[graft.plans.McDriverScanStrategy]]'s bounds: the blocks
+    * the pushed `filters` refute, and the lines
+    * ([[FourMcFileFormat.blockLines]]) of those the reader decodes. A
+    * metadata-only COUNT(*) answers its blocks from the footers.
+    */
+  private[graft] def census(
+      files: Seq[PartitionedFile],
+      indexOf: PartitionedFile => FourMcIndex,
+      dataSchema: StructType,
+      requiredSchema: StructType,
+      filters: Seq[Filter],
+      options: Map[String, String]): FourMcFileFormat.Census = {
+    val statsEnabled = options.getOrElse("blockStats", "true").toBoolean
+    val permissive = options.get("ignoreCorruptBlocks").exists(_.toBoolean)
+    val csv = options.getOrElse("payload", "text") == "csv"
+    files.filter(FourMcFileFormat.accepts(_, options)).foldLeft(FourMcFileFormat.Census()) {
+      (acc, file) =>
+        val index = indexOf(file)
+        val countOnly = csv && requiredSchema.isEmpty && filters.isEmpty && statsEnabled &&
+          !permissive && index.stats.isDefined
+        val keep =
+          if (!csv) None
+          else FourMcFileFormat.keepBlocksOpt(index, dataSchema, filters, statsEnabled, permissive, None)
+        val kept = (0 until index.numBlocks).filter(b => keep.forall(_(b)))
+        if (countOnly) acc.copy(answered = acc.answered + kept.length)
+        else acc.copy(
+          decoded = acc.decoded + kept.length,
+          skipped = acc.skipped + (index.numBlocks - kept.length),
+          lines = acc.lines + kept.map(FourMcFileFormat.blockLines(index, _)).sum)
+    }
   }
 
   override def supportDataType(dataType: DataType): Boolean = dataType match {
@@ -309,11 +351,14 @@ object FourMcScanMetrics {
   val corruptSkipped = new java.util.concurrent.atomic.LongAdder
   /** Cold footer-index reads (cache misses) — the many-small-files bench
     * gate asserts this stays ZERO while planning a plain scan: footers are
-    * task-side I/O there. The one bounded driver-side exception is a
-    * footer-answered aggregate over at most
-    * [[graft.plans.McFooterAggregateStrategy.MaxFiles]] files
-    * ([[graft.plans.McFooterAggregateExec]]), which reads those footers
-    * while planning, through the same cache.
+    * task-side I/O there. The one bounded driver-side exception is a small
+    * selective read planned on the driver
+    * ([[graft.plans.McDriverScanExec]]): an aggregate over the plain or the
+    * footer-stats relation, or a lookup whose footers refute a block, over
+    * at most [[graft.plans.McDriverScanStrategy.MaxFiles]] files. Planning
+    * reads those footers, through the same cache, to count the lines the
+    * read decodes against
+    * [[graft.plans.McDriverScanStrategy.MaxDecodedLines]].
     */
   val footerReads = new java.util.concurrent.atomic.LongAdder
   /** Rows answered from stats metadata alone (COUNT(*) fast path — no
@@ -420,16 +465,17 @@ object FourMcFileFormat {
       filters: Seq[Filter],
       statsEnabled: Boolean,
       permissive: Boolean,
-      rkfOpt: Option[(String, org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)]
+      rkfOpt: Option[(String, org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)],
+      read: FourMcVectorizedReader.FileRead
   ): McColumnarCursor = {
     val keepOpt = keepBlocksOpt(index, dataSchema, filters, statsEnabled, permissive, rkfOpt)
     val cur = new McColumnarCursor(in, index, index.stats.get.tags.length, needed,
       file.start, file.start + file.length, keepOpt.orNull, permissive)
-    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+    read.onFinish {
       FourMcScanMetrics.blocksRead.add(cur.blocksRead)
       FourMcScanMetrics.blocksSkipped.add(cur.blocksSkipped)
       if (permissive) FourMcScanMetrics.corruptSkipped.add(cur.corruptSkipped)
-    })
+    }
     cur
   }
 
@@ -445,23 +491,22 @@ object FourMcFileFormat {
       filters: Seq[Filter],
       statsEnabled: Boolean,
       permissive: Boolean,
-      rkfOpt: Option[(String, org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)]
+      rkfOpt: Option[(String, org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)],
+      read: FourMcVectorizedReader.FileRead
   ): McLineStream = {
     val keepOpt = keepBlocksOpt(index, dataSchema, filters, statsEnabled, permissive, rkfOpt)
     keepOpt match {
       case Some(keepArr) =>
         val it = new FourMcPrunedLineIterator(in, index, file.start, file.start + file.length, keepArr)
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+        read.onFinish {
           FourMcScanMetrics.blocksRead.add(it.blocksRead)
           FourMcScanMetrics.blocksSkipped.add(it.blocksSkipped)
-        })
+        }
         it
       case None =>
         val it = new FourMcLineIterator(in, index, file.start, file.start + file.length,
           permissive = permissive)
-        if (permissive) Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-          FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped)
-        })
+        if (permissive) read.onFinish(FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped))
         it
     }
   }
@@ -485,6 +530,35 @@ object FourMcFileFormat {
     val b = rkfCache.computeIfAbsent(
       spec, s => spark.sparkContext.broadcast(RuntimeKeyFilter.decode(s)._2))
     (spec.substring(0, spec.indexOf(':')), b, RuntimeKeyFilter.isHashed(spec))
+  }
+
+  /** Reference semantics (FourMcInputFormatUtil.java:50-62): only
+    * .4mc/.4mz files are container data; anything else in the directory is
+    * skipped rather than failing the scan. option("acceptAnyExtension",
+    * true) reads every listed file regardless of name.
+    */
+  private[graft] def accepts(file: PartitionedFile, options: Map[String, String]): Boolean =
+    options.get("acceptAnyExtension").exists(_.toBoolean) || {
+      val p = file.toPath.getName
+      p.endsWith(".4mc") || p.endsWith(".4mz")
+    }
+
+  /** Block census of a planned whole-file read: blocks answered from the
+    * footers, decoded and skipped, and the lines of the decoded ones.
+    */
+  final case class Census(answered: Long = 0, decoded: Long = 0, skipped: Long = 0, lines: Long = 0)
+
+  /** Lines block `b` costs to decode: its owned-line count from the stats
+    * segment, or, in a file without one, an estimate from its stored
+    * bytes, expanded by a typical ratio for its codec (×3 LZ4, ×5 ZSTD)
+    * into lines of 128 bytes.
+    */
+  private[graft] def blockLines(index: FourMcIndex, b: Int): Long = index.stats match {
+    case Some(st) => st.lineCount(b).toLong
+    case None =>
+      val stored =
+        (if (b + 1 < index.numBlocks) index.blockOffsets(b + 1) else index.eosPos) - index.blockOffsets(b)
+      stored * (if (index.zstd) 5 else 3) / 128
   }
 
   private[sources] def cachedIndex(file: PartitionedFile, in: McInput): FourMcIndex =

@@ -36,7 +36,7 @@ import org.apache.spark.util.SerializableConfiguration
   * as [[FourMcFileFormat.ownedLineCount]]). Footer reads stay task-side —
   * planning this relation lists files only — with one bounded exception:
   * when the file list and the decode load are small,
-  * [[graft.plans.McFooterAggregateExec]] reads the footers while planning
+  * [[graft.plans.McDriverScanExec]] reads the footers while planning
   * (through the shared index cache) and runs [[reader]] on the driver,
   * with no Spark job.
   *
@@ -96,11 +96,6 @@ class FourMcStatsFileFormat(
     val broadcastConf =
       sparkSession.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
     reader(requiredSchema, options, () => broadcastConf.value.value)
-  }
-
-  private def accepts(file: PartitionedFile, options: Map[String, String]): Boolean = {
-    val p = file.toPath.getName
-    options.get("acceptAnyExtension").exists(_.toBoolean) || p.endsWith(".4mc") || p.endsWith(".4mz")
   }
 
   /** What one required schema asks of the footers, and the per-block
@@ -311,7 +306,7 @@ class FourMcStatsFileFormat(
   }
 
   /** The per-file reader behind [[buildReader]], minus its broadcast:
-    * [[graft.plans.McFooterAggregateExec]] calls it on the driver with the
+    * [[graft.plans.McDriverScanExec]] calls it on the driver with the
     * session's own hadoop conf. Each file's input closes when its rows are
     * exhausted, when its footer read throws, on `close()` of the returned
     * iterator (the driver's `finally`), and at task completion inside a
@@ -331,7 +326,7 @@ class FourMcStatsFileFormat(
     import layout._
 
     (file: PartitionedFile) => {
-      if (!accepts(file, options)) Iterator.empty
+      if (!FourMcFileFormat.accepts(file, options)) Iterator.empty
       else {
         val in = FourMcFileFormat.openInput(file, conf())
         // blocks decoded so far, set by the decode branch below; reported
@@ -681,21 +676,21 @@ class FourMcStatsFileFormat(
   }
 
   /** Planning-time census of whole files, for
-    * [[graft.plans.McFooterAggregateExec]]'s bounds: blocks answered from
-    * the footers, decoded and skipped, and the stored bytes of the decoded
-    * ones — the verdicts [[reader]] reaches on the same files.
+    * [[graft.plans.McDriverScanStrategy]]'s bounds: blocks answered from
+    * the footers, decoded and skipped, and the lines of the decoded ones
+    * ([[FourMcFileFormat.blockLines]]) — the verdicts [[reader]] reaches on
+    * the same files.
     */
   private[graft] def sweep(
       files: Seq[PartitionedFile],
       indexOf: PartitionedFile => FourMcIndex,
       requiredSchema: StructType,
-      options: Map[String, String]): FourMcStatsFileFormat.Sweep = {
+      options: Map[String, String]): FourMcFileFormat.Census = {
     val layout = new Layout(requiredSchema)
-    files.filter(accepts(_, options)).foldLeft(FourMcStatsFileFormat.Sweep()) { (acc, file) =>
+    val accepted = files.filter(FourMcFileFormat.accepts(_, options))
+    accepted.foldLeft(FourMcFileFormat.Census()) { (acc, file) =>
       val index = indexOf(file)
       val n = index.numBlocks
-      def bytes(b: Int): Long =
-        (if (b + 1 < n) index.blockOffsets(b + 1) else index.eosPos) - index.blockOffsets(b)
       val effTags = layout.fileTags(index)
       val verdict = index.stats match {
         case Some(st) if layout.statsMatch(st, effTags) =>
@@ -707,7 +702,7 @@ class FourMcStatsFileFormat(
         answered = acc.answered + verdict.count(_ == FourMcStatsFileFormat.Answered),
         decoded = acc.decoded + decoded.length,
         skipped = acc.skipped + verdict.count(_ == FourMcStatsFileFormat.Skipped),
-        decodedBytes = acc.decodedBytes + decoded.map(bytes).sum)
+        lines = acc.lines + decoded.map(FourMcFileFormat.blockLines(index, _)).sum)
     }
   }
 }
@@ -736,10 +731,6 @@ object FourMcStatsFileFormat {
   private[sources] final val Answered: Byte = 1
   private[sources] final val Decode: Byte = 2
   private[sources] final val Skipped: Byte = 3
-
-  /** Block census of a set of whole files (see `sweep`). */
-  final case class Sweep(
-      answered: Long = 0, decoded: Long = 0, skipped: Long = 0, decodedBytes: Long = 0)
 
   /** Synthetic schema for the rule: bounds for each (colIdx, needMin,
     * needMax) target, a `_nn_<i>` per-block non-null count for each

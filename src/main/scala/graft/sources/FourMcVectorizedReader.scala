@@ -124,7 +124,42 @@ object FourMcVectorizedReader {
       }
     }
 
-  /** Typed-csv batch reader over both block layouts (rows, columnar). */
+  /** What one file's reader releases and reports, once: when its batches
+    * are exhausted, on `close()` of the returned iterator (a consumer
+    * outside a task that stops early or fails), and at task completion
+    * inside a task. Scan counters are added here rather than in a task
+    * listener, so a read on the driver counts as a task's read does.
+    */
+  private[sources] final class FileRead {
+    private var actions = List.empty[() => Unit]
+    private var done = false
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => finish()))
+
+    /** Runs `a` at finish, before everything registered earlier. */
+    def onFinish(a: => Unit): Unit = actions ::= (() => a)
+
+    def finish(): Unit = if (!done) { done = true; run(actions) }
+
+    private def run(as: List[() => Unit]): Unit = as match {
+      case a :: rest => try a() finally run(rest)
+      case Nil       =>
+    }
+  }
+
+  /** One file's batches from `open`, wrapped so that everything it
+    * registered on its [[FileRead]] runs once: also when `open` throws.
+    */
+  private def fileRead(open: FileRead => Iterator[InternalRow]): Iterator[InternalRow] = {
+    val read = new FileRead
+    val batches =
+      try open(read)
+      catch { case e: Throwable => read.finish(); throw e }
+    org.apache.spark.sql.graftbridge.PlanBridge.completionIterator(batches)(read.finish())
+  }
+
+  /** [[csvReader]] with its hadoop conf from a broadcast, for a reader
+    * built once and shipped to tasks.
+    */
   def csvReader(
       requiredSchema: StructType,
       partitionSchema: StructType,
@@ -136,6 +171,25 @@ object FourMcVectorizedReader {
       permissive: Boolean,
       rkfOpt: Option[(String, org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)],
       broadcastConf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration],
+      extOk: PartitionedFile => Boolean
+  ): PartitionedFile => Iterator[InternalRow] =
+    csvReader(requiredSchema, partitionSchema, dataSchema, filters, delim, tsFmt, statsEnabled,
+      permissive, rkfOpt, conf = () => broadcastConf.value.value, extOk = extOk)
+
+  /** Typed-csv batch reader over both block layouts (rows, columnar).
+    * Each file's iterator is `Closeable` (see [[FileRead]]).
+    */
+  def csvReader(
+      requiredSchema: StructType,
+      partitionSchema: StructType,
+      dataSchema: StructType,
+      filters: Seq[Filter],
+      delim: Byte,
+      tsFmt: String,
+      statsEnabled: Boolean,
+      permissive: Boolean,
+      rkfOpt: Option[(String, org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)],
+      conf: () => org.apache.hadoop.conf.Configuration,
       extOk: PartitionedFile => Boolean
   ): PartitionedFile => Iterator[InternalRow] = {
     val fieldIdx = requiredSchema.fields.map(f => dataSchema.fieldIndex(f.name))
@@ -163,10 +217,9 @@ object FourMcVectorizedReader {
     val predFields: Array[Int] =
       (0 until nFields).filter(k => fieldPreds(k).nonEmpty).toArray
 
-    (file: PartitionedFile) => if (!extOk(file)) Iterator.empty else {
-      val conf = broadcastConf.value.value
-      val in = FourMcFileFormat.openInput(file, conf)
-      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
+    (file: PartitionedFile) => if (!extOk(file)) Iterator.empty else fileRead { read =>
+      val in = FourMcFileFormat.openInput(file, conf())
+      read.onFinish(in.close())
       val index = FourMcFileFormat.cachedIndex(file, in)
       // Metadata-only COUNT(*): an empty projection with no pushed filters
       // is answerable from the stats segment's per-block OWNED-line counts
@@ -180,7 +233,7 @@ object FourMcVectorizedReader {
         FourMcScanMetrics.metadataCountRows.add(n)
         val partVecs = partitionVectors(partitionSchema, file.partitionValues)
         val batch = new ColumnarBatch(partVecs)
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => batch.close()))
+        read.onFinish(batch.close())
         erase(countBatches(batch, n))
       } else if (index.stats.exists(_.columnar)) {
       // ======= columnar layout fast path =======
@@ -199,7 +252,7 @@ object FourMcVectorizedReader {
       val slotOf: Array[Int] = fieldIdx.map(src =>
         if (src < fileCols) java.util.Arrays.binarySearch(neededOrds, src) else -1)
       val cursor = FourMcFileFormat.columnarCursor(
-        in, index, file, neededOrds, dataSchema, filters, statsEnabled, permissive, rkfOpt)
+        in, index, file, neededOrds, dataSchema, filters, statsEnabled, permissive, rkfOpt, read)
       // per-FILE parse tags (micros-encoded timestamps carry tag 14)
       val tags = CsvPayload.fileTags(fieldTags, fieldIdx, index.stats)
       // all-pass elision mask: blocks whose zone maps prove every pushed
@@ -216,7 +269,7 @@ object FourMcVectorizedReader {
       val allVectors: Array[ColumnVector] =
         dataVectors.map(v => v: ColumnVector) ++ partitionVectors(partitionSchema, file.partitionValues)
       val batch = new ColumnarBatch(allVectors)
-      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => batch.close()))
+      read.onFinish(batch.close())
 
       val nPred = predFields.length
       val predLongs = new Array[Long](BatchSize * math.max(1, nPred))
@@ -731,9 +784,18 @@ object FourMcVectorizedReader {
           }
           true
         }
-        private var pending = ensureRows()
-        override def hasNext: Boolean = pending
+        // the next block is read when a batch is asked for, not after the
+        // previous one is handed out: a consumer that stops (a LIMIT)
+        // reads no block past the one it stopped in
+        private var pending = false
+        private var primed = false
+        override def hasNext: Boolean = {
+          if (!primed) { pending = ensureRows(); primed = true }
+          pending
+        }
         override def next(): ColumnarBatch = {
+          if (!hasNext) throw new NoSuchElementException
+          primed = false
           var k = 0
           while (k < nFields) { dataVectors(k).reset(); k += 1 }
           val n = math.min(BatchSize, cursor.rows - r0)
@@ -755,7 +817,6 @@ object FourMcVectorizedReader {
           fillColumns(r0, selN, replay = evalThis)
           batchOrd += 1
           r0 += n
-          pending = ensureRows()
           batch.setNumRows(selN)
           batch
         }
@@ -764,7 +825,7 @@ object FourMcVectorizedReader {
       lazy val fmt = java.time.format.DateTimeFormatter.ofPattern(tsFmt)
         .withZone(java.time.ZoneOffset.UTC)
       val lines = FourMcFileFormat.csvLines(
-        in, index, file, dataSchema, filters, statsEnabled, permissive, rkfOpt)
+        in, index, file, dataSchema, filters, statsEnabled, permissive, rkfOpt, read)
       // per-FILE parse tags (micros-encoded timestamps carry tag 14)
       val tags = CsvPayload.fileTags(fieldTags, fieldIdx, index.stats)
 
@@ -772,7 +833,7 @@ object FourMcVectorizedReader {
       val allVectors: Array[ColumnVector] =
         dataVectors.map(v => v: ColumnVector) ++ partitionVectors(partitionSchema, file.partitionValues)
       val batch = new ColumnarBatch(allVectors)
-      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => batch.close()))
+      read.onFinish(batch.close())
 
       val stride = neededFields + 1
       val bufBytes = new Array[Array[Byte]](BatchSize)
@@ -1168,7 +1229,7 @@ object FourMcVectorizedReader {
       payload: String,
       ebMarkerOpt: Option[String],
       permissive: Boolean,
-      broadcastConf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration],
+      conf: () => org.apache.hadoop.conf.Configuration,
       extOk: PartitionedFile => Boolean
   ): PartitionedFile => Iterator[InternalRow] = {
     val wantOffset = requiredSchema.fieldNames.contains("offset")
@@ -1181,16 +1242,15 @@ object FourMcVectorizedReader {
     val valueOrd = if (wantOffset && wantValue) (if (offsetFirst) 1 else 0) else 0
     val offsetOrd = if (wantOffset && wantValue) (if (offsetFirst) 0 else 1) else 0
 
-    (file: PartitionedFile) => if (!extOk(file)) Iterator.empty else {
-      val conf = broadcastConf.value.value
-      val in = FourMcFileFormat.openInput(file, conf)
-      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => in.close()))
+    (file: PartitionedFile) => if (!extOk(file)) Iterator.empty else fileRead { read =>
+      val in = FourMcFileFormat.openInput(file, conf())
+      read.onFinish(in.close())
       val index = FourMcFileFormat.cachedIndex(file, in)
       val dataVectors = OnHeapColumnVector.allocateColumns(BatchSize, requiredSchema)
       val allVectors: Array[ColumnVector] =
         dataVectors.map(v => v: ColumnVector) ++ partitionVectors(partitionSchema, file.partitionValues)
       val batch = new ColumnarBatch(allVectors)
-      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => batch.close()))
+      read.onFinish(batch.close())
       if (!ebProto && !binary) {
         // text payload: zero-copy line slices feed putByteArray straight
         // from the decompressed block buffer — no per-line array or tuple
@@ -1198,9 +1258,7 @@ object FourMcVectorizedReader {
         // detached-line path was pure allocation overhead)
         val it = new FourMcLineIterator(in, index, file.start, file.start + file.length,
           permissive = permissive)
-        if (permissive) Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-          FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped)
-        })
+        if (permissive) read.onFinish(FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped))
         erase(new Iterator[ColumnarBatch] {
           private var pending = it.advanceSlice()
           override def hasNext: Boolean = pending
@@ -1229,9 +1287,7 @@ object FourMcVectorizedReader {
         else {
           val it = new FourMcRecordIterator(in, index, file.start, file.start + file.length,
             permissive = permissive)
-          if (permissive) Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-            FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped)
-          })
+          if (permissive) read.onFinish(FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped))
           it
         }
       erase(new Iterator[ColumnarBatch] {

@@ -24,6 +24,18 @@ object PlanBridge {
       def close(): Unit = done
     }
 
+  /** The data-source filters a file scan hands its reader: what
+    * `FileSourceScanLike.pushedDownFilters` (protected) computes for a scan
+    * with no metadata columns and no subqueries.
+    */
+  def pushedFilters(scan: org.apache.spark.sql.execution.FileSourceScanExec)
+      : Seq[org.apache.spark.sql.sources.Filter] = {
+    val nested = org.apache.spark.sql.execution.datasources.DataSourceUtils
+      .supportNestedPredicatePushdown(scan.relation)
+    scan.dataFilters.flatMap(
+      org.apache.spark.sql.execution.datasources.DataSourceStrategy.translateFilter(_, nested))
+  }
+
   /** The error a file scan task raises for a file it cannot read
     * (`QueryExecutionErrors` is `private[sql]`).
     */

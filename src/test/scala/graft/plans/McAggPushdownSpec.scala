@@ -999,11 +999,11 @@ class McAggPushdownSpec extends AnyFunSuite {
       "overflow-poisoned blocks must decode (no stored sum)")
   }
 
-  // ---- driver-side footer aggregates (McFooterAggregateExec): the driver
+  // ---- driver-side footer aggregates (McDriverScanExec): the driver
   // node, the forced job plan and the plain scan agree ----
 
   private def driverNodes(df: DataFrame): Int =
-    df.queryExecution.executedPlan.collect { case n: McFooterAggregateExec => n }.length
+    df.queryExecution.executedPlan.collect { case n: McDriverScanExec => n }.length
 
   private def withConf[T](key: String, value: String)(body: => T): T = {
     spark.conf.set(key, value)
@@ -1053,7 +1053,7 @@ class McAggPushdownSpec extends AnyFunSuite {
     val sample = tmpDir()
     writeSample(sample)
     val plan = threeWays("global min/max/count")(theAgg(scan(sample)))
-    assert(plan.contains("McFooterAggregate 4MC-STATS driver sweep: files=") &&
+    assert(plan.contains("McDriverScan 4MC-STATS driver read: files=") &&
       plan.contains("blocks from stats=") && plan.contains("blocks decoded="),
       s"the driver node must show its decision:\n$plan")
 
@@ -1144,7 +1144,7 @@ class McAggPushdownSpec extends AnyFunSuite {
     // one file past the driver node's file bound
     import spark.implicits._
     val many = tmpDir()
-    val nFiles = McFooterAggregateStrategy.MaxFiles + 1
+    val nFiles = McDriverScanStrategy.MaxFiles + 1
     (1 to 4000).map(i => (i.toLong, s"str${i % 97}", i / 7.0,
       java.sql.Timestamp.valueOf("2024-01-01 10:00:00"))).toDF("k", "s", "v", "t")
       .repartition(nFiles).write.format("4mc").option("payload", "csv").mode("overwrite").save(many)
@@ -1155,13 +1155,13 @@ class McAggPushdownSpec extends AnyFunSuite {
     assert(wide.collect().toSeq ==
       withConf("spark.graft.fourmc.aggPushdown", "false")(theAgg(scan(many)).collect().toSeq))
 
-    // random `v`: every block straddles `v > 500`, so the query decodes the
-    // whole stored size, past the byte bound
+    // random `v`: every block straddles `v > 500`, so the query decodes
+    // every line, past the line bound
     val heavy = tmpDir()
-    spark.range(0, 160000, 1, 2).select(col("id").as("k"), (rand(5) * 1000).as("v"))
+    val heavyLines = 160000L
+    spark.range(0, heavyLines, 1, 2).select(col("id").as("k"), (rand(5) * 1000).as("v"))
       .write.format("4mc").option("payload", "csv").save(heavy)
-    val stored = new java.io.File(heavy).listFiles.filter(_.getName.endsWith(".4mc")).map(_.length).sum
-    assert(stored > McFooterAggregateStrategy.MaxDecodedBytes, s"fixture too small: $stored B")
+    assert(heavyLines > McDriverScanStrategy.MaxDecodedLines, s"fixture too small: $heavyLines lines")
     assert(kvQuery(heavy).queryExecution.executedPlan.toString.contains("4MC-STATS"))
     assert(driverNodes(kvQuery(heavy)) == 0, "a decode load over the bound must keep the job plan")
     assert(sortedRows(kvQuery(heavy)) ==
