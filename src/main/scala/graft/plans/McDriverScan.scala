@@ -56,10 +56,8 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * (the job's file scan skips a bad or vanished file; the driver read has
   * no such handling). A refused aggregate returns no plan; a refused
   * Project/Filter returns the `FileSourceStrategy` plan already built for
-  * it, and a refused aggregate's child gets the plan built for it when
-  * Spark plans that child next, so planning lists a refused read's files
-  * once. (Spark clones the planned tree before it runs it, and the cloned
-  * scan lists them again.)
+  * it, so planning lists its files once. (Spark clones the planned tree
+  * before it runs it, and the cloned scan lists them again.)
   */
 object McDriverScanStrategy extends SparkStrategy {
 
@@ -71,9 +69,10 @@ object McDriverScanStrategy extends SparkStrategy {
     */
   val MaxFiles = 32
 
-  /** Most lines the driver decodes, counted by [[FourMcFileFormat.blockLines]]
-    * over the blocks the read cannot skip or answer from the footers; one
-    * bound for both relations. Lines, not stored bytes: an 80 k-line table
+  /** Most lines the driver reads, counted by [[FourMcFileFormat.blockLines]]
+    * over the blocks the read cannot skip; one bound for both relations. A
+    * file without a stats segment cannot tell its lines, so it is over the
+    * bound. Lines, not stored bytes: an 80 k-line table
     * stored as ZSTD-3 fits in 2.06 MB, and its full scans belong in a job.
     * On an 80 k-row lineitem table (64 KiB LZ4 blocks, 4-vCPU VM,
     * `local[3]`), the heaviest shape, a hash of all 16 columns, broke even
@@ -84,27 +83,14 @@ object McDriverScanStrategy extends SparkStrategy {
     */
   val MaxDecodedLines: Long = 16384
 
-  // the scan plan built for a refused aggregate, handed back when Spark
-  // plans the aggregate's child (the same instance) next on this thread
-  private val refusedChild = new ThreadLocal[(LogicalPlan, Seq[SparkPlan])]
-
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
-    val prior = refusedChild.get
-    refusedChild.remove()
-    if (prior != null && (prior._1 eq plan)) return prior._2
-    plan match {
-      case PhysicalAggregation(groups, aggs, results, child)
-          if aggs.forall(foldable) && (groups ++ results).forall(plain) && readable(child) =>
-        val scanPlan = FileSourceStrategy(child)
-        planOver(Some(McDriverScanExec.Fold(groups, aggs, results)), scanPlan) match {
-          case Some(node) => Seq(node)
-          case None       => refusedChild.set(child -> scanPlan); Nil
-        }
-      case _: Project | _: Filter if readable(plan) =>
-        val scanPlan = FileSourceStrategy(plan)
-        planOver(None, scanPlan).map(Seq(_)).getOrElse(scanPlan)
-      case _ => Nil
-    }
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case PhysicalAggregation(groups, aggs, results, child)
+        if aggs.forall(foldable) && (groups ++ results).forall(plain) && readable(child) =>
+      planOver(Some(McDriverScanExec.Fold(groups, aggs, results)), FileSourceStrategy(child)).toSeq
+    case _: Project | _: Filter if readable(plan) =>
+      val scanPlan = FileSourceStrategy(plan)
+      planOver(None, scanPlan).map(Seq(_)).getOrElse(scanPlan)
+    case _ => Nil
   }
 
   /** An aggregate [[AggregatingAccumulator]] folds as Spark's own

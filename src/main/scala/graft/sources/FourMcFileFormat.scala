@@ -287,8 +287,10 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
   /** Planning-time census of a whole-file read of `files`, from their
     * footers, for [[graft.plans.McDriverScanStrategy]]'s bounds: the blocks
     * the pushed `filters` refute, and the lines
-    * ([[FourMcFileFormat.blockLines]]) of those the reader decodes. A
-    * metadata-only COUNT(*) answers its blocks from the footers.
+    * ([[FourMcFileFormat.blockLines]]) of those the reader keeps. A
+    * metadata-only COUNT(*) answers its blocks from the footers without a
+    * decode, but the reader still makes one row per owned line of them, so
+    * their lines count too.
     */
   private[graft] def census(
       files: Seq[PartitionedFile],
@@ -309,11 +311,11 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
           if (!csv) None
           else FourMcFileFormat.keepBlocksOpt(index, dataSchema, filters, statsEnabled, permissive, None)
         val kept = (0 until index.numBlocks).filter(b => keep.forall(_(b)))
-        if (countOnly) acc.copy(answered = acc.answered + kept.length)
+        val lines = FourMcFileFormat.blockLines(index, kept)
+        if (countOnly) acc.copy(answered = acc.answered + kept.length).plusLines(lines)
         else acc.copy(
           decoded = acc.decoded + kept.length,
-          skipped = acc.skipped + (index.numBlocks - kept.length),
-          lines = acc.lines + kept.map(FourMcFileFormat.blockLines(index, _)).sum)
+          skipped = acc.skipped + (index.numBlocks - kept.length)).plusLines(lines)
     }
   }
 
@@ -544,21 +546,23 @@ object FourMcFileFormat {
     }
 
   /** Block census of a planned whole-file read: blocks answered from the
-    * footers, decoded and skipped, and the lines of the decoded ones.
+    * footers, decoded and skipped, and the lines the read makes rows of
+    * (`Long.MaxValue` when a file cannot say).
     */
-  final case class Census(answered: Long = 0, decoded: Long = 0, skipped: Long = 0, lines: Long = 0)
+  final case class Census(answered: Long = 0, decoded: Long = 0, skipped: Long = 0, lines: Long = 0) {
+    def plusLines(n: Long): Census =
+      copy(lines = if (n > Long.MaxValue - lines) Long.MaxValue else lines + n)
+  }
 
-  /** Lines block `b` costs to decode: its owned-line count from the stats
-    * segment, or, in a file without one, an estimate from its stored
-    * bytes, expanded by a typical ratio for its codec (×3 LZ4, ×5 ZSTD)
-    * into lines of 128 bytes.
+  /** Lines of `blocks`: their owned-line counts from the stats segment. A
+    * file without one gives `Long.MaxValue`, past any bound: its stored
+    * bytes do not tell its lines, since short, compressible text lines
+    * expand many times further than wide csv rows.
     */
-  private[graft] def blockLines(index: FourMcIndex, b: Int): Long = index.stats match {
-    case Some(st) => st.lineCount(b).toLong
-    case None =>
-      val stored =
-        (if (b + 1 < index.numBlocks) index.blockOffsets(b + 1) else index.eosPos) - index.blockOffsets(b)
-      stored * (if (index.zstd) 5 else 3) / 128
+  private[graft] def blockLines(index: FourMcIndex, blocks: Seq[Int]): Long = index.stats match {
+    case Some(st)                => blocks.map(st.lineCount(_).toLong).sum
+    case None if blocks.nonEmpty => Long.MaxValue
+    case None                    => 0L
   }
 
   private[sources] def cachedIndex(file: PartitionedFile, in: McInput): FourMcIndex =

@@ -701,8 +701,8 @@ class FourMcStatsFileFormat(
       acc.copy(
         answered = acc.answered + verdict.count(_ == FourMcStatsFileFormat.Answered),
         decoded = acc.decoded + decoded.length,
-        skipped = acc.skipped + verdict.count(_ == FourMcStatsFileFormat.Skipped),
-        lines = acc.lines + decoded.map(FourMcFileFormat.blockLines(index, _)).sum)
+        skipped = acc.skipped + verdict.count(_ == FourMcStatsFileFormat.Skipped))
+        .plusLines(FourMcFileFormat.blockLines(index, decoded))
     }
   }
 }

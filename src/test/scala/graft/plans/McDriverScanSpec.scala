@@ -174,6 +174,20 @@ class McDriverScanSpec extends AnyFunSuite {
       df.filter(col("d") >= lit(java.sql.Date.valueOf("1992-03-01")))
         .agg(count(lit(1)).as("n"), sum(col("price") * col("disc")).as("rev"))
     assert(N > McDriverScanStrategy.MaxDecodedLines)
+    // a metadata-only COUNT(*) the pushdown refuses (MIN/MAX of a partition
+    // column, or the pushdown switched off): the reader makes a row per line
+    val (parts, partsTwin) = tables(partitioned = true)
+    def partMax(df: DataFrame): DataFrame = df.agg(max(col("p")).as("mp"), count(lit(1)).as("n"))
+    def countAll(df: DataFrame): DataFrame = df.agg(count(lit(1)).as("n"))
+    // files without a stats segment: their lines are unknown, while the
+    // same rows with one plan the driver node
+    val (small, statsless, smallTwin) = (tmpDir(), tmpDir(), tmpDir())
+    for ((out, stats) <- Seq(small -> "true", statsless -> "false"))
+      rows(2000).drop("p").write.format("4mc").option("payload", "csv").option("blockStats", stats).save(out)
+    rows(2000).drop("p").write.parquet(smallTwin)
+    def lowKeys(df: DataFrame): DataFrame =
+      df.filter(col("k") < 100L).agg(sum(col("price")).as("sp"), count(lit(1)).as("n"))
+    assert(driverNodes(lowKeys(fourmc(small))) == 1)
     // always true, but nondeterministic to the optimizer (which folds
     // `rand() < 2` to true)
     def notAlways = floor(rand(3) * 2) < 5
@@ -191,14 +205,23 @@ class McDriverScanSpec extends AnyFunSuite {
       ("unfiltered scan under a repartition", () => fourmc(dir).select("k", "g").repartition(3)
         .groupBy("g").agg(count(lit(1)).as("n")), Some(() =>
         spark.read.parquet(twin).select("k", "g").groupBy("g").agg(count(lit(1)).as("n")))),
-      ("past the decode bound", () => heavy(fourmc(sorted)), Some(() => heavy(spark.read.parquet(sortedTwin)))))
-    try for ((label, q, want) <- shapes) {
+      ("past the decode bound", () => heavy(fourmc(sorted)), Some(() => heavy(spark.read.parquet(sortedTwin)))),
+      ("partition MAX with COUNT(*) past the line bound", () => partMax(fourmc(parts, partSchema)),
+        Some(() => partMax(spark.read.parquet(partsTwin)))),
+      ("stats-less files", () => lowKeys(fourmc(statsless)), Some(() => lowKeys(spark.read.parquet(smallTwin)))))
+    def keepsJob(label: String, q: () => DataFrame, want: Option[() => DataFrame]): Unit = {
       val df = q()
       assert(driverNodes(df) == 0, s"$label must keep the job plan:\n${df.queryExecution.executedPlan}")
       val got = sortedRows(df)
       assert(got.nonEmpty, s"$label: no rows")
       want.foreach(w => assert(got == sortedRows(w()), s"$label: wrong answer"))
-    } finally spark.sql(s"DROP TABLE IF EXISTS $bucketed")
+    }
+    try for ((label, q, want) <- shapes) keepsJob(label, q, want)
+    finally spark.sql(s"DROP TABLE IF EXISTS $bucketed")
+    withConf("spark.graft.fourmc.aggPushdown", "false") {
+      keepsJob("COUNT(*) past the line bound without the pushdown", () => countAll(fourmc(parts, partSchema)),
+        Some(() => countAll(spark.read.parquet(partsTwin))))
+    }
     // the unfiltered Project itself: nothing refuted, so its tasks stay
     val plain = fourmc(dir).select("k", "g")
     assert(driverNodes(plain) == 0 && graft.JobCount.jobsOf(spark)(plain.collect()) > 0)
