@@ -1,6 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,6 +21,19 @@ import org.apache.spark.storage.StorageLevel
   *     connected components (driver union-find under a size cap, iterative
   *     label propagation above it);
   *   - SimHash: 60-bit md5-derived signature, oracle-checkable.
+  *
+  * The two pair ops (n-gram Jaccard and MinHash-LSH) finish small inputs on
+  * the driver. Each makes one pass over the corpus into a checkpoint (the
+  * postings, or the signatures), and that pass also encodes the rows as
+  * primitive longs: each partition counts its longs and sends them back
+  * while they fit its share of [[DriverMaxLongs]] (4 Mi longs, 32 MiB), so
+  * the driver never holds more. Within the bound, and with an integral id
+  * column, the op ends on the driver: an inverted index with the AllPairs
+  * prefix and length filters, or the LSH banding, then exact verification.
+  * The result is a local relation with the distributed plan's schema and
+  * its values, so no join stage runs. Over the bound, for any other id
+  * type, or when the verified pairs would pass the same bound, the
+  * distributed plan runs as before, from the same checkpoint.
   */
 object Dedup {
 
@@ -100,16 +117,6 @@ object Dedup {
     }
   }
 
-  /** D2 (exact flavor): all pairs with 3-gram-shingle-set Jaccard >=
-    * `threshold`. Prefix-filtered (AllPairs/PPJoin-style): with every doc's
-    * shingles sorted by a global (docFreq, shingle) order, two docs with
-    * Jaccard >= t MUST share an element within their first
-    * floor((1-t)|S|)+1 shingles — so only prefix postings are self-joined
-    * (rarest shingles first, collapsing candidate count), and survivors are
-    * verified with an exact intersection over the full sorted sets. Output
-    * is IDENTICAL to the naive postings join; the DuckDB oracle is the naive
-    * formulation. Deterministic double (int/int division).
-    */
   /** Expected self-join fanout per posting: E[df of the shingle holding a
     * random posting] = sum(df^2)/sum(df). Below ~64 the naive postings join
     * is cheaper than prefix filtering's extra shuffles; above it the
@@ -117,15 +124,6 @@ object Dedup {
     */
   private val PrefixFanoutThreshold = 64.0
 
-  /** `maxDocFreq` is the corpus-scale skew guard: shingles present in more
-    * than that many documents are boilerplate (license headers, navigation
-    * chrome, stop-trigram runs) whose posting self-join alone is O(df²) —
-    * at a million+ documents a single hot shingle would dominate the whole
-    * stage. Dropping them from BOTH the candidate generation and the
-    * verified sets keeps one consistent (capped) Jaccard semantics. The
-    * default 0 = uncapped keeps exact oracle parity; callers at scale pass a
-    * cap comfortably above any legitimate near-dup shingle frequency.
-    */
   /** Storage level for the O(corpus-tokens) intermediate checkpoints,
     * settable per session via `spark.graft.checkpoint.storage`. The default
     * MEMORY_AND_DISK is right while the postings fit beside execution
@@ -145,18 +143,58 @@ object Dedup {
     }
   }
 
+  /** D2 (exact flavor): all pairs with 3-gram-shingle-set Jaccard >=
+    * `threshold`. Prefix-filtered (AllPairs/PPJoin-style): with every doc's
+    * shingles sorted by a global (docFreq, shingle) order, two docs with
+    * Jaccard >= t MUST share an element within their first
+    * floor((1-t)|S|)+1 shingles — so only prefix postings are self-joined
+    * (rarest shingles first, collapsing candidate count), and survivors are
+    * verified with an exact intersection over the full sorted sets. Output
+    * is IDENTICAL to the naive postings join; the DuckDB oracle is the naive
+    * formulation. Deterministic double (int/int division).
+    *
+    * `maxDocFreq` is the corpus-scale skew guard: shingles present in more
+    * than that many documents are boilerplate (license headers, navigation
+    * chrome, stop-trigram runs) whose posting self-join alone is O(df²) —
+    * at a million+ documents a single hot shingle would dominate the whole
+    * stage. Dropping them from BOTH the candidate generation and the
+    * verified sets keeps one consistent (capped) Jaccard semantics. The
+    * default 0 = uncapped keeps exact oracle parity; callers at scale pass a
+    * cap comfortably above any legitimate near-dup shingle frequency.
+    *
+    * Postings within [[DriverMaxLongs]] finish on the driver (see the
+    * object header); a doc id repeated across rows counts as one doc there,
+    * with the prefix plan's semantics (distinct common shingles over the
+    * summed posting counts).
+    */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String, threshold: Double,
-                        maxDocFreq: Long = 0L): DataFrame = {
+                        maxDocFreq: Long = 0L): DataFrame =
+    ngramJaccardPairsWith(docs, idCol, textCol, threshold, maxDocFreq, DriverMaxLongs)
+
+  /** [[ngramJaccardPairs]] with the driver path's bound as a parameter. */
+  private[ops] def ngramJaccardPairsWith(docs: DataFrame, idCol: String, textCol: String, threshold: Double,
+                                         maxDocFreq: Long, driverMaxLongs: Long): DataFrame = {
+    val rawPlan = shinglePostings(docs, idCol, textCol)
+    val enc = postingLongs(rawPlan.schema)
+    val (raw, parts) = sizedCheckpoint(rawPlan, enc, driverMaxLongs)
+    val cap = if (maxDocFreq <= 0) Long.MaxValue else maxDocFreq
+    finishOnDriver("ngram", raw, enc, parts, driverMaxLongs) { (chunks, out) =>
+      ngramPairsOnDriver(chunks, threshold, cap, out)
+    }.getOrElse(ngramJaccardFromRaw(raw, threshold, maxDocFreq))
+  }
+
+  /** The distributed plan of [[ngramJaccardPairs]] over the checkpointed
+    * raw postings.
+    */
+  private def ngramJaccardFromRaw(raw: DataFrame, threshold: Double, maxDocFreq: Long): DataFrame = {
     // ONE vocabulary aggregate serves the cap, the cost-based dispatch, and
     // the prefix ordering: shinglePostings' own maxDocFreq path would run a
     // second full groupBy(w) over the postings just to find the hot list —
     // at stress scale that is an extra multi-GB shuffle for values the
     // uncapped aggregate already holds. The capped postings themselves stay
     // a map-side broadcast anti-join over the checkpointed raw postings.
-    val rawPlan = shinglePostings(docs, idCol, textCol)
-    val raw = rawPlan.localCheckpoint(true, ckptLevel(rawPlan))
     val dfreqAll = raw.groupBy("w").agg(count(lit(1)).as("df"))
-      .localCheckpoint(true, ckptLevel(rawPlan))
+      .localCheckpoint(true, ckptLevel(raw))
     val (posts, dfreq) =
       if (maxDocFreq <= 0) (raw, dfreqAll)
       else (
@@ -164,7 +202,7 @@ object Dedup {
         // the raw checkpoint) — four downstream consumers would otherwise
         // each re-derive them
         raw.join(broadcast(dfreqAll.filter(col("df") > maxDocFreq)), Seq("w"), "left_anti")
-          .localCheckpoint(true, ckptLevel(rawPlan)),
+          .localCheckpoint(true, ckptLevel(raw)),
         dfreqAll.filter(col("df") <= maxDocFreq))
     // every plan decision from ONE pass over the vocabulary checkpoint's
     // rows (sum df², sum df, count of the capped vocabulary; a plain RDD
@@ -200,6 +238,18 @@ object Dedup {
     prefixFromPosts(posts, dfreq, threshold, dfreq.count())
   }
 
+  /** Vocabulary-count ceiling for broadcasting the dfreq table into the
+    * prefix path's rank attach (r17, guide §3.1): the (w, df) relation is
+    * vocabulary-sized — far smaller than the postings it joins — and the
+    * shuffle join exchanged the FULL postings relation by w a second time
+    * just to attach a rank (the single largest avoidable exchange in the
+    * op at 700×). 4 M keys ≈ 64 MB raw / ~150 MB hashed relation. Above
+    * the cap (a truly open vocabulary at corpus scale) the shuffle join is
+    * the only correct shape. Tunable via
+    * `spark.graft.broadcast.dfreq.maxKeys`.
+    */
+  private val BroadcastDfreqMaxKeysDefault = 4000000L
+
   /** Everything — prefix selection, candidates, AND the verification sets —
     * derives from the same `posts`, so a df-capped postings table yields one
     * consistent capped-Jaccard semantics.
@@ -214,18 +264,6 @@ object Dedup {
     * whose sizes alone bound Jaccard below τ never reaches the distinct or
     * the verification join.
     */
-  /** Vocabulary-count ceiling for broadcasting the dfreq table into the
-    * prefix path's rank attach (r17, guide §3.1): the (w, df) relation is
-    * vocabulary-sized — far smaller than the postings it joins — and the
-    * shuffle join exchanged the FULL postings relation by w a second time
-    * just to attach a rank (the single largest avoidable exchange in the
-    * op at 700×). 4 M keys ≈ 64 MB raw / ~150 MB hashed relation. Above
-    * the cap (a truly open vocabulary at corpus scale) the shuffle join is
-    * the only correct shape. Tunable via
-    * `spark.graft.broadcast.dfreq.maxKeys`.
-    */
-  private val BroadcastDfreqMaxKeysDefault = 4000000L
-
   private def prefixFromPosts(posts: DataFrame, dfreq: DataFrame, threshold: Double,
                               nVocab: Long): DataFrame = {
     val dfreqCap = posts.sparkSession.conf
@@ -523,23 +561,558 @@ object Dedup {
       .drop("sh1", "sh2", "inter")
 
   /** D2 (probabilistic flavor): LSH candidates verified by exact shingle-set
-    * Jaccard >= threshold.
+    * Jaccard >= threshold. Signatures within [[DriverMaxLongs]] finish on
+    * the driver (see the object header).
     */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String, threshold: Double,
-                   numHashes: Int = 64, rowsPerBand: Int = 4): DataFrame = {
-    // localCheckpoint, NOT cache(): the signature subplan (md5 + 64
+                   numHashes: Int = 64, rowsPerBand: Int = 4): DataFrame =
+    nearDupPairsWith(docs, idCol, textCol, threshold, numHashes, rowsPerBand, DriverMaxLongs)
+
+  /** [[nearDupPairs]] with the driver path's bound as a parameter. */
+  private[ops] def nearDupPairsWith(docs: DataFrame, idCol: String, textCol: String, threshold: Double,
+                                    numHashes: Int, rowsPerBand: Int, driverMaxLongs: Long): DataFrame = {
+    // a checkpoint, NOT cache(): the signature subplan (md5 + 64
     // permutation passes) feeds the banded self-join twice plus the two
     // shingle-set rejoins, so it must materialize once — but cache() pins the
     // blocks in the CacheManager for the whole session (the r2/r3 leak),
     // while checkpoint blocks are dropped by the ContextCleaner as soon as
     // the result plan is unreferenced.
     val sigsPlan = minHashSignatures(docs, idCol, textCol, numHashes)
-    val sigs = sigsPlan.localCheckpoint(true, ckptLevel(sigsPlan))
+    val enc = signatureLongs(sigsPlan.schema)
+    val (sigs, parts) = sizedCheckpoint(sigsPlan, enc, driverMaxLongs)
+    finishOnDriver("minhash", sigs, enc, parts, driverMaxLongs) { (chunks, out) =>
+      minHashPairsOnDriver(chunks, threshold, numHashes / rowsPerBand, rowsPerBand, out)
+    }.getOrElse(lshPairsFromSigs(sigs, threshold, numHashes, rowsPerBand))
+  }
+
+  /** The distributed plan of [[nearDupPairs]] over checkpointed signatures. */
+  private def lshPairsFromSigs(sigs: DataFrame, threshold: Double, numHashes: Int, rowsPerBand: Int): DataFrame = {
     val cands = lshCandidates(sigs, numHashes, rowsPerBand)
     val withSets = cands
       .join(sigs.select(col("doc").as("d1"), col("shingles").as("sh1")), "d1")
       .join(sigs.select(col("doc").as("d2"), col("shingles").as("sh2")), "d2")
     verifiedJaccard(withSets, threshold).select("d1", "d2", "jaccard")
+  }
+
+  // ------------------------------------------ driver path of the pair ops
+
+  /** The driver path's bound, in collected longs: 4 Mi longs, 32 MiB of
+    * primitive arrays. The checkpoint's own pass counts the longs its rows
+    * encode to and sends a partition's longs only within its share of the
+    * bound; the verified pairs (3 longs each) are held to it too, so driver
+    * memory stays within a small multiple of it on any input. On a 4-vCPU VM
+    * the driver path beat the distributed plan at 1 k, 8 k and 32 k docs
+    * (the 32 k signatures, forced past the bound, too), so memory, not a
+    * crossover, sets it.
+    */
+  private[ops] val DriverMaxLongs: Long = 4L << 20
+
+  /** A partition's encoded longs: all counted, and kept while there are at
+    * most `keep` of them (`result` is null past that).
+    */
+  private final class EncodedLongs(keep: Long) {
+    var n = 0L
+    private var b = new scala.collection.mutable.ArrayBuilder.ofLong
+    def +=(x: Long): Unit = {
+      n += 1
+      if (b != null) { if (n > keep) b = null else b += x }
+    }
+    def result: Array[Long] = if (b == null) null else b.result()
+  }
+
+  /** Writes a partition's checkpoint rows as longs. The same function sizes
+    * the checkpoint and fills the arrays that cross to the driver, so the
+    * bound is checked on exactly what crosses.
+    */
+  private type Encode = (Iterator[InternalRow], EncodedLongs) => Unit
+
+  /** The doc id as a long, for an integral id type. */
+  private def integralId(dt: DataType): Option[(InternalRow, Int) => Long] = dt match {
+    case LongType    => Some((r, i) => r.getLong(i))
+    case IntegerType => Some((r, i) => r.getInt(i).toLong)
+    case ShortType   => Some((r, i) => r.getShort(i).toLong)
+    case ByteType    => Some((r, i) => r.getByte(i).toLong)
+    case _           => None
+  }
+
+  private def putArray(a: ArrayData, out: EncodedLongs): Unit = {
+    val n = a.numElements()
+    out += n
+    var i = 0
+    // a null element (none is produced) keeps its own value, equal only to
+    // another null, as in the band join
+    while (i < n) { out += (if (a.isNullAt(i)) Long.MinValue else a.getLong(i)); i += 1 }
+  }
+
+  /** Signature rows (doc, sig, shingles) as doc, |sig|, sig…, |shingles|,
+    * shingles…. A null doc id or a null text (null sig and shingles) never
+    * pairs, so such rows are left out.
+    */
+  private def signatureLongs(schema: StructType): Option[Encode] =
+    integralId(schema("doc").dataType).map { id =>
+      val (d, s, h) = (schema.fieldIndex("doc"), schema.fieldIndex("sig"), schema.fieldIndex("shingles"))
+      (rows, out) => rows.foreach { r =>
+        if (!r.isNullAt(d) && !r.isNullAt(s) && !r.isNullAt(h)) {
+          out += id(r, d)
+          putArray(r.getArray(s), out)
+          putArray(r.getArray(h), out)
+        }
+      }
+    }
+
+  /** Posting rows (doc, w) as runs doc, n, w1…wn over consecutive rows of
+    * one doc (a doc's postings are adjacent: they come from one exploded
+    * row). A null doc id never pairs; a null text has no postings.
+    */
+  private def postingLongs(schema: StructType): Option[Encode] =
+    integralId(schema("doc").dataType).map { id =>
+      val (d, w) = (schema.fieldIndex("doc"), schema.fieldIndex("w"))
+      (rows, out) => {
+        var run = new Array[Long](64)
+        var n = 0
+        var doc = 0L
+        def flush(): Unit = {
+          out += doc; out += n
+          var i = 0
+          while (i < n) { out += run(i); i += 1 }
+          n = 0
+        }
+        rows.foreach { r =>
+          if (!r.isNullAt(d)) {
+            val x = id(r, d)
+            if (n > 0 && x != doc) flush()
+            doc = x
+            if (n == run.length) run = java.util.Arrays.copyOf(run, 2 * n)
+            run(n) = r.getLong(w)
+            n += 1
+          }
+        }
+        if (n > 0) flush()
+      }
+    }
+
+  /** `plan` checkpointed locally. With an encoding, the checkpoint's pass
+    * also counts each partition's encoded longs and returns them while they
+    * fit the partition's share of `maxLongs`, so the driver never holds
+    * more than that: (count, longs or null) per partition.
+    */
+  private def sizedCheckpoint(plan: DataFrame, enc: Option[Encode], maxLongs: Long)
+      : (DataFrame, Array[(Long, Array[Long])]) = enc match {
+    case Some(write) =>
+      org.apache.spark.sql.graftbridge.PlanBridge.localCheckpoint(plan, ckptLevel(plan)) { parts =>
+        val keep = maxLongs / math.max(1, parts)
+        rows => { val e = new EncodedLongs(keep); write(rows, e); (e.n, e.result) }
+      }
+    case None => (plan.localCheckpoint(true, ckptLevel(plan)), Array.empty)
+  }
+
+  /** The path choice of a pair op over its checkpoint `ck` (doc column
+    * `doc`) and the checkpoint pass's `parts`, logged as one INFO line:
+    * within `maxLongs`, `solve` finishes the op on the driver into a local
+    * relation (a partition that passed its share of the bound on that pass
+    * is collected by one more job); None (the distributed plan) for a
+    * non-integral id, over the bound, or when `solve` gives up because the
+    * verified pairs pass it.
+    */
+  private def finishOnDriver(op: String, ck: DataFrame, enc: Option[Encode], parts: Array[(Long, Array[Long])],
+                             maxLongs: Long)(solve: (Array[Array[Long]], PairOut) => Boolean): Option[DataFrame] = {
+    val longs = parts.map(_._1).sum
+    enc match {
+      case None =>
+        log.info(s"[$op] doc id type ${ck.schema("doc").dataType.simpleString} -> distributed")
+        None
+      case Some(_) if longs > maxLongs =>
+        log.info(s"[$op] $longs longs > $maxLongs -> distributed")
+        None
+      case Some(write) =>
+        val late = parts.indices.filter(parts(_)._2 == null)
+        val lateLongs = if (late.isEmpty) Array.empty[Array[Long]] else {
+          val rows = checkpointRows(ck)
+          rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+            val e = new EncodedLongs(Long.MaxValue); write(it, e); e.result
+          }, late)
+        }
+        val chunks = parts.map(_._2)
+        late.zip(lateLongs).foreach { case (i, a) => chunks(i) = a }
+        val out = new PairOut(maxLongs / 3)
+        if (solve(chunks, out)) {
+          log.info(s"[$op] $longs longs <= $maxLongs -> driver")
+          Some(out.toDF(ck.sparkSession, ck.schema("doc")))
+        } else {
+          log.info(s"[$op] $longs longs <= $maxLongs, over ${out.maxPairs} verified pairs -> distributed")
+          None
+        }
+    }
+  }
+
+  /** The verified (d1, d2, jaccard) pairs of a driver-path op, at most
+    * `maxPairs` of them.
+    */
+  private final class PairOut(val maxPairs: Long) {
+    private val d1 = new scala.collection.mutable.ArrayBuilder.ofLong
+    private val d2 = new scala.collection.mutable.ArrayBuilder.ofLong
+    private val jac = new scala.collection.mutable.ArrayBuilder.ofDouble
+    private var n = 0L
+
+    /** Adds a pair; false once there are more than `maxPairs`. */
+    def add(a: Long, b: Long, j: Double): Boolean = {
+      n += 1
+      n <= maxPairs && { d1 += a; d2 += b; jac += j; true }
+    }
+
+    /** A local relation of the pairs, ids of `doc`'s type. */
+    def toDF(spark: org.apache.spark.sql.SparkSession, doc: StructField): DataFrame = {
+      val id: Long => Any = doc.dataType match {
+        case IntegerType => _.toInt
+        case ShortType   => _.toShort
+        case ByteType    => _.toByte
+        case _           => x => x
+      }
+      val (a, b, j) = (d1.result(), d2.result(), jac.result())
+      val rows = Array.tabulate[InternalRow](a.length)(i => new GenericInternalRow(Array[Any](id(a(i)), id(b(i)), j(i))))
+      org.apache.spark.sql.graftbridge.PlanBridge.ofRows(spark,
+        LocalRelation(org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(pairSchema(doc)), rows.toSeq))
+    }
+  }
+
+  /** The count of common elements of two ascending, distinct runs. */
+  private def commonCount(a: Array[Long], ai: Int, an: Int, b: Array[Long], bi: Int, bn: Int): Int = {
+    var i = ai
+    var j = bi
+    var c = 0
+    while (i < ai + an && j < bi + bn) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { c += 1; i += 1; j += 1 }
+    }
+    c
+  }
+
+  /** Sorts `a(from until to)` and removes repeats in place; returns the
+    * end of the distinct run.
+    */
+  private def sortDistinct(a: Array[Long], from: Int, to: Int): Int = {
+    java.util.Arrays.sort(a, from, to)
+    var u = from
+    var q = from
+    while (q < to) {
+      if (q == from || a(q) != a(u - 1)) { a(u) = a(q); u += 1 }
+      q += 1
+    }
+    u
+  }
+
+  /** Indices of `keys` in ascending key order (stable); the identity when
+    * they already are, as a scan's ids usually are.
+    */
+  private def ascending(keys: Array[Long]): Array[Int] = {
+    var i = 1
+    while (i < keys.length && keys(i - 1) <= keys(i)) i += 1
+    if (i >= keys.length) Array.range(0, keys.length)
+    else Array.range(0, keys.length).sortBy(keys(_))
+  }
+
+  /** Dense ids of long keys, in first-seen order: an open-addressing table
+    * of primitive arrays.
+    */
+  private final class LongIds(expected: Int) {
+    private var mask = Integer.highestOneBit(math.max(expected, 8)) * 4 - 1
+    private var keys = new Array[Long](mask + 1)
+    private var slots = new Array[Int](mask + 1) // id + 1; 0 is empty
+    var size = 0
+
+    private def home(k: Long): Int = ((k * 0x9E3779B97F4A7C15L) >>> 32).toInt & mask
+
+    def id(k: Long): Int = {
+      var i = home(k)
+      while (slots(i) != 0) {
+        if (keys(i) == k) return slots(i) - 1
+        i = (i + 1) & mask
+      }
+      keys(i) = k
+      size += 1
+      slots(i) = size
+      if (2 * size > mask) grow()
+      size - 1
+    }
+
+    private def grow(): Unit = {
+      val (k0, s0) = (keys, slots)
+      mask = 2 * mask + 1
+      keys = new Array[Long](mask + 1)
+      slots = new Array[Int](mask + 1)
+      var j = 0
+      while (j < k0.length) {
+        if (s0(j) != 0) {
+          var i = home(k0(j))
+          while (slots(i) != 0) i = (i + 1) & mask
+          keys(i) = k0(j); slots(i) = s0(j)
+        }
+        j += 1
+      }
+    }
+  }
+
+  /** The result schema of both pair ops over a `doc` column: the
+    * distributed plans' (d1, d2, jaccard).
+    */
+  private def pairSchema(doc: StructField): StructType = StructType(Seq(
+    StructField("d1", doc.dataType, doc.nullable),
+    StructField("d2", doc.dataType, doc.nullable),
+    StructField("jaccard", DoubleType, nullable = true)))
+
+  /** [[ngramJaccardFromRaw]] on the driver over collected posting runs:
+    * document frequencies with the `cap`; per doc its posting count (sz)
+    * and its distinct shingles, ranked rarest first (df, then first-seen
+    * order); an inverted index over each doc's AllPairs prefix, the first
+    * floor((1-t)|U|)+1 of its |U| distinct shingles (1e-9 slack only
+    * lengthens it); the same length filter as the join; and the exact
+    * count of distinct common shingles. Every pair with Jaccard >= t shares
+    * a prefix shingle, so the pairs are the join's. False if they pass
+    * `out`'s bound.
+    */
+  private def ngramPairsOnDriver(chunks: Array[Array[Long]], threshold: Double, cap: Long,
+                                 out: PairOut): Boolean = {
+    var nRuns, nPosts = 0
+    for (c <- chunks) {
+      var i = 0
+      while (i < c.length) { val n = c(i + 1).toInt; nRuns += 1; nPosts += n; i += 2 + n }
+    }
+    // runs in collect order: doc, first posting; each posting's shingle id
+    val runDoc = new Array[Long](nRuns)
+    val runAt = new Array[Int](nRuns + 1)
+    val wv = new Array[Int](nPosts)
+    val vocab = new LongIds(nPosts / 4)
+    var r, p = 0
+    for (c <- chunks) {
+      var i = 0
+      while (i < c.length) {
+        val end = i + 2 + c(i + 1).toInt
+        runDoc(r) = c(i); runAt(r) = p
+        var q = i + 2
+        while (q < end) { wv(p) = vocab.id(c(q)); p += 1; q += 1 }
+        r += 1; i = end
+      }
+    }
+    runAt(nRuns) = nPosts
+    // each shingle's df, then its rank in (df, id) order; capped: -1
+    val nv = vocab.size
+    val df = new Array[Int](nv)
+    var q = 0
+    while (q < nPosts) { df(wv(q)) += 1; q += 1 }
+    val byDf = new Array[Long](nv)
+    var v = 0
+    while (v < nv) { byDf(v) = (df(v).toLong << 32) | v; v += 1 }
+    java.util.Arrays.sort(byDf)
+    val rank = new Array[Int](nv)
+    v = 0
+    while (v < nv) {
+      val w = (byDf(v) & 0xffffffffL).toInt
+      rank(w) = if (df(w) > cap) -1 else v
+      v += 1
+    }
+    // docs in id order (a repeated id's runs merge): id, sz, distinct ranks
+    val order = ascending(runDoc)
+    val docId = new scala.collection.mutable.ArrayBuilder.ofLong
+    val docSz = new scala.collection.mutable.ArrayBuilder.ofLong
+    val docOff = new scala.collection.mutable.ArrayBuilder.ofInt
+    val toks = new Array[Long](nPosts)
+    var nt, k = 0
+    while (k < nRuns) {
+      val id = runDoc(order(k))
+      val from = nt
+      while (k < nRuns && runDoc(order(k)) == id) {
+        q = runAt(order(k))
+        while (q < runAt(order(k) + 1)) {
+          val rk = rank(wv(q))
+          if (rk >= 0) { toks(nt) = rk; nt += 1 }
+          q += 1
+        }
+        k += 1
+      }
+      docId += id; docSz += nt - from; docOff += from
+      nt = sortDistinct(toks, from, nt)
+    }
+    docOff += nt
+    val (ids, sz, off) = (docId.result(), docSz.result(), docOff.result())
+    val nd = ids.length
+    val prefix = new Array[Int](nd)
+    var d = 0
+    while (d < nd) {
+      val u = off(d + 1) - off(d)
+      prefix(d) = math.min(u, math.max(1, math.floor((1.0 - threshold) * u + 1e-9).toInt + 1))
+      d += 1
+    }
+    // inverted index: each rank's docs (ascending) with it in their prefix
+    val start = new Array[Int](nv + 1)
+    d = 0
+    while (d < nd) { q = off(d); while (q < off(d) + prefix(d)) { start(toks(q).toInt + 1) += 1; q += 1 }; d += 1 }
+    v = 1
+    while (v <= nv) { start(v) += start(v - 1); v += 1 }
+    val fill = start.clone()
+    val lists = new Array[Int](start(nv))
+    d = 0
+    while (d < nd) {
+      q = off(d)
+      while (q < off(d) + prefix(d)) { val t = toks(q).toInt; lists(fill(t)) = d; fill(t) += 1; q += 1 }
+      d += 1
+    }
+    val mark = Array.fill(nd)(-1)
+    var x = 0
+    while (x < nd) {
+      q = off(x)
+      while (q < off(x) + prefix(x)) {
+        val t = toks(q).toInt
+        var e = start(t)
+        while (e < start(t + 1) && lists(e) < x) {
+          val y = lists(e)
+          if (mark(y) != x) {
+            mark(y) = x
+            val a = sz(y)
+            val b = sz(x)
+            // the join's length filter, same slack
+            if (math.max(a, b) * threshold <= math.min(a, b) + 1e-9) {
+              val inter = commonCount(toks, off(y), off(y + 1) - off(y), toks, off(x), off(x + 1) - off(x))
+              val j = inter.toDouble / (a + b - inter)
+              if (j >= threshold && !out.add(ids(y), ids(x), j)) return false
+            }
+          }
+          e += 1
+        }
+        q += 1
+      }
+      x += 1
+    }
+    true
+  }
+
+  /** A band of `len` signature values at `at` of `a`: equal keys hold equal
+    * value tuples, as the band join's array key.
+    */
+  private final class BandKey(val a: Array[Long], val at: Int, val len: Int) {
+    override def hashCode: Int = {
+      var h = 17L
+      var i = 0
+      while (i < len) { h = h * 0x9E3779B97F4A7C15L + a(at + i); i += 1 }
+      (h ^ (h >>> 32)).toInt
+    }
+    override def equals(o: Any): Boolean = o match {
+      case k: BandKey => java.util.Arrays.equals(a, at, at + len, k.a, k.at, k.at + len)
+      case _          => false
+    }
+  }
+
+  /** [[lshPairsFromSigs]] on the driver over collected signature rows:
+    * rows grouped per band by their exact band tuple; for each doc, every
+    * lower doc sharing a group with one of its rows is a candidate once, and
+    * each (row of d1, row of d2) of a candidate is verified as the join
+    * verifies it (distinct common shingles over the arrays' sizes). False
+    * if the pairs pass `out`'s bound.
+    */
+  private def minHashPairsOnDriver(chunks: Array[Array[Long]], threshold: Double, numBands: Int,
+                                   rowsPerBand: Int, out: PairOut): Boolean = {
+    val rowDoc = new scala.collection.mutable.ArrayBuilder.ofLong
+    val rowChunk, rowSig = new scala.collection.mutable.ArrayBuilder.ofInt
+    for ((c, ci) <- chunks.zipWithIndex) {
+      var i = 0
+      while (i < c.length) {
+        val k = c(i + 1).toInt
+        require(k >= numBands * rowsPerBand, s"signature of $k values for $numBands bands of $rowsPerBand")
+        rowDoc += c(i); rowChunk += ci; rowSig += i + 2
+        i += 3 + k + c(i + 2 + k).toInt
+      }
+    }
+    // rows in doc id order, with each row's doc index and each doc's rows
+    val docs0 = rowDoc.result()
+    val order = ascending(docs0)
+    val n = order.length
+    val (chunkOf, sigAt) = {
+      val (c, s) = (rowChunk.result(), rowSig.result())
+      (order.map(c(_)), order.map(s(_)))
+    }
+    val docOf = new Array[Int](n)
+    val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+    val docStart = new scala.collection.mutable.ArrayBuilder.ofInt
+    var nd = 0
+    var s = 0
+    while (s < n) {
+      val id = docs0(order(s))
+      if (s == 0 || id != docs0(order(s - 1))) { ids += id; docStart += s; nd += 1 }
+      docOf(s) = nd - 1
+      s += 1
+    }
+    docStart += n
+    val (docId, rowsAt) = (ids.result(), docStart.result())
+    // each row's shingle-array size and its distinct shingles, ascending
+    val shSize = new Array[Int](n)
+    val setOff = new Array[Int](n + 1)
+    s = 0
+    while (s < n) {
+      val c = chunks(chunkOf(s))
+      shSize(s) = c(sigAt(s) + c(sigAt(s) - 1).toInt).toInt
+      setOff(s + 1) = setOff(s) + shSize(s)
+      s += 1
+    }
+    val sets = new Array[Long](setOff(n))
+    val setEnd = new Array[Int](n)
+    s = 0
+    while (s < n) {
+      val c = chunks(chunkOf(s))
+      System.arraycopy(c, sigAt(s) + c(sigAt(s) - 1).toInt + 1, sets, setOff(s), shSize(s))
+      setEnd(s) = sortDistinct(sets, setOff(s), setOff(s + 1))
+      s += 1
+    }
+    // group id of every (row, band), and each group's rows ascending
+    val gid = new Array[Int](n * numBands)
+    val groups = new java.util.HashMap[BandKey, Integer]
+    var ng = 0
+    for (b <- 0 until numBands) {
+      groups.clear()
+      s = 0
+      while (s < n) {
+        val g = groups.putIfAbsent(new BandKey(chunks(chunkOf(s)), sigAt(s) + b * rowsPerBand, rowsPerBand), ng)
+        gid(s * numBands + b) = if (g == null) { ng += 1; ng - 1 } else g.intValue
+        s += 1
+      }
+    }
+    val gStart = new Array[Int](ng + 1)
+    var i = 0
+    while (i < gid.length) { gStart(gid(i) + 1) += 1; i += 1 }
+    i = 1
+    while (i <= ng) { gStart(i) += gStart(i - 1); i += 1 }
+    val fill = gStart.clone()
+    val members = new Array[Int](gid.length)
+    i = 0 // (row, band) slots in row order, so each group's rows ascend
+    while (i < gid.length) { val g = gid(i); members(fill(g)) = i / numBands; fill(g) += 1; i += 1 }
+    // (row y of d1, row x of d2) as the verification join computes it
+    def verify(dy: Int, y: Int, dx: Int, x: Int): Boolean = {
+      val inter = commonCount(sets, setOff(y), setEnd(y) - setOff(y), sets, setOff(x), setEnd(x) - setOff(x))
+      val j = inter.toDouble / (shSize(y) + shSize(x) - inter)
+      j < threshold || out.add(docId(dy), docId(dx), j)
+    }
+    val mark = Array.fill(nd)(-1)
+    var ok = true
+    i = 0 // (row, band) slot: row i / numBands of doc dx
+    while (ok && i < gid.length) {
+      val dx = docOf(i / numBands)
+      val g = gid(i)
+      var e = gStart(g)
+      while (ok && e < gStart(g + 1) && docOf(members(e)) < dx) {
+        val dy = docOf(members(e))
+        if (mark(dy) != dx) {
+          mark(dy) = dx
+          var y = rowsAt(dy)
+          while (ok && y < rowsAt(dy + 1)) {
+            var x = rowsAt(dx)
+            while (ok && x < rowsAt(dx + 1)) { ok = verify(dy, y, dx, x); x += 1 }
+            y += 1
+          }
+        }
+        e += 1
+      }
+      i += 1
+    }
+    ok
   }
 
   /** DuckDB mirror of [[nearDupPairs]]: same shingles, same md5-based
@@ -721,13 +1294,15 @@ object Dedup {
     * Returns (doc, comp) for every doc in a pair, where comp = the min doc
     * id of its component.
     *
-    * Two paths, chosen from the edge count (the edges are checkpointed and
+    * Two paths, chosen from the edge count (the edges are materialized and
     * counted first, so pair generation runs once on either path):
     *
     *   - below `spark.graft.cc.rowsPerPartition` edges (one loop
     *     partition), the edges are collected into primitive long arrays and
     *     solved by union-find on the driver — exact for any diameter, in
-    *     three Spark jobs (checkpoint, count, collect) where the loop pays a
+    *     three Spark jobs for a pairs plan (checkpoint, count, collect), two
+    *     for a checkpointed one and none for a local relation (such as a
+    *     driver-side [[nearDupPairs]] result), where the loop pays a
     *     checkpoint and a convergence probe per iteration. The count and
     *     the collect read the checkpointed RDD directly, so the path
     *     compiles no query code per call. The result is a local relation.
@@ -765,54 +1340,74 @@ object Dedup {
   }
 
   /** The path choice of [[duplicateClusters]]: the pairs' (d1, d2) are
-    * checkpointed once and counted; under the cap the components come back
-    * as [[LocalComponents]], otherwise as the label-propagation frame.
+    * counted, once materialized; under the cap the components come back as
+    * [[LocalComponents]], otherwise as the label-propagation frame. A local
+    * relation or a checkpoint with long ids is read as it is (no job to
+    * count a local relation, none to materialize either); any other plan is
+    * checkpointed once first, so the count and the collect (or the loop)
+    * share one run of it.
     */
   private def components(pairs: DataFrame, maxIter: Int = 10,
                          reliableCheckpoint: Boolean = false): Either[DataFrame, LocalComponents] = {
     val ck: DataFrame => DataFrame =
       if (reliableCheckpoint) df => df.checkpoint(eager = true)
       else df => df.localCheckpoint(true, ckptLevel(df))
-    val ends = ck(pairs.select(col("d1").as("a"), col("d2").as("b")))
+    val endsPlan = pairs.select(col("d1").as("a"), col("d2").as("b"))
+    val longIds = pairs.schema("d1").dataType == LongType && pairs.schema("d2").dataType == LongType
+    val (ia, ib) = (pairs.schema.fieldIndex("d1"), pairs.schema.fieldIndex("d2"))
+    // the (a, b) rows, as (rows, a's index, b's index), and whether `ends`
+    // is a checkpoint made here (and so dropped here)
+    val (ends, rows, own) = pairs.queryExecution.optimizedPlan match {
+      case lr: LocalRelation if longIds => (endsPlan, Left(lr.data), false)
+      case lr: org.apache.spark.sql.execution.LogicalRDD if longIds && lr.rdd.isCheckpointed =>
+        (endsPlan, Right(lr.rdd), false)
+      case _ =>
+        val e = ck(endsPlan)
+        (e, Right(checkpointRows(e)), true)
+    }
+    val (a, b) = if (own) (0, 1) else (ia, ib)
     // every edge is one (a, b) row and its mirror
-    val nEdges = 2 * checkpointRows(ends).count()
+    val nEdges = 2L * rows.fold(_.size.toLong, _.count())
     val rowsPerPart = pairs.sparkSession.conf
       .get("spark.graft.cc.rowsPerPartition", CcRowsPerPartitionDefault.toString).toLong
     if (nEdges < rowsPerPart) {
-      val comps = componentsOnDriver(ends)
-      dropCheckpoint(ends)
-      Right(comps)
+      val interleaved = rows match {
+        case Left(local) => edgeLongs(local.iterator, a, b)
+        case Right(rdd) => Array.concat(rdd.mapPartitions(it => Iterator.single(edgeLongs(it, a, b))).collect().toIndexedSeq: _*)
+      }
+      if (own) dropCheckpoint(ends)
+      Right(componentsOnDriver(interleaved))
     } else {
       // the loop re-checkpoints the symmetric edges partitioned by b and
-      // then drops `ends`' checkpoint
+      // then drops `ends`' checkpoint if it made it here
       val edges0 = ends.union(ends.select(col("b").as("a"), col("a").as("b")))
-      Left(labelPropagation(edges0, nEdges, rowsPerPart, maxIter, ck))
+      Left(labelPropagation(edges0, own, nEdges, rowsPerPart, maxIter, ck))
     }
+  }
+
+  /** Interleaved (a, b) longs of edge rows. */
+  private def edgeLongs(rows: Iterator[InternalRow], a: Int, b: Int): Array[Long] = {
+    val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+    rows.foreach { r => buf += r.getLong(a); buf += r.getLong(b) }
+    buf.result()
   }
 
   /** The rows of a checkpointed frame, read straight from its checkpointed
     * RDD: a driver-side count or collect over them plans and compiles no
     * query.
     */
-  private[ops] def checkpointRows(df: DataFrame): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+  private[ops] def checkpointRows(df: DataFrame): org.apache.spark.rdd.RDD[InternalRow] =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
       case _ => df.queryExecution.toRdd
     }
 
-  /** Union-find over a checkpointed (a, b) edge table, on the driver. One
-    * job collects each partition as ONE primitive long array of interleaved
-    * (a, b); doc ids are then sorted into dense indices, and every union
-    * links the larger root under the smaller, so a root is its component's
-    * min index — its min doc id.
+  /** Union-find over interleaved (a, b) edge ends, on the driver: doc ids
+    * are sorted into dense indices, and every union links the larger root
+    * under the smaller, so a root is its component's min index — its min
+    * doc id.
     */
-  private def componentsOnDriver(edges: DataFrame): LocalComponents = {
-    val chunks = checkpointRows(edges).mapPartitions { rows =>
-      val buf = new scala.collection.mutable.ArrayBuilder.ofLong
-      rows.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }
-      Iterator.single(buf.result())
-    }.collect()
-    val ends = Array.concat(chunks.toIndexedSeq: _*)
+  private def componentsOnDriver(ends: Array[Long]): LocalComponents = {
     val ids = ends.clone()
     java.util.Arrays.sort(ids)
     // dedupe in place: ids(0 until n) become the distinct doc ids, ascending
@@ -838,8 +1433,8 @@ object Dedup {
   /** The distributed path of [[duplicateClusters]]: iterative min-label
     * propagation over the checkpointed symmetric edges `edges0`.
     */
-  private def labelPropagation(edges0: DataFrame, nEdges: Long, rowsPerPart: Long, maxIter: Int,
-                               ck: DataFrame => DataFrame): DataFrame = {
+  private def labelPropagation(edges0: DataFrame, dropEdges0: Boolean, nEdges: Long, rowsPerPart: Long,
+                               maxIter: Int, ck: DataFrame => DataFrame): DataFrame = {
     val spark = edges0.sparkSession
     // the iteration shuffle width comes from the edge count, not the
     // session conf, which is sized for the corpus-volume pair generation
@@ -857,7 +1452,7 @@ object Dedup {
     // re-exchanges (and re-sorts) only the far smaller labels side instead
     // of the edge table every pass (guide §2.4: share one exchange)
     val edges = ck(edges0.repartition(parts, col("b")).sortWithinPartitions("b"))
-    dropCheckpoint(edges0)
+    if (dropEdges0) dropCheckpoint(edges0)
     // r18 (r17 verdict #7/#8): the loop no longer mutates the session-global
     // spark.sql.shuffle.partitions — every loop relation is EXPLICITLY
     // repartitioned to `parts` instead, so concurrent queries on the shared

@@ -13,6 +13,29 @@ object PlanBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df.localCheckpoint(eager = true, level)`, whose materializing job also
+    * folds each partition's rows with `fold(number of partitions)`: the
+    * same checkpointed RDD, the same `LogicalRDD` (statistics, partitioning
+    * and ordering carried over by `LogicalRDD.fromDataset`, `private[sql]`)
+    * and the same storage-level handling as `Dataset.checkpoint`, plus one
+    * value per partition from the pass that wrote the blocks, so a
+    * statistic of the checkpoint costs no second job.
+    */
+  def localCheckpoint[T: scala.reflect.ClassTag](df: DataFrame, level: org.apache.spark.storage.StorageLevel)(
+      fold: Int => Iterator[org.apache.spark.sql.catalyst.InternalRow] => T): (DataFrame, Array[T]) = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val qe = ds.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rdd = qe.executedPlan.execute().map(_.copy())
+      rdd.persist(level).localCheckpoint()
+      // the job computes (and so caches) every partition; runJob then marks
+      // the RDD checkpointed, as Dataset.checkpoint's eager doCheckpoint does
+      val folded = rdd.sparkContext.runJob(rdd, fold(rdd.getNumPartitions))
+      (ofRows(ds.sparkSession, org.apache.spark.sql.execution.LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)),
+        folded)
+    }
+  }
+
   /** Spark's `CompletionIterator` (`private[spark]`) over `rows`, running
     * `done` when they are exhausted; `close()` runs it too, for a consumer
     * outside a task that stops early or fails (inside a task a completion

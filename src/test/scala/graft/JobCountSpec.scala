@@ -62,13 +62,21 @@ object JobCount {
     jobsOf(spark)(fn(spark, Sf).count())
   }
 
-  def loadBaseline(): Map[String, Int] = {
+  /** Each query's recorded job count: the low end of its range. */
+  def loadBaseline(): Map[String, Int] = loadRanges().map { case (n, (lo, _)) => n -> lo }
+
+  /** Each query's recorded (low, high) job counts. A row whose count varies
+    * between runs of the same tree carries its range,
+    * `name<TAB>low<TAB>high`; any other row is `name<TAB>count`.
+    */
+  def loadRanges(): Map[String, (Int, Int)] = {
     val f = new java.io.File(BaselinePath)
     if (!f.exists()) Map.empty
     else scala.io.Source.fromFile(f).getLines().flatMap { l =>
-      l.split("\t") match {
-        case Array(n, c) => c.toIntOption.map(n -> _)
-        case _           => None
+      l.split("\t").toSeq match {
+        case Seq(n, c)     => c.toIntOption.map(x => n -> (x, x))
+        case Seq(n, c, hi) => for (x <- c.toIntOption; y <- hi.toIntOption) yield n -> (x, y)
+        case _             => None
       }
     }.toMap
   }

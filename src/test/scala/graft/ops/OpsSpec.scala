@@ -552,7 +552,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("nearDupPairs materializes signatures once and leaves no cached plan behind") {
-    val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", 0.5)
+    // the distributed plan, forced by a one-long driver-path bound
+    val pairs = Dedup.nearDupPairsWith(docs, "doc_id", "text", 0.5, 64, 4, driverMaxLongs = 1L)
     val plan = pairs.queryExecution.executedPlan.toString
     // signatures come from the eagerly-checkpointed RDD (md5 + 64-perm subplan
     // ran exactly once); the session CacheManager stays empty, so nothing is
@@ -560,6 +561,33 @@ class OpsSpec extends AnyFunSuite {
     assert(plan.contains("ExistingRDD") || plan.contains("Scan ExistingRDD"),
       s"expected checkpointed signature scan:\n${plan.take(1200)}")
     assert(!plan.contains("md5"), s"signature subplan must not be recomputed:\n${plan.take(1200)}")
+    assert(spark.sharedState.cacheManager.isEmpty, "nearDupPairs must not leave cached plans behind")
+  }
+
+  test("nearDupPairs on the driver runs the signature subplan once and leaves no cached plan behind") {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val d = docs // the parquet schema read is a job of its own
+    var pairs: org.apache.spark.sql.DataFrame = null
+    spark.sparkContext.addSparkListener(l)
+    val jobs =
+      try graft.JobCount.jobsOf(spark) { pairs = Dedup.nearDupPairs(d, "doc_id", "text", 0.5) }
+      finally spark.sparkContext.removeSparkListener(l)
+    assert(graft.JobCount.jobsOf(spark)(pairs.collect()) == 0, "the local result must collect with no job")
+    import scala.jdk.CollectionConverters._
+    // one query execution ran the signature subplan: the checkpoint's
+    // pass, which also sized the signatures and brought them back, and
+    // nothing else ran
+    assert(plans.asScala.count(_.contains("minhash_signatures")) == 1, plans.asScala.mkString("\n---\n").take(2000))
+    assert(jobs == 1, s"the checkpoint job alone, got $jobs jobs")
+    val plan = pairs.queryExecution.executedPlan.toString
+    assert(plan.contains("LocalTableScan") && !plan.contains("md5"), plan.take(1200))
     assert(spark.sharedState.cacheManager.isEmpty, "nearDupPairs must not leave cached plans behind")
   }
 
