@@ -1,19 +1,23 @@
 package graft.plans
 
-import graft.sources.{FourMcFileFormat, FourMcStatsFileFormat, RuntimeKeyFilter}
-import graft.sources.FourMcStatsFileFormat.StatsPred
+import graft.sources.{
+  CsvPayload, FourMcFileFormat, FourMcStatsFileFormat, ManifestFileIndex, RuntimeKeyFilter
+}
 
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, And, AttributeReference, BinaryComparison, Coalesce, EqualTo, Expression, GreaterThan,
-  GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual, Literal, NamedExpression
+  Alias, And, AttributeReference, BinaryComparison, Coalesce, EqualNullSafe, EqualTo, Expression,
+  IsNotNull, Literal, NamedExpression
 }
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Complete, Count, Max, Min, Sum
 }
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.sources
+import org.apache.spark.sql.types.{
+  Decimal, DecimalType, DoubleType, FloatType, LongType, StructType
+}
 
 /** MIN/MAX/SUM/COUNT aggregate pushdown from 4mc zone maps — the planner
   * rule that makes `SELECT min(ts), max(ts), sum(qty), count(*) FROM t`
@@ -33,11 +37,12 @@ import org.apache.spark.sql.types.LongType
   * exactly one partition directory, so per-block stats rows group exactly);
   * a Filter below the aggregate is allowed when every conjunct either
   * touches only partition columns (partition pruning commutes with the
-  * stats relation — both scan the same pruned file set) or compiles to a
-  * zone-map range predicate on a non-string data column (`MIN(ts) WHERE
-  * ts >= X`): those push into the stats relation, which emits the stats row
-  * for blocks the zone map proves wholly inside the predicate, skips blocks
-  * wholly outside, and decodes + re-filters only straddling blocks.
+  * stats relation — both scan the same pruned file set) or passes
+  * [[pushable]] (`MIN(ts) WHERE ts >= X`): those push into the stats
+  * relation as `sources.Filter`s, which it decides by the block verdicts
+  * and line check every 4mc reader uses — the stats row for blocks the
+  * zone maps certify, no row for blocks they (or a bloom) refute, decode
+  * and re-check for the rest.
   * Rewrites the child to a
   * [[FourMcStatsFileFormat]] relation that emits one `(min…, max…, nn…,
   * cnt)` row per owned BLOCK from the footer stats — falling back to
@@ -189,8 +194,7 @@ object McAggregatePushdown extends Rule[LogicalPlan] {
       origPartAttrs: Seq[AttributeReference],
       partFilter: Option[Expression],
       dictCols: Seq[Int],
-      dataPreds: Seq[StatsPred] = Nil,
-      dataConj: Seq[Expression] = Nil): Option[LogicalPlan] = {
+      dataFilters: Seq[sources.Filter]): Option[LogicalPlan] = {
     val groupSet = org.apache.spark.sql.catalyst.expressions.AttributeSet(groups)
     val cols = dictCols.sorted // relation layout order (groupSchema normalizes too)
     val gOrigs: Seq[AttributeReference] = cols.map { c =>
@@ -232,26 +236,10 @@ object McAggregatePushdown extends Rule[LogicalPlan] {
     if (reqs.isEmpty) return None
 
     val schema = FourMcStatsFileFormat.groupSchema(dataSchema, cols)
-    // compose with directory-manifest FILE pruning, like the non-group path:
-    // the compiled data conjuncts travel statically since the stats relation
-    // evaluates them inside the format
-    val manifestLoc = {
-      val underlying = fsRel.location match {
-        case m: graft.sources.ManifestFileIndex => m.underlying
-        case other                              => other
-      }
-      val pruningOn = org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.fourmc.manifestPruning", "true").toBoolean
-      if (!pruningOn || dataConj.isEmpty) underlying
-      else {
-        val extra = dataConj.flatMap(graft.sources.ManifestFileIndex.translate)
-        new graft.sources.ManifestFileIndex(underlying, dataSchema, fsRel.sparkSession, extra)
-      }
-    }
     val newRel = fsRel.copy(
       dataSchema = schema,
-      location = manifestLoc,
-      fileFormat = new FourMcStatsFileFormat(dataSchema, dataPreds, cols))(fsRel.sparkSession)
+      location = manifestLocation(fsRel, dataFilters),
+      fileFormat = new FourMcStatsFileFormat(dataSchema, dataFilters, cols))(fsRel.sparkSession)
     val nnAttrs: Seq[AttributeReference] =
       cols.map(c => AttributeReference(s"_nn_$c", LongType, nullable = false)())
     val cntAttr = AttributeReference("_cnt", LongType, nullable = false)()
@@ -370,39 +358,33 @@ object McAggregatePushdown extends Rule[LogicalPlan] {
     if (dictCols.nonEmpty) {
       // Filters compose (r17): partition conjuncts stay a logical Filter
       // above the rewritten relation (directory pruning commutes); data
-      // conjuncts compile to zone-map range predicates pushed into the
-      // stats format, which emits histogram rows for blocks the zone map
-      // proves wholly inside the predicate, skips wholly-outside blocks,
-      // and decodes + re-filters only straddlers — `GROUP BY returnflag
-      // WHERE shipdate >= X` is footer-only on the all-pass span of a
-      // sorted table. An uncompilable data conjunct refuses the rewrite.
+      // conjuncts push into the stats format, which emits histogram rows
+      // for blocks the zone maps certify, skips refuted blocks, and decodes
+      // + re-checks only the rest — `GROUP BY returnflag WHERE shipdate >=
+      // X` is footer-only on the all-pass span of a sorted table. A data
+      // conjunct that is not [[pushable]] refuses the rewrite.
       val conjuncts0 = filterCond.map(splitConjunction).getOrElse(Nil)
       val (partConj0, dataConj0) = conjuncts0.partition(_.references.subsetOf(partAttrSet))
-      val dictPreds: Seq[StatsPred] = dataConj0.map { c =>
-        compileDataPred(c, dataSchema, partNames).getOrElse(return None)
-      }
+      val dictFilters = pushedFilters(dataConj0, dataSchema, partNames).getOrElse(return None)
       if (!dictEnabled) return None
       if (!probeDictCoverage(fsRel, dictCols.sorted)) return None
       return tryDictGroupRewrite(groups, aggExprs, lr, fsRel, dataSchema,
-        origPartAttrs, partConj0.reduceOption(And.apply), dictCols, dictPreds, dataConj0)
+        origPartAttrs, partConj0.reduceOption(And.apply), dictCols, dictFilters)
     }
 
     // grouping only by partition columns
     if (!groups.forall(partAttrSet.contains)) return None
     // Filters: partition conjuncts stay a logical Filter above the stats
     // relation (directory pruning commutes — both scans list the same
-    // pruned file set). DATA conjuncts must each compile to a zone-map
-    // range predicate (col <cmp> literal / IS NOT NULL on a non-string
-    // data column); they're pushed into the stats format, which classifies
-    // every owned block as all-rows-pass (stats row), none-pass (skipped),
-    // or straddling (decoded + re-filtered per line). Any conjunct that
-    // doesn't compile refuses the whole rewrite — the normal scan's own
-    // block pruning handles it instead.
+    // pruned file set). DATA conjuncts must each be [[pushable]]; they're
+    // pushed into the stats format, which gives every owned block the
+    // shared verdict: certified (stats row), refuted (skipped), or neither
+    // (decoded + re-checked per line). Any conjunct that is not pushable
+    // refuses the whole rewrite — the normal scan's own block pruning
+    // handles it instead.
     val conjuncts = filterCond.map(splitConjunction).getOrElse(Nil)
     val (partConj, dataConj) = conjuncts.partition(_.references.subsetOf(partAttrSet))
-    val dataPreds: Seq[StatsPred] = dataConj.map { c =>
-      compileDataPred(c, dataSchema, partNames).getOrElse(return None)
-    }
+    val dataFilters = pushedFilters(dataConj, dataSchema, partNames).getOrElse(return None)
     val partFilter: Option[Expression] = partConj.reduceOption(And.apply)
     val groupSet = org.apache.spark.sql.catalyst.expressions.AttributeSet(groups)
 
@@ -487,7 +469,7 @@ object McAggregatePushdown extends Rule[LogicalPlan] {
     // partition-filtered forms — empty projection + constant partition
     // vectors). With a data filter the fast path doesn't apply, and the
     // stats route still skips decoding every wholly-inside block.
-    if (dataPreds.isEmpty && reqs.forall(_._2 == ReqCnt)) {
+    if (dataFilters.isEmpty && reqs.forall(_._2 == ReqCnt)) {
       // r16: a bare, unfiltered, ungrouped COUNT(*) collapses further when
       // a directory manifest FULLY covers the listed files — from one
       // footer task per file to ZERO tasks: Σ exact per-file line totals,
@@ -522,28 +504,10 @@ object McAggregatePushdown extends Rule[LogicalPlan] {
       case ReqAvg(i) => i
     }.distinct.sorted
     val schema = FourMcStatsFileFormat.statsSchema(dataSchema, targets, nnCols, sumCols)
-    // compose with directory-manifest FILE pruning: the stats relation
-    // evaluates its data predicates inside the format, so the scan has no
-    // plan-level filters to hand the index — carry the compiled conjuncts
-    // statically instead ([[graft.sources.ManifestFileIndex]]). Fully
-    // refuted files never launch a task, pushdown or not.
-    val manifestLoc = {
-      val underlying = fsRel.location match {
-        case m: graft.sources.ManifestFileIndex => m.underlying
-        case other                              => other
-      }
-      val pruningOn = org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.fourmc.manifestPruning", "true").toBoolean
-      if (!pruningOn) underlying
-      else {
-        val extra = dataConj.flatMap(graft.sources.ManifestFileIndex.translate)
-        new graft.sources.ManifestFileIndex(underlying, dataSchema, fsRel.sparkSession, extra)
-      }
-    }
     val newRel = fsRel.copy(
       dataSchema = schema,
-      location = manifestLoc,
-      fileFormat = new FourMcStatsFileFormat(dataSchema, dataPreds))(fsRel.sparkSession)
+      location = manifestLocation(fsRel, dataFilters),
+      fileFormat = new FourMcStatsFileFormat(dataSchema, dataFilters))(fsRel.sparkSession)
     val dataAttrs: Seq[AttributeReference] =
       schema.fields.map(f => AttributeReference(f.name, f.dataType, f.nullable)()).toSeq
     val newLr = LogicalRelation(newRel, dataAttrs ++ origPartAttrs, None,
@@ -611,64 +575,76 @@ object McAggregatePushdown extends Rule[LogicalPlan] {
     case other     => Seq(other)
   }
 
-  /** Compile one data-column conjunct to a [[StatsPred]], or None if its
-    * shape/type is outside the pushable set. Strings are excluded (their
-    * stored bounds may be 16-byte truncations — range proofs over prefixes
-    * are subtle enough to be a follow-up, and the normal scan's pruning
-    * already handles them); double/float equality is excluded (zone/line
-    * comparison uses the total order, where -0.0 < 0.0, but Catalyst's
-    * EqualTo treats them equal).
+  /** The stats relation's file listing, composed with directory-manifest
+    * FILE pruning: the relation decides its data filters inside the
+    * format, so its scan has no plan-level filters to hand the index —
+    * they travel statically instead ([[ManifestFileIndex]]). Fully refuted
+    * files never launch a task, pushdown or not.
     */
-  private def compileDataPred(
-      e: Expression,
-      dataSchema: org.apache.spark.sql.types.StructType,
-      partNames: Set[String]): Option[StatsPred] = {
-    import graft.sources.CsvPayload
-    import FourMcStatsFileFormat._
-    def colInfo(a: AttributeReference): Option[(Int, Int)] =
-      if (partNames.contains(a.name)) None
-      else {
-        val i = dataSchema.fieldNames.indexOf(a.name)
-        if (i < 0) None
-        else scala.util.Try(CsvPayload.tagOf(dataSchema.fields(i).dataType)).toOption
-          .filter(t => t != CsvPayload.TagString && !CsvPayload.isArrayTag(t))
-          .map(t => (i, t))
+  private def manifestLocation(
+      fsRel: HadoopFsRelation, dataFilters: Seq[sources.Filter]): FileIndex = {
+    val underlying = fsRel.location match {
+      case m: ManifestFileIndex => m.underlying
+      case other                => other
+    }
+    val pruningOn = org.apache.spark.sql.internal.SQLConf.get
+      .getConfString("spark.graft.fourmc.manifestPruning", "true").toBoolean
+    if (!pruningOn || dataFilters.isEmpty) underlying
+    else new ManifestFileIndex(underlying, fsRel.dataSchema, fsRel.sparkSession, dataFilters)
+  }
+
+  /** The data conjuncts as the `sources.Filter`s the stats relation takes,
+    * or None when one of them is not [[pushable]].
+    */
+  private def pushedFilters(
+      dataConj: Seq[Expression],
+      dataSchema: StructType,
+      partNames: Set[String]): Option[Seq[sources.Filter]] =
+    Some(dataConj.map { c =>
+      (if (pushable(c, dataSchema, partNames)) ManifestFileIndex.translate(c) else None)
+        .getOrElse(return None)
+    })
+
+  /** Does the stats relation decide this data conjunct exactly? It has no
+    * Spark Filter above it, so both of its checks must decide every line:
+    * the block verdicts ([[graft.format.McStatsPruning]]) and the line
+    * check ([[CsvPayload.compileFilters]]). Admitted: a comparison or IS
+    * NOT NULL on a bare data column that is not a string, array or map,
+    * against a non-null literal of the column's own type. Refused besides:
+    *  - a decimal literal off the column's scale: both checks compare
+    *    unscaled longs on the column's scale, which such a literal may not
+    *    have (the line check would then drop the conjunct);
+    *  - double/float equality: a pushed `d = 0.0` must also match -0.0
+    *    (Spark's SQL order), and no fixture pins that shape through this
+    *    relation, so it keeps the plain plan.
+    * String bounds may be 16-byte truncations, and the plain scan's
+    * pruning already handles them; array and map columns carry no zones,
+    * and the line check compiles nothing on them.
+    */
+  private def pushable(e: Expression, dataSchema: StructType, partNames: Set[String]): Boolean = {
+    def column(a: AttributeReference): Option[Int] =
+      Some(dataSchema.fieldNames.indexOf(a.name)).filter { i =>
+        i >= 0 && !partNames.contains(a.name) &&
+          scala.util.Try(CsvPayload.tagOf(dataSchema.fields(i).dataType)).toOption.exists(t =>
+            t != CsvPayload.TagString && t != CsvPayload.TagMap && !CsvPayload.isArrayTag(t))
       }
-    def mk(a: AttributeReference, v: Any, op: Int): Option[StatsPred] =
-      colInfo(a).flatMap { case (i, tag) =>
-        (tag, v) match {
-          case (CsvPayload.TagLong, l: Long)       => Some(StatsPred(i, op, isDouble = false, l, 0d))
-          case (CsvPayload.TagTimestamp, l: Long)  => Some(StatsPred(i, op, isDouble = false, l, 0d))
-          case (CsvPayload.TagInt, n: Int)         => Some(StatsPred(i, op, isDouble = false, n.toLong, 0d))
-          case (CsvPayload.TagBoolean, b: Boolean) => Some(StatsPred(i, op, isDouble = false, if (b) 1L else 0L, 0d))
-          case (CsvPayload.TagDouble, d: Double) if op != OpEq =>
-            Some(StatsPred(i, op, isDouble = true, 0L, d))
-          case (CsvPayload.TagFloat, f: Float) if op != OpEq =>
-            Some(StatsPred(i, op, isDouble = true, 0L, f.toDouble))
-          case (CsvPayload.TagDate, n: Int) => Some(StatsPred(i, op, isDouble = false, n.toLong, 0d))
-          // decimal literal must sit on the column's own scale for the
-          // unscaled-long comparison to be exact; Catalyst usually arranges
-          // exactly that for same-type comparisons, anything else refuses
-          case (CsvPayload.TagDecimal, d: org.apache.spark.sql.types.Decimal)
-              if d.scale == CsvPayload.scaleOf(dataSchema.fields(i).dataType) =>
-            Some(StatsPred(i, op, isDouble = false, d.toUnscaledLong, 0d))
-          case _ => None
+    def comparable(a: AttributeReference, lit: Literal, equality: Boolean): Boolean =
+      column(a).exists { i =>
+        (dataSchema.fields(i).dataType, lit.value) match {
+          case (_, null)                               => false
+          case (DoubleType | FloatType, _) if equality => false
+          case (t: DecimalType, d: Decimal)            => d.scale == t.scale
+          case (t, _)                                  => t == lit.dataType
         }
       }
     e match {
-      case IsNotNull(a: AttributeReference) =>
-        colInfo(a).map { case (i, _) => StatsPred(i, OpNotNull, isDouble = false, 0L, 0d) }
-      case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null => mk(a, v, OpGe)
-      case GreaterThanOrEqual(Literal(v, _), a: AttributeReference) if v != null => mk(a, v, OpLe)
-      case GreaterThan(a: AttributeReference, Literal(v, _)) if v != null        => mk(a, v, OpGt)
-      case GreaterThan(Literal(v, _), a: AttributeReference) if v != null        => mk(a, v, OpLt)
-      case LessThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null    => mk(a, v, OpLe)
-      case LessThanOrEqual(Literal(v, _), a: AttributeReference) if v != null    => mk(a, v, OpGe)
-      case LessThan(a: AttributeReference, Literal(v, _)) if v != null           => mk(a, v, OpLt)
-      case LessThan(Literal(v, _), a: AttributeReference) if v != null           => mk(a, v, OpGt)
-      case EqualTo(a: AttributeReference, Literal(v, _)) if v != null            => mk(a, v, OpEq)
-      case EqualTo(Literal(v, _), a: AttributeReference) if v != null            => mk(a, v, OpEq)
-      case _ => None
+      case IsNotNull(a: AttributeReference) => column(a).isDefined
+      case _: EqualNullSafe                 => false
+      case c @ BinaryComparison(a: AttributeReference, l: Literal) =>
+        comparable(a, l, c.isInstanceOf[EqualTo])
+      case c @ BinaryComparison(l: Literal, a: AttributeReference) =>
+        comparable(a, l, c.isInstanceOf[EqualTo])
+      case _ => false
     }
   }
 }

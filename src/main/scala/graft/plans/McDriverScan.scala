@@ -4,7 +4,10 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import graft.format.FourMcIndex
 import graft.sources.{FourMcFileFormat, FourMcStatsFileFormat, ManifestFileIndex, RuntimeKeyFilter}
+
+import org.apache.hadoop.conf.Configuration
 
 import org.apache.spark.SparkThrowable
 import org.apache.spark.rdd.RDD
@@ -137,20 +140,26 @@ object McDriverScanStrategy extends SparkStrategy {
         .map(f => PartitionedFileUtil.getPartitionedFile(f, f.getPath, p.values, 0, f.getLen))
     }.toVector
     val hadoopConf = relation.sparkSession.sessionState.newHadoopConfWithOptions(relation.options)
-    val indexOf = FourMcFileFormat.footerIndex(_: PartitionedFile, hadoopConf)
     val pushed = PlanBridge.pushedFilters(scan)
     val census =
-      try relation.fileFormat match {
-        case stats: FourMcStatsFileFormat =>
-          stats.sweep(files, indexOf, scan.requiredSchema, relation.options)
-        case fmt: FourMcFileFormat =>
-          fmt.census(files, indexOf, relation.dataSchema, scan.requiredSchema, pushed, relation.options)
+      try {
+        // each relation's per-block verdicts: the ones its reader reaches
+        val verdictsOf: FourMcIndex => Array[Byte] = relation.fileFormat match {
+          case stats: FourMcStatsFileFormat => stats.blockVerdicts(scan.requiredSchema)
+          case fmt: FourMcFileFormat =>
+            fmt.blockVerdicts(_, relation.dataSchema, scan.requiredSchema, pushed, relation.options)
+        }
+        files.filter(FourMcFileFormat.accepts(_, relation.options))
+          .foldLeft(FourMcFileFormat.Census()) { (acc, f) =>
+            val index = FourMcFileFormat.footerIndex(f, hadoopConf)
+            acc.plus(index, verdictsOf(index))
+          }
       } catch { case NonFatal(_) => return None } // the job reports it
     if (census.lines > MaxDecodedLines) None
     else if (fold.isEmpty && census.skipped == 0 && !manifestPruned(scan)) None
     else Some(McDriverScanExec(fold, projectList, condition, pushed, files,
       McDriverScanExec.Listing(listing.totalNumberOfFiles, listing.totalFileSize, listing.partitionCount),
-      census, scan))
+      census, hadoopConf, scan))
   }
 
   /** Did the directory manifest drop a file from the scan's listing? The
@@ -172,7 +181,9 @@ object McDriverScanStrategy extends SparkStrategy {
   * Spark's own aggregate functions through [[AggregatingAccumulator]], one
   * accumulator per group key, so ANSI, decimal-overflow and null semantics
   * stay Spark's. No broadcast, no job; every expression is interpreted, so
-  * no class is compiled either. `child` is the planned file scan: its file
+  * no class is compiled either. `hadoopConf` is the one planning read the
+  * footers with: each run only reads it, and only on the driver, so it is
+  * not serialized with the plan. `child` is the planned file scan: its file
   * listing and driver metrics are this node's, and it never runs as an RDD.
   */
 case class McDriverScanExec(
@@ -183,6 +194,7 @@ case class McDriverScanExec(
     files: Seq[PartitionedFile],
     listing: McDriverScanExec.Listing,
     census: FourMcFileFormat.Census,
+    @transient hadoopConf: Configuration,
     child: SparkPlan)
     extends UnaryExecNode {
 
@@ -267,7 +279,6 @@ case class McDriverScanExec(
     */
   private def readFiles(scan: FileSourceScanExec)(stop: InternalRow => Boolean): Unit = {
     val relation = scan.relation
-    val hadoopConf = relation.sparkSession.sessionState.newHadoopConfWithOptions(relation.options)
     // each file's reader output (closed when the read stops early), and
     // the rows it carries
     val (read, rowsOf) = relation.fileFormat match {

@@ -284,38 +284,28 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
         extOk = extOk)
   }
 
-  /** Planning-time census of a whole-file read of `files`, from their
-    * footers, for [[graft.plans.McDriverScanStrategy]]'s bounds: the blocks
-    * the pushed `filters` refute, and the lines
-    * ([[FourMcFileFormat.blockLines]]) of those the reader keeps. A
-    * metadata-only COUNT(*) answers its blocks from the footers without a
-    * decode, but the reader still makes one row per owned line of them, so
-    * their lines count too.
+  /** Per-block verdicts ([[FourMcFileFormat.BlockVerdict]]) of a
+    * whole-file read of one file, from its footer, for
+    * [[graft.plans.McDriverScanStrategy]]'s census: the blocks the pushed
+    * `filters` refute are skipped, the rest decode, and a metadata-only
+    * COUNT(*) counts every block from the footer.
     */
-  private[graft] def census(
-      files: Seq[PartitionedFile],
-      indexOf: PartitionedFile => FourMcIndex,
+  private[graft] def blockVerdicts(
+      index: FourMcIndex,
       dataSchema: StructType,
       requiredSchema: StructType,
       filters: Seq[Filter],
-      options: Map[String, String]): FourMcFileFormat.Census = {
+      options: Map[String, String]): Array[Byte] = {
+    import FourMcFileFormat.BlockVerdict._
     val statsEnabled = options.getOrElse("blockStats", "true").toBoolean
     val permissive = options.get("ignoreCorruptBlocks").exists(_.toBoolean)
-    val csv = options.getOrElse("payload", "text") == "csv"
-    files.filter(FourMcFileFormat.accepts(_, options)).foldLeft(FourMcFileFormat.Census()) {
-      (acc, file) =>
-        val index = indexOf(file)
-        val countOnly = csv && requiredSchema.isEmpty && filters.isEmpty && statsEnabled &&
-          !permissive && index.stats.isDefined
-        val keep =
-          if (!csv) None
-          else FourMcFileFormat.keepBlocksOpt(index, dataSchema, filters, statsEnabled, permissive, None)
-        val kept = (0 until index.numBlocks).filter(b => keep.forall(_(b)))
-        val lines = FourMcFileFormat.blockLines(index, kept)
-        if (countOnly) acc.copy(answered = acc.answered + kept.length).plusLines(lines)
-        else acc.copy(
-          decoded = acc.decoded + kept.length,
-          skipped = acc.skipped + (index.numBlocks - kept.length)).plusLines(lines)
+    if (options.getOrElse("payload", "text") != "csv") Array.fill(index.numBlocks)(Decode)
+    else if (FourMcFileFormat.countOnly(index, requiredSchema, filters, statsEnabled, permissive,
+        runtimeKeys = false)) Array.fill(index.numBlocks)(Counted)
+    else {
+      val keep =
+        FourMcFileFormat.keepBlocksOpt(index, dataSchema, filters, statsEnabled, permissive, None)
+      Array.tabulate(index.numBlocks)(b => if (keep.forall(_(b))) Decode else Skipped)
     }
   }
 
@@ -545,14 +535,47 @@ object FourMcFileFormat {
       p.endsWith(".4mc") || p.endsWith(".4mz")
     }
 
+  /** What a planned read does with one block. */
+  object BlockVerdict {
+    /** Answered from the footer: one row for the block. */
+    final val Answered: Byte = 1
+    /** Answered from the footer's line count: one row per owned line. */
+    final val Counted: Byte = 2
+    final val Decode: Byte = 3
+    /** No line can pass the pushed filters. */
+    final val Skipped: Byte = 4
+  }
+
   /** Block census of a planned whole-file read: blocks answered from the
     * footers, decoded and skipped, and the lines the read makes rows of
     * (`Long.MaxValue` when a file cannot say).
     */
   final case class Census(answered: Long = 0, decoded: Long = 0, skipped: Long = 0, lines: Long = 0) {
-    def plusLines(n: Long): Census =
-      copy(lines = if (n > Long.MaxValue - lines) Long.MaxValue else lines + n)
+    /** Adds one file's per-block verdicts. Counted blocks decode nothing,
+      * but the read still makes one row per owned line of them, so their
+      * lines count with the decoded ones.
+      */
+    def plus(index: FourMcIndex, verdicts: Array[Byte]): Census = {
+      import BlockVerdict._
+      val rowBlocks = verdicts.indices.filter(b => verdicts(b) == Decode || verdicts(b) == Counted)
+      val n = blockLines(index, rowBlocks)
+      copy(
+        answered = answered + verdicts.count(v => v == Answered || v == Counted),
+        decoded = decoded + verdicts.count(_ == Decode),
+        skipped = skipped + verdicts.count(_ == Skipped),
+        lines = if (n > Long.MaxValue - lines) Long.MaxValue else lines + n)
+    }
   }
+
+  /** Metadata-only COUNT(*): a csv read of no column, with no pushed
+    * filter, no runtime key set and no corrupt-block skipping, is answered
+    * from the stats segment's per-block owned-line counts alone.
+    */
+  private[sources] def countOnly(index: FourMcIndex, requiredSchema: StructType,
+      filters: Seq[Filter], statsEnabled: Boolean, permissive: Boolean,
+      runtimeKeys: Boolean): Boolean =
+    requiredSchema.isEmpty && filters.isEmpty && statsEnabled && !permissive && !runtimeKeys &&
+      index.stats.isDefined
 
   /** Lines of `blocks`: their owned-line counts from the stats segment. A
     * file without one gives `Long.MaxValue`, past any bound: its stored
@@ -1428,6 +1451,14 @@ object CsvPayload {
     val nonEmpty: Boolean = hasRange || rest.length > 0
     val nullPasses: Boolean = !hasRange && rest.forall(p => p(null))
     @inline def rangeOk(x: Long): Boolean = !hasRange || (x >= loL && x <= hiL)
+
+    /** Does one boxed parsed value (null for NULL) pass? */
+    def accepts(v: Any): Boolean = v match {
+      case null => nullPasses
+      case d: org.apache.spark.sql.types.Decimal => rangeOk(d.toUnscaledLong) && rest.forall(_(d))
+      case n: java.lang.Number if hasRange => rangeOk(n.longValue) && rest.forall(_(n))
+      case _ => rest.forall(_(v))
+    }
   }
 
   object FieldPred {
@@ -1441,6 +1472,9 @@ object CsvPayload {
     * Only filters the parse can decide locally are compiled — everything
     * else is left to Spark's own Filter above the scan (which re-applies ALL
     * pushed filters, so dropping a filter here is always safe, never wrong).
+    * The one reader with no Filter above it, [[FourMcStatsFileFormat]],
+    * takes only conjuncts [[graft.plans.McAggregatePushdown]] admits, and
+    * each of those compiles here.
     * Comparison predicates are false on null (SQL three-valued logic: an
     * UNKNOWN row can never pass the downstream filter either, so skipping it
     * early is sound).
@@ -1453,7 +1487,7 @@ object CsvPayload {
       tags: Array[Int]
   ): Array[FieldPred] = {
     import org.apache.spark.sql.sources._
-    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    import org.apache.spark.sql.catalyst.util.{DateTimeUtils, SQLOrderingUtil}
 
     // decimal literals convert to the COLUMN's unscaled domain; a literal
     // that doesn't fit the scale exactly is simply not compiled (Spark's
@@ -1498,10 +1532,12 @@ object CsvPayload {
       case TagLong | TagInt =>
         val xv = x match { case i: java.lang.Integer => i.longValue; case n: java.lang.Number => n.longValue }
         java.lang.Long.compare(xv, l.asInstanceOf[java.lang.Long].longValue)
+      // Spark's SQL order, not the JVM's total order: -0.0 equals 0.0, and
+      // NaN equals NaN and sorts above every other value
       case TagDouble =>
-        java.lang.Double.compare(x.asInstanceOf[java.lang.Double].doubleValue, l.asInstanceOf[java.lang.Double].doubleValue)
+        SQLOrderingUtil.compareDoubles(x.asInstanceOf[java.lang.Double].doubleValue, l.asInstanceOf[java.lang.Double].doubleValue)
       case TagFloat =>
-        java.lang.Float.compare(x.asInstanceOf[java.lang.Float].floatValue, l.asInstanceOf[java.lang.Float].floatValue)
+        SQLOrderingUtil.compareFloats(x.asInstanceOf[java.lang.Float].floatValue, l.asInstanceOf[java.lang.Float].floatValue)
       case TagBoolean =>
         java.lang.Boolean.compare(x.asInstanceOf[java.lang.Boolean].booleanValue, l.asInstanceOf[java.lang.Boolean].booleanValue)
       case TagTimestamp =>

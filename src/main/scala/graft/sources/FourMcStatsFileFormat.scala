@@ -40,18 +40,19 @@ import org.apache.spark.util.SerializableConfiguration
   * (through the shared index cache) and runs [[reader]] on the driver,
   * with no Spark job.
   *
-  * `preds` (data-column range predicates compiled by the rule) extend the
-  * pushdown to FILTERED aggregates (`MIN(ts) WHERE ts >= X`): each owned
-  * block is classified against its zone map as all-rows-pass (stats row as
-  * usual — every row contributes), no-row-passes (skipped entirely, counted
-  * in `blocksSkipped`), or straddling (decoded, predicates re-evaluated per
-  * line). Null filter values fail every comparison, so a block proves
-  * "all pass" only with a zero null count on the filter column, while
-  * "none pass" needs only the non-null bounds (nulls fail anyway).
+  * `dataFilters` (the data conjuncts of a FILTERED aggregate, `MIN(ts)
+  * WHERE ts >= X`, as the rule translated them for the manifest index)
+  * take the block verdicts every 4mc reader takes: a block
+  * [[McStatsPruning.keepBlocks]] refutes is skipped (counted in
+  * `blocksSkipped`); a block [[McStatsPruning.certainBlocks]] certifies
+  * answers from the footer when its stats answer exactly; any other block
+  * decodes, and its lines are re-checked by [[CsvPayload.compileFilters]],
+  * the plain scan's line check. No Spark Filter sits above this relation,
+  * so the rule hands it only conjuncts both checks decide exactly.
   */
 class FourMcStatsFileFormat(
     origSchema: StructType,
-    preds: Seq[FourMcStatsFileFormat.StatsPred] = Nil,
+    dataFilters: Seq[Filter] = Nil,
     groupColsIn: Seq[Int] = Nil
 ) extends FileFormat with Serializable {
 
@@ -99,8 +100,9 @@ class FourMcStatsFileFormat(
   }
 
   /** What one required schema asks of the footers, and the per-block
-    * verdicts that follow from it. Shared by the reader and [[sweep]], so
-    * planning classifies every block exactly as the reader will.
+    * verdicts that follow from it. Shared by the reader and
+    * [[blockVerdicts]], so planning classifies every block exactly as the
+    * reader will.
     */
   private final class Layout(requiredSchema: StructType) extends Serializable {
     import FourMcStatsFileFormat.FieldSpec
@@ -133,21 +135,21 @@ class FourMcStatsFileFormat(
     // bounds columns gate stats usability (exactness of min/max); sum
     // columns gate on the v2 FlagHasSum (v1 segments decode instead);
     // nn-only columns need just the nullCount array, which is always exact
-    // when a stats segment exists. Predicate columns are parsed in the
-    // decode fallback (their values feed the per-line filter) but impose no
-    // exactness condition — classification already consulted their zones.
+    // when a stats segment exists. Filter columns are parsed in the
+    // decode fallback (their values feed the line check) but impose no
+    // exactness condition — the block verdicts already consulted their zones.
     val boundsCols: Set[Int] = needMin ++ needMax
-    val predCols: Set[Int] = preds.map(_.col).toSet
+    val filterCols: Set[Int] =
+      dataFilters.flatMap(_.references).map(origSchema.fieldIndex).toSet
     val groupCols: Set[Int] = grpCols.toSet
     val neededCols: Array[Int] =
-      (boundsCols ++ needNn ++ needSum ++ predCols ++ groupCols).toArray.sorted
+      (boundsCols ++ needNn ++ needSum ++ filterCols ++ groupCols).toArray.sorted
     val isBoundsCol: Array[Boolean] = neededCols.map(boundsCols.contains)
     val isSumCol: Array[Boolean] = neededCols.map(needSum.contains)
     val needsValue: Array[Boolean] = neededCols.map(c =>
-      boundsCols.contains(c) || needSum.contains(c) || predCols.contains(c) ||
+      boundsCols.contains(c) || needSum.contains(c) || filterCols.contains(c) ||
         groupCols.contains(c))
     val neededFields: Int = if (neededCols.isEmpty) 0 else neededCols.max + 1
-    val predArr: Array[FourMcStatsFileFormat.StatsPred] = preds.toArray
 
     /** Per-FILE effective tags: micros-encoded timestamps carry tag 14 in
       * this file's stats segment (identity mapping — origTags indexes
@@ -218,90 +220,27 @@ class FourMcStatsFileFormat(
       true
     }
 
-    /** Bloom ordinal per equality predicate (−1 when the file has no
-      * bloom for that column): an OpEq conjunct whose key misses the
-      * block's filter proves NO row passes — the block skips entirely,
-      * even where the zone range (domain-spanning on unsorted keys)
-      * cannot refute. `MIN/SUM/COUNT … WHERE key = K` becomes a bloom
-      * sweep + one or two block decodes.
+    /** Per-block verdicts ([[FourMcFileFormat.BlockVerdict]]) of a file
+      * whose stats segment describes this read schema, None otherwise (the
+      * file decodes whole): skipped where [[McStatsPruning.keepBlocks]]
+      * refutes the block, answered where [[McStatsPruning.certainBlocks]]
+      * certifies it and [[statsUsable]] holds, decoded elsewhere.
       */
-    def predBloomOrds(blooms: Option[graft.format.McBlockBlooms]): Array[Int] =
-      predArr.map { p =>
-        if (p.op == FourMcStatsFileFormat.OpEq && !p.isDouble)
-          blooms.map(_.ordOf(p.col)).getOrElse(-1)
-        else -1
-      }
-
-    /** Classify block `b` against the pushed predicates' zone maps (and
-      * blooms for equality conjuncts):
-      * 0 = every row passes (stats row usable as-is), 1 = straddling
-      * (decode + per-line eval), 2 = no row passes (skip the block).
-      */
-    def filterState(st: McBlockStats, b: Int, blooms: Option[graft.format.McBlockBlooms],
-        bloomOrds: Array[Int]): Int = {
-      var all = true
-      var pi = 0
-      while (pi < predArr.length) {
-        val p = predArr(pi)
-        val k = b * st.nCols + p.col
-        val nonNull = st.lineCount(b) - st.nullCount(k)
-        if (nonNull == 0) return 2 // only nulls (or empty): nothing passes
-        if (bloomOrds(pi) >= 0 && !blooms.get.mayContain(b, bloomOrds(pi), p.litL))
-          return 2 // no non-null value equals the key; nulls fail Eq too
-        if (p.op == FourMcStatsFileFormat.OpNotNull) {
-          if (st.nullCount(k) > 0) all = false
-        } else if (!st.hasBounds(k)) {
-          all = false // NaN-poisoned zone: undecidable, decode
-        } else {
-          val isDbl = p.isDouble
-          // stored bits → comparable domain (doubles ride raw bits)
-          val cLo =
-            if (isDbl)
-              java.lang.Double.compare(
-                java.lang.Double.longBitsToDouble(st.minLong(k)), p.litD)
-            else java.lang.Long.compare(st.minLong(k), p.litL)
-          val cHi =
-            if (isDbl)
-              java.lang.Double.compare(
-                java.lang.Double.longBitsToDouble(st.maxLong(k)), p.litD)
-            else java.lang.Long.compare(st.maxLong(k), p.litL)
-          val (allTrue, noneTrue) = (p.op: @scala.annotation.switch) match {
-            case FourMcStatsFileFormat.OpGe => (cLo >= 0, cHi < 0)
-            case FourMcStatsFileFormat.OpGt => (cLo > 0, cHi <= 0)
-            case FourMcStatsFileFormat.OpLe => (cHi <= 0, cLo > 0)
-            case FourMcStatsFileFormat.OpLt => (cHi < 0, cLo >= 0)
-            case FourMcStatsFileFormat.OpEq =>
-              (cLo == 0 && cHi == 0, cLo > 0 || cHi < 0)
-          }
-          if (noneTrue) return 2 // non-null rows all fail; null rows fail too
-          // "all rows pass" additionally needs zero nulls — null fails
-          if (!allTrue || st.nullCount(k) > 0) all = false
+    def classify(index: FourMcIndex): Option[Array[Byte]] = {
+      import FourMcFileFormat.BlockVerdict._
+      val effTags = fileTags(index)
+      index.stats.filter(statsMatch(_, effTags)).map { st =>
+        // with no filter, every block passes: empty blocks answer a zero row
+        val keep = if (dataFilters.isEmpty) None
+          else McStatsPruning.keepBlocks(dataFilters, origSchema, st, index.blooms)
+        val certain = if (dataFilters.isEmpty) None
+          else McStatsPruning.certainBlocks(dataFilters, origSchema, st)
+        Array.tabulate(st.nBlocks) { b =>
+          if (keep.exists(!_(b))) Skipped
+          else if (certain.forall(_(b)) && statsUsable(st, b, effTags)) Answered
+          else Decode
         }
-        pi += 1
       }
-      if (all) 0 else 1
-    }
-
-    /** Per-block verdict for the owned ordinals [ordStart, ordEnd):
-      * [[FourMcStatsFileFormat.Answered]] from the footer,
-      * [[FourMcStatsFileFormat.Decode]] (straddling the pushed predicates,
-      * or stats that cannot answer exactly) or
-      * [[FourMcStatsFileFormat.Skipped]] (no row passes); 0 elsewhere.
-      */
-    def classify(st: McBlockStats, effTags: Array[Int], blooms: Option[McBlockBlooms],
-        ordStart: Int, ordEnd: Int): Array[Byte] = {
-      val verdict = new Array[Byte](st.nBlocks)
-      val bloomOrds = predBloomOrds(blooms)
-      var b = ordStart
-      while (b < ordEnd) {
-        val fs = if (predArr.isEmpty) 0 else filterState(st, b, blooms, bloomOrds)
-        verdict(b) =
-          if (fs == 2) FourMcStatsFileFormat.Skipped
-          else if (fs == 0 && statsUsable(st, b, effTags)) FourMcStatsFileFormat.Answered
-          else FourMcStatsFileFormat.Decode
-        b += 1
-      }
-      verdict
     }
   }
 
@@ -324,6 +263,9 @@ class FourMcStatsFileFormat(
     val tsMicroDigits = CsvPayload.fixedPatternFracDigits(tsFmt)
     val layout = new Layout(requiredSchema)
     import layout._
+    // the plain scan's line check, over the data schema's own tags
+    val lineChecks = CsvPayload.compileFilters(dataFilters, origSchema, origTags)
+    val filterPos: Array[Int] = neededCols.indices.filter(ci => filterCols(neededCols(ci))).toArray
 
     (file: PartitionedFile) => {
       if (!FourMcFileFormat.accepts(file, options)) Iterator.empty
@@ -493,56 +435,8 @@ class FourMcStatsFileFormat(
           .withZone(java.time.ZoneOffset.UTC)
         val starts = new Array[Int](totalFields + 1)
 
-        val predPos: Array[Int] =
-          predArr.map(p => java.util.Arrays.binarySearch(neededCols, p.col))
-
-        /** Spark-total-order compare of a parsed filter value against the
-          * predicate literal (NaN greatest, like Catalyst's double ordering).
-          */
-        def predCompare(p: FourMcStatsFileFormat.StatsPred, v: Any): Int =
-          if (p.isDouble) {
-            val d = v match {
-              case d: java.lang.Double => d.doubleValue()
-              case f: java.lang.Float  => f.doubleValue()
-            }
-            java.lang.Double.compare(d, p.litD)
-          } else {
-            val l = v match {
-              case l: java.lang.Long    => l.longValue()
-              case i: java.lang.Integer => i.longValue()
-              case b: java.lang.Boolean => if (b) 1L else 0L
-              case d: org.apache.spark.sql.types.Decimal => d.toUnscaledLong
-            }
-            java.lang.Long.compare(l, p.litL)
-          }
-
-        /** Re-evaluate the pushed predicates on one decoded line (straddling
-          * or stats-less blocks). Null filter values fail every op.
-          */
-        def evalPreds(parsed: Array[Any], nonNull: Array[Boolean]): Boolean = {
-          var i = 0
-          while (i < predArr.length) {
-            val pos = predPos(i)
-            if (!nonNull(pos)) return false
-            val p = predArr(i)
-            if (p.op != FourMcStatsFileFormat.OpNotNull) {
-              val c = predCompare(p, parsed(pos))
-              val pass = (p.op: @scala.annotation.switch) match {
-                case FourMcStatsFileFormat.OpGe => c >= 0
-                case FourMcStatsFileFormat.OpGt => c > 0
-                case FourMcStatsFileFormat.OpLe => c <= 0
-                case FourMcStatsFileFormat.OpLt => c < 0
-                case FourMcStatsFileFormat.OpEq => c == 0
-              }
-              if (!pass) return false
-            }
-            i += 1
-          }
-          true
-        }
-
         /** Per-line fallback row: (v, v, …, 1) over the parsed needed cols,
-          * or null when the line fails the pushed predicates. nn-only
+          * or null when the line fails the pushed filters. nn-only
           * columns skip the value parse — a null check is enough for a
           * non-null count.
           */
@@ -590,7 +484,7 @@ class FourMcStatsFileFormat(
               }
             ci += 1
           }
-          if (predArr.nonEmpty && !evalPreds(parsed, nonNull)) return null
+          if (!filterPos.forall(ci => lineChecks(neededCols(ci)).accepts(parsed(ci)))) return null
           val colPos: Int => Int = c => java.util.Arrays.binarySearch(neededCols, c)
           val vals = new Array[Any](specs.length)
           var i = 0
@@ -632,18 +526,18 @@ class FourMcStatsFileFormat(
             cur, math.min(totalFields, fileCols), needed, delim)
         }
 
-        val rows: Iterator[InternalRow] = index.stats match {
-          case Some(st) if statsMatch(st, effTags) =>
-            // split blocks into stats-answered, decode-fallback, and (with
-            // pushed predicates) refuted sets
-            val verdict = classify(st, effTags, index.blooms, ordStart, ordEnd)
-            val keep = verdict.map(_ == FourMcStatsFileFormat.Decode) // true = must decode
-            val statsBlocks = verdict.count(_ == FourMcStatsFileFormat.Answered)
-            val skippedBlocks = verdict.count(_ == FourMcStatsFileFormat.Skipped)
-            FourMcScanMetrics.statsAggBlocks.add(statsBlocks)
+        val rows: Iterator[InternalRow] = (index.stats, classify(index)) match {
+          case (Some(st), Some(verdict)) =>
+            // the owned blocks split into stats-answered, decoded and (with
+            // pushed filters) refuted sets
+            import FourMcFileFormat.BlockVerdict._
+            val owned = ordStart until ordEnd
+            val keep = // true = must decode
+              Array.tabulate(verdict.length)(b => owned.contains(b) && verdict(b) == Decode)
+            val skippedBlocks = owned.count(verdict(_) == Skipped)
+            FourMcScanMetrics.statsAggBlocks.add(owned.count(verdict(_) == Answered))
             if (skippedBlocks > 0) FourMcScanMetrics.blocksSkipped.add(skippedBlocks)
-            def answered = (ordStart until ordEnd).iterator
-              .filter(verdict(_) == FourMcStatsFileFormat.Answered)
+            def answered = owned.iterator.filter(verdict(_) == Answered)
             val synthesized: Iterator[InternalRow] =
               if (jointMode) answered.flatMap(jointRows(st, _))
               else if (groupMode) answered.flatMap(groupRows(st, _))
@@ -665,7 +559,7 @@ class FourMcStatsFileFormat(
             columnarLines(null).map { case (_, bytes) => lineRow(bytes) }.filter(_ != null)
           case _ =>
             // stats-less or schema-mismatched file: decode every owned line
-            // (predicates, if any, evaluate per line)
+            // (filters, if any, are checked per line)
             val it = new FourMcLineIterator(in, index, file.start, splitEnd, permissive = false)
             decodedBlocks = () => (ordEnd - ordStart).toLong
             it.map { case (_, bytes) => lineRow(bytes) }.filter(_ != null)
@@ -675,62 +569,21 @@ class FourMcStatsFileFormat(
     }
   }
 
-  /** Planning-time census of whole files, for
-    * [[graft.plans.McDriverScanStrategy]]'s bounds: blocks answered from
-    * the footers, decoded and skipped, and the lines of the decoded ones
-    * ([[FourMcFileFormat.blockLines]]) — the verdicts [[reader]] reaches on
-    * the same files.
+  /** Per-block verdicts ([[FourMcFileFormat.BlockVerdict]]) of whole
+    * files for [[graft.plans.McDriverScanStrategy]]'s census: the verdicts
+    * [[reader]] reaches on the same files.
     */
-  private[graft] def sweep(
-      files: Seq[PartitionedFile],
-      indexOf: PartitionedFile => FourMcIndex,
-      requiredSchema: StructType,
-      options: Map[String, String]): FourMcFileFormat.Census = {
+  private[graft] def blockVerdicts(requiredSchema: StructType): FourMcIndex => Array[Byte] = {
     val layout = new Layout(requiredSchema)
-    val accepted = files.filter(FourMcFileFormat.accepts(_, options))
-    accepted.foldLeft(FourMcFileFormat.Census()) { (acc, file) =>
-      val index = indexOf(file)
-      val n = index.numBlocks
-      val effTags = layout.fileTags(index)
-      val verdict = index.stats match {
-        case Some(st) if layout.statsMatch(st, effTags) =>
-          layout.classify(st, effTags, index.blooms, 0, n)
-        case _ => Array.fill(n)(FourMcStatsFileFormat.Decode)
-      }
-      val decoded = (0 until n).filter(verdict(_) == FourMcStatsFileFormat.Decode)
-      acc.copy(
-        answered = acc.answered + verdict.count(_ == FourMcStatsFileFormat.Answered),
-        decoded = acc.decoded + decoded.length,
-        skipped = acc.skipped + verdict.count(_ == FourMcStatsFileFormat.Skipped))
-        .plusLines(FourMcFileFormat.blockLines(index, decoded))
-    }
+    index => layout.classify(index)
+      .getOrElse(Array.fill(index.numBlocks)(FourMcFileFormat.BlockVerdict.Decode))
   }
 }
 
 object FourMcStatsFileFormat {
 
-  // StatsPred comparison ops
-  final val OpGe = 0
-  final val OpGt = 1
-  final val OpLe = 2
-  final val OpLt = 3
-  final val OpEq = 4
-  final val OpNotNull = 5
-
-  /** One compiled data-column predicate: `col <op> literal` (or IS NOT
-    * NULL). `isDouble` selects the comparison domain — double/float columns
-    * compare via `litD` with Spark's total order (NaN greatest), everything
-    * else (long/int/timestamp/boolean) via `litL`.
-    */
-  final case class StatsPred(col: Int, op: Int, isDouble: Boolean, litL: Long, litD: Double)
-
   /** One relation field: kind 0=min 1=max 2=cnt 3=non-null cnt 4=sum 5=group value. */
   private[sources] final case class FieldSpec(kind: Int, col: Int)
-
-  // per-block verdicts of Layout.classify (0 = block outside the split)
-  private[sources] final val Answered: Byte = 1
-  private[sources] final val Decode: Byte = 2
-  private[sources] final val Skipped: Byte = 3
 
   /** Synthetic schema for the rule: bounds for each (colIdx, needMin,
     * needMax) target, a `_nn_<i>` per-block non-null count for each

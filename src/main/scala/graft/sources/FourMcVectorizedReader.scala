@@ -227,8 +227,8 @@ object FourMcVectorizedReader {
       // `SELECT COUNT(*)` becomes a footer sweep instead of a decompress-
       // everything scan (parquet answers it from row-group metadata the
       // same way). Ownership makes the split sum exact under ANY layout.
-      if (nFields == 0 && filters.isEmpty && statsEnabled && !permissive &&
-          rkfOpt.isEmpty && index.stats.isDefined) {
+      if (FourMcFileFormat.countOnly(index, requiredSchema, filters, statsEnabled, permissive,
+          runtimeKeys = rkfOpt.nonEmpty)) {
         val n = FourMcFileFormat.ownedLineCount(index, file)
         FourMcScanMetrics.metadataCountRows.add(n)
         val partVecs = partitionVectors(partitionSchema, file.partitionValues)

@@ -58,9 +58,9 @@ class ManifestFileIndex(
     // dataFilters arrive pre-split into conjuncts: untranslatable ones
     // simply don't participate (pruning on a conjunct subset stays sound).
     // extraFilters are STATIC conjuncts fixed at construction — the
-    // aggregate-pushdown rewrite carries its compiled data predicates here,
-    // since its stats relation evaluates them inside the format where the
-    // scan has no plan-level filters to hand us.
+    // aggregate-pushdown rewrite carries here the same translated filters
+    // it hands its stats relation, which decides them inside the format,
+    // so that scan has no plan-level filters to hand us.
     val filters = dataFilters.flatMap(ManifestFileIndex.translate) ++ extraFilters
     if (filters.isEmpty) return base
     val rootsWithManifests: Seq[(java.net.URI, graft.format.McManifest.Manifest)] =

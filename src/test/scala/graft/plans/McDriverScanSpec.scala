@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -151,6 +151,31 @@ class McDriverScanSpec extends AnyFunSuite {
     val (parts, partsTwin) = tables(partitioned = true)
     threeWays("partition-filtered lookup")(df => point(77)(df.filter(col("p") === "p1")),
       parts, partsTwin, partSchema)
+
+    // -0.0 equals 0.0 in Spark's SQL order: lookups, a footer aggregate
+    // (`>=`, `<`) and the plain aggregate double equality keeps all agree
+    // with parquet over a z-sorted table whose zero blocks mix the two
+    val (zeros, zerosTwin) = (tmpDir(), tmpDir())
+    val zSchema = StructType(Seq(StructField("id", LongType), StructField("z", DoubleType)))
+    val zRows = spark.createDataFrame(spark.sparkContext.parallelize((0L until 20000L).map { i =>
+      org.apache.spark.sql.Row(i, i % 10 match {
+        case 0 => -0.0
+        case 1 => 0.0
+        case _ => (i - 10000L) / 8.0
+      })
+    }, 1), zSchema).sortWithinPartitions("z")
+    zRows.write.format("4mc").option("payload", "csv")
+      .option("blockBytes", (16 * 1024).toString).save(zeros)
+    zRows.write.parquet(zerosTwin)
+    Seq[(String, Column)]("z >= 0.0" -> (col("z") >= 0.0), "z < 0.0" -> (col("z") < 0.0),
+        "z = 0.0" -> (col("z") === 0.0)).foreach { case (label, cond) =>
+      threeWays(s"lookup $label")(_.filter(cond).select("id"), zeros, zerosTwin, zSchema)
+      val aggPlan = threeWays(s"aggregate $label")(
+        _.filter(cond).agg(count(lit(1)).as("n"), sum(col("id")).as("s")),
+        zeros, zerosTwin, zSchema)
+      assert(aggPlan.contains("4MC-STATS") == (label != "z = 0.0"),
+        s"$label: only a range filter takes the footer aggregate:\n$aggPlan")
+    }
   }
 
   test("refused shapes keep the job plan") {

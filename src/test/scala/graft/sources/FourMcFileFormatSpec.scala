@@ -540,6 +540,21 @@ class FourMcFileFormatSpec extends AnyFunSuite {
     assert(preds(2).rest.forall(_(java.lang.Double.valueOf(2.5))))
     assert(!preds(2).rest.forall(_(java.lang.Double.valueOf(2.6))))
     assert(!preds(2).nullPasses)
+    // doubles and floats compare in Spark's SQL order: -0.0 equals 0.0, and
+    // NaN equals NaN and sorts above every other value
+    def passes(f: Filter, v: Double): Boolean =
+      CsvPayload.compileFilters(Seq(f), schema, tags)(2).rest.forall(_(java.lang.Double.valueOf(v)))
+    assert(passes(GreaterThanOrEqual("c", 0.0), -0.0))
+    assert(passes(EqualTo("c", 0.0), -0.0) && passes(EqualTo("c", -0.0), 0.0))
+    assert(!passes(LessThan("c", 0.0), -0.0) && !passes(GreaterThan("c", -0.0), 0.0))
+    assert(passes(EqualTo("c", Double.NaN), Double.NaN))
+    assert(passes(GreaterThan("c", Double.PositiveInfinity), Double.NaN))
+    val fSchema = StructType(Seq(StructField("f", FloatType)))
+    def passesF(f: Filter, v: Float): Boolean =
+      CsvPayload.compileFilters(Seq(f), fSchema, Array(CsvPayload.TagFloat))(0)
+        .rest.forall(_(java.lang.Float.valueOf(v)))
+    assert(passesF(LessThanOrEqual("f", -0.0f), 0.0f) && !passesF(LessThan("f", 0.0f), -0.0f))
+    assert(passesF(GreaterThan("f", Float.MaxValue), Float.NaN))
   }
 
   test("hive-partitioned 4mc dir: partition pruning eliminates non-matching files") {
