@@ -285,93 +285,14 @@ object ColumnarBlocks {
   }
 }
 
-/** Line adapter: presents a columnar file as an [[McLineStream]] by
-  * SYNTHESIZING one delimited line per row — needed columns' stored bytes
-  * (already escaped) at their field positions, every other field empty.
-  * A csv line parser only ever slices the fields it projects, and empty
-  * fields parse exactly like the row layout's missing trailing fields, so
-  * the synthesized line is indistinguishable from a real one FOR THE
-  * PROJECTION AT HAND. This keeps the straddling-block decode of the
-  * aggregate-pushdown relation ([[graft.sources.FourMcStatsFileFormat]])
-  * at one parse implementation for both layouts; the scan reader reads the
-  * column streams directly and never pays the synthesis copy.
-  *
-  * @param lineFields number of fields to emit per line (min(read-schema
-  *   width, file width) — the parser's boundary scan is bounded by the read
-  *   schema, so trailing file columns beyond it must not be emitted)
-  */
-final class McColumnarLineSynth(
-    cursor: McColumnarCursor,
-    lineFields: Int,
-    needed: Array[Int],
-    delim: Byte
-) extends McLineStream {
-  private var r = 0
-  private var inBlock = false
-  private var buf = new Array[Byte](256)
-
-  var sliceOff: Long = 0L
-  var sliceBytes: Array[Byte] = _
-  var sliceStart: Int = 0
-  var sliceEnd: Int = 0
-
-  def advanceSlice(): Boolean = {
-    while (!inBlock || r >= cursor.rows) {
-      if (!cursor.nextBlock()) return false
-      inBlock = true
-      r = 0
-    }
-    var len = 0
-    var j = 0 // pointer into needed
-    var c = 0
-    while (c < lineFields) {
-      if (c > 0) {
-        if (len + 1 > buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-        buf(len) = delim
-        len += 1
-      }
-      if (j < needed.length && needed(j) == c) {
-        val s = cursor.valStart(j, r)
-        val e = cursor.valEnd(j, r)
-        val n = e - s
-        while (len + n > buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-        System.arraycopy(cursor.colBytes(j), s, buf, len, n)
-        len += n
-        j += 1
-      }
-      c += 1
-    }
-    sliceOff = cursor.blockOff
-    sliceBytes = buf
-    sliceStart = 0
-    sliceEnd = len
-    r += 1
-    true
-  }
-
-  // detached-line Iterator interface (must not be mixed with slice mode)
-  private var nextLine: (Long, Array[Byte]) = _
-  private var primed = false
-  override def hasNext: Boolean = {
-    if (!primed) {
-      nextLine =
-        if (advanceSlice())
-          (sliceOff, java.util.Arrays.copyOfRange(sliceBytes, sliceStart, sliceEnd))
-        else null
-      primed = true
-    }
-    nextLine != null
-  }
-  override def next(): (Long, Array[Byte]) = {
-    if (!hasNext) throw new NoSuchElementException
-    primed = false
-    nextLine
-  }
-}
-
 /** Split-scoped cursor over the owned blocks of one COLUMNAR csv file:
   * iterates blocks whose headers start in [splitStart, splitEnd), skipping
-  * pruned ones, and decompresses ONLY the `needed` column streams of each.
+  * those `keep` leaves out, and decompresses ONLY the `needed` column
+  * streams of each. Its one consumer is the csv batch reader
+  * ([[graft.sources.FourMcVectorizedReader]]), which decodes the columnar
+  * blocks of both the plain scan and the footer-stats relation; `keep`
+  * comes from the file's block verdicts
+  * ([[graft.sources.FourMcFileFormat.blockVerdicts]]).
   *
   * Per-row random access: `valStart(j, r)` / `valEnd(j, r)` give the byte
   * slice of row `r`'s value in needed-column `j` (0-based within `needed`),
@@ -387,7 +308,7 @@ final class McColumnarLineSynth(
   *   column count — the DIR's entry count), which may exceed the read
   *   schema's width
   * @param needed   ascending file-column ordinals to decompress (< fileCols)
-  * @param keep     per-block keep flags from stats/bloom pruning; null = all
+  * @param keep     per-block decode flags, one per block of the file
   */
 final class McColumnarCursor(
     in: McInput,
@@ -411,7 +332,6 @@ final class McColumnarCursor(
 
   /** Scan metrics, mirroring the row-layout iterators. */
   var blocksRead: Long = 0L
-  var blocksSkipped: Long = 0L
   var corruptSkipped: Long = 0L
 
   /** Rows in the current block (valid after a true [[nextBlock]]). */
@@ -421,8 +341,7 @@ final class McColumnarCursor(
   var blockOff: Long = 0L
 
   /** File-wide ordinal of the current block (valid after a true
-    * [[nextBlock]]) — lets the reader consult per-block side tables
-    * (e.g. the certain-blocks predicate-elision mask).
+    * [[nextBlock]]) — lets the reader consult the block's verdict.
     */
   var blockOrd: Int = -1
 
@@ -465,8 +384,7 @@ final class McColumnarCursor(
     while (ord < endOrd) {
       val o = ord
       ord += 1
-      if (keep != null && !keep(o)) blocksSkipped += 1
-      else {
+      if (keep(o)) {
         try {
           readBlockCols(o)
           blocksRead += 1

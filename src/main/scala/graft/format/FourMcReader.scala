@@ -256,6 +256,8 @@ final class FourMcLineIterator(
     * failures; 0 in strict mode, where the first failure throws).
     */
   var corruptSkipped: Long = 0L
+  /** Blocks decompressed, continuation blocks past the split included. */
+  var blocksRead: Long = 0L
   // a resync happened and the partial line touching the corrupt block (plus
   // the tail of it in the next good block) must be discarded
   private var resynced = false
@@ -299,6 +301,7 @@ final class FourMcLineIterator(
           else {
             if (data == null) { block = null; return false }
             block = data
+            blocksRead += 1
             blockPos = 0
             blockFileOff = off
             nextHeaderPos = nxt
@@ -492,11 +495,8 @@ final class FourMcPrunedLineIterator(
   private val ownedStartOrd = index.ordAt(alignedStart)
   private val ownedEndOrd = index.ordAt(alignedEnd) // exclusive
 
-  /** Scan metrics: decompressions performed / owned blocks the stats
-    * refuted (and therefore never decompressed).
-    */
+  /** Blocks decompressed, continuation blocks included. */
   var blocksRead: Long = 0L
-  var blocksSkipped: Long = 0L
 
   private var block: Array[Byte] = _
   private var blockPos = 0
@@ -533,10 +533,6 @@ final class FourMcPrunedLineIterator(
         }
         return true
       }
-      // the metric is PRUNING effectiveness: count only blocks the stats
-      // refuted — a kept block with no owned line starts was never going to
-      // be decompressed by this split and must not inflate the skip count
-      if (!keep(o) && flo != BlockStats.NoOwnedLines) blocksSkipped += 1
       o += 1
     }
     false

@@ -101,22 +101,16 @@ object McAggregatePushdown extends Rule[LogicalPlan] {
     */
   private def manifestExactCount(fsRel: HadoopFsRelation): Option[Long] = {
     try {
-      val roots = fsRel.location.rootPaths
-      if (roots.isEmpty) return None
-      val rootsWithManifests = roots.flatMap(r =>
-        graft.sources.ManifestFileIndex.load(r, fsRel.sparkSession).map(r.toUri -> _))
-      if (rootsWithManifests.isEmpty) return None
+      val rootUris = fsRel.location.rootPaths.map(_.toUri)
+      val manifests = fsRel.location.rootPaths.flatMap(r =>
+        ManifestFileIndex.load(r, fsRel.sparkSession).map(r.toUri -> _)).toMap
+      if (manifests.isEmpty) return None
       var total = 0L
       fsRel.location.listFiles(Nil, Nil).foreach(_.files.foreach { f =>
-        val name = f.getPath.getName
-        if (name.endsWith(".4mc") || name.endsWith(".4mz")) {
-          val uri = f.getPath.toUri
-          val entry = rootsWithManifests.iterator.flatMap { case (ru, m) =>
-            val r = ru.relativize(uri)
-            if (!r.isAbsolute && r.getPath.nonEmpty)
-              m.byKey.get((r.getPath, f.getLen, f.getModificationTime))
-            else None
-          }.nextOption().getOrElse(return None)
+        if (FourMcFileFormat.accepts(f.getPath, fsRel.options)) {
+          val entry = ManifestFileIndex.entryKey(rootUris, f)
+            .flatMap { case (root, key) => manifests.get(root).flatMap(_.byKey.get(key)) }
+            .getOrElse(return None)
           total += entry.lineCountExact
         }
       })
@@ -138,13 +132,9 @@ object McAggregatePushdown extends Rule[LogicalPlan] {
     */
   private def probeDictCoverage(fsRel: HadoopFsRelation, cols: Seq[Int]): Boolean = {
     try {
-      val acceptAny = fsRel.options.get("acceptAnyExtension").exists(_.toBoolean)
       val status = fsRel.location.listFiles(Nil, Nil).iterator
         .flatMap(_.files.iterator)
-        .find { f =>
-          val n = f.getPath.getName
-          acceptAny || n.endsWith(".4mc") || n.endsWith(".4mz")
-        }
+        .find(f => FourMcFileFormat.accepts(f.getPath, fsRel.options))
         .getOrElse(return false)
       val file = org.apache.spark.sql.execution.PartitionedFileUtil.getPartitionedFile(
         status, status.getPath, org.apache.spark.sql.catalyst.InternalRow.empty, 0, status.getLen)

@@ -149,7 +149,7 @@ object McDriverScanStrategy extends SparkStrategy {
           case fmt: FourMcFileFormat =>
             fmt.blockVerdicts(_, relation.dataSchema, scan.requiredSchema, pushed, relation.options)
         }
-        files.filter(FourMcFileFormat.accepts(_, relation.options))
+        files.filter(f => FourMcFileFormat.accepts(f.toPath, relation.options))
           .foldLeft(FourMcFileFormat.Census()) { (acc, f) =>
             val index = FourMcFileFormat.footerIndex(f, hadoopConf)
             acc.plus(index, verdictsOf(index))

@@ -257,7 +257,7 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
       conf: () => Configuration
   ): PartitionedFile => Iterator[InternalRow] = {
     val payload = options.getOrElse("payload", "text")
-    val extOk = (file: PartitionedFile) => FourMcFileFormat.accepts(file, options)
+    val extOk = (file: PartitionedFile) => FourMcFileFormat.accepts(file.toPath, options)
     // option("ignoreCorruptBlocks", true): the block-granular analog of
     // spark.sql.files.ignoreCorruptFiles. A failed block (checksum,
     // structure, codec) is skipped by resyncing to the footer index's next
@@ -284,30 +284,22 @@ class FourMcFileFormat extends FileFormat with DataSourceRegister with Serializa
         extOk = extOk)
   }
 
-  /** Per-block verdicts ([[FourMcFileFormat.BlockVerdict]]) of a
-    * whole-file read of one file, from its footer, for
-    * [[graft.plans.McDriverScanStrategy]]'s census: the blocks the pushed
-    * `filters` refute are skipped, the rest decode, and a metadata-only
-    * COUNT(*) counts every block from the footer.
+  /** Per-block verdicts of a whole-file read of one file, from its footer,
+    * for [[graft.plans.McDriverScanStrategy]]'s census: the verdicts
+    * [[FourMcFileFormat.blockVerdicts]] gives the batch reader.
     */
   private[graft] def blockVerdicts(
       index: FourMcIndex,
       dataSchema: StructType,
       requiredSchema: StructType,
       filters: Seq[Filter],
-      options: Map[String, String]): Array[Byte] = {
-    import FourMcFileFormat.BlockVerdict._
-    val statsEnabled = options.getOrElse("blockStats", "true").toBoolean
-    val permissive = options.get("ignoreCorruptBlocks").exists(_.toBoolean)
-    if (options.getOrElse("payload", "text") != "csv") Array.fill(index.numBlocks)(Decode)
-    else if (FourMcFileFormat.countOnly(index, requiredSchema, filters, statsEnabled, permissive,
-        runtimeKeys = false)) Array.fill(index.numBlocks)(Counted)
-    else {
-      val keep =
-        FourMcFileFormat.keepBlocksOpt(index, dataSchema, filters, statsEnabled, permissive, None)
-      Array.tabulate(index.numBlocks)(b => if (keep.forall(_(b))) Decode else Skipped)
-    }
-  }
+      options: Map[String, String]): Array[Byte] =
+    if (options.getOrElse("payload", "text") != "csv")
+      Array.fill(index.numBlocks)(FourMcFileFormat.BlockVerdict.Decode)
+    else FourMcFileFormat.blockVerdicts(index, dataSchema, requiredSchema, filters,
+      statsEnabled = options.getOrElse("blockStats", "true").toBoolean,
+      permissive = options.get("ignoreCorruptBlocks").exists(_.toBoolean),
+      runtimeKeys = None)
 
   override def supportDataType(dataType: DataType): Boolean = dataType match {
     case StringType | BinaryType | LongType | IntegerType | DoubleType | FloatType |
@@ -396,110 +388,121 @@ object FourMcFileFormat {
   // always correct, so a racing clear only costs a cache miss.
   private val indexCache = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), FourMcIndex]()
 
-  /** Exact owned-line count of one split from the stats segment: the sum of
-    * per-block OWNED-line counts over the blocks whose headers start inside
-    * the split (the same alignment rule as every reader), so any partition
-    * of the byte range partitions the counts exactly. Caller must have
-    * checked `index.stats.isDefined`.
+  /** Ordinals of the blocks one split owns: those whose headers start
+    * inside the split (the alignment rule every reader shares), so any
+    * partition of the byte range partitions the blocks exactly.
     */
-  private[sources] def ownedLineCount(index: FourMcIndex, file: PartitionedFile): Long = {
-    val st = index.stats.get
+  private[sources] def ownedBlocks(index: FourMcIndex, file: PartitionedFile): Range = {
     val alignedStart = index.nextBlockAt(math.max(file.start, FourMc.HeaderLen.toLong))
     val splitEnd = file.start + file.length
     val alignedEnd = if (splitEnd >= index.eosPos) index.eosPos else index.nextBlockAt(splitEnd)
-    var ord = index.ordAt(alignedStart)
-    val endOrd = index.ordAt(alignedEnd)
-    var n = 0L
-    while (ord < endOrd) { n += st.lineCount(ord); ord += 1 }
-    n
+    index.ordAt(alignedStart) until index.ordAt(alignedEnd)
   }
 
-  /** Per-block keep flags from stats/bloom pruning (static filters ∧ runtime
-    * key set); None = nothing to skip — shared by the row-layout line
-    * streams and the columnar cursor so pruning semantics are one
-    * implementation.
+  /** Per-block verdicts ([[BlockVerdict]]) of one csv file: the one block
+    * plan every 4mc csv reader follows (the batch reader, the footer-stats
+    * relation, and the driver census of both).
+    *
+    *  - Counted, for every block, when the read projects no column and has
+    *    no pushed filter, no runtime key set and no corrupt-block skipping:
+    *    the stats segment's per-block OWNED-line counts answer it, and the
+    *    footer is the only byte the read touches (parquet answers COUNT(*)
+    *    from row-group metadata the same way).
+    *  - Skipped where the stats and blooms refute the pushed `filters` or
+    *    the runtime key set (`(column, keys, hashed)`,
+    *    [[RuntimeKeyFilter]]). A corrupt-block-skipping read
+    *    (`ignoreCorruptBlocks`) skips nothing: the rows layout's pruned
+    *    line iterator cannot resync past a corrupt block.
+    *  - Certain where the zone maps prove every owned line passes every
+    *    pushed filter (vacuously, when there is none): decoded with the
+    *    per-row evaluation elided.
+    *  - Decode elsewhere.
     */
-  private[sources] def keepBlocksOpt(
+  private[sources] def blockVerdicts(
       index: FourMcIndex,
       dataSchema: StructType,
+      requiredSchema: StructType,
       filters: Seq[Filter],
       statsEnabled: Boolean,
       permissive: Boolean,
-      rkfOpt: Option[(String, org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)]
-  ): Option[Array[Boolean]] =
-    if (statsEnabled && !permissive && (filters.nonEmpty || rkfOpt.nonEmpty))
-      index.stats.flatMap { st =>
-        val fromFilters =
-          if (filters.nonEmpty) McStatsPruning.keepBlocks(filters, dataSchema, st, index.blooms)
-          else None
-        val fromKeys = rkfOpt.flatMap { case (c, bKeys, hashed) =>
-          if (hashed)
-            McStatsPruning.keepBlocksForHashedKeys(c, bKeys.value, dataSchema, st, index.blooms)
-          else
-            McStatsPruning.keepBlocksForKeys(c, bKeys.value, dataSchema, st, index.blooms)
-        }
-        (fromFilters, fromKeys) match {
-          case (Some(a), Some(b)) => Some(Array.tabulate(a.length)(i => a(i) && b(i)))
-          case (a, b)             => a.orElse(b)
-        }
-      }.filter(_.exists(k => !k)) // all-true: classic path, nothing to skip
-    else None
+      runtimeKeys: Option[(String, Array[Long], Boolean)]): Array[Byte] = {
+    import BlockVerdict._
+    val stats = index.stats.filter(_ => statsEnabled)
+    if (stats.isDefined && requiredSchema.isEmpty && filters.isEmpty && !permissive &&
+        runtimeKeys.isEmpty)
+      return Array.fill(index.numBlocks)(Counted)
+    val keep: Option[Array[Boolean]] = stats.filter(_ => !permissive).flatMap { st =>
+      val fromFilters =
+        if (filters.nonEmpty) McStatsPruning.keepBlocks(filters, dataSchema, st, index.blooms)
+        else None
+      val fromKeys = runtimeKeys.flatMap { case (c, keys, hashed) =>
+        if (hashed) McStatsPruning.keepBlocksForHashedKeys(c, keys, dataSchema, st, index.blooms)
+        else McStatsPruning.keepBlocksForKeys(c, keys, dataSchema, st, index.blooms)
+      }
+      (fromFilters, fromKeys) match {
+        case (Some(a), Some(b)) => Some(Array.tabulate(a.length)(i => a(i) && b(i)))
+        case (a, b)             => a.orElse(b)
+      }
+    }
+    val certain: Option[Array[Boolean]] =
+      if (filters.isEmpty) Some(Array.fill(index.numBlocks)(true))
+      else stats.flatMap(McStatsPruning.certainBlocks(filters, dataSchema, _))
+    Array.tabulate(index.numBlocks) { b =>
+      if (keep.exists(!_(b))) Skipped
+      else if (certain.exists(_(b))) Certain
+      else Decode
+    }
+  }
 
-  /** Pruned, metrics-wired cursor over one split of a COLUMNAR csv file —
-    * the columnar twin of [[csvLines]].
+  /** Cursor over one split of a COLUMNAR csv file, reading the blocks
+    * whose `verdicts` decode; scan metrics wired. The columnar twin of
+    * [[csvLines]].
     */
   private[sources] def columnarCursor(
       in: McInput,
       index: FourMcIndex,
       file: PartitionedFile,
       needed: Array[Int],
-      dataSchema: StructType,
-      filters: Seq[Filter],
-      statsEnabled: Boolean,
+      verdicts: Array[Byte],
       permissive: Boolean,
-      rkfOpt: Option[(String, org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)],
       read: FourMcVectorizedReader.FileRead
   ): McColumnarCursor = {
-    val keepOpt = keepBlocksOpt(index, dataSchema, filters, statsEnabled, permissive, rkfOpt)
     val cur = new McColumnarCursor(in, index, index.stats.get.tags.length, needed,
-      file.start, file.start + file.length, keepOpt.orNull, permissive)
+      file.start, file.start + file.length, verdicts.map(BlockVerdict.decodes), permissive)
     read.onFinish {
       FourMcScanMetrics.blocksRead.add(cur.blocksRead)
-      FourMcScanMetrics.blocksSkipped.add(cur.blocksSkipped)
       if (permissive) FourMcScanMetrics.corruptSkipped.add(cur.corruptSkipped)
     }
     cur
   }
 
-  /** The csv-payload line stream for one split of a rows-layout file:
-    * block pruning (static filters ∧ runtime key set) against the stats
-    * segment when available, scan metrics wired.
+  /** The csv-payload line stream for one split of a rows-layout file: the
+    * lines of the blocks whose `verdicts` decode, scan metrics wired. With
+    * no block left out, the plain line iterator reads the split; its
+    * blocks count in `blocksRead` only when `countUnpruned`.
     */
   private[sources] def csvLines(
       in: McInput,
       index: FourMcIndex,
       file: PartitionedFile,
-      dataSchema: StructType,
-      filters: Seq[Filter],
-      statsEnabled: Boolean,
+      verdicts: Array[Byte],
       permissive: Boolean,
-      rkfOpt: Option[(String, org.apache.spark.broadcast.Broadcast[Array[Long]], Boolean)],
+      countUnpruned: Boolean,
       read: FourMcVectorizedReader.FileRead
   ): McLineStream = {
-    val keepOpt = keepBlocksOpt(index, dataSchema, filters, statsEnabled, permissive, rkfOpt)
-    keepOpt match {
-      case Some(keepArr) =>
-        val it = new FourMcPrunedLineIterator(in, index, file.start, file.start + file.length, keepArr)
-        read.onFinish {
-          FourMcScanMetrics.blocksRead.add(it.blocksRead)
-          FourMcScanMetrics.blocksSkipped.add(it.blocksSkipped)
-        }
-        it
-      case None =>
-        val it = new FourMcLineIterator(in, index, file.start, file.start + file.length,
-          permissive = permissive)
-        if (permissive) read.onFinish(FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped))
-        it
+    val keep = verdicts.map(BlockVerdict.decodes)
+    if (keep.contains(false)) {
+      val it = new FourMcPrunedLineIterator(in, index, file.start, file.start + file.length, keep)
+      read.onFinish(FourMcScanMetrics.blocksRead.add(it.blocksRead))
+      it
+    } else {
+      val it = new FourMcLineIterator(in, index, file.start, file.start + file.length,
+        permissive = permissive)
+      read.onFinish {
+        if (countUnpruned) FourMcScanMetrics.blocksRead.add(it.blocksRead)
+        if (permissive) FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped)
+      }
+      it
     }
   }
 
@@ -529,9 +532,9 @@ object FourMcFileFormat {
     * skipped rather than failing the scan. option("acceptAnyExtension",
     * true) reads every listed file regardless of name.
     */
-  private[graft] def accepts(file: PartitionedFile, options: Map[String, String]): Boolean =
+  private[graft] def accepts(path: Path, options: Map[String, String]): Boolean =
     options.get("acceptAnyExtension").exists(_.toBoolean) || {
-      val p = file.toPath.getName
+      val p = path.getName
       p.endsWith(".4mc") || p.endsWith(".4mz")
     }
 
@@ -544,6 +547,12 @@ object FourMcFileFormat {
     final val Decode: Byte = 3
     /** No line can pass the pushed filters. */
     final val Skipped: Byte = 4
+    /** Decoded; every owned line passes the pushed filters, so the reader
+      * does not evaluate them.
+      */
+    final val Certain: Byte = 5
+
+    def decodes(v: Byte): Boolean = v == Decode || v == Certain
   }
 
   /** Block census of a planned whole-file read: blocks answered from the
@@ -557,25 +566,15 @@ object FourMcFileFormat {
       */
     def plus(index: FourMcIndex, verdicts: Array[Byte]): Census = {
       import BlockVerdict._
-      val rowBlocks = verdicts.indices.filter(b => verdicts(b) == Decode || verdicts(b) == Counted)
+      val rowBlocks = verdicts.indices.filter(b => decodes(verdicts(b)) || verdicts(b) == Counted)
       val n = blockLines(index, rowBlocks)
       copy(
         answered = answered + verdicts.count(v => v == Answered || v == Counted),
-        decoded = decoded + verdicts.count(_ == Decode),
+        decoded = decoded + verdicts.count(decodes),
         skipped = skipped + verdicts.count(_ == Skipped),
         lines = if (n > Long.MaxValue - lines) Long.MaxValue else lines + n)
     }
   }
-
-  /** Metadata-only COUNT(*): a csv read of no column, with no pushed
-    * filter, no runtime key set and no corrupt-block skipping, is answered
-    * from the stats segment's per-block owned-line counts alone.
-    */
-  private[sources] def countOnly(index: FourMcIndex, requiredSchema: StructType,
-      filters: Seq[Filter], statsEnabled: Boolean, permissive: Boolean,
-      runtimeKeys: Boolean): Boolean =
-    requiredSchema.isEmpty && filters.isEmpty && statsEnabled && !permissive && !runtimeKeys &&
-      index.stats.isDefined
 
   /** Lines of `blocks`: their owned-line counts from the stats segment. A
     * file without one gives `Long.MaxValue`, past any bound: its stored

@@ -4,15 +4,17 @@ import graft.format._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.Job
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+
+import scala.jdk.CollectionConverters._
 
 /** Internal scan relation for MIN/MAX/COUNT(*) aggregate pushdown over 4mc
   * files — the zone-map twin of parquet's aggregate pushdown
@@ -26,6 +28,8 @@ import org.apache.spark.util.SerializableConfiguration
   * row is synthesized from the stats segment — the block is NEVER read or
   * decompressed. Blocks that can't (NaN-poisoned double bounds, truncated
   * string bounds, custom timestamp formats, stats-less files) are decoded
+  * by the plain scan's batch reader
+  * ([[FourMcVectorizedReader.csvDecoder]], over the needed columns only)
   * and emit one `(v, v, …, 1)` row per owned line — `min(min)`/`max(max)`/
   * `sum(cnt)` over the union is exact either way, so degradation is
   * per-block and value-transparent.
@@ -33,7 +37,7 @@ import org.apache.spark.util.SerializableConfiguration
   * Split semantics are identical to the data scan: a block's stats row is
   * emitted by the split that owns the block header, so any partition of the
   * byte range partitions the aggregate inputs exactly (same ownership rule
-  * as [[FourMcFileFormat.ownedLineCount]]). Footer reads stay task-side —
+  * as [[FourMcFileFormat.ownedBlocks]]). Footer reads stay task-side —
   * planning this relation lists files only — with one bounded exception:
   * when the file list and the decode load are small,
   * [[graft.plans.McDriverScanExec]] reads the footers while planning
@@ -42,13 +46,15 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * `dataFilters` (the data conjuncts of a FILTERED aggregate, `MIN(ts)
   * WHERE ts >= X`, as the rule translated them for the manifest index)
-  * take the block verdicts every 4mc reader takes: a block
-  * [[McStatsPruning.keepBlocks]] refutes is skipped (counted in
-  * `blocksSkipped`); a block [[McStatsPruning.certainBlocks]] certifies
-  * answers from the footer when its stats answer exactly; any other block
-  * decodes, and its lines are re-checked by [[CsvPayload.compileFilters]],
-  * the plain scan's line check. No Spark Filter sits above this relation,
-  * so the rule hands it only conjuncts both checks decide exactly.
+  * take the block plan every 4mc reader takes
+  * ([[FourMcFileFormat.blockVerdicts]]): a refuted block is skipped
+  * (counted in `blocksSkipped`); a block whose lines all pass answers from
+  * the footer when its stats answer exactly (counted in `statsAggBlocks`);
+  * any other block decodes. The batch reader may stop evaluating the
+  * filters on a stretch of rows that refuses little, so every decoded row
+  * is re-checked by [[CsvPayload.compileFilters]], the plain scan's line
+  * check. No Spark Filter sits above this relation, so the rule hands it
+  * only conjuncts both checks decide exactly.
   */
 class FourMcStatsFileFormat(
     origSchema: StructType,
@@ -144,12 +150,10 @@ class FourMcStatsFileFormat(
     val groupCols: Set[Int] = grpCols.toSet
     val neededCols: Array[Int] =
       (boundsCols ++ needNn ++ needSum ++ filterCols ++ groupCols).toArray.sorted
+    /** The data columns a decoded block reads, in ordinal order. */
+    val neededSchema: StructType = StructType(neededCols.map(origSchema.fields(_)))
     val isBoundsCol: Array[Boolean] = neededCols.map(boundsCols.contains)
     val isSumCol: Array[Boolean] = neededCols.map(needSum.contains)
-    val needsValue: Array[Boolean] = neededCols.map(c =>
-      boundsCols.contains(c) || needSum.contains(c) || filterCols.contains(c) ||
-        groupCols.contains(c))
-    val neededFields: Int = if (neededCols.isEmpty) 0 else neededCols.max + 1
 
     /** Per-FILE effective tags: micros-encoded timestamps carry tag 14 in
       * this file's stats segment (identity mapping — origTags indexes
@@ -164,7 +168,7 @@ class FourMcStatsFileFormat(
       * col] arrays would MIS-INDEX under this schema's ordinals — silently
       * wrong bounds, not just a crash. Mismatched files degrade to the
       * per-line decode branch, value-exact. (The data scan's pruning has the
-      * same guard in McStatsPruning.keepBlocks; this is the aggregate twin.)
+      * same guard, per column; this is the aggregate twin.)
       * int→long type widening (r16) keeps the stats path: int-tagged zone
       * bounds, null counts, and sums already live in the long domain, so
       * they answer a LongType read column exactly.
@@ -220,26 +224,26 @@ class FourMcStatsFileFormat(
       true
     }
 
-    /** Per-block verdicts ([[FourMcFileFormat.BlockVerdict]]) of a file
-      * whose stats segment describes this read schema, None otherwise (the
-      * file decodes whole): skipped where [[McStatsPruning.keepBlocks]]
-      * refutes the block, answered where [[McStatsPruning.certainBlocks]]
-      * certifies it and [[statsUsable]] holds, decoded elsewhere.
+    /** Per-block verdicts ([[FourMcFileFormat.BlockVerdict]]) of one
+      * file: the plain read's verdicts ([[FourMcFileFormat.blockVerdicts]])
+      * over the needed columns, with each block whose lines all pass the
+      * filters answered where [[statsUsable]] holds. A file whose stats
+      * segment does not describe this read schema decodes whole.
       */
-    def classify(index: FourMcIndex): Option[Array[Byte]] = {
+    def classify(index: FourMcIndex): Array[Byte] = {
       import FourMcFileFormat.BlockVerdict._
       val effTags = fileTags(index)
-      index.stats.filter(statsMatch(_, effTags)).map { st =>
-        // with no filter, every block passes: empty blocks answer a zero row
-        val keep = if (dataFilters.isEmpty) None
-          else McStatsPruning.keepBlocks(dataFilters, origSchema, st, index.blooms)
-        val certain = if (dataFilters.isEmpty) None
-          else McStatsPruning.certainBlocks(dataFilters, origSchema, st)
-        Array.tabulate(st.nBlocks) { b =>
-          if (keep.exists(!_(b))) Skipped
-          else if (certain.forall(_(b)) && statsUsable(st, b, effTags)) Answered
-          else Decode
-        }
+      index.stats.filter(statsMatch(_, effTags)) match {
+        case None => Array.fill(index.numBlocks)(Decode)
+        case Some(st) =>
+          val plain = FourMcFileFormat.blockVerdicts(index, origSchema, neededSchema, dataFilters,
+            statsEnabled = true, permissive = false, runtimeKeys = None)
+          Array.tabulate(st.nBlocks) { b =>
+            val v = plain(b)
+            if (v == Skipped) Skipped
+            else if ((v == Certain || v == Counted) && statsUsable(st, b, effTags)) Answered
+            else Decode
+          }
       }
     }
   }
@@ -256,39 +260,73 @@ class FourMcStatsFileFormat(
       options: Map[String, String],
       conf: () => Configuration
   ): PartitionedFile => Iterator[InternalRow] = {
-    val delim = CsvPayload.delimiterOf(options.getOrElse("delimiter", "|"))
-    val tsFmt = options.getOrElse("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSS")
     val origScale: Array[Int] = origSchema.fields.map(f => CsvPayload.scaleOf(f.dataType))
     val origPrec: Array[Int] = origSchema.fields.map(f => CsvPayload.precisionOf(f.dataType))
-    val tsMicroDigits = CsvPayload.fixedPatternFracDigits(tsFmt)
     val layout = new Layout(requiredSchema)
     import layout._
-    // the plain scan's line check, over the data schema's own tags
+    // blocks the footers cannot answer decode through the plain scan's
+    // batch reader, over the needed columns only
+    val decode = FourMcVectorizedReader.csvDecoder(neededSchema, new StructType(), origSchema,
+      dataFilters, CsvPayload.delimiterOf(options.getOrElse("delimiter", "|")),
+      options.getOrElse("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSS"), permissive = false,
+      countUnpruned = true)
+    // the plain scan's line check, over the data schema's own tags: the
+    // batch reader may stop evaluating the filters on a stretch of rows
+    // that refuses little, and no Spark Filter sits above this relation,
+    // so every decoded row is checked here
     val lineChecks = CsvPayload.compileFilters(dataFilters, origSchema, origTags)
     val filterPos: Array[Int] = neededCols.indices.filter(ci => filterCols(neededCols(ci))).toArray
+    val neededTypes: Array[DataType] = neededSchema.fields.map(_.dataType)
+    // each relation field's position among the decoded columns (-1: `_cnt`)
+    val specPos: Array[Int] = specs.map(sp => java.util.Arrays.binarySearch(neededCols, sp.col))
 
-    (file: PartitionedFile) => {
-      if (!FourMcFileFormat.accepts(file, options)) Iterator.empty
-      else {
-        val in = FourMcFileFormat.openInput(file, conf())
-        // blocks decoded so far, set by the decode branch below; reported
-        // once, when the input closes
-        var decodedBlocks: () => Long = () => 0L
-        var finished = false
-        def finish(): Unit = if (!finished) {
-          finished = true
-          try FourMcScanMetrics.blocksRead.add(decodedBlocks()) finally in.close()
+    /** A decoded row's partial row — (v, v, …, 1) over the needed columns —
+      * or null when it fails the pushed filters.
+      */
+    def partialRow(row: InternalRow): InternalRow = {
+      val parsed = new Array[Any](neededCols.length)
+      var ci = 0
+      while (ci < neededCols.length) {
+        parsed(ci) =
+          if (row.isNullAt(ci)) null
+          else row.get(ci, neededTypes(ci)) match {
+            case u: UTF8String => u.copy() // the batch's vectors are reused
+            case v             => v
+          }
+        ci += 1
+      }
+      if (!filterPos.forall(ci => lineChecks(neededCols(ci)).accepts(parsed(ci)))) return null
+      val vals = new Array[Any](specs.length)
+      var i = 0
+      while (i < specs.length) {
+        val sp = specs(i)
+        val v = if (specPos(i) < 0) null else parsed(specPos(i))
+        vals(i) = (sp.kind: @scala.annotation.switch) match {
+          case 2 => 1L
+          case 3 => if (v == null) 0L else 1L
+          case 4 => // the line's sum contribution, in Sum's result domain
+            v match {
+              case null                 => null
+              case n: java.lang.Integer => java.lang.Long.valueOf(n.longValue)
+              case f: java.lang.Float   => java.lang.Double.valueOf(f.doubleValue)
+              case d: org.apache.spark.sql.types.Decimal =>
+                org.apache.spark.sql.types.Decimal(d.toUnscaledLong,
+                  math.min(38, origPrec(sp.col) + 10), origScale(sp.col))
+              case other => other // long, double
+            }
+          case _ => v // kinds 0/1/5: the value itself
         }
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => finish()))
-        val index =
-          try FourMcFileFormat.cachedIndex(file, in)
-          catch { case e: Throwable => finish(); throw e }
-        val alignedStart = index.nextBlockAt(math.max(file.start, FourMc.HeaderLen.toLong))
-        val splitEnd = file.start + file.length
-        val alignedEnd =
-          if (splitEnd >= index.eosPos) index.eosPos else index.nextBlockAt(splitEnd)
-        val ordStart = index.ordAt(alignedStart)
-        val ordEnd = index.ordAt(alignedEnd) // exclusive
+        i += 1
+      }
+      new GenericInternalRow(vals)
+    }
+
+    (file: PartitionedFile) =>
+      if (!FourMcFileFormat.accepts(file.toPath, options)) Iterator.empty
+      else FourMcVectorizedReader.fileRead { read =>
+        val in = FourMcFileFormat.openInput(file, conf())
+        read.onFinish(in.close())
+        val index = FourMcFileFormat.cachedIndex(file, in)
         val effTags = fileTags(index)
 
         def statBound(st: McBlockStats, b: Int, c: Int, isMax: Boolean): Any = {
@@ -301,17 +339,8 @@ class FourMcStatsFileFormat(
                 // statsUsable admitted this block because a complete dict
                 // exists: the true bound is the extreme ENTRY (entries are
                 // exact and cover every non-null value the block owns)
-                val dict = st.dictAt(k)
-                var best: Array[Byte] = null
-                var i = 0
-                while (i < dict.length) {
-                  val v = dict(i)
-                  if (best == null ||
-                      (if (isMax) McStatsPruning.byteCompare(v, best) > 0
-                       else McStatsPruning.byteCompare(v, best) < 0)) best = v
-                  i += 1
-                }
-                UTF8String.fromBytes(best)
+                UTF8String.fromBytes(st.dictAt(k).reduce((a, b) =>
+                  if ((java.util.Arrays.compareUnsigned(a, b) > 0) == isMax) a else b))
               } else UTF8String.fromBytes(if (isMax) st.maxBytes(k) else st.minBytes(k))
             case CsvPayload.TagLong | CsvPayload.TagTimestamp |
                 CsvPayload.TagTimestampMicros =>
@@ -431,153 +460,29 @@ class FourMcStatsFileFormat(
           new GenericInternalRow(vals)
         }
 
-        lazy val fmt = java.time.format.DateTimeFormatter.ofPattern(tsFmt)
-          .withZone(java.time.ZoneOffset.UTC)
-        val starts = new Array[Int](totalFields + 1)
-
-        /** Per-line fallback row: (v, v, …, 1) over the parsed needed cols,
-          * or null when the line fails the pushed filters. nn-only
-          * columns skip the value parse — a null check is enough for a
-          * non-null count.
-          */
-        def lineRow(bytes: Array[Byte]): InternalRow = {
-          CsvPayload.scanBoundaries(bytes, delim, starts, 0, neededFields, totalFields)
-          val parsed = new Array[Any](neededCols.length)
-          val nonNull = new Array[Boolean](neededCols.length)
-          var ci = 0
-          while (ci < neededCols.length) {
-            val c = neededCols(ci)
-            val s = starts(c)
-            val e = CsvPayload.fieldEnd(bytes, delim, starts, 0, c, s, neededFields, totalFields)
-            val tag = effTags(c)
-            // s > line length = the field is MISSING, not empty (an
-            // older-generation file under positional schema evolution —
-            // starts slots for absent trailing fields hold to+1): NULL for
-            // every type, string included, matching the data readers
-            val isNull = s > bytes.length ||
-              CsvPayload.isNullMarker(bytes, s, e) || (s >= e && tag != CsvPayload.TagString)
-            nonNull(ci) = !isNull
-            parsed(ci) =
-              if (isNull || !needsValue(ci))
-                null
-              else (tag: @scala.annotation.switch) match {
-                case CsvPayload.TagString =>
-                  if (s >= e) UTF8String.EMPTY_UTF8 else CsvPayload.unescape(bytes, s, e, delim)
-                case CsvPayload.TagLong    => CsvPayload.parseLong(bytes, s, e)
-                case CsvPayload.TagInt     => CsvPayload.parseInt(bytes, s, e)
-                case CsvPayload.TagDouble  => CsvPayload.parseDouble(bytes, s, e)
-                case CsvPayload.TagFloat   => CsvPayload.parseFloat(bytes, s, e)
-                case CsvPayload.TagBoolean => bytes(s) == 't' || bytes(s) == 'T'
-                case CsvPayload.TagDate    => CsvPayload.parseDateDays(bytes, s, e)
-                case CsvPayload.TagDecimal =>
-                  org.apache.spark.sql.types.Decimal(
-                    CsvPayload.parseDecimalUnscaled(bytes, s, e, origScale(c)),
-                    origPrec(c), origScale(c))
-                case CsvPayload.TagTimestampMicros => CsvPayload.parseLong(bytes, s, e)
-                case _ =>
-                  if (tsMicroDigits >= 0 && CsvPayload.isFixedLayout(bytes, s, e))
-                    CsvPayload.parseTimestampMicros(bytes, s, e)
-                  else {
-                    val inst = java.time.Instant.from(fmt.parse(CsvPayload.ascii(bytes, s, e)))
-                    inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-                  }
-              }
-            ci += 1
-          }
-          if (!filterPos.forall(ci => lineChecks(neededCols(ci)).accepts(parsed(ci)))) return null
-          val colPos: Int => Int = c => java.util.Arrays.binarySearch(neededCols, c)
-          val vals = new Array[Any](specs.length)
-          var i = 0
-          while (i < specs.length) {
-            val sp = specs(i)
-            vals(i) = (sp.kind: @scala.annotation.switch) match {
-              case 2 => 1L
-              case 3 => if (nonNull(colPos(sp.col))) 1L else 0L
-              case 4 => // per-line sum contribution, in Sum's result domain
-                val pos = colPos(sp.col)
-                if (!nonNull(pos)) null
-                else parsed(pos) match {
-                  case l: java.lang.Long    => l
-                  case n: java.lang.Integer => java.lang.Long.valueOf(n.longValue)
-                  case d: java.lang.Double  => d
-                  case f: java.lang.Float   => java.lang.Double.valueOf(f.doubleValue)
-                  case d: org.apache.spark.sql.types.Decimal =>
-                    org.apache.spark.sql.types.Decimal(d.toUnscaledLong,
-                      math.min(38, origPrec(sp.col) + 10), origScale(sp.col))
-                }
-              case _ => parsed(colPos(sp.col)) // kinds 0/1/5: the value itself
-            }
-            i += 1
-          }
-          new GenericInternalRow(vals)
+        import FourMcFileFormat.BlockVerdict._
+        val verdicts = classify(index)
+        val answered = FourMcFileFormat.ownedBlocks(index, file).filter(verdicts(_) == Answered)
+        FourMcScanMetrics.statsAggBlocks.add(answered.length)
+        val synthesized: Iterator[InternalRow] = index.stats match {
+          case Some(st) =>
+            if (jointMode) answered.iterator.flatMap(jointRows(st, _))
+            else if (groupMode) answered.iterator.flatMap(groupRows(st, _))
+            else answered.iterator.map(statsRow(st, _))
+          case None => Iterator.empty
         }
-
-        // Columnar files decode their fallback blocks through the cursor +
-        // synthesized lines ([[graft.format.McColumnarLineSynth]]) — the
-        // row-layout line iterators would feed multi-stream payloads to the
-        // codec as one stream. lineRow parses synthesized lines unchanged.
-        def columnarLines(keepArr: Array[Boolean]): Iterator[(Long, Array[Byte])] = {
-          val fileCols = index.stats.get.tags.length
-          val needed = neededCols.filter(_ < fileCols)
-          val cur = new graft.format.McColumnarCursor(in, index, fileCols, needed,
-            file.start, splitEnd, keepArr, permissive = false)
-          decodedBlocks = () => cur.blocksRead
-          new graft.format.McColumnarLineSynth(
-            cur, math.min(totalFields, fileCols), needed, delim)
-        }
-
-        val rows: Iterator[InternalRow] = (index.stats, classify(index)) match {
-          case (Some(st), Some(verdict)) =>
-            // the owned blocks split into stats-answered, decoded and (with
-            // pushed filters) refuted sets
-            import FourMcFileFormat.BlockVerdict._
-            val owned = ordStart until ordEnd
-            val keep = // true = must decode
-              Array.tabulate(verdict.length)(b => owned.contains(b) && verdict(b) == Decode)
-            val skippedBlocks = owned.count(verdict(_) == Skipped)
-            FourMcScanMetrics.statsAggBlocks.add(owned.count(verdict(_) == Answered))
-            if (skippedBlocks > 0) FourMcScanMetrics.blocksSkipped.add(skippedBlocks)
-            def answered = owned.iterator.filter(verdict(_) == Answered)
-            val synthesized: Iterator[InternalRow] =
-              if (jointMode) answered.flatMap(jointRows(st, _))
-              else if (groupMode) answered.flatMap(groupRows(st, _))
-              else answered.map(statsRow(st, _))
-            val decoded: Iterator[InternalRow] =
-              if (!keep.contains(true)) Iterator.empty
-              else if (st.columnar)
-                columnarLines(keep).map { case (_, bytes) => lineRow(bytes) }.filter(_ != null)
-              else {
-                val it = new FourMcPrunedLineIterator(in, index, file.start, splitEnd, keep)
-                decodedBlocks = () => it.blocksRead
-                it.map { case (_, bytes) => lineRow(bytes) }.filter(_ != null)
-              }
-            synthesized ++ decoded
-          case _ if index.stats.exists(_.columnar) =>
-            // schema-mismatched columnar file: decode every owned row via
-            // the cursor (stats bounds can't be trusted under this schema,
-            // but the synthesized lines parse value-exact)
-            columnarLines(null).map { case (_, bytes) => lineRow(bytes) }.filter(_ != null)
-          case _ =>
-            // stats-less or schema-mismatched file: decode every owned line
-            // (filters, if any, are checked per line)
-            val it = new FourMcLineIterator(in, index, file.start, splitEnd, permissive = false)
-            decodedBlocks = () => (ordEnd - ordStart).toLong
-            it.map { case (_, bytes) => lineRow(bytes) }.filter(_ != null)
-        }
-        org.apache.spark.sql.graftbridge.PlanBridge.completionIterator(rows)(finish())
+        val decoded = decode(in, index, file, verdicts, read).asInstanceOf[Iterator[ColumnarBatch]]
+          .flatMap(_.rowIterator().asScala).map(partialRow).filter(_ != null)
+        synthesized ++ decoded
       }
-    }
   }
 
   /** Per-block verdicts ([[FourMcFileFormat.BlockVerdict]]) of whole
     * files for [[graft.plans.McDriverScanStrategy]]'s census: the verdicts
     * [[reader]] reaches on the same files.
     */
-  private[graft] def blockVerdicts(requiredSchema: StructType): FourMcIndex => Array[Byte] = {
-    val layout = new Layout(requiredSchema)
-    index => layout.classify(index)
-      .getOrElse(Array.fill(index.numBlocks)(FourMcFileFormat.BlockVerdict.Decode))
-  }
+  private[graft] def blockVerdicts(requiredSchema: StructType): FourMcIndex => Array[Byte] =
+    new Layout(requiredSchema).classify
 }
 
 object FourMcStatsFileFormat {
@@ -585,12 +490,6 @@ object FourMcStatsFileFormat {
   /** One relation field: kind 0=min 1=max 2=cnt 3=non-null cnt 4=sum 5=group value. */
   private[sources] final case class FieldSpec(kind: Int, col: Int)
 
-  /** Synthetic schema for the rule: bounds for each (colIdx, needMin,
-    * needMax) target, a `_nn_<i>` per-block non-null count for each
-    * COUNT(col) column, a `_sum_<i>` per-block sum for each SUM column
-    * (long for int/long columns, double for double/float — Sum's own result
-    * domain), plus the `_cnt` line-count column.
-    */
   /** Schema for dict-group mode: the group column(s) under their ORIGINAL
     * names (so the rewritten Aggregate's grouping attributes resolve against
     * the relation unchanged), a per-(block, value) non-null count per group
@@ -611,6 +510,12 @@ object FourMcStatsFileFormat {
         StructField("_cnt", LongType, nullable = false))
   }
 
+  /** Synthetic schema for the rule: bounds for each (colIdx, needMin,
+    * needMax) target, a `_nn_<i>` per-block non-null count for each
+    * COUNT(col) column, a `_sum_<i>` per-block sum for each SUM column
+    * (long for int/long columns, double for double/float — Sum's own result
+    * domain), plus the `_cnt` line-count column.
+    */
   def statsSchema(
       origSchema: StructType,
       targets: Seq[(Int, Boolean, Boolean)],

@@ -18,7 +18,9 @@ import scala.jdk.CollectionConverters._
   * [[FourMcFileFormat.csvLines]] / [[FourMcFileFormat.columnarCursor]]),
   * decoded into `OnHeapColumnVector`s in 4 K-row batches. They are the
   * only decoder of the `4mc` source: when Spark asks the scan for rows
-  * ([[BatchRows]]), the same batches are flattened.
+  * ([[BatchRows]]), the same batches are flattened, and the footer-stats
+  * relation ([[FourMcStatsFileFormat]]) decodes the blocks its footers
+  * cannot answer through [[csvDecoder]].
   *
   * Why batches win here (the parquet twin's remaining edge at sf1): the
   * downstream whole-stage-codegen loop consumes a `ColumnarBatch` through
@@ -149,7 +151,7 @@ object FourMcVectorizedReader {
   /** One file's batches from `open`, wrapped so that everything it
     * registered on its [[FileRead]] runs once: also when `open` throws.
     */
-  private def fileRead(open: FileRead => Iterator[InternalRow]): Iterator[InternalRow] = {
+  private[sources] def fileRead(open: FileRead => Iterator[InternalRow]): Iterator[InternalRow] = {
     val read = new FileRead
     val batches =
       try open(read)
@@ -176,7 +178,8 @@ object FourMcVectorizedReader {
     csvReader(requiredSchema, partitionSchema, dataSchema, filters, delim, tsFmt, statsEnabled,
       permissive, rkfOpt, conf = () => broadcastConf.value.value, extOk = extOk)
 
-  /** Typed-csv batch reader over both block layouts (rows, columnar).
+  /** Typed-csv batch reader over both block layouts (rows, columnar): each
+    * file's blocks are read as [[FourMcFileFormat.blockVerdicts]] decides.
     * Each file's iterator is `Closeable` (see [[FileRead]]).
     */
   def csvReader(
@@ -192,6 +195,41 @@ object FourMcVectorizedReader {
       conf: () => org.apache.hadoop.conf.Configuration,
       extOk: PartitionedFile => Boolean
   ): PartitionedFile => Iterator[InternalRow] = {
+    val decode = csvDecoder(requiredSchema, partitionSchema, dataSchema, filters, delim, tsFmt,
+      permissive, countUnpruned = false)
+    (file: PartitionedFile) => if (!extOk(file)) Iterator.empty else fileRead { read =>
+      val in = FourMcFileFormat.openInput(file, conf())
+      read.onFinish(in.close())
+      val index = FourMcFileFormat.cachedIndex(file, in)
+      val verdicts = FourMcFileFormat.blockVerdicts(index, dataSchema, requiredSchema, filters,
+        statsEnabled, permissive, rkfOpt.map { case (c, keys, hashed) => (c, keys.value, hashed) })
+      decode(in, index, file, verdicts, read)
+    }
+  }
+
+  /** The per-file body of [[csvReader]]: the batches of one split of an
+    * open csv file, decoding the owned blocks whose `verdicts`
+    * ([[FourMcFileFormat.BlockVerdict]]) decode. Skipped blocks are
+    * counted in `blocksSkipped` (those owning a line; an Answered block is
+    * the caller's), decoded ones in `blocksRead` — a rows-layout split
+    * that leaves no block out only when `countUnpruned`: the plain scan
+    * counts the blocks its pruned reads decode, the footer-stats relation
+    * every block it decodes.
+    *
+    * Pushed `filters` may be applied only in part: the adaptive probe
+    * below stops evaluating them on stretches that refuse little, which is
+    * sound under a Spark Filter; a caller with none above it re-checks.
+    */
+  private[sources] def csvDecoder(
+      requiredSchema: StructType,
+      partitionSchema: StructType,
+      dataSchema: StructType,
+      filters: Seq[Filter],
+      delim: Byte,
+      tsFmt: String,
+      permissive: Boolean,
+      countUnpruned: Boolean
+  ): (McInput, FourMcIndex, PartitionedFile, Array[Byte], FileRead) => Iterator[InternalRow] = {
     val fieldIdx = requiredSchema.fields.map(f => dataSchema.fieldIndex(f.name))
     val fieldTags: Array[Int] = requiredSchema.fields.map(f => CsvPayload.tagOf(f.dataType))
     require(!fieldTags.contains(CsvPayload.TagArrInt),
@@ -217,25 +255,27 @@ object FourMcVectorizedReader {
     val predFields: Array[Int] =
       (0 until nFields).filter(k => fieldPreds(k).nonEmpty).toArray
 
-    (file: PartitionedFile) => if (!extOk(file)) Iterator.empty else fileRead { read =>
-      val in = FourMcFileFormat.openInput(file, conf())
-      read.onFinish(in.close())
-      val index = FourMcFileFormat.cachedIndex(file, in)
-      // Metadata-only COUNT(*): an empty projection with no pushed filters
-      // is answerable from the stats segment's per-block OWNED-line counts
-      // — the footer is the only byte this split ever reads. At 100 TB a
-      // `SELECT COUNT(*)` becomes a footer sweep instead of a decompress-
-      // everything scan (parquet answers it from row-group metadata the
-      // same way). Ownership makes the split sum exact under ANY layout.
-      if (FourMcFileFormat.countOnly(index, requiredSchema, filters, statsEnabled, permissive,
-          runtimeKeys = rkfOpt.nonEmpty)) {
-        val n = FourMcFileFormat.ownedLineCount(index, file)
+    (in, index, file, verdicts, read) => {
+      import FourMcFileFormat.BlockVerdict._
+      val owned = FourMcFileFormat.ownedBlocks(index, file)
+      // the metric is pruning effectiveness: a refuted block that owns no
+      // line was never going to be decompressed by this split
+      FourMcScanMetrics.blocksSkipped.add(
+        owned.count(b => verdicts(b) == Skipped && index.stats.get.lineCount(b) > 0))
+      // Metadata-only COUNT(*) (Counted is a whole-file verdict): the
+      // stats segment's per-block OWNED-line counts answer the split, so
+      // the footer is the only byte it reads — a `SELECT COUNT(*)` over
+      // 100 TB is a footer sweep. Ownership makes the sum exact under ANY
+      // split layout.
+      if (verdicts.contains(Counted)) {
+        val n = owned.iterator.map(index.stats.get.lineCount(_).toLong).sum
         FourMcScanMetrics.metadataCountRows.add(n)
         val partVecs = partitionVectors(partitionSchema, file.partitionValues)
         val batch = new ColumnarBatch(partVecs)
         read.onFinish(batch.close())
         erase(countBatches(batch, n))
-      } else if (index.stats.exists(_.columnar)) {
+      } else if (!owned.exists(b => decodes(verdicts(b)))) Iterator.empty
+      else if (index.stats.exists(_.columnar)) {
       // ======= columnar layout fast path =======
       // One field per line per stream: value slices come straight off the
       // per-stream newline index — no boundary scan, no delimiter walk, and
@@ -251,19 +291,10 @@ object FourMcVectorizedReader {
       // reads as null / empty string, the missing-trailing-field semantics)
       val slotOf: Array[Int] = fieldIdx.map(src =>
         if (src < fileCols) java.util.Arrays.binarySearch(neededOrds, src) else -1)
-      val cursor = FourMcFileFormat.columnarCursor(
-        in, index, file, neededOrds, dataSchema, filters, statsEnabled, permissive, rkfOpt, read)
+      val cursor =
+        FourMcFileFormat.columnarCursor(in, index, file, neededOrds, verdicts, permissive, read)
       // per-FILE parse tags (micros-encoded timestamps carry tag 14)
       val tags = CsvPayload.fileTags(fieldTags, fieldIdx, index.stats)
-      // all-pass elision mask: blocks whose zone maps prove every pushed
-      // predicate holds for every owned line skip per-row evaluation (and
-      // the pred-value cache) entirely — Spark re-evaluates data filters
-      // above the scan, so this only removes a provably-no-op pre-filter
-      val certainArr: Array[Boolean] =
-        if (filters.isEmpty || !statsEnabled) null
-        else index.stats
-          .flatMap(st => graft.format.McStatsPruning.certainBlocks(filters, dataSchema, st))
-          .orNull
 
       val dataVectors = OnHeapColumnVector.allocateColumns(BatchSize, requiredSchema)
       val allVectors: Array[ColumnVector] =
@@ -769,8 +800,9 @@ object FourMcVectorizedReader {
         // a 98%-keeping shipdate range the UNSORTED blocks can't prove
         // certain. Probe batches measure refusals; low-refusal stretches
         // skip evaluation (always sound: Spark's post-scan Filter
-        // re-applies every pushed predicate), one batch per period
-        // re-probes. Zone-certain blocks skip without probing at all.
+        // re-applies every pushed predicate, and the footer-stats relation
+        // re-checks its rows), one batch per period re-probes. Certain
+        // blocks skip without probing at all.
         private val ProbePeriod = 16
         private var batchOrd = 0
         private var evalOn = true // last evaluated batch's verdict
@@ -779,7 +811,9 @@ object FourMcVectorizedReader {
             if (!cursor.nextBlock()) return false
             inBlock = true
             r0 = 0
-            blockCertain = certainArr != null && certainArr(cursor.blockOrd)
+            // a Certain block's lines all pass: its per-row evaluation
+            // (and the pred-value cache) is a provable no-op
+            blockCertain = verdicts(cursor.blockOrd) == Certain
             if (blockCertain && nPred > 0) FourMcScanMetrics.predElidedBlocks.add(1)
           }
           true
@@ -824,8 +858,8 @@ object FourMcVectorizedReader {
       } else {
       lazy val fmt = java.time.format.DateTimeFormatter.ofPattern(tsFmt)
         .withZone(java.time.ZoneOffset.UTC)
-      val lines = FourMcFileFormat.csvLines(
-        in, index, file, dataSchema, filters, statsEnabled, permissive, rkfOpt, read)
+      val lines =
+        FourMcFileFormat.csvLines(in, index, file, verdicts, permissive, countUnpruned, read)
       // per-FILE parse tags (micros-encoded timestamps carry tag 14)
       val tags = CsvPayload.fileTags(fieldTags, fieldIdx, index.stats)
 
@@ -1150,8 +1184,9 @@ object FourMcVectorizedReader {
         // column-major decode. That is a bargain when rows get refuted
         // (refuted rows skip batch entry entirely) and pure overhead when
         // the filter passes ~everything (Spark's post-scan Filter
-        // re-applies every pushed predicate, so skipping evaluation here
-        // is always sound). Probe batches measure the refusal rate; when
+        // re-applies every pushed predicate, and the footer-stats relation
+        // re-checks its rows, so skipping evaluation here is always
+        // sound). Probe batches measure the refusal rate; when
         // a probe refuses almost nothing, the next PROBE_PERIOD-1 batches
         // skip evaluation and decode column-major, then one batch
         // re-probes (catches mid-file selectivity shifts the block-stats

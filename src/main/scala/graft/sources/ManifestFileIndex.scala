@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{
   And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull,
   IsNull, LessThan, LessThanOrEqual, Literal, Or, StartsWith
 }
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.{sources => f}
 import org.apache.spark.sql.types.StructType
 
@@ -72,7 +72,7 @@ class ManifestFileIndex(
     // Keys include the ROOT: with multiple root paths, a file in root A
     // must never match root B's entry of the same (rel, len, mtime) — two
     // different-content files could share that triple (r16 advice).
-    val verdicts: Map[(java.net.URI, String, Long, Long), Boolean] =
+    val verdicts: Map[(java.net.URI, (String, Long, Long)), Boolean] =
       rootsWithManifests.flatMap { case (rootUri, m) =>
         m.groups.flatMap { case (entries, stats, blooms) =>
           // v3 file-level blooms ride the SAME keepBlocks composition that
@@ -82,7 +82,7 @@ class ManifestFileIndex(
           graft.format.McStatsPruning.keepBlocks(filters, dataSchema, stats, blooms) match {
             case Some(keep) =>
               entries.zipWithIndex.map { case (e, i) =>
-                ((rootUri, e.path, e.fileLen, e.modTime), keep(i))
+                ((rootUri, (e.path, e.fileLen, e.modTime)), keep(i))
               }
             case None => Nil
           }
@@ -94,15 +94,7 @@ class ManifestFileIndex(
     var pruned = 0L
     val out = base.map { pd =>
       val kept = pd.files.filter { f =>
-        val uri = f.getPath.toUri
-        val rel = rootUris.iterator
-          .map(ru => ru -> ru.relativize(uri))
-          .collectFirst { case (ru, r) if !r.isAbsolute && r.getPath.nonEmpty => (ru, r.getPath) }
-        val keep = rel match {
-          case Some((ru, r)) =>
-            verdicts.getOrElse((ru, r, f.getLen, f.getModificationTime), true)
-          case None => true
-        }
+        val keep = ManifestFileIndex.entryKey(rootUris, f).flatMap(verdicts.get).getOrElse(true)
         if (!keep) pruned += 1
         keep
       }
@@ -160,6 +152,22 @@ object ManifestFileIndex {
       case StartsWith(a: AttributeReference, Literal(v, _)) if v != null =>
         Some(f.StringStartsWith(a.name, v.toString))
       case _ => None
+    }
+  }
+
+  /** The manifest identity of one listed file: the first of `roots` it
+    * lives under, and its (root-relative path, length, modification time),
+    * the key of that root's manifest entries (`McManifest.Manifest.byKey`).
+    * Keying by root means a file in root A never matches root B's entry of
+    * the same triple. None for a file under no root.
+    */
+  private[graft] def entryKey(
+      roots: Seq[java.net.URI],
+      f: FileStatusWithMetadata): Option[(java.net.URI, (String, Long, Long))] = {
+    val uri = f.getPath.toUri
+    roots.iterator.map(root => root -> root.relativize(uri)).collectFirst {
+      case (root, rel) if !rel.isAbsolute && rel.getPath.nonEmpty =>
+        (root, (rel.getPath, f.getLen, f.getModificationTime))
     }
   }
 

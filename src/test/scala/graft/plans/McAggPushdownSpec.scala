@@ -77,6 +77,7 @@ class McAggPushdownSpec extends AnyFunSuite {
     assert(FourMcScanMetrics.blocksRead.sum() == 0L,
       s"stats-only aggregate must decompress zero blocks, read ${FourMcScanMetrics.blocksRead.sum()}")
     assert(FourMcScanMetrics.statsAggBlocks.sum() > 0L, "stats blocks must be counted")
+    assert(FourMcScanMetrics.blocksSkipped.sum() == 0L, "an answered block is not a skipped one")
   }
 
   test("non-pushable filters / grouped / expression aggregates keep the normal scan") {
@@ -419,11 +420,23 @@ class McAggPushdownSpec extends AnyFunSuite {
 
   test("filtered SUM: inside blocks from stats, straddlers decode, stays exact") {
     import spark.implicits._
-    val dir = tmpDir()
-    (1 to 40000).map(i => (i.toLong, i / 3.0)).toDF("k", "v")
-      .coalesce(1).sortWithinPartitions("k")
-      .write.format("4mc").option("payload", "csv")
-      .option("blockBytes", (16 * 1024).toString).mode("overwrite").save(dir)
+    def write(ks: Range, dir: String, opts: (String, String)*): Unit =
+      ks.map(i => (i.toLong, i / 3.0)).toDF("k", "v")
+        .coalesce(1).sortWithinPartitions("k")
+        .write.format("4mc").option("payload", "csv").options(opts.toMap).mode("append").save(dir)
+    // both layouts at 16 KiB blocks
+    val small = Seq("columnar", "rows").map { layout =>
+      val dir = tmpDir()
+      write(1 to 40000, dir, "layout" -> layout, "blockBytes" -> (16 * 1024).toString)
+      dir
+    }
+    // one file per block: refuted, wholly inside, and a straddler of 14 501
+    // rows whose first 4 096-row batch passes the filter and whose rows
+    // from 35 000 on fail it, so a reader that stops evaluating the filter
+    // after a batch that refuses nothing must still drop them
+    val wide = tmpDir()
+    Seq(1 to 29999, 30000 to 30499, 30500 to 45000).foreach(write(_, wide))
+    for (dir <- small :+ wide) {
     val sch = StructType(Seq(StructField("k", LongType), StructField("v", SqlDouble)))
     def sc = spark.read.format("4mc").option("payload", "csv").schema(sch).load(dir)
     def agg(df: DataFrame): DataFrame =
@@ -443,6 +456,7 @@ class McAggPushdownSpec extends AnyFunSuite {
     // two range edges × up to two blocks each under the offset-0 ownership rule
     assert(FourMcScanMetrics.blocksRead.sum() <= 4,
       s"only straddlers decode, read ${FourMcScanMetrics.blocksRead.sum()}")
+    }
   }
 
   test("grouped-by-partition SUM answers from stats") {
@@ -523,9 +537,9 @@ class McAggPushdownSpec extends AnyFunSuite {
     // rewrite of a csv dir leaves behind): the [block × col] arrays would
     // mis-index under the 3-column read schema, so the reader must treat
     // the segment as absent and decode per line
-    val dir = tmpDir()
-    new java.io.File(dir).mkdirs()
-    val f = new java.io.File(dir, "part-0.4mc")
+    val handWritten = tmpDir()
+    new java.io.File(handWritten).mkdirs()
+    val f = new java.io.File(handWritten, "part-0.4mc")
     val oldSchema = StructType(Seq(StructField("k", LongType), StructField("v", SqlDouble)))
     val builder = new graft.format.McStatsBuilder(oldSchema)
     val w = new graft.format.FourMcWriter(
@@ -538,8 +552,19 @@ class McAggPushdownSpec extends AnyFunSuite {
       w.write(s"$i|${i / 4.0}|tag${i % 7}\n".getBytes("UTF-8"))
     }
     w.close()
+    // the same lines written by the engine in the rows layout with a fourth
+    // column the read schema drops: a four-column segment under a
+    // three-column read
+    val dropped = tmpDir()
+    locally {
+      import spark.implicits._
+      (1 to 4000).map(i => (i.toLong, i / 4.0, s"tag${i % 7}", i % 3)).toDF("k", "v", "t", "x")
+        .coalesce(1).write.format("4mc").option("payload", "csv").option("layout", "rows")
+        .option("blockBytes", (8 * 1024).toString).save(dropped)
+    }
     val sch3 = StructType(Seq(StructField("k", LongType), StructField("v", SqlDouble),
       StructField("t", StringType)))
+    for (dir <- Seq(handWritten, dropped)) {
     def sc = spark.read.format("4mc").option("payload", "csv").schema(sch3).load(dir)
     def agg(df: DataFrame): DataFrame =
       df.agg(min(col("k")).as("mn"), max(col("v")).as("mx"),
@@ -552,6 +577,7 @@ class McAggPushdownSpec extends AnyFunSuite {
       got.getLong(2) == 4000L && got.getLong(3) == 4000L)
     assert(FourMcScanMetrics.blocksRead.sum() > 0L,
       "mismatched stats must force per-line decode, never index the wrong arrays")
+    }
   }
 
   test("v1 stats segments (no sums) decode per line and stay exact") {
