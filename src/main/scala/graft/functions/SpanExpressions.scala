@@ -134,6 +134,14 @@ object SpanRunsExpr {
       z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
       ((z ^ (z >>> 31)) & mask).toInt
     }
+    /** A key the set does not hold: the stand-in for a null window, which
+      * never matches.
+      */
+    lazy val absent: Long = {
+      var w = Long.MinValue
+      while (contains(w)) w += 1
+      w
+    }
     def contains(w: Long): Boolean =
       if (w == 0L) hasZero
       else {
@@ -182,27 +190,36 @@ object SpanRunsExpr {
   def findRuns(ws: ArrayData, hotBc: Broadcast[Array[Long]], k: Int): ArrayData = {
     val hot = setFor(hotBc)
     val n = ws.numElements()
-    var buf: java.util.ArrayList[InternalRow] = null
+    val a = new Array[Long](n)
+    var i = 0
+    while (i < n) { a(i) = if (ws.isNullAt(i)) hot.absent else ws.getLong(i); i += 1 }
+    val buf = new java.util.ArrayList[InternalRow](1)
+    islands(a, 0, n, hot, k)((s, e) => buf.add(InternalRow(s, e)))
+    new GenericArrayData(buf.toArray)
+  }
+
+  /** The island rule, over the window hashes `ws(from until until)` (the
+    * window at index i starts at position i − from + 1): every hot start p
+    * opens the interval [p, p+k−1], and a new island begins when a hot
+    * start leaves ≥ 1 uncovered token, i.e. p > prevMaxStart + k. Calls
+    * `run(s, e)` per island, in position order, with its UNCLIPPED end
+    * e = last start + k − 1 (the doc-end clip is the caller's, where
+    * n_tokens is in hand). [[SpanRunsExpr]] and the driver path of
+    * [[graft.ops.Spans.dupSpanCoverage]] both call it.
+    */
+  def islands(ws: Array[Long], from: Int, until: Int, hot: LongSet, k: Int)(run: (Long, Long) => Unit): Unit = {
     var runS = -1L
     var runMaxStart = -1L
-    var i = 0
-    while (i < n) {
-      if (!ws.isNullAt(i) && hot.contains(ws.getLong(i))) {
-        val p = i + 1L
-        if (runS < 0) { runS = p; runMaxStart = p }
-        else if (p > runMaxStart + k) { // gap: close the island
-          if (buf == null) buf = new java.util.ArrayList[InternalRow](4)
-          buf.add(InternalRow(runS, runMaxStart + (k - 1)))
-          runS = p; runMaxStart = p
-        } else runMaxStart = p
+    var i = from
+    while (i < until) {
+      if (hot.contains(ws(i))) {
+        val p = i - from + 1L
+        if (runS < 0) runS = p
+        else if (p > runMaxStart + k) { run(runS, runMaxStart + (k - 1)); runS = p } // gap: close the island
+        runMaxStart = p
       }
       i += 1
     }
-    if (runS >= 0) {
-      if (buf == null) buf = new java.util.ArrayList[InternalRow](1)
-      buf.add(InternalRow(runS, runMaxStart + (k - 1)))
-    }
-    if (buf == null) new GenericArrayData(Array.empty[Any])
-    else new GenericArrayData(buf.toArray)
+    if (runS >= 0) run(runS, runMaxStart + (k - 1))
   }
 }

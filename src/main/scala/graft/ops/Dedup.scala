@@ -34,6 +34,8 @@ import org.apache.spark.storage.StorageLevel
   * its values, so no join stage runs. Over the bound, for any other id
   * type, or when the verified pairs would pass the same bound, the
   * distributed plan runs as before, from the same checkpoint.
+  * [[Spans.dupSpanCoverage]] takes the same path choice
+  * ([[finishOnDriver]]) over its own checkpoint.
   */
 object Dedup {
 
@@ -178,9 +180,9 @@ object Dedup {
     val enc = postingLongs(rawPlan.schema)
     val (raw, parts) = sizedCheckpoint(rawPlan, enc, driverMaxLongs)
     val cap = if (maxDocFreq <= 0) Long.MaxValue else maxDocFreq
-    finishOnDriver("ngram", raw, enc, parts, driverMaxLongs) { (chunks, out) =>
-      ngramPairsOnDriver(chunks, threshold, cap, out)
-    }.getOrElse(ngramJaccardFromRaw(raw, threshold, maxDocFreq))
+    finishOnDriver(log, "[ngram]", raw, enc, parts, driverMaxLongs)(pairsOnDriver(raw, driverMaxLongs) {
+      (chunks, out) => ngramPairsOnDriver(chunks, threshold, cap, out)
+    }).getOrElse(ngramJaccardFromRaw(raw, threshold, maxDocFreq))
   }
 
   /** The distributed plan of [[ngramJaccardPairs]] over the checkpointed
@@ -580,9 +582,9 @@ object Dedup {
     val sigsPlan = minHashSignatures(docs, idCol, textCol, numHashes)
     val enc = signatureLongs(sigsPlan.schema)
     val (sigs, parts) = sizedCheckpoint(sigsPlan, enc, driverMaxLongs)
-    finishOnDriver("minhash", sigs, enc, parts, driverMaxLongs) { (chunks, out) =>
-      minHashPairsOnDriver(chunks, threshold, numHashes / rowsPerBand, rowsPerBand, out)
-    }.getOrElse(lshPairsFromSigs(sigs, threshold, numHashes, rowsPerBand))
+    finishOnDriver(log, "[minhash]", sigs, enc, parts, driverMaxLongs)(pairsOnDriver(sigs, driverMaxLongs) {
+      (chunks, out) => minHashPairsOnDriver(chunks, threshold, numHashes / rowsPerBand, rowsPerBand, out)
+    }).getOrElse(lshPairsFromSigs(sigs, threshold, numHashes, rowsPerBand))
   }
 
   /** The distributed plan of [[nearDupPairs]] over checkpointed signatures. */
@@ -610,13 +612,15 @@ object Dedup {
   /** A partition's encoded longs: all counted, and kept while there are at
     * most `keep` of them (`result` is null past that).
     */
-  private final class EncodedLongs(keep: Long) {
+  private[ops] final class EncodedLongs(keep: Long) {
     var n = 0L
     private var b = new scala.collection.mutable.ArrayBuilder.ofLong
     def +=(x: Long): Unit = {
       n += 1
       if (b != null) { if (n > keep) b = null else b += x }
     }
+    /** Past `keep`: further longs need only be counted (`n += m`). */
+    def dropped: Boolean = b == null
     def result: Array[Long] = if (b == null) null else b.result()
   }
 
@@ -624,10 +628,10 @@ object Dedup {
     * the checkpoint and fills the arrays that cross to the driver, so the
     * bound is checked on exactly what crosses.
     */
-  private type Encode = (Iterator[InternalRow], EncodedLongs) => Unit
+  private[ops] type Encode = (Iterator[InternalRow], EncodedLongs) => Unit
 
   /** The doc id as a long, for an integral id type. */
-  private def integralId(dt: DataType): Option[(InternalRow, Int) => Long] = dt match {
+  private[ops] def integralId(dt: DataType): Option[(InternalRow, Int) => Long] = dt match {
     case LongType    => Some((r, i) => r.getLong(i))
     case IntegerType => Some((r, i) => r.getInt(i).toLong)
     case ShortType   => Some((r, i) => r.getShort(i).toLong)
@@ -696,7 +700,7 @@ object Dedup {
     * fit the partition's share of `maxLongs`, so the driver never holds
     * more than that: (count, longs or null) per partition.
     */
-  private def sizedCheckpoint(plan: DataFrame, enc: Option[Encode], maxLongs: Long)
+  private[ops] def sizedCheckpoint(plan: DataFrame, enc: Option[Encode], maxLongs: Long)
       : (DataFrame, Array[(Long, Array[Long])]) = enc match {
     case Some(write) =>
       org.apache.spark.sql.graftbridge.PlanBridge.localCheckpoint(plan, ckptLevel(plan)) { parts =>
@@ -706,43 +710,62 @@ object Dedup {
     case None => (plan.localCheckpoint(true, ckptLevel(plan)), Array.empty)
   }
 
-  /** The path choice of a pair op over its checkpoint `ck` (doc column
-    * `doc`) and the checkpoint pass's `parts`, logged as one INFO line:
-    * within `maxLongs`, `solve` finishes the op on the driver into a local
-    * relation (a partition that passed its share of the bound on that pass
-    * is collected by one more job); None (the distributed plan) for a
-    * non-integral id, over the bound, or when `solve` gives up because the
-    * verified pairs pass it.
+  /** The driver-path choice of an op over its checkpoint `ck` (id column
+    * `doc`) and the checkpoint pass's `parts`, logged as one INFO line
+    * opening with `what`: within `maxLongs`, `solve` finishes the op on the
+    * driver into a local relation, over every partition's longs (a
+    * partition that passed its share of the bound on that pass is
+    * collected by one more job); None (the distributed plan) for a
+    * non-integral id, over the bound, or when `solve` gives up, with its
+    * reason.
     */
-  private def finishOnDriver(op: String, ck: DataFrame, enc: Option[Encode], parts: Array[(Long, Array[Long])],
-                             maxLongs: Long)(solve: (Array[Array[Long]], PairOut) => Boolean): Option[DataFrame] = {
+  private[ops] def finishOnDriver(log: org.slf4j.Logger, what: String, ck: DataFrame, enc: Option[Encode],
+                                  parts: Array[(Long, Array[Long])], maxLongs: Long)(
+                                  solve: Array[Array[Long]] => Either[String, DataFrame]): Option[DataFrame] = {
     val longs = parts.map(_._1).sum
     enc match {
       case None =>
-        log.info(s"[$op] doc id type ${ck.schema("doc").dataType.simpleString} -> distributed")
+        log.info(s"$what doc id type ${ck.schema("doc").dataType.simpleString} -> distributed")
         None
       case Some(_) if longs > maxLongs =>
-        log.info(s"[$op] $longs longs > $maxLongs -> distributed")
+        log.info(s"$what $longs longs > $maxLongs -> distributed")
         None
       case Some(write) =>
-        val late = parts.indices.filter(parts(_)._2 == null)
-        val lateLongs = if (late.isEmpty) Array.empty[Array[Long]] else {
-          val rows = checkpointRows(ck)
-          rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
-            val e = new EncodedLongs(Long.MaxValue); write(it, e); e.result
-          }, late)
-        }
-        val chunks = parts.map(_._2)
-        late.zip(lateLongs).foreach { case (i, a) => chunks(i) = a }
-        val out = new PairOut(maxLongs / 3)
-        if (solve(chunks, out)) {
-          log.info(s"[$op] $longs longs <= $maxLongs -> driver")
-          Some(out.toDF(ck.sparkSession, ck.schema("doc")))
-        } else {
-          log.info(s"[$op] $longs longs <= $maxLongs, over ${out.maxPairs} verified pairs -> distributed")
-          None
+        solve(partLongs(checkpointRows(ck), write, parts)) match {
+          case Right(df) =>
+            log.info(s"$what $longs longs <= $maxLongs -> driver")
+            Some(df)
+          case Left(why) =>
+            log.info(s"$what $longs longs <= $maxLongs, $why -> distributed")
+            None
         }
     }
+  }
+
+  /** Every partition's longs, given a sizing pass's `parts` over `rows`: a
+    * partition whose longs passed its share there (null) is encoded again
+    * by one more job, which reads only those partitions.
+    */
+  private def partLongs(rows: org.apache.spark.rdd.RDD[InternalRow], write: Encode,
+                        parts: Array[(Long, Array[Long])]): Array[Array[Long]] = {
+    val late = parts.indices.filter(parts(_)._2 == null)
+    val chunks = parts.map(_._2)
+    if (late.nonEmpty)
+      late.zip(rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+        val e = new EncodedLongs(Long.MaxValue); write(it, e); e.result
+      }, late)).foreach { case (i, a) => chunks(i) = a }
+    chunks
+  }
+
+  /** The driver solver of a pair op over checkpoint `ck`: `pairs` fills a
+    * [[PairOut]] held to `maxLongs` / 3 pairs (3 longs each), or gives up
+    * past it.
+    */
+  private def pairsOnDriver(ck: DataFrame, maxLongs: Long)(pairs: (Array[Array[Long]], PairOut) => Boolean)
+      : Array[Array[Long]] => Either[String, DataFrame] = chunks => {
+    val out = new PairOut(maxLongs / 3)
+    if (pairs(chunks, out)) Right(out.toDF(ck.sparkSession, ck.schema("doc")))
+    else Left(s"over ${out.maxPairs} verified pairs")
   }
 
   /** The verified (d1, d2, jaccard) pairs of a driver-path op, at most
@@ -762,18 +785,28 @@ object Dedup {
 
     /** A local relation of the pairs, ids of `doc`'s type. */
     def toDF(spark: org.apache.spark.sql.SparkSession, doc: StructField): DataFrame = {
-      val id: Long => Any = doc.dataType match {
-        case IntegerType => _.toInt
-        case ShortType   => _.toShort
-        case ByteType    => _.toByte
-        case _           => x => x
-      }
+      val id = idValue(doc.dataType)
       val (a, b, j) = (d1.result(), d2.result(), jac.result())
-      val rows = Array.tabulate[InternalRow](a.length)(i => new GenericInternalRow(Array[Any](id(a(i)), id(b(i)), j(i))))
-      org.apache.spark.sql.graftbridge.PlanBridge.ofRows(spark,
-        LocalRelation(org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(pairSchema(doc)), rows.toSeq))
+      localRelation(spark, pairSchema(doc),
+        Array.tabulate[InternalRow](a.length)(i => new GenericInternalRow(Array[Any](id(a(i)), id(b(i)), j(i)))))
     }
   }
+
+  /** An integral id of type `dt` from its long. */
+  private[ops] def idValue(dt: DataType): Long => Any = dt match {
+    case IntegerType => _.toInt
+    case ShortType   => _.toShort
+    case ByteType    => _.toByte
+    case _           => x => x
+  }
+
+  /** A driver path's result: a local relation of `rows` (values of
+    * `schema`'s types).
+    */
+  private[ops] def localRelation(spark: org.apache.spark.sql.SparkSession, schema: StructType,
+                                 rows: Seq[InternalRow]): DataFrame =
+    org.apache.spark.sql.graftbridge.PlanBridge.ofRows(spark,
+      LocalRelation(org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 
   /** The count of common elements of two ascending, distinct runs. */
   private def commonCount(a: Array[Long], ai: Int, an: Int, b: Array[Long], bi: Int, bn: Int): Int = {
@@ -815,7 +848,7 @@ object Dedup {
   /** Dense ids of long keys, in first-seen order: an open-addressing table
     * of primitive arrays.
     */
-  private final class LongIds(expected: Int) {
+  private[ops] final class LongIds(expected: Int) {
     private var mask = Integer.highestOneBit(math.max(expected, 8)) * 4 - 1
     private var keys = new Array[Long](mask + 1)
     private var slots = new Array[Int](mask + 1) // id + 1; 0 is empty
@@ -1300,11 +1333,11 @@ object Dedup {
     *   - below `spark.graft.cc.rowsPerPartition` edges (one loop
     *     partition), the edges are collected into primitive long arrays and
     *     solved by union-find on the driver — exact for any diameter, in
-    *     three Spark jobs for a pairs plan (checkpoint, count, collect), two
-    *     for a checkpointed one and none for a local relation (such as a
-    *     driver-side [[nearDupPairs]] result), where the loop pays a
-    *     checkpoint and a convergence probe per iteration. The count and
-    *     the collect read the checkpointed RDD directly, so the path
+    *     two Spark jobs for a pairs plan (checkpoint, then count and
+    *     collect), one for a checkpointed one and none for a local relation
+    *     (such as a driver-side [[nearDupPairs]] result), where the loop
+    *     pays a checkpoint and a convergence probe per iteration. The count
+    *     and collect job reads the checkpointed RDD directly, so the path
     *     compiles no query code per call. The result is a local relation.
     *   - at or above it, distributed min-label propagation: each iteration
     *     moves a label one hop, so a component converges after at most its
@@ -1340,12 +1373,14 @@ object Dedup {
   }
 
   /** The path choice of [[duplicateClusters]]: the pairs' (d1, d2) are
-    * counted, once materialized; under the cap the components come back as
-    * [[LocalComponents]], otherwise as the label-propagation frame. A local
-    * relation or a checkpoint with long ids is read as it is (no job to
-    * count a local relation, none to materialize either); any other plan is
-    * checkpointed once first, so the count and the collect (or the loop)
-    * share one run of it.
+    * counted, once materialized, by the job that also brings them back
+    * while each partition is within its share of the cap (a partition past
+    * it, with the total under the cap, is collected by one more job); under
+    * the cap the components come back as [[LocalComponents]], otherwise as
+    * the label-propagation frame. A local relation or a checkpoint with
+    * long ids is read as it is (no job for a local relation, none to
+    * materialize either); any other plan is checkpointed once first, so the
+    * count and the collect (or the loop) share one run of it.
     */
   private def components(pairs: DataFrame, maxIter: Int = 10,
                          reliableCheckpoint: Boolean = false): Either[DataFrame, LocalComponents] = {
@@ -1366,30 +1401,31 @@ object Dedup {
         (e, Right(checkpointRows(e)), true)
     }
     val (a, b) = if (own) (0, 1) else (ia, ib)
-    // every edge is one (a, b) row and its mirror
-    val nEdges = 2L * rows.fold(_.size.toLong, _.count())
     val rowsPerPart = pairs.sparkSession.conf
       .get("spark.graft.cc.rowsPerPartition", CcRowsPerPartitionDefault.toString).toLong
+    // every edge is one (a, b) row and its mirror, so the interleaved (a, b)
+    // longs number the edges. One job over a checkpoint counts each
+    // partition's longs and brings them back within its share of the cap
+    // (the sizing pass of the pair ops' checkpoints).
+    val write: Encode = (it, out) => it.foreach { r => out += r.getLong(a); out += r.getLong(b) }
+    def encode(it: Iterator[InternalRow], keep: Long) = { val e = new EncodedLongs(keep); write(it, e); (e.n, e.result) }
+    val parts = rows match {
+      case Left(local) => Array(encode(local.iterator, Long.MaxValue))
+      case Right(rdd) =>
+        val keep = rowsPerPart / math.max(1, rdd.getNumPartitions)
+        rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => encode(it, keep))
+    }
+    val nEdges = parts.map(_._1).sum
     if (nEdges < rowsPerPart) {
-      val interleaved = rows match {
-        case Left(local) => edgeLongs(local.iterator, a, b)
-        case Right(rdd) => Array.concat(rdd.mapPartitions(it => Iterator.single(edgeLongs(it, a, b))).collect().toIndexedSeq: _*)
-      }
+      val chunks = rows.fold(_ => parts.map(_._2), partLongs(_, write, parts))
       if (own) dropCheckpoint(ends)
-      Right(componentsOnDriver(interleaved))
+      Right(componentsOnDriver(Array.concat(chunks.toIndexedSeq: _*)))
     } else {
       // the loop re-checkpoints the symmetric edges partitioned by b and
       // then drops `ends`' checkpoint if it made it here
       val edges0 = ends.union(ends.select(col("b").as("a"), col("a").as("b")))
       Left(labelPropagation(edges0, own, nEdges, rowsPerPart, maxIter, ck))
     }
-  }
-
-  /** Interleaved (a, b) longs of edge rows. */
-  private def edgeLongs(rows: Iterator[InternalRow], a: Int, b: Int): Array[Long] = {
-    val buf = new scala.collection.mutable.ArrayBuilder.ofLong
-    rows.foreach { r => buf += r.getLong(a); buf += r.getLong(b) }
-    buf.result()
   }
 
   /** The rows of a checkpointed frame, read straight from its checkpointed

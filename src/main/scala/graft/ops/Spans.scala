@@ -1,8 +1,12 @@
 package graft.ops
 
+import graft.functions.SpanRunsExpr
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Exact-substring duplication signal: which token spans of length `k`
   * appear verbatim in more than one document, and how much of each document
@@ -19,13 +23,21 @@ import org.apache.spark.sql.functions._
   * postings pass (each posting matches at most one key — no O(df²) pair
   * fanout, so unlike the Jaccard self-join this needs no df cap); coverage
   * is a per-document window over the duplicated minority. Nothing quadratic
-  * anywhere — see [[dupStartPositions]] for the measured shuffle story
+  * anywhere — see [[dupStartPositionsFrom]] for the measured shuffle story
   * (r7 8.5 GB → r8 3.5 GB at 700×, −59%).
   *
-  * n_tokens is functionally determined by doc, so it rides no corpus-sized
-  * exchange: it is re-attached at PER-DOC granularity (coverage: tiny
-  * doc-count join after the aggregate; rewrite: recomputed from the tokens
-  * the rebuild join materializes anyway).
+  * Coverage ([[dupSpanCoverage]]) tokenizes and hashes the corpus once,
+  * into a checkpoint of (doc, n_tokens, window hashes) whose pass also
+  * encodes its rows as longs. Within [[Dedup.DriverMaxLongs]] (4 Mi longs,
+  * 32 MiB) and with an integral id column, it finishes on the driver with
+  * no shuffle, as the small pair ops do (see [[Dedup]]'s header); over the
+  * bound, the hot-key plans above read that checkpoint.
+  *
+  * n_tokens is functionally determined by the row, so it rides no
+  * corpus-sized exchange: it is re-attached at PER-ROW granularity
+  * (coverage's exchange fallback: a row-count join after the aggregate;
+  * rewrite: recomputed from the tokens the rebuild join materializes
+  * anyway).
   */
 object Spans {
 
@@ -82,15 +94,6 @@ object Spans {
       .select(col("doc"), (col("off") + 1).cast("long").as("pos"), col("w"))
   }
 
-  /** (doc, n_tokens) — one cheap scan (tokenize + size, no per-position
-    * hashing); joined back at per-doc granularity only.
-    */
-  private def docTokenCounts(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("doc"), TextAnalysis.tokens(col(textCol)).as("_toks"))
-      .filter(col("_toks").isNotNull)
-      .select(col("doc"), size(col("_toks")).cast("long").as("n_tokens"))
-
   /** Broadcast the hot-span key set when it has at most this many keys
     * (8 B/key → ≲300 MB hashed relation at the cap; the driver and every
     * executor hold one copy — sized for mainstream 8-16 GB executors).
@@ -114,76 +117,185 @@ object Spans {
   /** Per-document duplicated-token coverage: (doc, n_tokens, dup_tokens,
     * dup_ratio_milli) for documents with at least one span shared with
     * ANOTHER document (within-doc repeats alone don't count). Coverage is
-    * the union length of the duplicated [pos, pos+k) intervals.
+    * the union length of the duplicated [pos, pos+k) intervals, clipped at
+    * the doc end; dup_ratio_milli is 1000·dup_tokens/n_tokens rounded half
+    * up. A span is duplicated ("hot") when at least 2 distinct non-null doc
+    * ids hold it: a null id never makes a span hot but its row is reported
+    * when covered, and a doc id on several rows is one doc for hotness and
+    * reported per row. Null texts are dropped.
     *
-    * Plan (r17 — the single-k ops joined the map-side island plan var-k
-    * proved in r15/r16; guide §2.4 "remove shuffles outright"): the hot-key
-    * set (spans in ≥ 2 distinct docs — a plain min/max aggregate,
-    * partial-combined map-side) is driver-collected under
-    * [[HotBroadcastMaxKeys]] and broadcast into [[graft.functions.SpanRunsExpr]],
-    * which computes the duplicated islands per row. Coverage is then the
-    * sum of clipped island lengths — an identity with the old per-position
-    * window plan: within an island each non-final start contributes its gap
-    * to the next start and the final start contributes k, telescoping to
-    * e−s+1; only the final island can overrun the doc end (interior starts
-    * satisfy pos ≤ n−k+1), so clipping e at n_tokens equals the old
-    * subtract-the-overrun-once step. The corpus crosses NO exchange at all:
-    * one partially-combined aggregate up, one broadcast down. A corpus
-    * whose hot set outgrows the cap falls back to the window-exchange plan,
+    * One corpus pass: the per-row relation (doc, n_tokens, window hashes)
+    * is tokenized, hashed and checkpointed once, and that pass also encodes
+    * its rows as longs (doc, n_tokens, |hashes|, hashes…), as the pair ops'
+    * checkpoints do ([[Dedup.sizedCheckpoint]]). Within
+    * [[Dedup.DriverMaxLongs]] and with an integral id column the op ends on
+    * the driver: the hot spans from a table of first holders, then the
+    * island rule per row ([[graft.functions.SpanRunsExpr.islands]]) and the
+    * sum of clipped island lengths, returned as a local relation with the
+    * distributed plan's schema. No shuffle and no second job.
+    *
+    * Over the bound, or for any other id type, the distributed plan reads
+    * the same checkpoint (r17 — the single-k ops joined the map-side
+    * island plan var-k proved in r15/r16; guide §2.4 "remove shuffles
+    * outright"): the hot-key set (a plain min/max aggregate over the
+    * exploded hashes, partial-combined map-side) is driver-collected under
+    * [[HotBroadcastMaxKeys]] and broadcast into
+    * [[graft.functions.SpanRunsExpr]], which computes the islands per row
+    * from the checkpointed hashes. Coverage is the sum of clipped island
+    * lengths — an identity with the per-position window plan: within an
+    * island each non-final start contributes its gap to the next start and
+    * the final start contributes k, telescoping to e−s+1; only the final
+    * island can overrun the doc end (interior starts satisfy pos ≤ n−k+1),
+    * so clipping e at n_tokens equals subtracting the overrun once. A hot
+    * set over the cap falls back to the window-exchange plan,
     * value-identical.
     */
-  def dupSpanCoverage(docs: DataFrame, idCol: String, textCol: String, k: Int = 8): DataFrame = {
-    val sc = docs.sparkSession.sparkContext
-    hotKeysOrPlan(spanPostings(docs, idCol, textCol, k), s"coverage k=$k") match {
-      case Right(keys) =>
-        val hot = sc.broadcast(keys)
-        docs
-          .select(col(idCol).as("doc"), TextAnalysis.tokens(col(textCol)).as("_toks"))
-          .filter(col("_toks").isNotNull)
-          .withColumn("n_tokens", size(col("_toks")).cast("long"))
+  def dupSpanCoverage(docs: DataFrame, idCol: String, textCol: String, k: Int = 8): DataFrame =
+    dupSpanCoverageWith(docs, idCol, textCol, k, Dedup.DriverMaxLongs, HotBroadcastMaxKeys)
+
+  /** [[dupSpanCoverage]] with the driver path's bound and the hot-key
+    * broadcast cap as parameters.
+    */
+  private[ops] def dupSpanCoverageWith(docs: DataFrame, idCol: String, textCol: String, k: Int,
+                                       driverMaxLongs: Long, maxHotKeys: Long): DataFrame = {
+    require(k >= 2, "span length must be at least 2 tokens")
+    val plan = docs
+      .select(col(idCol).as("doc"), TextAnalysis.tokens(col(textCol)).as("_toks"))
+      .filter(col("_toks").isNotNull)
+      // _row: the row's identity for the exchange plan, where a doc id may
+      // be null or repeated
+      .select(col("doc"), size(col("_toks")).cast("long").as("n_tokens"),
+        spanHashes(col("_toks"), k).as("h"), monotonically_increasing_id().as("_row"))
+    val enc = coverageLongs(plan.schema)
+    val (ck, parts) = Dedup.sizedCheckpoint(plan, enc, driverMaxLongs)
+    val schema = coverageSchema(ck.schema)
+    Dedup.finishOnDriver(log, s"[spans] coverage k=$k:", ck, enc, parts, driverMaxLongs) { chunks =>
+      Right(Dedup.localRelation(ck.sparkSession, schema,
+        coverageOnDriver(chunks, k, Dedup.idValue(schema("doc").dataType))))
+    }.getOrElse {
+      val covered = hotKeysOrPlan(ck.select(col("doc"), explode(col("h")).as("w")), s"coverage k=$k",
+        maxHotKeys) match {
+        case Right(keys) =>
+          val hot = ck.sparkSession.sparkContext.broadcast(keys)
           // fenced: the size(_runs) > 0 filter must not inline the island
           // expression into itself (see PushdownFence's scaladoc)
-          .withColumn("_runs", fenced(runsOf(spanHashes(col("_toks"), k), hot, k)))
-          .filter(size(col("_runs")) > 0)
-          .withColumn("dup_tokens",
-            aggregate(col("_runs"), lit(0L),
-              (acc, r) => acc + least(r.getField("e"), col("n_tokens")) - r.getField("s") + 1L))
-          .withColumn("dup_ratio_milli",
-            round(lit(1000.0) * col("dup_tokens") / col("n_tokens")).cast("long"))
-          .select(col("doc"), col("n_tokens"), col("dup_tokens"), col("dup_ratio_milli"))
-      case Left(hotDf) =>
-        dupSpanCoverageExchange(docs, idCol, textCol, k, hotDf)
+          ck.withColumn("_runs", fenced(runsOf(col("h"), hot, k)))
+            .filter(size(col("_runs")) > 0)
+            .withColumn("dup_tokens",
+              aggregate(col("_runs"), lit(0L),
+                (acc, r) => acc + least(r.getField("e"), col("n_tokens")) - r.getField("s") + 1L))
+        case Left(hotDf) => coverageExchange(ck, hotDf, k)
+      }
+      covered.select(col("doc"), col("n_tokens"), col("dup_tokens"),
+        round(lit(1000.0) * col("dup_tokens") / col("n_tokens")).cast("long").as("dup_ratio_milli"))
     }
+  }
+  /** The result schema of [[dupSpanCoverage]] over its checkpoint's
+    * schema: the distributed plans' (doc and n_tokens as checkpointed).
+    */
+  private def coverageSchema(ck: StructType): StructType = StructType(Seq(
+    ck("doc"), ck("n_tokens"),
+    StructField("dup_tokens", LongType, nullable = true),
+    StructField("dup_ratio_milli", LongType, nullable = true)))
+
+  /** Coverage rows (doc, n_tokens, h, _row) as doc, n_tokens, |h|, h…; a
+    * null doc id is written as 0 with the count negated (−|h| − 1).
+    */
+  private def coverageLongs(schema: StructType): Option[Dedup.Encode] =
+    Dedup.integralId(schema("doc").dataType).map { id =>
+      val (d, n, h) = (schema.fieldIndex("doc"), schema.fieldIndex("n_tokens"), schema.fieldIndex("h"))
+      (rows, out) => rows.foreach { r =>
+        val a = r.getArray(h)
+        val m = a.numElements()
+        if (out.dropped) out.n += 3 + m
+        else {
+          val nullDoc = r.isNullAt(d)
+          out += (if (nullDoc) 0L else id(r, d))
+          out += r.getLong(n)
+          out += (if (nullDoc) -m - 1L else m.toLong)
+          var i = 0
+          while (i < m) { out += a.getLong(i); i += 1 }
+        }
+      }
+    }
+
+  /** [[dupSpanCoverage]] on the driver over the collected coverage rows:
+    * the hot spans are those whose first holder (a non-null doc id) meets
+    * a second, different id; then each row's islands against them, clipped
+    * at its doc end and summed. A covered row gives (doc of `id`'s type, or
+    * null; n_tokens; dup_tokens; dup_ratio_milli rounded half up as Spark's
+    * `round` does a double).
+    */
+  private def coverageOnDriver(chunks: Array[Array[Long]], k: Int, id: Long => Any): Seq[InternalRow] = {
+    // calls f(chunk, offset of the row's first hash, |h|, doc id not null)
+    // for every row
+    def rows(f: (Array[Long], Int, Int, Boolean) => Unit): Unit =
+      for (c <- chunks) {
+        var i = 0
+        while (i < c.length) {
+          val m = c(i + 2)
+          val len = (if (m < 0) -m - 1 else m).toInt
+          f(c, i + 3, len, m >= 0)
+          i += 3 + len
+        }
+      }
+    var windows = 0
+    rows((_, _, len, hasDoc) => if (hasDoc) windows += len)
+    val ids = new Dedup.LongIds(windows)
+    val firstDoc = new Array[Long](windows)
+    val isHot = new Array[Boolean](windows)
+    val hotKeys = new scala.collection.mutable.ArrayBuilder.ofLong
+    rows { (c, at, len, hasDoc) =>
+      if (hasDoc) {
+        val doc = c(at - 3)
+        var j = at
+        while (j < at + len) {
+          val seen = ids.size
+          val w = ids.id(c(j))
+          if (w == seen) firstDoc(w) = doc
+          else if (!isHot(w) && firstDoc(w) != doc) { isHot(w) = true; hotKeys += c(j) }
+          j += 1
+        }
+      }
+    }
+    val hot = new SpanRunsExpr.LongSet(hotKeys.result())
+    val out = Seq.newBuilder[InternalRow]
+    rows { (c, at, len, hasDoc) =>
+      val n = c(at - 2)
+      var dup = 0L
+      SpanRunsExpr.islands(c, at, at + len, hot, k)((s, e) => dup += math.min(e, n) - s + 1)
+      if (dup > 0) {
+        val ratio = BigDecimal(1000.0 * dup / n).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+        out += new GenericInternalRow(Array[Any](if (hasDoc) id(c(at - 3)) else null, n, dup, ratio))
+      }
+    }
+    out.result()
   }
 
   /** Exchange-plan fallback of [[dupSpanCoverage]] (hot set too big to
-    * driver-collect): shuffled semi join + per-doc lead window over
-    * duplicated start positions.
+    * driver-collect), over its checkpoint `ck`: shuffled semi join of the
+    * exploded hashes against the hot set, a per-row lead window over the
+    * duplicated start positions, and the (doc, n_tokens) of each covered
+    * row joined back by its `_row`.
     */
-  private def dupSpanCoverageExchange(docs: DataFrame, idCol: String, textCol: String,
-                                      k: Int, hotDf: DataFrame): DataFrame = {
-    val dupPos = dupStartPositionsFrom(spanPostings(docs, idCol, textCol, k), hotDf)
-    // partition by the doc bits, order by dp (≡ pos within a doc): the
-    // window exchange carries ONE 8-byte field per duplicated position
-    val win = Window.partitionBy(dpDoc(col("dp"))).orderBy(col("dp"))
+  private def coverageExchange(ck: DataFrame, hotDf: DataFrame, k: Int): DataFrame = {
+    val dupPos = ck.select(col("_row"), posexplode(col("h")).as(Seq("off", "w")))
+      .join(hotDf, Seq("w"), "left_semi")
+      .select(col("_row"), (col("off") + 1).cast("long").as("pos"))
+    val win = Window.partitionBy(col("_row")).orderBy(col("pos"))
     dupPos
-      .withColumn("nxt", lead(col("dp"), 1).over(win))
+      .withColumn("nxt", lead(col("pos"), 1).over(win))
       // a span covers k tokens, clipped by the next duplicated span's start
-      // (interval union; nxt - dp is a position difference — same doc by
-      // construction of the window). The doc-END clip needs n_tokens, which
-      // never rides the postings: only the LAST span of a doc can overrun
-      // the end (interior spans satisfy pos <= n-k+1 by construction), so
-      // the overrun is subtracted once per doc after the aggregate, where
-      // the tiny (doc, n_tokens) table joins at doc-count granularity.
-      .withColumn("cov", least(lit(k.toLong), coalesce(col("nxt") - col("dp"), lit(k.toLong))))
-      .groupBy(dpDoc(col("dp")).as("doc"))
-      .agg(sum(col("cov")).as("_raw"), max(dpPos(col("dp"))).as("_last_pos"))
-      .join(docTokenCounts(docs, idCol, textCol), Seq("doc"))
+      // (interval union). Only the LAST span of a row can overrun the doc
+      // end (interior spans satisfy pos <= n-k+1 by construction), so the
+      // overrun is subtracted once per row, after the aggregate, where the
+      // row's n_tokens joins back at row-count granularity.
+      .withColumn("cov", least(lit(k.toLong), coalesce(col("nxt") - col("pos"), lit(k.toLong))))
+      .groupBy(col("_row"))
+      .agg(sum(col("cov")).as("_raw"), max(col("pos")).as("_last_pos"))
+      .join(ck.select(col("_row"), col("doc"), col("n_tokens")), Seq("_row"))
       .withColumn("dup_tokens",
         col("_raw") - greatest(lit(0L), col("_last_pos") + (k - 1) - col("n_tokens")))
-      .withColumn("dup_ratio_milli",
-        round(lit(1000.0) * col("dup_tokens") / col("n_tokens")).cast("long"))
-      .select(col("doc"), col("n_tokens"), col("dup_tokens"), col("dup_ratio_milli"))
   }
 
   /** Exact-substring dedup REWRITE — the missing half of span coverage:
@@ -374,7 +486,7 @@ object Spans {
     val hotPlan0 = hotKeyPlan(posts)
     val hotPlan = hotPlan0.localCheckpoint(true, Dedup.ckptLevel(hotPlan0))
     val keys = Dedup.checkpointRows(hotPlan).map(_.getLong(0))
-      .take(math.min(maxKeys + 1, Int.MaxValue.toLong).toInt)
+      .take((math.min(maxKeys, Int.MaxValue - 1L) + 1).toInt)
     if (keys.length > maxKeys) {
       log.info(
         s"[spans] hot-span set for $what has more than $maxKeys keys: " +

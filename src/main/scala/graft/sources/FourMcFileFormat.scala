@@ -477,9 +477,9 @@ object FourMcFileFormat {
   }
 
   /** The csv-payload line stream for one split of a rows-layout file: the
-    * lines of the blocks whose `verdicts` decode, scan metrics wired. With
-    * no block left out, the plain line iterator reads the split; its
-    * blocks count in `blocksRead` only when `countUnpruned`.
+    * lines of the blocks whose `verdicts` decode, scan metrics wired
+    * (every block decompressed counts in `blocksRead`). With no block left
+    * out, the plain line iterator reads the split.
     */
   private[sources] def csvLines(
       in: McInput,
@@ -487,7 +487,6 @@ object FourMcFileFormat {
       file: PartitionedFile,
       verdicts: Array[Byte],
       permissive: Boolean,
-      countUnpruned: Boolean,
       read: FourMcVectorizedReader.FileRead
   ): McLineStream = {
     val keep = verdicts.map(BlockVerdict.decodes)
@@ -499,7 +498,7 @@ object FourMcFileFormat {
       val it = new FourMcLineIterator(in, index, file.start, file.start + file.length,
         permissive = permissive)
       read.onFinish {
-        if (countUnpruned) FourMcScanMetrics.blocksRead.add(it.blocksRead)
+        FourMcScanMetrics.blocksRead.add(it.blocksRead)
         if (permissive) FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped)
       }
       it

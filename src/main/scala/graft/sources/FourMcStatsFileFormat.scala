@@ -268,8 +268,7 @@ class FourMcStatsFileFormat(
     // batch reader, over the needed columns only
     val decode = FourMcVectorizedReader.csvDecoder(neededSchema, new StructType(), origSchema,
       dataFilters, CsvPayload.delimiterOf(options.getOrElse("delimiter", "|")),
-      options.getOrElse("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSS"), permissive = false,
-      countUnpruned = true)
+      options.getOrElse("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSS"), permissive = false)
     // the plain scan's line check, over the data schema's own tags: the
     // batch reader may stop evaluating the filters on a stretch of rows
     // that refuses little, and no Spark Filter sits above this relation,

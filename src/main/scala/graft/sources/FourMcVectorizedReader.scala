@@ -195,8 +195,7 @@ object FourMcVectorizedReader {
       conf: () => org.apache.hadoop.conf.Configuration,
       extOk: PartitionedFile => Boolean
   ): PartitionedFile => Iterator[InternalRow] = {
-    val decode = csvDecoder(requiredSchema, partitionSchema, dataSchema, filters, delim, tsFmt,
-      permissive, countUnpruned = false)
+    val decode = csvDecoder(requiredSchema, partitionSchema, dataSchema, filters, delim, tsFmt, permissive)
     (file: PartitionedFile) => if (!extOk(file)) Iterator.empty else fileRead { read =>
       val in = FourMcFileFormat.openInput(file, conf())
       read.onFinish(in.close())
@@ -211,10 +210,7 @@ object FourMcVectorizedReader {
     * open csv file, decoding the owned blocks whose `verdicts`
     * ([[FourMcFileFormat.BlockVerdict]]) decode. Skipped blocks are
     * counted in `blocksSkipped` (those owning a line; an Answered block is
-    * the caller's), decoded ones in `blocksRead` — a rows-layout split
-    * that leaves no block out only when `countUnpruned`: the plain scan
-    * counts the blocks its pruned reads decode, the footer-stats relation
-    * every block it decodes.
+    * the caller's), every block decoded in `blocksRead`.
     *
     * Pushed `filters` may be applied only in part: the adaptive probe
     * below stops evaluating them on stretches that refuse little, which is
@@ -227,8 +223,7 @@ object FourMcVectorizedReader {
       filters: Seq[Filter],
       delim: Byte,
       tsFmt: String,
-      permissive: Boolean,
-      countUnpruned: Boolean
+      permissive: Boolean
   ): (McInput, FourMcIndex, PartitionedFile, Array[Byte], FileRead) => Iterator[InternalRow] = {
     val fieldIdx = requiredSchema.fields.map(f => dataSchema.fieldIndex(f.name))
     val fieldTags: Array[Int] = requiredSchema.fields.map(f => CsvPayload.tagOf(f.dataType))
@@ -859,7 +854,7 @@ object FourMcVectorizedReader {
       lazy val fmt = java.time.format.DateTimeFormatter.ofPattern(tsFmt)
         .withZone(java.time.ZoneOffset.UTC)
       val lines =
-        FourMcFileFormat.csvLines(in, index, file, verdicts, permissive, countUnpruned, read)
+        FourMcFileFormat.csvLines(in, index, file, verdicts, permissive, read)
       // per-FILE parse tags (micros-encoded timestamps carry tag 14)
       val tags = CsvPayload.fileTags(fieldTags, fieldIdx, index.stats)
 

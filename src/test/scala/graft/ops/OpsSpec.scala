@@ -144,6 +144,27 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("duplicateClusters: a checkpointed pairs frame is counted and collected by one job") {
+    import spark.implicits._
+    val rows = (1L to 200L).map(i => (i, i + 1000L, 1.0))
+    val expected = rows.flatMap { case (a, b, _) => Seq(a -> a, b -> a) }.toMap
+    val even = rows.toDF("d1", "d2", "jaccard").repartition(4).localCheckpoint(true)
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(graft.JobCount.jobsOf(spark) { out = Dedup.duplicateClusters(even) } == 1)
+    assert(comps(out) == expected)
+    // every row in one of 4 partitions: a 1 000-edge cap gives each 250
+    // longs, under its 400 and over nothing else, so that partition is
+    // collected by one more job
+    val empty = spark.createDataFrame(spark.sparkContext.parallelize(Seq.empty[org.apache.spark.sql.Row], 3),
+      even.schema)
+    val skewed = rows.toDF("d1", "d2", "jaccard").coalesce(1).union(empty).localCheckpoint(true)
+    assert(skewed.rdd.getNumPartitions == 4)
+    spark.conf.set("spark.graft.cc.rowsPerPartition", "1000")
+    try assert(graft.JobCount.jobsOf(spark) { out = Dedup.duplicateClusters(skewed) } == 2)
+    finally spark.conf.unset("spark.graft.cc.rowsPerPartition")
+    assert(comps(out) == expected)
+  }
+
   test("duplicateClusters: a 12-doc chain is one component, as in the recursive-CTE oracle") {
     import spark.implicits._
     val pairs = (1L to 11L).map(i => (i, i + 1, 1.0)).toDF("d1", "d2", "jaccard")
@@ -589,6 +610,33 @@ class OpsSpec extends AnyFunSuite {
     val plan = pairs.queryExecution.executedPlan.toString
     assert(plan.contains("LocalTableScan") && !plan.contains("md5"), plan.take(1200))
     assert(spark.sharedState.cacheManager.isEmpty, "nearDupPairs must not leave cached plans behind")
+  }
+
+  test("dupSpanCoverage on the driver tokenizes the corpus once and leaves no cached plan behind") {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val d = docs // the parquet schema read is a job of its own
+    var cov: org.apache.spark.sql.DataFrame = null
+    spark.sparkContext.addSparkListener(l)
+    val jobs =
+      try graft.JobCount.jobsOf(spark) { cov = Spans.dupSpanCoverage(d, "doc_id", "text", 8) }
+      finally spark.sparkContext.removeSparkListener(l)
+    assert(graft.JobCount.jobsOf(spark)(cov.collect()) == 0, "the local result must collect with no job")
+    import scala.jdk.CollectionConverters._
+    // one query execution tokenized and hashed the corpus: the checkpoint's
+    // pass, which also sized the rows and brought them back
+    assert(plans.asScala.count(_.contains("token_window_hash")) == 1, plans.asScala.mkString("\n---\n").take(2000))
+    assert(jobs == 1, s"the checkpoint job alone, got $jobs jobs")
+    val plan = cov.queryExecution.executedPlan.toString
+    assert(plan.contains("LocalTableScan") && !plan.contains("token_window_hash"), plan.take(1200))
+    assert(cov.count() > 0)
+    assert(spark.sharedState.cacheManager.isEmpty, "dupSpanCoverage must not leave cached plans behind")
   }
 
   test("exactDedupByDigest matches exactDedup") {
