@@ -56,10 +56,14 @@ object Md5PrefixLongExpr {
   private val md = ThreadLocal.withInitial[java.security.MessageDigest](() =>
     java.security.MessageDigest.getInstance("MD5"))
 
-  def prefixOf(bytes: Array[Byte], nHex: Int): Long = {
+  def prefixOf(bytes: Array[Byte], nHex: Int): Long = prefixOf(bytes, 0, bytes.length, nHex)
+
+  /** [[prefixOf]] of `bytes(off until off + len)`. */
+  def prefixOf(bytes: Array[Byte], off: Int, len: Int, nHex: Int): Long = {
     val d = md.get()
     d.reset()
-    val dig = d.digest(bytes)
+    d.update(bytes, off, len)
+    val dig = d.digest()
     val full = nHex >> 1
     var v = 0L
     var i = 0

@@ -412,7 +412,10 @@ object Dedup {
   // ------------------------------------------------------------ MinHash LSH
 
   /** Word 3-shingles from a MATERIALIZED token-array column (see
-    * [[shinglePostings]] for why the two-phase shape matters).
+    * [[shinglePostings]] for why the two-phase shape matters): the column
+    * formulation of the shingles [[minHashSignatures]] hashes, kept as the
+    * reference its fused kernel is checked against (OpsSpec) and as the
+    * shape the DuckDB oracle replays.
     */
   def shinglesFromTokens(toks: Column): Column =
     when(size(toks) < 3, array(concat_ws(" ", toks))).otherwise(
@@ -469,8 +472,9 @@ object Dedup {
   }
 
   /** The original column-only formulation — the equivalence baseline for
-    * [[graft.functions.MinHashSignaturesExpr]] (and the shape the DuckDB
-    * oracle replays).
+    * [[graft.functions.MinHashSignaturesExpr]] and
+    * [[graft.functions.ShingleHashesExpr]] (and the shape the DuckDB oracle
+    * replays).
     */
   private[graft] def minHashSignaturesColumns(docs: DataFrame, idCol: String, textCol: String,
                                               numHashes: Int = 64): DataFrame = {
@@ -479,28 +483,37 @@ object Dedup {
         array_min(transform(col("_hs"), h => (lit(minHashCoefA(i)) * h + lit(minHashCoefB(i))) % MinHashP))
       }: _*
     )
-    withBaseHashes(docs, idCol, textCol).select(col("doc"), sig.as("sig"), col("shingles"))
-  }
-
-  private def withBaseHashes(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
       .select(col(idCol).as("doc"), TextAnalysis.tokens(col(textCol)).as("_toks"))
       .select(col("doc"), array_distinct(shinglesFromTokens(col("_toks"))).as("shingles"))
-      .withColumn(
-        "_hs",
-        // fused md5-prefix long (one digest, no hex round trip) —
-        // bit-identical to conv(substring(md5(s), 1, 15), 16, 10), see
-        // Md5PrefixLongExpr / HashExprSpec
-        transform(col("shingles"), s => md5Prefix15(s) % MinHashP)
-      )
-      // the signature family is md5-over-STRINGS (the oracle replays it
-      // bit-exactly, so _hs must derive from the string shingle) — but the
-      // verification sets carried downstream are only ever intersected for
-      // EQUALITY, so the same 8-byte xxhash64 keying as [[shinglePostings]]
-      // replaces ~25-byte strings in the signatures checkpoint and both
-      // verification rejoins (same ~n²/2⁶⁵ collision caveat, same
-      // string-semantics DuckDB oracle)
+      .withColumn("_hs", transform(col("shingles"), s => md5Prefix15(s) % MinHashP))
       .withColumn("shingles", transform(col("shingles"), s => xxhash64(s)))
+      .select(col("doc"), sig.as("sig"), col("shingles"))
+  }
+
+  /** (doc, `_hs`, `shingles`) per doc: the distinct word 3-shingles' md5
+    * base hashes (15 hex digits mod [[MinHashP]]) and xxhash64 keys, in
+    * first-occurrence order, from ONE fused pass per row
+    * ([[graft.functions.ShingleHashesExpr]]: tokens joined once, windows
+    * hashed in place and deduped by their bytes) — bit-identical, order
+    * included, to `array_distinct(shinglesFromTokens(toks))` followed by the
+    * two per-shingle `transform`s (asserted in OpsSpec).
+    *
+    * The signature family is md5-over-STRINGS (the oracle replays it
+    * bit-exactly, so `_hs` derives from the shingle's bytes), but the
+    * verification sets carried downstream are only ever intersected for
+    * EQUALITY, so the same 8-byte xxhash64 keying as [[shinglePostings]]
+    * replaces ~25-byte strings in the signatures checkpoint and both
+    * verification rejoins (same ~n²/2⁶⁵ collision caveat, same
+    * string-semantics DuckDB oracle).
+    */
+  private def withBaseHashes(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    val sh = graft.functions.ShingleHashesExpr(expression(TextAnalysis.tokens(col(textCol))), 3, MinHashP)
+    docs
+      .select(col(idCol).as("doc"), column(sh).as("_sh"))
+      .select(col("doc"), col("_sh.hs").as("_hs"), col("_sh.keys").as("shingles"))
+  }
 
   /** Banded LSH candidate pairs: two docs collide when any band of
     * `rowsPerBand` consecutive signature entries is IDENTICAL. The band key
@@ -1249,30 +1262,47 @@ object Dedup {
     }
   }
 
-  /** [[keepCanonical]] over driver-side components: only the member docs'
-    * (doc, n_tokens) rows cross to the driver (a broadcast semi join picks
-    * them out of the scan), and the per-component pick — most tokens, nulls
-    * last, ties → lowest id, the window's order — runs there. No shuffle,
-    * no window, and no per-call generated classes beyond the scan's.
+  /** [[keepCanonical]] over driver-side components, in one scan job: the
+    * components ride to the tasks as a broadcast variable (no exchange
+    * job), each task sizes its docs, keeps the member rows and picks its
+    * best row per component, and the driver merges the tasks' picks. The
+    * pick — most tokens, nulls last, ties → lowest id — is the window's
+    * order. No shuffle, no window, and no per-call generated classes
+    * beyond the scan's.
     */
   private def canonicalOnDriver(local: LocalComponents, sizedDocs: DataFrame): DataFrame = {
     val spark = sizedDocs.sparkSession
-    import spark.implicits._
-    val sized = sizedDocs.join(broadcast(local.docs.toSeq.toDF("doc")), Seq("doc"), "left_semi")
-      .select(col("doc").cast("long"), col("n_tokens"))
-      .queryExecution.toRdd
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
-      .collect()
-    // comp -> (doc, n_tokens) of the best row so far
+    val members = spark.sparkContext.broadcast(local)
+    val rows = sizedDocs.select(col("doc").cast("long"), col("n_tokens")).queryExecution.toRdd
+    val picks = try spark.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+      val lc = members.value
+      val pick = new CanonicalPick
+      it.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val i = java.util.Arrays.binarySearch(lc.docs, r.getLong(0))
+          if (i >= 0) pick.offer(lc.comps(i), r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
+        }
+      }
+      pick.best.toArray
+    }) finally members.destroy()
+    val pick = new CanonicalPick
+    for (part <- picks; (c, (doc, n)) <- part) pick.offer(c, doc, n)
+    val schema = StructType(Seq(StructField("comp", LongType, nullable = false),
+      StructField("doc", LongType, nullable = false), StructField("n_tokens", LongType)))
+    localRelation(spark, schema, pick.best.toSeq.sortBy(_._1).map { case (c, (doc, n)) =>
+      new GenericInternalRow(Array[Any](c, doc, n.getOrElse(null))): InternalRow
+    })
+  }
+
+  /** comp -> (doc, n_tokens) of the best row offered so far. */
+  private final class CanonicalPick {
     val best = scala.collection.mutable.HashMap.empty[Long, (Long, Option[Long])]
-    for ((doc, n) <- sized) {
-      val c = local.compOf(doc)
+    def offer(c: Long, doc: Long, n: Option[Long]): Unit = {
       val better = best.get(c).forall { case (bd, bn) =>
         if (n != bn) n.exists(x => bn.forall(x > _)) else doc < bd
       }
       if (better) best(c) = (doc, n)
     }
-    best.toSeq.map { case (c, (doc, n)) => (c, doc, n) }.toDF("comp", "doc", "n_tokens")
   }
 
   /** DuckDB mirror of [[keepCanonical]] over the `documents` table. */
@@ -1366,10 +1396,10 @@ object Dedup {
     */
   private final case class LocalComponents(docs: Array[Long], comps: Array[Long]) {
     def compOf(doc: Long): Long = comps(java.util.Arrays.binarySearch(docs, doc))
-    def toDF(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-      import spark.implicits._
-      docs.indices.map(i => (docs(i), comps(i))).toDF("doc", "comp")
-    }
+    def toDF(spark: org.apache.spark.sql.SparkSession): DataFrame =
+      localRelation(spark,
+        StructType(Seq(StructField("doc", LongType, nullable = false), StructField("comp", LongType, nullable = false))),
+        docs.indices.map(i => new GenericInternalRow(Array[Any](docs(i), comps(i))): InternalRow))
   }
 
   /** The path choice of [[duplicateClusters]]: the pairs' (d1, d2) are

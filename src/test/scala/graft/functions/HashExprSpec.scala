@@ -101,4 +101,59 @@ class HashExprSpec extends AnyFunSuite {
       assert(withCodegen.toSeq == interp.toSeq)
     } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
   }
+
+  // the column chain ShingleHashesExpr fuses: distinct 3-token shingles,
+  // then per shingle md5_prefix_long(15) % p and xxhash64
+  private def legacyShingles(toks: org.apache.spark.sql.Column) = {
+    val sh = array_distinct(graft.ops.Dedup.shinglesFromTokens(toks))
+    struct(
+      transform(sh, s => column(Md5PrefixLongExpr(expression(s.cast(BinaryType)), 15)) % graft.ops.Dedup.MinHashP)
+        .as("hs"),
+      transform(sh, s => xxhash64(s)).as("keys"))
+  }
+
+  private def shingleHashes(toks: org.apache.spark.sql.Column) =
+    column(ShingleHashesExpr(expression(toks), 3, graft.ops.Dedup.MinHashP))
+
+  test("shingle_hashes equals the distinct-shingle md5 and xxhash64 chain, null elements included") {
+    import spark.implicits._
+    val rng = new scala.util.Random(17)
+    val texts = Seq("", "one", "a b", "a b c", "a b c a b c a b", "x x x x", "naïve café 中文 café 中文 naïve café") ++
+      (0 until 300).map(_ => (0 until rng.nextInt(30))
+        .map(_ => Seq("a", "b", "c", "dé", "中")(rng.nextInt(5))).mkString(" "))
+    val toks = texts.toDF("text").select(graft.ops.TextAnalysis.tokens($"text").as("toks"))
+    // null elements follow concat_ws, which skips them with their separator:
+    // "a", null, "b" makes the window "a b", as the 2-token "a b" does
+    val withNulls = Seq(Seq("a", null, "b", "c"), Seq(null, "a", "b", "a", null, "b"), Seq[String](null),
+      Seq(null, null, "x", "y", "x", "y"), Seq("a", null)).toDF("toks")
+    for (df <- Seq(toks, withNulls)) {
+      val bad = df.select(to_json(shingleHashes($"toks")).as("f"), to_json(legacyShingles($"toks")).as("l"))
+        .filter($"f" =!= $"l").count()
+      assert(bad == 0L, "fused and column shingle hashes diverge")
+    }
+    val t = toks.select(shingleHashes($"toks").as("t")).schema("t").dataType
+    assert(t == ShingleHashesExpr.Type)
+  }
+
+  test("shingle_hashes: generated and interpreted projections agree; a null array is null") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    val e = ShingleHashesExpr(
+      BoundReference(0, org.apache.spark.sql.types.ArrayType(StringType), nullable = true), 3, graft.ops.Dedup.MinHashP)
+    val generated = GenerateUnsafeProjection.generate(Seq(e))
+    val interpreted = InterpretedUnsafeProjection.createProjection(Seq(e))
+    val inputs = Seq(Seq("a", "b", "c", "a", "b", "c"), Seq(""), Seq.empty[String], Seq("x", null, "y", "z"),
+      Seq("naïve", "café", "中文", "naïve", "café")).map(ts => new GenericArrayData(ts.map(UTF8String.fromString).toArray[Any]))
+    for (in <- inputs :+ null) {
+      val row = InternalRow(in)
+      val (g, i) = (generated(row).copy(), interpreted(row).copy())
+      assert(g == i, s"generated and interpreted rows differ for $in")
+      assert(g.isNullAt(0) == (in == null))
+    }
+    val abc = generated(InternalRow(inputs.head)).getStruct(0, 2)
+    assert(abc.getArray(0).numElements() == 3 && abc.getArray(1).numElements() == 3)
+  }
 }

@@ -477,14 +477,31 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("one-pass minhash_signatures equals the 64x transform+array_min formulation") {
-    val fused = Dedup.minHashSignatures(docs, "doc_id", "text")
-      .select("doc", "sig").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val columns = Dedup.minHashSignaturesColumns(docs, "doc_id", "text")
-      .select("doc", "sig").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(fused.keySet == columns.keySet)
-    assert(fused == columns, "fused expression must be bit-identical")
+    import spark.implicits._
+    // the fixture plus the shingle kernel's edge rows: repeated windows,
+    // empty and whitespace-only texts (one empty token), 1 and 2 tokens (one
+    // whole-text shingle), a null text, multi-byte UTF-8 split on tabs,
+    // newlines and CR, and a doc whose every window is the same
+    val planted = Seq[(Long, String)](
+      (900001L, "a b c a b c a b c a b"), (900002L, ""), (900003L, " \t\n "),
+      (900004L, "one"), (900005L, "two words"), (900006L, null),
+      (900007L, "naïve\tcafé 中文\n中文 naïve\tcafé 中文 😀 x"), (900008L, "x x x x x x"),
+      (900009L, "a b c"), (900010L, "a  b\r\nc   a b c"))
+      .toDF("doc_id", "text")
+    val in = docs.select("doc_id", "text").unionByName(planted)
+    def sigs(df: org.apache.spark.sql.DataFrame) = df.select("doc", "sig", "shingles").collect()
+      .map(r => r.getLong(0) -> (Option(r.getSeq[Long](1)).map(_.toVector), Option(r.getSeq[Long](2)).map(_.toVector)))
+      .toMap
+    val fused = sigs(Dedup.minHashSignatures(in, "doc_id", "text"))
+    val columns = sigs(Dedup.minHashSignaturesColumns(in, "doc_id", "text"))
+    assert(fused.size == in.count() && fused.keySet == columns.keySet)
+    // a null text has null shingles on both; its column-formulation sig is
+    // 64 nulls (array_min of a null array, per entry), the fused sig null
+    val diff = fused.keys.filter(d => d != 900006L && fused(d) != columns(d))
+    assert(diff.isEmpty, s"fused signatures or shingles differ for docs ${diff.take(5).mkString(", ")}")
+    assert(fused(900006L) == ((None, None)) && columns(900006L)._2.isEmpty)
+    assert(fused(900001L)._2.get.length == 3 && fused(900008L)._2.get.length == 1)
+    assert(fused(900004L)._2.get.length == 1 && fused(900005L)._2.get.length == 1)
   }
 
   test("minhash verification sets ride as 8-byte longs, not shingle strings") {
@@ -535,6 +552,33 @@ class OpsSpec extends AnyFunSuite {
     assert(driver == window)
     assert(driver.map(k => (k._1, k._2)) == Set((1L, 2L), (10L, 11L), (20L, 20L)))
     assert(driver.exists(_ == ((1L, 2L, Some(3L)))) && driver.exists(_ == ((10L, 11L, Some(1L)))))
+  }
+
+  test("keepCanonical over a checkpointed pairs frame: 2 jobs, no broadcast exchange, the window's picks") {
+    val docs = this.docs // reading the parquet footers for the schema runs a job
+    val pairs = Dedup.nearDupPairs(docs, "doc_id", "text", 0.5).localCheckpoint(true)
+    assert(pairs.count() > 0)
+    def kept(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Option[Long])] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long]))).toSet
+    // the description and tags of every job of the call and of its collect:
+    // Spark runs a broadcast exchange as its own job, tagged "broadcast
+    // exchange (runId …)"
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        for (p <- Option(js.properties); k <- Seq("spark.job.description", "spark.job.tags"))
+          Option(p.getProperty(k)).foreach(labels.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    var driver: Set[(Long, Long, Option[Long])] = null
+    val jobs = try graft.JobCount.jobsOf(spark) {
+      driver = kept(Dedup.keepCanonical(pairs, docs, "doc_id", "text"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs == 2, s"driver path ran $jobs jobs")
+    val seen = scala.jdk.CollectionConverters.CollectionHasAsScala(labels).asScala.toSeq
+    assert(!seen.exists(_.toLowerCase.contains("broadcast")), s"broadcast in ${seen.mkString(", ")}")
+    assert(driver == withForcedCcLoop(kept(Dedup.keepCanonical(pairs, docs, "doc_id", "text"))))
+    assert(driver.nonEmpty)
   }
 
   test("packedBins is invariant to the partition count (distributed prefix sum is exact)") {
