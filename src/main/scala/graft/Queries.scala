@@ -18,7 +18,20 @@ object Queries {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else parquet(spark, s"$sfDir/$name.parquet")
+
+  // Parquet schemas by (table path, modification time): inferring one runs
+  // a Spark job, and the registered queries read the same tables on every
+  // call. Rewriting a table changes its modification time.
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[(String, Long), StructType]()
+
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+      .getModificationTime
+    val schema = schemas.computeIfAbsent((path, mtime), _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** events.ts is tz-naive TIMESTAMP(MICROS) parquet, which Spark reads as
     * TIMESTAMP_NTZ; cast to session-zone TimestampType (value-preserving —
@@ -34,9 +47,7 @@ object Queries {
     require(tz == "UTC",
       s"Queries.events requires spark.sql.session.timeZone=UTC (got $tz): " +
         "the TIMESTAMP_NTZ cast is only value-preserving under UTC")
-    spark.read
-      .parquet(s"$sfDir/events.parquet")
-      .withColumn("ts", col("ts").cast(TimestampType))
+    parquet(spark, s"$sfDir/events.parquet").withColumn("ts", col("ts").cast(TimestampType))
   }
 
   /** Exact money arithmetic: cast before aggregating. */

@@ -311,7 +311,7 @@ final class McStatsBuilder(schema: StructType, tsMicros: Boolean = false) {
   /** Columnar-layout registration: rows never span blocks and block b's
     * first row starts at its own offset 0, so the owner is always b itself
     * (no offset-0 rule). `firstOwnedStart` is stored as 0 — the row-layout
-    * pruned iterator never sees columnar files, so the value is only ever
+    * line iterator never sees columnar files, so the value is only ever
     * read as "has owned lines".
     */
   def startLineOwned(blockIdx: Int): Unit = {

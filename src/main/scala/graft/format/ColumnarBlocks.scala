@@ -324,11 +324,8 @@ final class McColumnarCursor(
 
   require(fileCols > 0 && fileCols <= 4096, s"columnar file column count $fileCols out of range")
 
-  private val alignedStart = index.nextBlockAt(math.max(splitStart, FourMc.HeaderLen.toLong))
-  private val alignedEnd =
-    if (splitEnd >= index.eosPos) index.eosPos else index.nextBlockAt(splitEnd)
-  private var ord = index.ordAt(alignedStart)
-  private val endOrd = index.ordAt(alignedEnd) // exclusive
+  private val owned = index.ownedBlocks(splitStart, splitEnd)
+  private var ord = owned.start
 
   /** Scan metrics, mirroring the row-layout iterators. */
   var blocksRead: Long = 0L
@@ -381,7 +378,7 @@ final class McColumnarCursor(
     * is exhausted.
     */
   def nextBlock(): Boolean = {
-    while (ord < endOrd) {
+    while (ord < owned.end) {
       val o = ord
       ord += 1
       if (keep(o)) {

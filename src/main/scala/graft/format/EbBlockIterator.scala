@@ -29,9 +29,9 @@ final class FourMcEbBlockIterator(
     maxBlockLen: Int = 256 * 1024 * 1024
 ) extends Iterator[(Long, Array[Byte])] {
 
-  private val alignedStart = index.nextBlockAt(math.max(splitStart, FourMc.HeaderLen.toLong))
-  private val alignedEnd =
-    if (splitEnd >= index.eosPos) index.eosPos else index.nextBlockAt(splitEnd)
+  private val owned = index.ownedBlocks(splitStart, splitEnd)
+  private val alignedStart = index.blockStart(owned.start)
+  private val alignedEnd = index.blockStart(owned.end)
 
   // ---- sequential decompressed stream over container blocks --------------
   private var blk: Array[Byte] = _
@@ -107,13 +107,19 @@ final class FourMcEbBlockIterator(
     v
   }
 
+  /** The next `n` stream bytes. The buffer grows with the bytes actually
+    * read, so a length field that lies fails at the end of the stream
+    * having allocated about what the stream held, not `n`.
+    */
   private def readNBytes(n: Int): Array[Byte] = {
-    val out = new Array[Byte](n)
+    var out = new Array[Byte](math.min(n, 64 * 1024))
     var got = 0
     while (got < n) {
       while (blk == null || off >= blk.length)
         if (!loadBlock()) throw new IOException("truncated EB block body")
       val take = math.min(n - got, blk.length - off)
+      if (got + take > out.length)
+        out = java.util.Arrays.copyOf(out, math.min(n, math.max(got + take, 2 * out.length)))
       System.arraycopy(blk, off, out, got, take)
       off += take
       got += take

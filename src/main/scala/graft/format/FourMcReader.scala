@@ -36,21 +36,21 @@ final case class FourMcIndex(
     blooms: Option[McBlockBlooms] = None
 ) {
 
-  /** Smallest block start >= pos; eosPos when no such block (split owns no
-    * blocks). Mirrors the reference's slice alignment
-    * (`FourMcBlockIndex.java:142-173`): a byte-range split maps to the blocks
+  /** Ordinals of the blocks the byte-range split [start, end) owns: those
     * whose headers begin inside it, so any partition of the byte range
-    * partitions the blocks disjointly.
+    * partitions the blocks disjointly. Mirrors the reference's slice
+    * alignment (`FourMcBlockIndex.java:142-173`); every container reader
+    * and the footer-stats relation take a split's blocks from here.
     */
-  def nextBlockAt(pos: Long): Long = {
-    val o = ordAt(pos)
-    if (o < blockOffsets.length) blockOffsets(o) else eosPos
-  }
+  def ownedBlocks(start: Long, end: Long): Range = ordAt(start) until ordAt(math.min(end, eosPos))
+
+  /** File offset of block `ord`'s header; eosPos past the last block. */
+  def blockStart(ord: Int): Long = if (ord < blockOffsets.length) blockOffsets(ord) else eosPos
 
   def numBlocks: Int = blockOffsets.length
 
   /** Ordinal of the first block whose header starts at or after `pos`
-    * (= numBlocks when none) — the block-index twin of [[nextBlockAt]].
+    * (= numBlocks when none).
     */
   def ordAt(pos: Long): Int = {
     var lo = 0
@@ -144,6 +144,8 @@ object FourMcReader {
         if (getBE(seg, segLen - 4) != xxhash32(seg, 0, segLen - 4))
           throw new IOException("4mc stats segment checksum mismatch")
         stats = McBlockStats.parse(seg)
+        if (stats.exists(_.nBlocks != n))
+          throw new IOException(s"4mc stats segment covers ${stats.get.nBlocks} blocks, the index $n")
         statsLen = segLen
       }
     }
@@ -202,55 +204,59 @@ object FourMcReader {
 /** Iterator of text lines for one byte-range split of a 4mc/4mz file,
   * replicating Hadoop split semantics (`FourMcLineRecordReader.java:116-163`):
   *
-  *   - the split's blocks are those whose headers start in [start, end);
+  *   - the split's blocks are [[FourMcIndex.ownedBlocks]];
+  *   - a line belongs to the block holding the byte before its first byte
+  *     (file start → block 0), the ownership [[BlockStats]] counts by;
   *   - a reader with start != 0 discards everything up to the first newline;
-  *   - lines are read while the consumed-block position <= alignedEnd, which
-  *     reads exactly one line past the owned blocks — finishing a spanning
-  *     line and compensating the next split's first-line skip.
+  *   - lines are read while the next one's owner is not past the split's
+  *     last block, so the last line read is the one that leaves that block —
+  *     finishing a spanning line and compensating the next split's
+  *     first-line skip.
   *
   * Together these guarantee every line is emitted exactly once for ANY
   * partition of the file's byte range (split-invariance property test).
   *
+  * `keep` (one flag per block of the file; files with stats only) leaves
+  * out the lines whose owner is not kept: the reader jumps to the first
+  * owned line of the next kept block (`McBlockStats.firstOwnedStart`), so a
+  * refuted block is decompressed only when a kept line spans into it.
+  * A masked read cannot resync past a corrupt block, so it is never
+  * `permissive`.
+  *
+  * Zero-copy access: `advanceSlice()` positions `sliceBytes`/`sliceStart`/
+  * `sliceEnd` on the next line without materializing a per-line array — for
+  * lines fully inside one block the slice points INTO the decompressed
+  * block buffer (valid until the next advance; consumers that retain bytes
+  * must copy). The `Iterator` interface gives detached lines; the two modes
+  * must not be mixed on one instance.
+  *
   * Emitted key = file offset of the block the line started in (compressed
   * coordinates, like the reference's LongWritable key).
   */
-/** Line stream with an optional ZERO-COPY access mode: `advanceSlice()`
-  * positions `sliceBytes`/`sliceStart`/`sliceEnd` on the next line without
-  * materializing a per-line array — for lines fully inside one block the
-  * slice points INTO the decompressed block buffer (valid until the next
-  * advance; consumers that retain bytes must copy). The classic
-  * `Iterator[(Long, Array[Byte])]` interface stays available for consumers
-  * that want detached lines; the two modes must not be mixed on one
-  * instance.
-  */
-trait McLineStream extends Iterator[(Long, Array[Byte])] {
-  def advanceSlice(): Boolean
-  def sliceOff: Long
-  def sliceBytes: Array[Byte]
-  def sliceStart: Int
-  def sliceEnd: Int
-}
-
 final class FourMcLineIterator(
     in: McInput,
     index: FourMcIndex,
     splitStart: Long,
     splitEnd: Long,
     maxLineLen: Int = 64 * 1024 * 1024,
-    permissive: Boolean = false
-) extends McLineStream {
+    permissive: Boolean = false,
+    keep: Option[Array[Boolean]] = None
+) extends Iterator[(Long, Array[Byte])] {
 
-  private val alignedStart = index.nextBlockAt(math.max(splitStart, FourMc.HeaderLen.toLong))
-  private val alignedEnd =
-    if (splitEnd >= index.eosPos) index.eosPos else index.nextBlockAt(splitEnd)
+  private val owned = index.ownedBlocks(splitStart, splitEnd)
+  private val mask: Array[Boolean] = keep.orNull
+  private val stats: McBlockStats = index.stats.orNull
+  require(mask == null || (stats != null && !permissive),
+    "a keep mask needs block stats and cannot resync past a corrupt block")
 
   private var block: Array[Byte] = _
   private var blockPos = 0
-  private var blockFileOff = alignedStart // file offset of current block
-  private var consumedPos: Long = alignedStart // file offset after fetched blocks
-  private var nextHeaderPos: Long = alignedStart
-  private var finished = alignedStart >= index.eosPos && index.numBlocks == 0
-  private var nextLine: (Long, Array[Byte]) = _
+  private var blockFileOff = index.blockStart(owned.start) // file offset of current block
+  // ordinal of the next block to fetch: the current block's plus one, so the
+  // line starting at blockPos is owned by block nextOrd - 1
+  private var nextOrd = owned.start
+  private var finished = owned.start >= index.numBlocks
+  private var started = false // a masked read has made its first jump
 
   /** Corrupt blocks skipped under `permissive` (checksum/structure/codec
     * failures; 0 in strict mode, where the first failure throws).
@@ -261,8 +267,8 @@ final class FourMcLineIterator(
   // a resync happened and the partial line touching the corrupt block (plus
   // the tail of it in the next good block) must be discarded
   private var resynced = false
-  // recovery line salvaged by skipLine() after a resync — emitted first
-  private var pendingFirst: (Long, Array[Byte]) = _
+  // the recovery line read by skipLine() after a resync is emitted first
+  private var keepSkipped = false
 
   // Per-block newline index: one SWAR pass over each freshly decompressed
   // block collects every '\n' position (SwarScan.collect convention: count
@@ -285,64 +291,87 @@ final class FourMcLineIterator(
   @inline private def nextNewline(): Int =
     if (nlIdx < nl(0)) { val p = nl(nlIdx); nlIdx += 1; p } else block.length
 
-  if (splitStart != 0 && !finished) skipLine()
-
+  /** Decompress block `nextOrd`, located by the footer index; false at the
+    * end of the stream. Under `permissive` a block that fails is skipped
+    * and the lines touching it are dropped by the caller.
+    */
   private def fetchBlock(): Boolean = {
     while (true) {
-      if (nextHeaderPos >= index.eosPos) { block = null; return false }
-      val off = nextHeaderPos
-      val fetched =
-        try {
-          val (data, nxt) = FourMcReader.readBlock(in, index.zstd, off)
-          // a decoded EOS before the footer's eosPos contradicts the index:
-          // in strict mode it (conservatively) ends the stream, under
-          // permissive it is corruption to resync past
-          if (data == null && permissive) None
-          else {
-            if (data == null) { block = null; return false }
-            block = data
-            blocksRead += 1
-            blockPos = 0
-            blockFileOff = off
-            nextHeaderPos = nxt
-            consumedPos = if (nxt >= index.eosPos) index.eosPos else nxt
-            nl = graft.sources.SwarScan.collect(data, 0, data.length, '\n'.toByte, nl)
-            nlIdx = 1
-            Some(true)
-          }
-        } catch {
-          case _: IOException if permissive => None
-        }
-      fetched match {
-        case Some(r) => return r
-        case None =>
-          // resync to the FOOTER INDEX's next block boundary — header fields
-          // of a corrupt block cannot be trusted to locate its successor.
-          // Lines touching the skipped block are dropped by the caller.
-          corruptSkipped += 1
-          resynced = true
-          val nextOrd = index.ordAt(off + 1)
-          nextHeaderPos = if (nextOrd < index.numBlocks) index.blockOffsets(nextOrd) else index.eosPos
-          consumedPos = if (nextHeaderPos >= index.eosPos) index.eosPos else nextHeaderPos
+      val off = index.blockStart(nextOrd)
+      if (off >= index.eosPos) { block = null; return false }
+      val data =
+        try FourMcReader.readBlock(in, index.zstd, off)._1
+        catch { case _: IOException if permissive => null }
+      if (data != null) {
+        block = data
+        blocksRead += 1
+        blockPos = 0
+        blockFileOff = off
+        // a block the mask leaves out is read only to its first newline, the
+        // end of a line that an earlier, kept block owns
+        if (mask != null && !mask(nextOrd)) {
+          nl(0) = 2
+          nl(1) = graft.sources.SwarScan.indexOf(data, 0, data.length, '\n'.toByte)
+        } else nl = graft.sources.SwarScan.collect(data, 0, data.length, '\n'.toByte, nl)
+        nlIdx = 1
+        nextOrd += 1
+        return true
       }
+      // a decoded EOS before the footer's eosPos contradicts the index: in
+      // strict mode it (conservatively) ends the stream, under permissive it
+      // is corruption to resync past
+      if (!permissive) { block = null; return false }
+      corruptSkipped += 1
+      resynced = true
+      nextOrd += 1
     }
     false // unreachable
   }
+
+  /** Masked reads: position at the first owned line of the first kept block
+    * at or after `from`; false when the split has no such line left.
+    */
+  private def jump(from: Int): Boolean = {
+    var o = from
+    while (o < owned.end) {
+      val first = stats.firstOwnedStart(o)
+      if (mask(o) && first != BlockStats.NoOwnedLines) {
+        // FirstAtNextBlock: o's first owned line starts at (o + 1, 0)
+        nextOrd = if (first >= 0) o else o + 1
+        if (!fetchBlock()) return false
+        if (first > 0) {
+          blockPos = first
+          while (nlIdx < nl(0) && nl(nlIdx) < first) nlIdx += 1
+        }
+        return true
+      }
+      o += 1
+    }
+    false
+  }
+
+  /** Whether the split emits the line at the stream position; a masked
+    * read first moves the position to the next kept line, and reads it
+    * whatever block it now starts in.
+    */
+  private def atOwnedLine(): Boolean =
+    if (mask != null && !started) { started = true; jump(owned.start) }
+    else nextOrd <= owned.end && (mask == null || mask(nextOrd - 1) || jump(nextOrd))
 
   /** Discard bytes up to and including the next newline — the recovery step
     * after a permissive resync: every byte between the corrupt block and the
     * following newline belongs to a line that touched the corruption.
     * Returns false when the stream ends while dropping, OR when the newline
     * lands in a block this split does not own: the upcoming line's owner (the
-    * block holding the byte before its start) is past alignedEnd, so emitting
-    * it here would duplicate the owning split's copy — exactly-once must
-    * survive corruption under ANY split layout.
+    * block holding the byte before its start) is past the split's blocks, so
+    * emitting it here would duplicate the owning split's copy — exactly-once
+    * must survive corruption under ANY split layout.
     */
   private def dropToNewline(): Boolean = {
     resynced = false
     while (true) {
       val i = nextNewline()
-      if (i < block.length) { blockPos = i + 1; return blockFileOff < alignedEnd }
+      if (i < block.length) { blockPos = i + 1; return nextOrd <= owned.end }
       if (!fetchBlock()) return false
       resynced = false // further resyncs while dropping collapse into this drop
     }
@@ -360,10 +389,7 @@ final class FourMcLineIterator(
     * buffer in place; a spanning line is assembled into a fresh array.
     */
   private def readLineSlice(): Boolean = {
-    if (block == null || blockPos >= block.length) {
-      if (block != null && blockPos >= block.length) block = null
-      if (block == null && !fetchBlock()) return false
-    }
+    if ((block == null || blockPos >= block.length) && !fetchBlock()) return false
     if (resynced && !dropToNewline()) return false
     var startOff = blockFileOff
     var out: java.io.ByteArrayOutputStream = null
@@ -410,229 +436,43 @@ final class FourMcLineIterator(
     false // unreachable
   }
 
-  /** Detached-line read for the Iterator interface; null at EOF. */
-  private def readLine(): (Long, Array[Byte]) =
-    if (!readLineSlice()) null
-    else if (sliceStart == 0 && sliceEnd == sliceBytes.length) (sliceOff, sliceBytes)
-    else (sliceOff, java.util.Arrays.copyOfRange(sliceBytes, sliceStart, sliceEnd))
-
-  /** Zero-copy advance — see [[McLineStream]]. */
+  /** Zero-copy advance: positions the slice fields on the next line. */
   def advanceSlice(): Boolean = {
     if (finished) return false
-    if (pendingFirst != null) {
-      val (o, a) = pendingFirst; pendingFirst = null
-      sliceOff = o; sliceBytes = a; sliceStart = 0; sliceEnd = a.length
-      return true
-    }
-    if (consumedPos > alignedEnd) { finished = true; return false }
-    if (!readLineSlice()) { finished = true; return false }
+    if (keepSkipped) { keepSkipped = false; return true }
+    if (!atOwnedLine() || !readLineSlice()) { finished = true; return false }
     true
   }
 
   private def skipLine(): Unit = {
-    if (alignedStart >= index.eosPos) { finished = true; return }
     val before = corruptSkipped
-    val line = readLine()
-    // If a resync happened during the skip read, `line` is the first clean
-    // RECOVERY line after the corruption, not the spanning line the previous
-    // split compensates for: that split's own compensating read dies at the
-    // same corrupt block (its dropToNewline lands in a block past its
-    // alignedEnd), so discarding here would lose the line under exactly this
-    // split layout. Keep it as the first emitted line instead.
-    if (corruptSkipped > before && line != null) pendingFirst = line
-  }
-
-  private def advance(): Unit = {
-    if (finished) return
-    if (pendingFirst != null) { nextLine = pendingFirst; pendingFirst = null; return }
-    if (consumedPos > alignedEnd) { finished = true; nextLine = null; return }
-    nextLine = readLine()
-    if (nextLine == null) finished = true
+    // If a resync happened during the skip read, the line read is the first
+    // clean RECOVERY line after the corruption, not the spanning line the
+    // previous split compensates for: that split's own compensating read
+    // dies at the same corrupt block (its dropToNewline lands in a block past
+    // its owned ones), so discarding here would lose the line under exactly
+    // this split layout. Keep it as the first emitted line instead.
+    keepSkipped = readLineSlice() && corruptSkipped > before
   }
 
   /** File offset consumed so far (compressed coordinates) — progress
     * reporting for Hadoop record readers.
     */
-  def progressPos: Long = consumedPos
+  def progressPos: Long = index.blockStart(nextOrd)
 
   private var primed = false
+  private var primedHas = false
   override def hasNext: Boolean = {
-    if (!primed) { advance(); primed = true }
-    !finished && nextLine != null
+    if (!primed) { primedHas = advanceSlice(); primed = true }
+    primedHas
   }
   override def next(): (Long, Array[Byte]) = {
     if (!hasNext) throw new NoSuchElementException
-    val r = nextLine
     primed = false
-    r
-  }
-}
-
-/** Stats-pruned variant of [[FourMcLineIterator]]: skips decompression (and
-  * I/O) of whole blocks whose [[McBlockStats]] refute the pushed filters.
-  *
-  * Ownership model (see [[BlockStats]]): a line belongs to the block holding
-  * the byte before its first byte, so `keep` decisions partition lines
-  * exactly across any split layout — every line is emitted by exactly one
-  * split, pruned or not, matching the classic iterator's global guarantee.
-  * Mid-line continuations always fetch the next sequential block regardless
-  * of its keep flag (a kept line may span pruned blocks); only LINE STARTS
-  * are subject to pruning.
-  */
-final class FourMcPrunedLineIterator(
-    in: McInput,
-    index: FourMcIndex,
-    splitStart: Long,
-    splitEnd: Long,
-    keep: Array[Boolean],
-    maxLineLen: Int = 64 * 1024 * 1024
-) extends McLineStream {
-  private val stats = index.stats.getOrElse(
-    throw new IllegalArgumentException("pruned iterator requires block stats"))
-  private val alignedStart = index.nextBlockAt(math.max(splitStart, FourMc.HeaderLen.toLong))
-  private val alignedEnd =
-    if (splitEnd >= index.eosPos) index.eosPos else index.nextBlockAt(splitEnd)
-  private val ownedStartOrd = index.ordAt(alignedStart)
-  private val ownedEndOrd = index.ordAt(alignedEnd) // exclusive
-
-  /** Blocks decompressed, continuation blocks included. */
-  var blocksRead: Long = 0L
-
-  private var block: Array[Byte] = _
-  private var blockPos = 0
-  private var curOrd = -1
-  private var blockFileOff = 0L
-  private var finished = false
-  private var started = false
-  private var nextLine: (Long, Array[Byte]) = _
-
-  private def decompress(ord: Int): Boolean = {
-    if (ord >= index.numBlocks) { block = null; return false }
-    val off = index.blockOffsets(ord)
-    if (off >= index.eosPos) { block = null; return false }
-    val (data, _) = FourMcReader.readBlock(in, index.zstd, off)
-    if (data == null) { block = null; return false }
-    block = data; blockPos = 0; curOrd = ord; blockFileOff = off
-    blocksRead += 1
-    true
-  }
-
-  /** Position at the first owned line of the first kept block at/after
-    * `fromOrd`; false when no such line remains in the owned range.
-    */
-  private def jump(fromOrd: Int): Boolean = {
-    var o = math.max(fromOrd, ownedStartOrd)
-    while (o < ownedEndOrd) {
-      val flo = stats.firstOwnedStart(o)
-      if (keep(o) && flo != BlockStats.NoOwnedLines) {
-        if (flo >= 0) {
-          if (!decompress(o)) return false
-          blockPos = flo
-        } else { // FirstAtNextBlock: o's only owned line starts at (o+1, 0)
-          if (!decompress(o + 1)) return false
-        }
-        return true
-      }
-      o += 1
-    }
-    false
-  }
-
-  // zero-copy slice of the current line (valid until the next read)
-  var sliceOff: Long = 0L
-  var sliceBytes: Array[Byte] = _
-  var sliceStart: Int = 0
-  var sliceEnd: Int = 0
-
-  /** Same multi-block line scan as the classic iterator; continuation blocks
-    * are fetched sequentially (never skipped). Sets the slice fields; false
-    * at EOF.
-    */
-  private def readLineSlice(): Boolean = {
-    if (blockPos >= block.length && !decompress(curOrd + 1)) return false
-    val startOff = blockFileOff
-    var out: java.io.ByteArrayOutputStream = null
-    while (true) {
-      val i = graft.sources.SwarScan.indexOf(block, blockPos, block.length, '\n'.toByte)
-      if (i < block.length) {
-        var end = i
-        if (out == null) {
-          if (end > blockPos && block(end - 1) == '\r') end -= 1
-          sliceOff = startOff; sliceBytes = block; sliceStart = blockPos; sliceEnd = end
-        } else {
-          out.write(block, blockPos, end - blockPos)
-          val a = out.toByteArray
-          val len = if (a.nonEmpty && a(a.length - 1) == '\r') a.length - 1 else a.length
-          sliceOff = startOff; sliceBytes = a; sliceStart = 0; sliceEnd = len
-        }
-        blockPos = i + 1
-        return true
-      } else {
-        if (out == null) out = new java.io.ByteArrayOutputStream(block.length - blockPos + 64)
-        out.write(block, blockPos, block.length - blockPos)
-        if (out.size() > maxLineLen) throw new IOException("4mc line exceeds max length")
-        blockPos = block.length
-        if (!decompress(curOrd + 1)) {
-          val a = out.toByteArray
-          if (a.isEmpty) return false
-          val len = if (a(a.length - 1) == '\r') a.length - 1 else a.length
-          sliceOff = startOff; sliceBytes = a; sliceStart = 0; sliceEnd = len
-          return true
-        }
-      }
-    }
-    false // unreachable
-  }
-
-  private def readLine(): (Long, Array[Byte]) =
-    if (!readLineSlice()) null
-    else if (sliceStart == 0 && sliceEnd == sliceBytes.length) (sliceOff, sliceBytes)
+    if (sliceStart == 0 && sliceEnd == sliceBytes.length) (sliceOff, sliceBytes)
     else (sliceOff, java.util.Arrays.copyOfRange(sliceBytes, sliceStart, sliceEnd))
-
-  /** Shared pruning step for both access modes: position the stream at the
-    * next emittable line start; false when the owned range is exhausted.
-    */
-  private def advancePos(): Boolean = {
-    if (!started) {
-      started = true
-      return jump(ownedStartOrd)
-    }
-    // candidate next line starts at (curOrd, blockPos); owner = block holding
-    // the byte before it (exhausted block ⇒ next start is (curOrd+1, 0))
-    val owner =
-      if (blockPos >= block.length) curOrd
-      else if (blockPos == 0) math.max(curOrd - 1, 0)
-      else curOrd
-    if (owner >= ownedEndOrd) return false
-    if (owner < ownedStartOrd || !keep(owner)) {
-      if (!jump(owner + 1)) return false
-    }
-    true
   }
 
-  private def advance(): Unit = {
-    if (finished) return
-    if (!advancePos()) { finished = true; nextLine = null; return }
-    nextLine = readLine()
-    if (nextLine == null) finished = true
-  }
-
-  /** Zero-copy advance — see [[McLineStream]]. */
-  def advanceSlice(): Boolean = {
-    if (finished) return false
-    if (!advancePos() || !readLineSlice()) { finished = true; return false }
-    true
-  }
-
-  private var primed = false
-  override def hasNext: Boolean = {
-    if (!primed) { advance(); primed = true }
-    !finished && nextLine != null
-  }
-  override def next(): (Long, Array[Byte]) = {
-    if (!hasNext) throw new NoSuchElementException
-    val r = nextLine
-    primed = false
-    r
-  }
+  // last in the body: the skip read sets fields initialized above
+  if (!finished && mask == null && splitStart != 0) skipLine()
 }

@@ -474,15 +474,15 @@ object Dedup {
   /** The original column-only formulation — the equivalence baseline for
     * [[graft.functions.MinHashSignaturesExpr]] and
     * [[graft.functions.ShingleHashesExpr]] (and the shape the DuckDB oracle
-    * replays).
+    * replays). A null text has a null `sig`, as in [[minHashSignatures]].
     */
   private[graft] def minHashSignaturesColumns(docs: DataFrame, idCol: String, textCol: String,
                                               numHashes: Int = 64): DataFrame = {
-    val sig = array(
+    val sig = when(col("_hs").isNotNull, array(
       (0 until numHashes).map { i =>
         array_min(transform(col("_hs"), h => (lit(minHashCoefA(i)) * h + lit(minHashCoefB(i))) % MinHashP))
       }: _*
-    )
+    ))
     docs
       .select(col(idCol).as("doc"), TextAnalysis.tokens(col(textCol)).as("_toks"))
       .select(col("doc"), array_distinct(shinglesFromTokens(col("_toks"))).as("shingles"))

@@ -388,17 +388,6 @@ object FourMcFileFormat {
   // always correct, so a racing clear only costs a cache miss.
   private val indexCache = new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), FourMcIndex]()
 
-  /** Ordinals of the blocks one split owns: those whose headers start
-    * inside the split (the alignment rule every reader shares), so any
-    * partition of the byte range partitions the blocks exactly.
-    */
-  private[sources] def ownedBlocks(index: FourMcIndex, file: PartitionedFile): Range = {
-    val alignedStart = index.nextBlockAt(math.max(file.start, FourMc.HeaderLen.toLong))
-    val splitEnd = file.start + file.length
-    val alignedEnd = if (splitEnd >= index.eosPos) index.eosPos else index.nextBlockAt(splitEnd)
-    index.ordAt(alignedStart) until index.ordAt(alignedEnd)
-  }
-
   /** Per-block verdicts ([[BlockVerdict]]) of one csv file: the one block
     * plan every 4mc csv reader follows (the batch reader, the footer-stats
     * relation, and the driver census of both).
@@ -411,8 +400,9 @@ object FourMcFileFormat {
     *  - Skipped where the stats and blooms refute the pushed `filters` or
     *    the runtime key set (`(column, keys, hashed)`,
     *    [[RuntimeKeyFilter]]). A corrupt-block-skipping read
-    *    (`ignoreCorruptBlocks`) skips nothing: the rows layout's pruned
-    *    line iterator cannot resync past a corrupt block.
+    *    (`ignoreCorruptBlocks`) skips nothing: the rows layout's one line
+    *    reader, [[graft.format.FourMcLineIterator]], resyncs past a corrupt
+    *    block only in a read with no keep mask.
     *  - Certain where the zone maps prove every owned line passes every
     *    pushed filter (vacuously, when there is none): decoded with the
     *    per-row evaluation elided.
@@ -477,9 +467,9 @@ object FourMcFileFormat {
   }
 
   /** The csv-payload line stream for one split of a rows-layout file: the
-    * lines of the blocks whose `verdicts` decode, scan metrics wired
-    * (every block decompressed counts in `blocksRead`). With no block left
-    * out, the plain line iterator reads the split.
+    * lines owned by the blocks whose `verdicts` decode, scan metrics wired
+    * (every block decompressed counts in `blocksRead`). A file with stats
+    * is read through its keep mask; a permissive read never skips a block.
     */
   private[sources] def csvLines(
       in: McInput,
@@ -488,21 +478,15 @@ object FourMcFileFormat {
       verdicts: Array[Byte],
       permissive: Boolean,
       read: FourMcVectorizedReader.FileRead
-  ): McLineStream = {
-    val keep = verdicts.map(BlockVerdict.decodes)
-    if (keep.contains(false)) {
-      val it = new FourMcPrunedLineIterator(in, index, file.start, file.start + file.length, keep)
-      read.onFinish(FourMcScanMetrics.blocksRead.add(it.blocksRead))
-      it
-    } else {
-      val it = new FourMcLineIterator(in, index, file.start, file.start + file.length,
-        permissive = permissive)
-      read.onFinish {
-        FourMcScanMetrics.blocksRead.add(it.blocksRead)
-        if (permissive) FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped)
-      }
-      it
+  ): FourMcLineIterator = {
+    val keep = Option.when(index.stats.isDefined && !permissive)(verdicts.map(BlockVerdict.decodes))
+    val it = new FourMcLineIterator(in, index, file.start, file.start + file.length,
+      permissive = permissive, keep = keep)
+    read.onFinish {
+      FourMcScanMetrics.blocksRead.add(it.blocksRead)
+      if (permissive) FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped)
     }
+    it
   }
 
   // Driver-side broadcast cache for runtime key filters, keyed by the full
@@ -641,13 +625,12 @@ final class FourMcRecordIterator(
     splitEnd: Long,
     permissive: Boolean = false
 ) extends Iterator[(Long, Array[Byte])] {
-  private val alignedStart = index.nextBlockAt(math.max(splitStart, FourMc.HeaderLen.toLong))
-  private val alignedEnd =
-    if (splitEnd >= index.eosPos) index.eosPos else index.nextBlockAt(splitEnd)
-  private var pos = alignedStart
+  private val owned = index.ownedBlocks(splitStart, splitEnd)
+  private val alignedEnd = index.blockStart(owned.end)
+  private var pos = index.blockStart(owned.start)
   private var block: Array[Byte] = _
   private var blockOff = 0
-  private var blockFileOff = alignedStart
+  private var blockFileOff = pos
 
   /** Corrupt blocks skipped under `permissive` — simpler than the line
     * iterator's recovery because binary records never span blocks: dropping

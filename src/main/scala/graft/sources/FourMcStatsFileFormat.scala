@@ -37,7 +37,7 @@ import scala.jdk.CollectionConverters._
   * Split semantics are identical to the data scan: a block's stats row is
   * emitted by the split that owns the block header, so any partition of the
   * byte range partitions the aggregate inputs exactly (same ownership rule
-  * as [[FourMcFileFormat.ownedBlocks]]). Footer reads stay task-side —
+  * as [[graft.format.FourMcIndex.ownedBlocks]]). Footer reads stay task-side —
   * planning this relation lists files only — with one bounded exception:
   * when the file list and the decode load are small,
   * [[graft.plans.McDriverScanExec]] reads the footers while planning
@@ -461,7 +461,8 @@ class FourMcStatsFileFormat(
 
         import FourMcFileFormat.BlockVerdict._
         val verdicts = classify(index)
-        val answered = FourMcFileFormat.ownedBlocks(index, file).filter(verdicts(_) == Answered)
+        val answered =
+          index.ownedBlocks(file.start, file.start + file.length).filter(verdicts(_) == Answered)
         FourMcScanMetrics.statsAggBlocks.add(answered.length)
         val synthesized: Iterator[InternalRow] = index.stats match {
           case Some(st) =>

@@ -252,7 +252,7 @@ object FourMcVectorizedReader {
 
     (in, index, file, verdicts, read) => {
       import FourMcFileFormat.BlockVerdict._
-      val owned = FourMcFileFormat.ownedBlocks(index, file)
+      val owned = index.ownedBlocks(file.start, file.start + file.length)
       // the metric is pruning effectiveness: a refuted block that owns no
       // line was never going to be decompressed by this split
       FourMcScanMetrics.blocksSkipped.add(

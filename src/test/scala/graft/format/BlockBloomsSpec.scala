@@ -121,7 +121,7 @@ class BlockBloomsSpec extends AnyFunSuite {
       schema
     )
     // explicit ROW layout: the soundness check walks the file with the
-    // row-path FourMcPrunedLineIterator (csv defaults to columnar since r15)
+    // row-path FourMcLineIterator (csv defaults to columnar since r15)
     df.coalesce(1).write.format("4mc").option("payload", "csv")
       .option("layout", "rows").option("bloomColumns", "key").save(dir)
   }
@@ -181,7 +181,7 @@ class BlockBloomsSpec extends AnyFunSuite {
       val withBloom = McStatsPruning.keepBlocksForKeys("key", keys, schema, st, idx.blooms).get
       assert(withBloom.count(identity) < idx.numBlocks, "blooms must refute some blocks")
       // soundness: a scan pruned to the kept blocks still yields every key
-      val pruned = new FourMcPrunedLineIterator(in, idx, 0L, Long.MaxValue, withBloom)
+      val pruned = new FourMcLineIterator(in, idx, 0L, Long.MaxValue, keep = Some(withBloom))
       val found = scala.collection.mutable.Set.empty[Long]
       while (pruned.hasNext) {
         val (_, bytes) = pruned.next()

@@ -2,13 +2,14 @@ package graft.format
 
 import org.scalacheck.{Arbitrary, Gen}
 import org.scalacheck.rng.Seed
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.ByteArrayOutputStream
 import java.nio.file.Files
 
 /** Property-based format tests (SURVEY §5.2/§5.3): arbitrary payloads
   * round-trip under every codec, and line reads are split-invariant for
-  * arbitrary split points. Generators are driven manually with fixed seeds
+  * arbitrary split points, with or without a block keep mask. Generators are driven manually with fixed seeds
   * (the scalatest-scalacheck bridge is not on the offline classpath).
   */
 class FormatPropertySpec extends AnyFunSuite {
@@ -140,5 +141,85 @@ class FormatPropertySpec extends AnyFunSuite {
         } finally in.close()
       }
     } finally Files.delete(p)
+  }
+
+  test("property: a keep mask emits each line of a kept block exactly once " +
+       "under arbitrary split points") {
+    // Rows-layout file with stats and 4 KiB blocks. Lines longer than two
+    // blocks make blocks that own no line; flushing right after such a line
+    // makes a block whose first owned line starts in the next block.
+    val rnd = new scala.util.Random(13)
+    val p = Files.createTempFile("propmask", ".4mc")
+    val w = new FourMcWriter(Files.newOutputStream(p), McCodec.Lz4Fast, blockBytes = 4096)
+    val stats = new McStatsBuilder(StructType(Seq(StructField("id", LongType))))
+    w.statsProvider = n => stats.serialize(n)
+    val lineStarts = new Array[Long](6000) // offsets in the uncompressed stream
+    var streamOff = 0L
+    val lines = lineStarts.indices.map { i =>
+      val giant = rnd.nextInt(300) == 0
+      val line = s"m$i-" + (if (giant) "g" * 9000 else rnd.alphanumeric.take(rnd.nextInt(40)).mkString)
+      stats.startLine(w.blockCount, w.pendingBytes)
+      stats.observeLong(0, i.toLong)
+      val bytes = (line + "\n").getBytes("UTF-8")
+      w.write(bytes, 0, bytes.length)
+      lineStarts(i) = streamOff
+      streamOff += bytes.length
+      if (giant && rnd.nextBoolean()) w.flushBlock()
+      line
+    }
+    w.close()
+    val fileLen = Files.size(p)
+    val in = McInput.local(p)
+    try {
+      val idx = FourMcReader.readIndex(in)
+      val st = idx.stats.get
+      assert(st.firstOwnedStart.contains(BlockStats.NoOwnedLines) &&
+        st.firstOwnedStart.contains(BlockStats.FirstAtNextBlock),
+        "the fixture must hold blocks that own no line and blocks whose first line is in the next")
+      // a line's owner is the block holding the byte before its first byte
+      val blockEnds = idx.blockOffsets.indices.map(b => FourMcReader.readBlock(in, idx.zstd,
+        idx.blockOffsets(b))._1.length.toLong).scanLeft(0L)(_ + _).tail
+      val owner = lineStarts.map(s => blockEnds.indexWhere(_ > math.max(s - 1, 0L)))
+      def read(bounds: List[Long], keep: Option[Array[Boolean]]): List[String] =
+        bounds.sliding(2).flatMap { case List(s, e) =>
+          new FourMcLineIterator(in, idx, s, e, keep = keep).map(t => new String(t._2, "UTF-8"))
+        }.toList
+      val boundsGen: Gen[List[Long]] =
+        Gen.choose(1, 6).flatMap(k => Gen.listOfN(k, Gen.choose(0L, fileLen)))
+      val maskGen: Gen[Array[Boolean]] = Gen.oneOf(0.1, 0.5, 0.9).flatMap(pKeep =>
+        Gen.containerOfN[Array, Boolean](idx.numBlocks, Gen.prob(pKeep)))
+      samples(Gen.zip(boundsGen, maskGen), 40).foreach { case (cuts, keep) =>
+        val bounds = (0L :: fileLen :: cuts).distinct.sorted
+        val want = lines.indices.filter(i => keep(owner(i))).map(lines)
+        assert(read(bounds, Some(keep)).sorted == want.sorted,
+          s"bounds=$bounds kept=${keep.count(identity)}/${keep.length}")
+      }
+      val all = Some(Array.fill(idx.numBlocks)(true))
+      assert(read(List(0L, fileLen), all) == read(List(0L, fileLen), None),
+        "an all-true mask must read what the unmasked iterator reads")
+      samples(boundsGen, 20).foreach { cuts =>
+        val bounds = (0L :: fileLen :: cuts).distinct.sorted
+        assert(read(bounds, all).sorted == read(bounds, None).sorted, s"bounds=$bounds")
+      }
+    } finally { in.close(); Files.delete(p) }
+  }
+
+  test("a stats segment whose block count disagrees with the footer index is refused") {
+    val p = Files.createTempFile("propstats", ".4mc")
+    val w = new FourMcWriter(Files.newOutputStream(p), McCodec.Lz4Fast, blockBytes = 4096)
+    val stats = new McStatsBuilder(StructType(Seq(StructField("id", LongType))))
+    w.statsProvider = n => stats.serialize(n + 1)
+    (0 until 2000).foreach { i =>
+      stats.startLine(w.blockCount, w.pendingBytes)
+      stats.observeLong(0, i.toLong)
+      val b = s"$i\n".getBytes("UTF-8")
+      w.write(b, 0, b.length)
+    }
+    w.close()
+    val in = McInput.local(p)
+    try {
+      val e = intercept[java.io.IOException](FourMcReader.readIndex(in))
+      assert(e.getMessage.contains("stats segment covers"), e.getMessage)
+    } finally { in.close(); Files.delete(p) }
   }
 }

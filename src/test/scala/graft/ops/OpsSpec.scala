@@ -495,11 +495,9 @@ class OpsSpec extends AnyFunSuite {
     val fused = sigs(Dedup.minHashSignatures(in, "doc_id", "text"))
     val columns = sigs(Dedup.minHashSignaturesColumns(in, "doc_id", "text"))
     assert(fused.size == in.count() && fused.keySet == columns.keySet)
-    // a null text has null shingles on both; its column-formulation sig is
-    // 64 nulls (array_min of a null array, per entry), the fused sig null
-    val diff = fused.keys.filter(d => d != 900006L && fused(d) != columns(d))
+    val diff = fused.keys.filter(d => fused(d) != columns(d))
     assert(diff.isEmpty, s"fused signatures or shingles differ for docs ${diff.take(5).mkString(", ")}")
-    assert(fused(900006L) == ((None, None)) && columns(900006L)._2.isEmpty)
+    assert(fused(900006L) == ((None, None)), "a null text has a null sig and null shingles")
     assert(fused(900001L)._2.get.length == 3 && fused(900008L)._2.get.length == 1)
     assert(fused(900004L)._2.get.length == 1 && fused(900005L)._2.get.length == 1)
   }

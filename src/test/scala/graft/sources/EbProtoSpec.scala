@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.format.{EbBlocks, FourMcWriter, McCodec}
+import graft.format.{EbBlocks, FourMcEbBlockIterator, FourMcReader, FourMcWriter, McCodec, McInput}
 import graft.functions.{ProtoFunctions, ProtoWire}
 
 import org.apache.spark.sql.SparkSession
@@ -28,6 +28,27 @@ class EbProtoSpec extends AnyFunSuite {
     val r = new scala.util.Random(i)
     ProtoWire.encode(userFields,
       Seq(s"user-$i-${r.alphanumeric.take(48).mkString}", i.toLong, Seq(s"t${i % 7}")))
+  }
+
+  test("an EB length that claims more than the stream holds fails without allocating it") {
+    val f = Files.createTempFile("eblie", ".4mc")
+    val w = new FourMcWriter(Files.newOutputStream(f), McCodec.Lz4Fast)
+    val len = new ProtoWire.Writer
+    len.writeVarint(200L << 20) // under the 256 MiB cap; the stream holds 1 000 bytes
+    val framed = EbBlocks.DefaultMarker ++ len.toBytes ++ Array.fill[Byte](1000)(7)
+    w.write(framed, 0, framed.length)
+    w.close()
+    val in = McInput.local(f)
+    try {
+      val idx = FourMcReader.readIndex(in)
+      val mx = java.lang.management.ManagementFactory.getThreadMXBean
+        .asInstanceOf[com.sun.management.ThreadMXBean]
+      val before = mx.getCurrentThreadAllocatedBytes
+      val e = intercept[java.io.IOException](new FourMcEbBlockIterator(in, idx, 0L, idx.fileLen).hasNext)
+      val allocated = mx.getCurrentThreadAllocatedBytes - before
+      assert(e.getMessage.contains("truncated"), e.getMessage)
+      assert(allocated < (16L << 20), s"the failing read allocated $allocated bytes")
+    } finally { in.close(); Files.delete(f) }
   }
 
   test("a pre-existing EB-framed 4mc file decodes blob-per-row through proto_struct") {
