@@ -40,11 +40,17 @@ final class FourMcEbBlockIterator(
   private var nextHeaderPos = alignedStart
   private var lastByteFileOff = alignedStart
 
+  /** Blocks decompressed, the ones past the split an EB block runs into
+    * included.
+    */
+  var blocksRead: Long = 0L
+
   private def loadBlock(): Boolean = {
     if (nextHeaderPos >= index.eosPos) return false
     val (d, nxt) = FourMcReader.readBlock(in, index.zstd, nextHeaderPos)
     if (d == null) return false
     blk = d; off = 0; blkFileOff = nextHeaderPos; nextHeaderPos = nxt
+    blocksRead += 1
     true
   }
 

@@ -676,8 +676,7 @@ case class PqLutExpr(
 case class MinHashSignaturesExpr(
     child: Expression,
     coefA: Array[Long],
-    coefB: Array[Long],
-    p: Long
+    coefB: Array[Long]
 ) extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
   require(coefA.length == coefB.length, "coefficient arrays must align")
   override def prettyName: String = "minhash_signatures"
@@ -707,7 +706,7 @@ case class MinHashSignaturesExpr(
       val h = a.getLong(j)
       var i = 0
       while (i < k) {
-        val x = (coefA(i) * h + coefB(i)) % p
+        val x = (coefA(i) * h + coefB(i)) % MinHashSignaturesExpr.P
         if (x < mins(i)) mins(i) = x
         i += 1
       }
@@ -733,7 +732,7 @@ case class MinHashSignaturesExpr(
          |  for (int $j = 0; $j < $n; $j++) {
          |    long h = $a.getLong($j);
          |    for (int $i = 0; $i < $k; $i++) {
-         |      long x = ($aRef[$i] * h + $bRef[$i]) % ${p}L;
+         |      long x = ($aRef[$i] * h + $bRef[$i]) % ${MinHashSignaturesExpr.P}L;
          |      if (x < $mins[$i]) $mins[$i] = x;
          |    }
          |  }
@@ -744,6 +743,14 @@ case class MinHashSignaturesExpr(
   }
 
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object MinHashSignaturesExpr {
+  /** The modulus 2^31 - 1 of every permutation, a literal in both the
+    * interpreted and the generated loop, so the JIT turns the division
+    * into a multiply.
+    */
+  final val P = 2147483647L
 }
 
 object VectorFunctions {

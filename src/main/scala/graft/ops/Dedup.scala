@@ -23,19 +23,25 @@ import org.apache.spark.storage.StorageLevel
   *   - SimHash: 60-bit md5-derived signature, oracle-checkable.
   *
   * The two pair ops (n-gram Jaccard and MinHash-LSH) finish small inputs on
-  * the driver. Each makes one pass over the corpus into a checkpoint (the
-  * postings, or the signatures), and that pass also encodes the rows as
-  * primitive longs: each partition counts its longs and sends them back
-  * while they fit its share of [[DriverMaxLongs]] (4 Mi longs, 32 MiB), so
-  * the driver never holds more. Within the bound, and with an integral id
-  * column, the op ends on the driver: an inverted index with the AllPairs
-  * prefix and length filters, or the LSH banding, then exact verification.
-  * The result is a local relation with the distributed plan's schema and
-  * its values, so no join stage runs. Over the bound, for any other id
-  * type, or when the verified pairs would pass the same bound, the
-  * distributed plan runs as before, from the same checkpoint.
-  * [[Spans.dupSpanCoverage]] takes the same path choice
-  * ([[finishOnDriver]]) over its own checkpoint.
+  * the driver. Each makes one pass over the corpus (the per-doc shingle
+  * sets, or the signatures) that also encodes the rows as primitive longs
+  * ([[corpusPass]]). Over a small 4mc corpus (at most
+  * [[DriverReadMaxLines]] lines in at most 32 files, each with a stats
+  * segment) the pass is a driver read
+  * ([[graft.plans.McDriverScan.read]]): no Spark job, and the encoding
+  * stops once it passes [[DriverMaxLongs]] (4 Mi longs, 32 MiB). Any other
+  * corpus makes the pass into a checkpoint, whose partitions count their
+  * longs and send them back while they fit their share of the same bound,
+  * so the driver never holds more. Within the bound, and with an integral
+  * id column, the op ends on the driver: an inverted index with the
+  * AllPairs prefix and length filters, or the LSH banding, then exact
+  * verification. The result is a local relation with the distributed
+  * plan's schema and its values, so no join stage runs. Over the bound,
+  * for any other id type, or when the verified pairs would pass the same
+  * bound, the distributed plan runs as before, from a checkpoint of the
+  * pass (for the n-gram op, of the postings [[shinglePostings]] gives, so
+  * its distributed plan is unchanged). [[Spans.dupSpanCoverage]] makes the same corpus pass, and
+  * [[keepCanonical]]'s sizing pass tries the same driver read.
   */
 object Dedup {
 
@@ -119,6 +125,17 @@ object Dedup {
     }
   }
 
+  /** (doc, ws) per doc row: the distinct keys of its word 3-shingles, the
+    * postings [[shinglePostings]] gives one row each. A Project over the
+    * docs, so a driver read can take it ([[corpusPass]]). The postings are
+    * not an explode over `ws`: Spark infers a `size(ws) > 0` filter for a
+    * generator over a column and pushes it below this projection, which
+    * would tokenize and hash every row twice.
+    */
+  private def shingleSets(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc"),
+      array_distinct(TextAnalysis.windowHashes(TextAnalysis.tokens(col(textCol)), 3)).as("ws"))
+
   /** Expected self-join fanout per posting: E[df of the shingle holding a
     * random posting] = sum(df^2)/sum(df). Below ~64 the naive postings join
     * is cheaper than prefix filtering's extra shuffles; above it the
@@ -176,13 +193,15 @@ object Dedup {
   /** [[ngramJaccardPairs]] with the driver path's bound as a parameter. */
   private[ops] def ngramJaccardPairsWith(docs: DataFrame, idCol: String, textCol: String, threshold: Double,
                                          maxDocFreq: Long, driverMaxLongs: Long): DataFrame = {
-    val rawPlan = shinglePostings(docs, idCol, textCol)
-    val enc = postingLongs(rawPlan.schema)
-    val (raw, parts) = sizedCheckpoint(rawPlan, enc, driverMaxLongs)
+    // the driver read takes the per-doc sets; a checkpoint holds the raw
+    // postings every distributed consumer reads
+    val sets = shingleSets(docs, idCol, textCol)
+    val posts = shinglePostings(docs, idCol, textCol)
     val cap = if (maxDocFreq <= 0) Long.MaxValue else maxDocFreq
-    finishOnDriver(log, "[ngram]", raw, enc, parts, driverMaxLongs)(pairsOnDriver(raw, driverMaxLongs) {
-      (chunks, out) => ngramPairsOnDriver(chunks, threshold, cap, out)
-    }).getOrElse(ngramJaccardFromRaw(raw, threshold, maxDocFreq))
+    corpusPass(log, "[ngram]",
+      CorpusPass(sets, shingleSetLongs(sets.schema), posts, postingLongs(posts.schema)), driverMaxLongs)(
+      pairsOnDriver(sets, driverMaxLongs) { (chunks, out) => ngramPairsOnDriver(chunks, threshold, cap, out) }
+    )(ngramJaccardFromRaw(_, threshold, maxDocFreq))
   }
 
   /** The distributed plan of [[ngramJaccardPairs]] over the checkpointed
@@ -431,9 +450,10 @@ object Dedup {
   /** Permutation-family modulus (Mersenne prime 2^31-1) and deterministic
     * LCG-derived coefficients: a_i*h + b_i stays below 2^63 under ANSI mode,
     * and both constants are plain integer literals the DuckDB oracle can
-    * replay verbatim.
+    * replay verbatim. The modulus is the one
+    * [[graft.functions.MinHashSignaturesExpr]] divides by.
     */
-  val MinHashP = 2147483647L
+  val MinHashP: Long = graft.functions.MinHashSignaturesExpr.P
 
   def minHashCoefA(i: Int): Long = {
     val a = (1103515245L * (i + 1) + 12345L) % MinHashP
@@ -466,8 +486,7 @@ object Dedup {
     val sig = column(graft.functions.MinHashSignaturesExpr(
       expression(col("_hs")),
       Array.tabulate(numHashes)(minHashCoefA),
-      Array.tabulate(numHashes)(minHashCoefB),
-      MinHashP))
+      Array.tabulate(numHashes)(minHashCoefB)))
     withBaseHashes(docs, idCol, textCol).select(col("doc"), sig.as("sig"), col("shingles"))
   }
 
@@ -593,11 +612,10 @@ object Dedup {
     // while checkpoint blocks are dropped by the ContextCleaner as soon as
     // the result plan is unreferenced.
     val sigsPlan = minHashSignatures(docs, idCol, textCol, numHashes)
-    val enc = signatureLongs(sigsPlan.schema)
-    val (sigs, parts) = sizedCheckpoint(sigsPlan, enc, driverMaxLongs)
-    finishOnDriver(log, "[minhash]", sigs, enc, parts, driverMaxLongs)(pairsOnDriver(sigs, driverMaxLongs) {
-      (chunks, out) => minHashPairsOnDriver(chunks, threshold, numHashes / rowsPerBand, rowsPerBand, out)
-    }).getOrElse(lshPairsFromSigs(sigs, threshold, numHashes, rowsPerBand))
+    corpusPass(log, "[minhash]", CorpusPass(sigsPlan, signatureLongs(sigsPlan.schema)), driverMaxLongs)(
+      pairsOnDriver(sigsPlan, driverMaxLongs) {
+        (chunks, out) => minHashPairsOnDriver(chunks, threshold, numHashes / rowsPerBand, rowsPerBand, out)
+      })(lshPairsFromSigs(_, threshold, numHashes, rowsPerBand))
   }
 
   /** The distributed plan of [[nearDupPairs]] over checkpointed signatures. */
@@ -612,15 +630,31 @@ object Dedup {
   // ------------------------------------------ driver path of the pair ops
 
   /** The driver path's bound, in collected longs: 4 Mi longs, 32 MiB of
-    * primitive arrays. The checkpoint's own pass counts the longs its rows
-    * encode to and sends a partition's longs only within its share of the
-    * bound; the verified pairs (3 longs each) are held to it too, so driver
-    * memory stays within a small multiple of it on any input. On a 4-vCPU VM
+    * primitive arrays. A driver read stops encoding past it; a checkpoint's
+    * own pass counts the longs its rows encode to and sends a partition's
+    * longs only within its share of the bound; the verified pairs (3 longs
+    * each) are held to it too, so driver memory stays within a small
+    * multiple of it on any input. On a 4-vCPU VM
     * the driver path beat the distributed plan at 1 k, 8 k and 32 k docs
     * (the 32 k signatures, forced past the bound, too), so memory, not a
     * crossover, sets it.
     */
   private[ops] val DriverMaxLongs: Long = 4L << 20
+
+  /** The most lines an op's corpus pass reads on the driver
+    * ([[corpusPass]]), set by the crossover of the driver read against the
+    * checkpoint job: measured per op over seeded 4mz corpora (zstd-3
+    * columnar, 3 files) on a 4-vCPU VM under `local[3]`, as driver/job ms
+    * at 1 k, 2 k, 4 k and 16 k docs: MinHash pairs 97/90, 136/97, 204/155,
+    * 736/410; n-gram pairs 54/65, 65/75, 146/113, 494/331; span coverage
+    * 54/67, 71/75, 125/100, 432/249; the canonical sizing pass 28/45,
+    * 31/39, 46/49, 120/73. The read runs on one thread against the job's
+    * three, so the hashing ops cross first. Summed over the four ops it
+    * wins at 1 k (233/267) and loses at 2 k (303/284); the bound sits
+    * under the interpolated crossover, about 1.6 k, and far under the
+    * query strategy's [[graft.plans.McDriverScanStrategy.MaxDecodedLines]].
+    */
+  private[ops] val DriverReadMaxLines: Long = 1536
 
   /** A partition's encoded longs: all counted, and kept while there are at
     * most `keep` of them (`result` is null past that).
@@ -637,11 +671,30 @@ object Dedup {
     def result: Array[Long] = if (b == null) null else b.result()
   }
 
-  /** Writes a partition's checkpoint rows as longs. The same function sizes
-    * the checkpoint and fills the arrays that cross to the driver, so the
-    * bound is checked on exactly what crosses.
+  /** Writes a corpus-pass row as longs. The same function sizes the pass
+    * and fills the arrays the driver solves over, so the bound is checked
+    * on exactly what the driver holds.
     */
-  private[ops] type Encode = (Iterator[InternalRow], EncodedLongs) => Unit
+  private[ops] type Encode = (InternalRow, EncodedLongs) => Unit
+
+  /** Writes a partition of a corpus pass's checkpoint as longs. */
+  private type EncodeRows = (Iterator[InternalRow], EncodedLongs) => Unit
+
+  /** An op's corpus pass: `plan` (id column `doc`), a chain of Project and
+    * Filter over the docs that a driver read can take, with `row`, its
+    * rows' encoding (None for a non-integral id); and `ck`, what the pass
+    * checkpoints when the read is refused or the distributed plan runs,
+    * with `rows`, a partition's encoding into the longs `row` gives for
+    * the same docs.
+    */
+  private[ops] final case class CorpusPass(plan: DataFrame, row: Option[Encode], ck: DataFrame,
+                                           rows: Option[EncodeRows])
+
+  private[ops] object CorpusPass {
+    /** A pass that checkpoints its own plan. */
+    def apply(plan: DataFrame, row: Option[Encode]): CorpusPass =
+      CorpusPass(plan, row, plan, row.map(write => (rows, out) => rows.foreach(write(_, out))))
+  }
 
   /** The doc id as a long, for an integral id type. */
   private[ops] def integralId(dt: DataType): Option[(InternalRow, Int) => Long] = dt match {
@@ -668,20 +721,33 @@ object Dedup {
   private def signatureLongs(schema: StructType): Option[Encode] =
     integralId(schema("doc").dataType).map { id =>
       val (d, s, h) = (schema.fieldIndex("doc"), schema.fieldIndex("sig"), schema.fieldIndex("shingles"))
-      (rows, out) => rows.foreach { r =>
+      (r, out) =>
         if (!r.isNullAt(d) && !r.isNullAt(s) && !r.isNullAt(h)) {
           out += id(r, d)
           putArray(r.getArray(s), out)
           putArray(r.getArray(h), out)
         }
-      }
+    }
+
+  /** Shingle-set rows (doc, ws) as runs doc, |ws|, ws…: the postings of a
+    * doc row, as [[postingLongs]] writes them. A null doc id never pairs; a
+    * null text, or one with no shingle, has no postings.
+    */
+  private def shingleSetLongs(schema: StructType): Option[Encode] =
+    integralId(schema("doc").dataType).map { id =>
+      val (d, w) = (schema.fieldIndex("doc"), schema.fieldIndex("ws"))
+      (r, out) =>
+        if (!r.isNullAt(d) && !r.isNullAt(w) && r.getArray(w).numElements() > 0) {
+          out += id(r, d)
+          putArray(r.getArray(w), out)
+        }
     }
 
   /** Posting rows (doc, w) as runs doc, n, w1…wn over consecutive rows of
     * one doc (a doc's postings are adjacent: they come from one exploded
     * row). A null doc id never pairs; a null text has no postings.
     */
-  private def postingLongs(schema: StructType): Option[Encode] =
+  private def postingLongs(schema: StructType): Option[EncodeRows] =
     integralId(schema("doc").dataType).map { id =>
       val (d, w) = (schema.fieldIndex("doc"), schema.fieldIndex("w"))
       (rows, out) => {
@@ -708,50 +774,71 @@ object Dedup {
       }
     }
 
-  /** `plan` checkpointed locally. With an encoding, the checkpoint's pass
-    * also counts each partition's encoded longs and returns them while they
-    * fit the partition's share of `maxLongs`, so the driver never holds
-    * more than that: (count, longs or null) per partition.
+  /** `plan` checkpointed locally; the checkpoint's pass also counts each
+    * partition's encoded longs and returns them while they fit the
+    * partition's share of `maxLongs`, so the driver never holds more than
+    * that: (count, longs or null) per partition.
     */
-  private[ops] def sizedCheckpoint(plan: DataFrame, enc: Option[Encode], maxLongs: Long)
-      : (DataFrame, Array[(Long, Array[Long])]) = enc match {
-    case Some(write) =>
-      org.apache.spark.sql.graftbridge.PlanBridge.localCheckpoint(plan, ckptLevel(plan)) { parts =>
-        val keep = maxLongs / math.max(1, parts)
-        rows => { val e = new EncodedLongs(keep); write(rows, e); (e.n, e.result) }
-      }
-    case None => (plan.localCheckpoint(true, ckptLevel(plan)), Array.empty)
-  }
+  private def sizedCheckpoint(plan: DataFrame, write: EncodeRows, maxLongs: Long)
+      : (DataFrame, Array[(Long, Array[Long])]) =
+    org.apache.spark.sql.graftbridge.PlanBridge.localCheckpoint(plan, ckptLevel(plan)) { parts =>
+      val keep = maxLongs / math.max(1, parts)
+      rows => { val e = new EncodedLongs(keep); write(rows, e); (e.n, e.result) }
+    }
 
-  /** The driver-path choice of an op over its checkpoint `ck` (id column
-    * `doc`) and the checkpoint pass's `parts`, logged as one INFO line
-    * opening with `what`: within `maxLongs`, `solve` finishes the op on the
-    * driver into a local relation, over every partition's longs (a
-    * partition that passed its share of the bound on that pass is
-    * collected by one more job); None (the distributed plan) for a
-    * non-integral id, over the bound, or when `solve` gives up, with its
-    * reason.
+  /** An op's single corpus pass and the path it takes, logged as one INFO
+    * line opening with `what` that names the pass (the driver read, or its
+    * refusal and why) and the path:
+    *
+    *  - with an integral id, the driver read comes first
+    *    ([[graft.plans.McDriverScan.read]]): the rows of a small 4mc corpus
+    *    are encoded on the driver, the read stopping once they pass
+    *    `maxLongs`, and within the bound `solve` finishes the op there, so
+    *    the op runs no Spark job;
+    *  - a read whose longs pass `maxLongs` ("over longs") takes
+    *    `distributed` at once;
+    *  - a refused read ("not 4mc", "no stats", "over files", "over lines")
+    *    takes the checkpoint job over the pass's `ck`, whose pass encodes
+    *    each partition's rows as it writes them, and within `maxLongs`
+    *    `solve` finishes the op over every partition's longs (a partition
+    *    that passed its share of the bound on that pass is collected by one
+    *    more job);
+    *  - a non-integral id, longs over the bound, or `solve` giving up (with
+    *    its reason) takes `distributed`, the op's plan over a checkpoint of
+    *    `ck` (the one the pass made, or one made then).
     */
-  private[ops] def finishOnDriver(log: org.slf4j.Logger, what: String, ck: DataFrame, enc: Option[Encode],
-                                  parts: Array[(Long, Array[Long])], maxLongs: Long)(
-                                  solve: Array[Array[Long]] => Either[String, DataFrame]): Option[DataFrame] = {
-    val longs = parts.map(_._1).sum
-    enc match {
-      case None =>
-        log.info(s"$what doc id type ${ck.schema("doc").dataType.simpleString} -> distributed")
-        None
-      case Some(_) if longs > maxLongs =>
-        log.info(s"$what $longs longs > $maxLongs -> distributed")
-        None
-      case Some(write) =>
-        solve(partLongs(checkpointRows(ck), write, parts)) match {
-          case Right(df) =>
-            log.info(s"$what $longs longs <= $maxLongs -> driver")
-            Some(df)
-          case Left(why) =>
-            log.info(s"$what $longs longs <= $maxLongs, $why -> distributed")
-            None
+  private[ops] def corpusPass(log: org.slf4j.Logger, what: String, pass: CorpusPass,
+                              maxLongs: Long)(solve: Array[Array[Long]] => Either[String, DataFrame])(
+                              distributed: DataFrame => DataFrame): DataFrame = {
+    def finish(how: String, longs: Long, chunks: => Array[Array[Long]], ck: => DataFrame): DataFrame =
+      if (longs > maxLongs) {
+        log.info(s"$what $how: $longs longs > $maxLongs -> distributed")
+        distributed(ck)
+      } else solve(chunks) match {
+        case Right(df) =>
+          log.info(s"$what $how: $longs longs <= $maxLongs -> driver")
+          df
+        case Left(why) =>
+          log.info(s"$what $how: $longs longs <= $maxLongs, $why -> distributed")
+          distributed(ck)
+      }
+    def checkpointed = pass.ck.localCheckpoint(true, ckptLevel(pass.ck))
+    (pass.row, pass.rows) match {
+      case (Some(write), Some(writeRows)) =>
+        val e = new EncodedLongs(maxLongs)
+        graft.plans.McDriverScan.read(pass.plan, DriverReadMaxLines) { r => write(r, e); e.dropped } match {
+          case Right(_) if e.dropped =>
+            log.info(s"$what driver read refused (over longs: past $maxLongs) -> distributed")
+            distributed(checkpointed)
+          case Right(_) => finish("driver read", e.n, Array(e.result), checkpointed)
+          case Left(refused) =>
+            val (ck, parts) = sizedCheckpoint(pass.ck, writeRows, maxLongs)
+            finish(s"driver read refused ($refused), checkpoint job", parts.map(_._1).sum,
+              partLongs(checkpointRows(ck), writeRows, parts), ck)
         }
+      case _ =>
+        log.info(s"$what doc id type ${pass.plan.schema("doc").dataType.simpleString} -> distributed")
+        distributed(checkpointed)
     }
   }
 
@@ -759,7 +846,7 @@ object Dedup {
     * partition whose longs passed its share there (null) is encoded again
     * by one more job, which reads only those partitions.
     */
-  private def partLongs(rows: org.apache.spark.rdd.RDD[InternalRow], write: Encode,
+  private def partLongs(rows: org.apache.spark.rdd.RDD[InternalRow], write: EncodeRows,
                         parts: Array[(Long, Array[Long])]): Array[Array[Long]] = {
     val late = parts.indices.filter(parts(_)._2 == null)
     val chunks = parts.map(_._2)
@@ -1262,31 +1349,37 @@ object Dedup {
     }
   }
 
-  /** [[keepCanonical]] over driver-side components, in one scan job: the
-    * components ride to the tasks as a broadcast variable (no exchange
-    * job), each task sizes its docs, keeps the member rows and picks its
-    * best row per component, and the driver merges the tasks' picks. The
-    * pick — most tokens, nulls last, ties → lowest id — is the window's
-    * order. No shuffle, no window, and no per-call generated classes
-    * beyond the scan's.
+  /** [[keepCanonical]] over driver-side components, from one sizing pass
+    * over the docs: each doc row is sized, the member rows kept, and the
+    * best row per component picked — most tokens, nulls last, ties → lowest
+    * id, the window's order. A small 4mc corpus is sized on the driver
+    * ([[graft.plans.McDriverScan.read]]), with no Spark job; a refused read
+    * takes one scan job, where the components ride to the tasks as a
+    * broadcast variable (no exchange job) and the driver merges the tasks'
+    * picks. The choice is logged as one INFO line. No shuffle, no window,
+    * and no per-call generated classes beyond the scan's.
     */
   private def canonicalOnDriver(local: LocalComponents, sizedDocs: DataFrame): DataFrame = {
     val spark = sizedDocs.sparkSession
-    val members = spark.sparkContext.broadcast(local)
-    val rows = sizedDocs.select(col("doc").cast("long"), col("n_tokens")).queryExecution.toRdd
-    val picks = try spark.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
-      val lc = members.value
-      val pick = new CanonicalPick
-      it.foreach { r =>
-        if (!r.isNullAt(0)) {
-          val i = java.util.Arrays.binarySearch(lc.docs, r.getLong(0))
-          if (i >= 0) pick.offer(lc.comps(i), r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
-        }
+    val sized = sizedDocs.select(col("doc").cast("long"), col("n_tokens"))
+    def offer(lc: LocalComponents, pick: CanonicalPick)(r: InternalRow): Unit =
+      if (!r.isNullAt(0)) {
+        val i = java.util.Arrays.binarySearch(lc.docs, r.getLong(0))
+        if (i >= 0) pick.offer(lc.comps(i), r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
       }
-      pick.best.toArray
-    }) finally members.destroy()
     val pick = new CanonicalPick
-    for (part <- picks; (c, (doc, n)) <- part) pick.offer(c, doc, n)
+    graft.plans.McDriverScan.read(sized, DriverReadMaxLines) { r => offer(local, pick)(r); false } match {
+      case Right(_) => log.info("[canonical] sizing pass: driver read")
+      case Left(refused) =>
+        log.info(s"[canonical] sizing pass: driver read refused ($refused), scan job")
+        val members = spark.sparkContext.broadcast(local)
+        val picks = try spark.sparkContext.runJob(sized.queryExecution.toRdd, (it: Iterator[InternalRow]) => {
+          val part = new CanonicalPick
+          it.foreach(offer(members.value, part))
+          part.best.toArray
+        }) finally members.destroy()
+        for (part <- picks; (c, (doc, n)) <- part) pick.offer(c, doc, n)
+    }
     val schema = StructType(Seq(StructField("comp", LongType, nullable = false),
       StructField("doc", LongType, nullable = false), StructField("n_tokens", LongType)))
     localRelation(spark, schema, pick.best.toSeq.sortBy(_._1).map { case (c, (doc, n)) =>
@@ -1437,7 +1530,7 @@ object Dedup {
     // longs number the edges. One job over a checkpoint counts each
     // partition's longs and brings them back within its share of the cap
     // (the sizing pass of the pair ops' checkpoints).
-    val write: Encode = (it, out) => it.foreach { r => out += r.getLong(a); out += r.getLong(b) }
+    val write: EncodeRows = (it, out) => it.foreach { r => out += r.getLong(a); out += r.getLong(b) }
     def encode(it: Iterator[InternalRow], keep: Long) = { val e = new EncodedLongs(keep); write(it, e); (e.n, e.result) }
     val parts = rows match {
       case Left(local) => Array(encode(local.iterator, Long.MaxValue))

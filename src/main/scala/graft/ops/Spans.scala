@@ -27,11 +27,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (r7 8.5 GB → r8 3.5 GB at 700×, −59%).
   *
   * Coverage ([[dupSpanCoverage]]) tokenizes and hashes the corpus once,
-  * into a checkpoint of (doc, n_tokens, window hashes) whose pass also
-  * encodes its rows as longs. Within [[Dedup.DriverMaxLongs]] (4 Mi longs,
-  * 32 MiB) and with an integral id column, it finishes on the driver with
-  * no shuffle, as the small pair ops do (see [[Dedup]]'s header); over the
-  * bound, the hot-key plans above read that checkpoint.
+  * in one pass over (doc, n_tokens, window hashes) that also encodes its
+  * rows as longs ([[Dedup.corpusPass]]): a driver read over a small 4mc
+  * corpus, a checkpoint job otherwise. Within [[Dedup.DriverMaxLongs]]
+  * (4 Mi longs, 32 MiB) and with an integral id column, it finishes on the
+  * driver with no shuffle, as the small pair ops do (see [[Dedup]]'s
+  * header); over the bound, the hot-key plans above read a checkpoint of
+  * the pass.
   *
   * n_tokens is functionally determined by the row, so it rides no
   * corpus-sized exchange: it is re-attached at PER-ROW granularity
@@ -122,20 +124,23 @@ object Spans {
     * up. A span is duplicated ("hot") when at least 2 distinct non-null doc
     * ids hold it: a null id never makes a span hot but its row is reported
     * when covered, and a doc id on several rows is one doc for hotness and
-    * reported per row. Null texts are dropped.
+    * reported per row. Null texts and blank ones (nothing but the six ASCII
+    * whitespace bytes, which tokenize to empty tokens only) are dropped.
     *
-    * One corpus pass: the per-row relation (doc, n_tokens, window hashes)
-    * is tokenized, hashed and checkpointed once, and that pass also encodes
-    * its rows as longs (doc, n_tokens, |hashes|, hashes…), as the pair ops'
-    * checkpoints do ([[Dedup.sizedCheckpoint]]). Within
-    * [[Dedup.DriverMaxLongs]] and with an integral id column the op ends on
-    * the driver: the hot spans from a table of first holders, then the
-    * island rule per row ([[graft.functions.SpanRunsExpr.islands]]) and the
-    * sum of clipped island lengths, returned as a local relation with the
-    * distributed plan's schema. No shuffle and no second job.
+    * One corpus pass ([[Dedup.corpusPass]]): the per-row relation (doc,
+    * n_tokens, window hashes) is tokenized and hashed once, and that pass
+    * also encodes its rows as longs (doc, n_tokens, |hashes|, hashes…), as
+    * the pair ops' passes do. Over a small 4mc corpus the pass is a driver
+    * read ([[graft.plans.McDriverScan.read]]) and runs no Spark job; any
+    * other corpus is checkpointed by it. Within [[Dedup.DriverMaxLongs]]
+    * and with an integral id column the op ends on the driver: the hot
+    * spans from a table of first holders, then the island rule per row
+    * ([[graft.functions.SpanRunsExpr.islands]]) and the sum of clipped
+    * island lengths, returned as a local relation with the distributed
+    * plan's schema. No shuffle and no second job.
     *
     * Over the bound, or for any other id type, the distributed plan reads
-    * the same checkpoint (r17 — the single-k ops joined the map-side
+    * a checkpoint of the pass (r17 — the single-k ops joined the map-side
     * island plan var-k proved in r15/r16; guide §2.4 "remove shuffles
     * outright"): the hot-key set (a plain min/max aggregate over the
     * exploded hashes, partial-combined map-side) is driver-collected under
@@ -160,19 +165,19 @@ object Spans {
                                        driverMaxLongs: Long, maxHotKeys: Long): DataFrame = {
     require(k >= 2, "span length must be at least 2 tokens")
     val plan = docs
+      // a null text and a blank one (no byte but the six ASCII `\s`, so
+      // only empty tokens) hold no span; tested on the text, since a
+      // filter on the tokens would be pushed below their projection and
+      // tokenize every row twice
+      .filter(TextAnalysis.nonBlank(col(textCol)))
       .select(col(idCol).as("doc"), TextAnalysis.tokens(col(textCol)).as("_toks"))
-      .filter(col("_toks").isNotNull)
-      // _row: the row's identity for the exchange plan, where a doc id may
-      // be null or repeated
-      .select(col("doc"), size(col("_toks")).cast("long").as("n_tokens"),
-        spanHashes(col("_toks"), k).as("h"), monotonically_increasing_id().as("_row"))
-    val enc = coverageLongs(plan.schema)
-    val (ck, parts) = Dedup.sizedCheckpoint(plan, enc, driverMaxLongs)
-    val schema = coverageSchema(ck.schema)
-    Dedup.finishOnDriver(log, s"[spans] coverage k=$k:", ck, enc, parts, driverMaxLongs) { chunks =>
-      Right(Dedup.localRelation(ck.sparkSession, schema,
+      .select(col("doc"), size(col("_toks")).cast("long").as("n_tokens"), spanHashes(col("_toks"), k).as("h"))
+    val schema = coverageSchema(plan.schema)
+    Dedup.corpusPass(log, s"[spans] coverage k=$k:", Dedup.CorpusPass(plan, coverageLongs(plan.schema)),
+      driverMaxLongs) { chunks =>
+      Right(Dedup.localRelation(plan.sparkSession, schema,
         coverageOnDriver(chunks, k, Dedup.idValue(schema("doc").dataType))))
-    }.getOrElse {
+    } { ck =>
       val covered = hotKeysOrPlan(ck.select(col("doc"), explode(col("h")).as("w")), s"coverage k=$k",
         maxHotKeys) match {
         case Right(keys) =>
@@ -190,6 +195,7 @@ object Spans {
         round(lit(1000.0) * col("dup_tokens") / col("n_tokens")).cast("long").as("dup_ratio_milli"))
     }
   }
+
   /** The result schema of [[dupSpanCoverage]] over its checkpoint's
     * schema: the distributed plans' (doc and n_tokens as checkpointed).
     */
@@ -198,13 +204,13 @@ object Spans {
     StructField("dup_tokens", LongType, nullable = true),
     StructField("dup_ratio_milli", LongType, nullable = true)))
 
-  /** Coverage rows (doc, n_tokens, h, _row) as doc, n_tokens, |h|, h…; a
-    * null doc id is written as 0 with the count negated (−|h| − 1).
+  /** Coverage rows (doc, n_tokens, h) as doc, n_tokens, |h|, h…; a null
+    * doc id is written as 0 with the count negated (−|h| − 1).
     */
   private def coverageLongs(schema: StructType): Option[Dedup.Encode] =
     Dedup.integralId(schema("doc").dataType).map { id =>
       val (d, n, h) = (schema.fieldIndex("doc"), schema.fieldIndex("n_tokens"), schema.fieldIndex("h"))
-      (rows, out) => rows.foreach { r =>
+      (r, out) => {
         val a = r.getArray(h)
         val m = a.numElements()
         if (out.dropped) out.n += 3 + m
@@ -273,12 +279,16 @@ object Spans {
   }
 
   /** Exchange-plan fallback of [[dupSpanCoverage]] (hot set too big to
-    * driver-collect), over its checkpoint `ck`: shuffled semi join of the
+    * driver-collect), over its checkpoint: shuffled semi join of the
     * exploded hashes against the hot set, a per-row lead window over the
     * duplicated start positions, and the (doc, n_tokens) of each covered
-    * row joined back by its `_row`.
+    * row joined back by its `_row`, the row's identity where a doc id may
+    * be null or repeated. Both reads of the checkpoint number its rows
+    * alike: `monotonically_increasing_id` over the same partitions in the
+    * same order.
     */
-  private def coverageExchange(ck: DataFrame, hotDf: DataFrame, k: Int): DataFrame = {
+  private def coverageExchange(ckRows: DataFrame, hotDf: DataFrame, k: Int): DataFrame = {
+    val ck = ckRows.withColumn("_row", monotonically_increasing_id())
     val dupPos = ck.select(col("_row"), posexplode(col("h")).as(Seq("off", "w")))
       .join(hotDf, Seq("w"), "left_semi")
       .select(col("_row"), (col("off") + 1).cast("long").as("pos"))
@@ -811,11 +821,12 @@ object Spans {
        |SELECT doc, n_tokens, removed_tokens, clean_md5 FROM clean""".stripMargin
 
   /** DuckDB mirror of [[dupSpanCoverage]] (string spans, global windows —
-    * oracle-scale formulation).
+    * oracle-scale formulation; null and blank texts dropped).
     */
   def dupSpanCoverageSql(k: Int = 8): String =
     s"""WITH toks AS (
        |  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS l FROM documents
+       |  WHERE regexp_matches(text, '\\S')
        |), spans AS (
        |  SELECT doc_id AS doc, CAST(len(l) AS BIGINT) AS n_tokens, CAST(i AS BIGINT) AS pos,
        |    CASE WHEN len(l) < $k THEN array_to_string(l, ' ')

@@ -15,14 +15,28 @@ import org.apache.spark.sql.types._
   */
 object TextAnalysis {
 
-  /** Whitespace tokens of a trimmed text.
+  /** Whitespace tokens of a trimmed text: `split(trim(text), "\\s+")`,
+    * computed by the byte-level kernel [[graft.functions.TokensExpr]].
     *
     * Callers computing several scores per row should materialize this ONCE in
     * a projection and use the *FromTokens variants — expressions that embed
-    * `tokens(text)` repeatedly re-run the regex split (Catalyst does not CSE
+    * `tokens(text)` repeatedly re-run the split (Catalyst does not CSE
     * across these subtrees).
     */
-  def tokens(text: Column): Column = split(trim(text), "\\s+")
+  def tokens(text: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    column(graft.functions.TokensExpr(expression(text)))
+  }
+
+  /** Whether a text holds a byte other than the six ASCII `\s` bytes, so
+    * its tokens are not all empty: `rlike(text, "\\S")`, computed by the
+    * byte-level kernel [[graft.functions.NonBlankExpr]]. Null for a null
+    * text.
+    */
+  def nonBlank(text: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    column(graft.functions.NonBlankExpr(expression(text)))
+  }
 
   def tokenCount(text: Column): Column = size(tokens(text))
 

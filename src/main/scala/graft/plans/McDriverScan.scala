@@ -10,6 +10,7 @@ import graft.sources.{FourMcFileFormat, FourMcStatsFileFormat, ManifestFileIndex
 import org.apache.hadoop.conf.Configuration
 
 import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{
@@ -61,6 +62,10 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * Project/Filter returns the `FileSourceStrategy` plan already built for
   * it, so planning lists its files once. (Spark clones the planned tree
   * before it runs it, and the cloned scan lists them again.)
+  *
+  * Callers that bring a relation's rows to the driver anyway, such as the
+  * dedup ops' single corpus pass, use the same read directly through
+  * [[McDriverScan.read]], which also takes an unfiltered Project/Filter.
   */
 object McDriverScanStrategy extends SparkStrategy {
 
@@ -105,20 +110,27 @@ object McDriverScanStrategy extends SparkStrategy {
       case _                                                => false
     })
 
-  private def plain(e: Expression): Boolean =
+  private[plans] def plain(e: Expression): Boolean =
     e.deterministic && !SubqueryExpression.hasSubquery(e)
 
   private def readable(p: LogicalPlan): Boolean = p match {
     case LogicalRelation(r: HadoopFsRelation, _, _, false, _) =>
       (r.fileFormat.isInstanceOf[FourMcFileFormat] || r.fileFormat.isInstanceOf[FourMcStatsFileFormat]) &&
-        r.bucketSpec.isEmpty && !r.options.contains(RuntimeKeyFilter.OptionKey) && {
-          val o = new FileSourceOptions(CaseInsensitiveMap(r.options))
-          !o.ignoreCorruptFiles && !o.ignoreMissingFiles
-        }
+        plainFiles(r)
     case Project(ps, c)  => ps.forall(plain) && readable(c)
     case Filter(cond, c) => plain(cond) && readable(c)
     case _               => false
   }
+
+  /** A relation whose files the driver reads as its tasks would: no
+    * buckets, no injected runtime key filter, and a failed or vanished file
+    * fails the read.
+    */
+  private[plans] def plainFiles(r: HadoopFsRelation): Boolean =
+    r.bucketSpec.isEmpty && !r.options.contains(RuntimeKeyFilter.OptionKey) && {
+      val o = new FileSourceOptions(CaseInsensitiveMap(r.options))
+      !o.ignoreCorruptFiles && !o.ignoreMissingFiles
+    }
 
   private def planOver(fold: Option[McDriverScanExec.Fold], scanPlan: Seq[SparkPlan]): Option[SparkPlan] = {
     val (projectList, condition, scan) = scanPlan match {
@@ -128,19 +140,72 @@ object McDriverScanStrategy extends SparkStrategy {
       case Seq(s: FileSourceScanExec)                                 => (s.output, None, s)
       case _                                                          => return None
     }
+    // a read with no data filter refutes nothing: only an aggregate can use it
+    if (fold.isEmpty && scan.dataFilters.isEmpty) None
+    else McDriverScan.sized(scan, MaxDecodedLines).toOption
+      .filter(r => fold.isDefined || r.census.skipped > 0 || manifestPruned(scan))
+      .map(_.exec(fold, projectList, condition, scan))
+  }
+
+  /** Did the directory manifest drop a file from the scan's listing? The
+    * manifest index lists without its pruning when given no data filters.
+    */
+  private def manifestPruned(scan: FileSourceScanExec): Boolean = scan.relation.location match {
+    case m: ManifestFileIndex if scan.dataFilters.nonEmpty =>
+      m.listFiles(scan.partitionFilters, Nil).map(_.files.length.toLong).sum >
+        scan.selectedPartitions.totalNumberOfFiles
+    case _ => false
+  }
+}
+
+/** The driver read for callers that collect a relation anyway, such as an
+  * op's single corpus pass ([[graft.ops.Dedup]], [[graft.ops.Spans]]):
+  * [[read]] feeds the rows of a DataFrame that is a chain of Project/Filter
+  * over the plain `4mc` relation to a sink on the driver, with no Spark
+  * job, or names why it will not. It plans the DataFrame as Spark would,
+  * then reads it as [[McDriverScanExec]] does, under the same listing,
+  * census and file bound ([[McDriverScanStrategy.MaxFiles]]) and with
+  * every expression interpreted; the line bound is the caller's, since its
+  * work per row sets the crossover. Unlike the query strategy it takes an
+  * unfiltered read too: its caller has already chosen to bring the rows to
+  * the driver.
+  */
+object McDriverScan {
+
+  /** What a driver read of one planned file scan would read: the listing,
+    * the census of its cached footers, and the conf they were read with.
+    */
+  final case class Sized(
+      pushed: Seq[sources.Filter],
+      files: Seq[PartitionedFile],
+      listing: McDriverScanExec.Listing,
+      census: FourMcFileFormat.Census,
+      hadoopConf: Configuration) {
+    def exec(fold: Option[McDriverScanExec.Fold], projectList: Seq[NamedExpression], condition: Option[Expression],
+             scan: FileSourceScanExec): McDriverScanExec =
+      McDriverScanExec(fold, projectList, condition, pushed, files, listing, census, hadoopConf, scan)
+  }
+
+  /** The read of `scan` within [[McDriverScanStrategy.MaxFiles]] and
+    * `maxLines`, or why not: "not 4mc" (extra metadata columns, or a footer
+    * that fails to read), "over files", "no stats" (a file past the line
+    * bound for want of a stats segment) or "over lines". The file count is
+    * checked before any footer is read.
+    */
+  private[plans] def sized(scan: FileSourceScanExec, maxLines: Long): Either[String, Sized] = {
     val relation = scan.relation
     // extra scan outputs (metadata columns) are rows the readers do not make
-    if (scan.output.length != scan.requiredSchema.length + relation.partitionSchema.length) return None
-    // a read with no data filter refutes nothing: only an aggregate can use it
-    if (fold.isEmpty && scan.dataFilters.isEmpty) return None
+    if (scan.output.length != scan.requiredSchema.length + relation.partitionSchema.length)
+      return Left("not 4mc")
     val listing = scan.selectedPartitions
-    if (listing.totalNumberOfFiles > MaxFiles) return None
+    if (listing.totalNumberOfFiles > McDriverScanStrategy.MaxFiles) return Left("over files")
     val files: Seq[PartitionedFile] = listing.filePartitionIterator.flatMap { p =>
       p.files.filter(_.getLen > 0)
         .map(f => PartitionedFileUtil.getPartitionedFile(f, f.getPath, p.values, 0, f.getLen))
     }.toVector
     val hadoopConf = relation.sparkSession.sessionState.newHadoopConfWithOptions(relation.options)
     val pushed = PlanBridge.pushedFilters(scan)
+    var statsless = false
     val census =
       try {
         // each relation's per-block verdicts: the ones its reader reaches
@@ -152,24 +217,59 @@ object McDriverScanStrategy extends SparkStrategy {
         files.filter(f => FourMcFileFormat.accepts(f.toPath, relation.options))
           .foldLeft(FourMcFileFormat.Census()) { (acc, f) =>
             val index = FourMcFileFormat.footerIndex(f, hadoopConf)
+            statsless ||= index.stats.isEmpty
             acc.plus(index, verdictsOf(index))
           }
-      } catch { case NonFatal(_) => return None } // the job reports it
-    if (census.lines > MaxDecodedLines) None
-    else if (fold.isEmpty && census.skipped == 0 && !manifestPruned(scan)) None
-    else Some(McDriverScanExec(fold, projectList, condition, pushed, files,
+      } catch { case NonFatal(_) => return Left("not 4mc") } // the job reports it
+    if (census.lines > maxLines) Left(if (statsless) "no stats" else "over lines")
+    else Right(Sized(pushed, files,
       McDriverScanExec.Listing(listing.totalNumberOfFiles, listing.totalFileSize, listing.partitionCount),
-      census, hadoopConf, scan))
+      census, hadoopConf))
   }
 
-  /** Did the directory manifest drop a file from the scan's listing? The
-    * manifest index lists without its pruning when given no data filters.
+  /** Feeds the rows of `df`, in its schema, to `sink` until it returns
+    * true, when `df` plans as Project/Filter nodes over one scan of the
+    * plain `4mc` relation that reads at most `maxLines` lines (the caller's
+    * crossover: its work per row sets it) from at most
+    * [[McDriverScanStrategy.MaxFiles]] files. Otherwise it reads nothing
+    * and returns why: "not 4mc" (any other plan, another format, a
+    * nondeterministic expression or a subquery) or a reason from [[sized]].
+    * A failed read raises what a failed scan task raises. No Spark job
+    * runs; `df`'s planned query is the one a fallback job runs.
     */
-  private def manifestPruned(scan: FileSourceScanExec): Boolean = scan.relation.location match {
-    case m: ManifestFileIndex if scan.dataFilters.nonEmpty =>
-      m.listFiles(scan.partitionFilters, Nil).map(_.files.length.toLong).sum >
-        scan.selectedPartitions.totalNumberOfFiles
-    case _ => false
+  def read(df: DataFrame, maxLines: Long)(sink: InternalRow => Boolean): Either[String, Unit] = {
+    // the Project/Filter nodes over the scan, bottom first
+    var layers = List.empty[SparkPlan]
+    var p = df.queryExecution.sparkPlan
+    while (p.isInstanceOf[ProjectExec] || p.isInstanceOf[FilterExec]) { layers ::= p; p = p.children.head }
+    val plainLayers = layers.forall {
+      case ProjectExec(pl, _) => pl.forall(McDriverScanStrategy.plain)
+      case FilterExec(c, _)   => McDriverScanStrategy.plain(c)
+    }
+    val node = p match {
+      case _ if !plainLayers => Left("not 4mc")
+      case e: McDriverScanExec if e.fold.isEmpty =>
+        if (e.census.lines > maxLines) Left("over lines") else Right(e)
+      case s: FileSourceScanExec
+          if s.relation.fileFormat.isInstanceOf[FourMcFileFormat] && McDriverScanStrategy.plainFiles(s.relation) =>
+        sized(s, maxLines).map(_.exec(None, s.output, None, s))
+      case _ => Left("not 4mc")
+    }
+    node.map { exec =>
+      McDriverScanExec.interpreted(exec.conf) {
+        // the sink behind each layer, top first
+        val top = layers.foldRight(sink) {
+          case (ProjectExec(pl, c), next) =>
+            val project = UnsafeProjection.create(pl, c.output)
+            r => next(project(r))
+          case (FilterExec(cond, c), next) =>
+            val pass = Predicate.create(cond, c.output)
+            pass.initialize(0)
+            r => pass.eval(r) && next(r)
+        }
+        exec.each(top)
+      }
+    }
   }
 }
 
@@ -225,52 +325,52 @@ case class McDriverScanExec(
     else if (fold.isDefined) run(Int.MaxValue).take(n)
     else run(n)
 
-  private def run(limit: Int): Array[InternalRow] = {
+  private def run(limit: Int): Array[InternalRow] = McDriverScanExec.interpreted(conf) {
+    fold match {
+      case None =>
+        val out = ArrayBuffer.empty[InternalRow]
+        each { r => out += r.copy(); out.length >= limit }
+        out.toArray
+      case Some(f) =>
+        val input = projectList.map(_.toAttribute)
+        val fresh = AggregatingAccumulator(f.aggs, input)
+        val keyOf = UnsafeProjection.create(f.groups, input)
+        val groups = new java.util.LinkedHashMap[UnsafeRow, AggregatingAccumulator]
+        // a global aggregate answers one row even over no input
+        if (f.groups.isEmpty) groups.put(keyOf(InternalRow.empty).copy(), fresh)
+        each { in =>
+          val key = keyOf(in)
+          var acc = groups.get(key)
+          if (acc == null) { acc = fresh.copyAndReset(); groups.put(key.copy(), acc) }
+          acc.add(in)
+          false
+        }
+        val result = UnsafeProjection.create(f.results,
+          f.groups.map(_.toAttribute) ++ f.aggs.map(_.resultAttribute))
+        val joined = new JoinedRow
+        groups.entrySet.asScala.iterator
+          .map(e => result(joined(e.getKey, e.getValue.value)).copy(): InternalRow).toArray
+    }
+  }
+
+  /** Feeds the filtered, projected rows to `sink` until it returns true
+    * (the scan's metrics record the rows its reader made). Call it under
+    * [[McDriverScanExec.interpreted]].
+    */
+  private[plans] def each(sink: InternalRow => Boolean): Unit = {
     val scan = this.scan
-    // a few thousand rows never repay compiling a projection
-    val interpreted = conf.clone()
-    interpreted.setConf(SQLConf.CODEGEN_FACTORY_MODE, CodegenObjectFactoryMode.NO_CODEGEN)
+    val pass = condition.map { c =>
+      val p = Predicate.create(c, scan.output)
+      p.initialize(0)
+      p
+    }
+    val project = UnsafeProjection.create(projectList, scan.output)
     var rowsRead = 0L
-    val answer = SQLConf.withExistingConf(interpreted) {
-      val pass = condition.map { c =>
-        val p = Predicate.create(c, scan.output)
-        p.initialize(0)
-        p
-      }
-      val project = UnsafeProjection.create(projectList, scan.output)
-      // `sink` answers whether to stop reading
-      def each(sink: InternalRow => Boolean): Unit = readFiles(scan) { r =>
-        rowsRead += 1
-        pass.forall(_.eval(r)) && sink(project(r))
-      }
-      fold match {
-        case None =>
-          val out = ArrayBuffer.empty[InternalRow]
-          each { r => out += r.copy(); out.length >= limit }
-          out.toArray
-        case Some(f) =>
-          val input = projectList.map(_.toAttribute)
-          val fresh = AggregatingAccumulator(f.aggs, input)
-          val keyOf = UnsafeProjection.create(f.groups, input)
-          val groups = new java.util.LinkedHashMap[UnsafeRow, AggregatingAccumulator]
-          // a global aggregate answers one row even over no input
-          if (f.groups.isEmpty) groups.put(keyOf(InternalRow.empty).copy(), fresh)
-          each { in =>
-            val key = keyOf(in)
-            var acc = groups.get(key)
-            if (acc == null) { acc = fresh.copyAndReset(); groups.put(key.copy(), acc) }
-            acc.add(in)
-            false
-          }
-          val result = UnsafeProjection.create(f.results,
-            f.groups.map(_.toAttribute) ++ f.aggs.map(_.resultAttribute))
-          val joined = new JoinedRow
-          groups.entrySet.asScala.iterator
-            .map(e => result(joined(e.getKey, e.getValue.value)).copy(): InternalRow).toArray
-      }
+    readFiles(scan) { r =>
+      rowsRead += 1
+      pass.forall(_.eval(r)) && sink(project(r))
     }
     reportScan(scan, rowsRead)
-    answer
   }
 
   /** Feeds the rows of every file, in the scan's output order, to `stop`
@@ -341,6 +441,15 @@ case class McDriverScanExec(
 }
 
 object McDriverScanExec {
+
+  /** `body` with every projection and predicate it creates interpreted: a
+    * few thousand rows never repay compiling one.
+    */
+  private[plans] def interpreted[A](conf: SQLConf)(body: => A): A = {
+    val c = conf.clone()
+    c.setConf(SQLConf.CODEGEN_FACTORY_MODE, CodegenObjectFactoryMode.NO_CODEGEN)
+    SQLConf.withExistingConf(c)(body)
+  }
 
   /** Totals of the file listing the node reads. */
   final case class Listing(files: Long, bytes: Long, partitions: Int)

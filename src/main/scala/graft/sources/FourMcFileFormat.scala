@@ -639,6 +639,8 @@ final class FourMcRecordIterator(
     * partitions records exactly across splits.
     */
   var corruptSkipped: Long = 0L
+  /** Blocks decompressed. */
+  var blocksRead: Long = 0L
 
   private def skipToNextBlock(from: Long): Unit = {
     corruptSkipped += 1
@@ -659,6 +661,7 @@ final class FourMcRecordIterator(
           else return false
         } else {
           block = data; blockOff = 0; blockFileOff = cur; pos = nxt
+          blocksRead += 1
         }
       } catch {
         case _: java.io.IOException if permissive => skipToNextBlock(cur)

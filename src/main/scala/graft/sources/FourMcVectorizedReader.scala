@@ -1288,7 +1288,10 @@ object FourMcVectorizedReader {
         // detached-line path was pure allocation overhead)
         val it = new FourMcLineIterator(in, index, file.start, file.start + file.length,
           permissive = permissive)
-        if (permissive) read.onFinish(FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped))
+        read.onFinish {
+          FourMcScanMetrics.blocksRead.add(it.blocksRead)
+          if (permissive) FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped)
+        }
         erase(new Iterator[ColumnarBatch] {
           private var pending = it.advanceSlice()
           override def hasNext: Boolean = pending
@@ -1312,12 +1315,17 @@ object FourMcVectorizedReader {
         })
       } else {
       val raw: Iterator[(Long, Array[Byte])] =
-        if (ebProto)
-          new graft.format.FourMcEbBlockIterator(in, index, file.start, file.start + file.length, ebMarker)
-        else {
+        if (ebProto) {
+          val it = new graft.format.FourMcEbBlockIterator(in, index, file.start, file.start + file.length, ebMarker)
+          read.onFinish(FourMcScanMetrics.blocksRead.add(it.blocksRead))
+          it
+        } else {
           val it = new FourMcRecordIterator(in, index, file.start, file.start + file.length,
             permissive = permissive)
-          if (permissive) read.onFinish(FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped))
+          read.onFinish {
+            FourMcScanMetrics.blocksRead.add(it.blocksRead)
+            if (permissive) FourMcScanMetrics.corruptSkipped.add(it.corruptSkipped)
+          }
           it
         }
       erase(new Iterator[ColumnarBatch] {

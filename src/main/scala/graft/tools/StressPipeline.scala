@@ -134,7 +134,7 @@ object StressPipeline {
     * differently across replicas (no cross-replica shingle overlap).
     */
   private def perturbText(text: Column, rep: Column, subPct: Int, tag: Int): Column = {
-    val toks = split(trim(text), "\\s+")
+    val toks = graft.ops.TextAnalysis.tokens(text)
     concat_ws(" ",
       transform(toks, w =>
         when(pmod(hash(w, rep, lit(tag)), lit(100)) < subPct,

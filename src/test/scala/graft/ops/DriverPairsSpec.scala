@@ -143,4 +143,11 @@ class DriverPairsSpec extends AnyFunSuite {
     // the signatures are ~100 longs a doc: 1 000 longs is far under them
     assert(!isLocal(minhash(docs, 0.6, 1000L)) && !isLocal(ngram(docs, 0.6, 0L, 1000L)))
   }
+
+  test("over the fixture written as 4mc: the frame's rows, no Spark job on the driver read, jobs on every fallback") {
+    // 1 000 longs is far under the signatures (~100 longs a doc)
+    val m = McCorpus.sameOver4mc(corpus, "minhash", Driver, Some(1000L))(minhash(_, 0.6, _))(rows)
+    val n = McCorpus.sameOver4mc(corpus, "ngram", Driver, Some(1000L))(ngram(_, 0.6, 0L, _))(rows)
+    assert(m.count { case (a, b, _) => b - a == 100000 } > 10 && n.contains((200030L, 200031L, 1.0)))
+  }
 }

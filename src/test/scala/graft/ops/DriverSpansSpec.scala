@@ -30,7 +30,8 @@ class DriverSpansSpec extends AnyFunSuite {
     *   - 2: the donor's first 8 tokens spliced between unique words;
     *   - 3: one 8-gram repeated within the doc only;
     *   - 4, 5: identical docs of 3 tokens (one whole-text span, clipped);
-    *   - 6, 7, 8: an empty text, a whitespace-only text and a null text;
+    *   - 6, 7, 8: an empty text, a whitespace-only text and a null text
+  *     (none of them covered);
     *   - a null doc id holding the splice (hot); 9, whose first 8 tokens
     *     a null doc id alone also holds (not hot);
     *   - 10 on two rows, each holding the splice; 11 on two rows with
@@ -109,8 +110,8 @@ class DriverSpansSpec extends AnyFunSuite {
     assert(of(300003L).isEmpty, "within-doc repeats alone")
     // one whole-text span of 3 tokens: clipped at the doc end
     assert(of(300004L) == Seq((Some("300004"), 3L, 3L, 1000L)) && of(300005L).nonEmpty, "short twins")
-    // an empty and a whitespace-only text are the same one-token text
-    assert(of(300006L) == Seq((Some("300006"), 1L, 1L, 1000L)) && of(300007L).nonEmpty)
+    // an empty and a whitespace-only text hold no span, as a null text
+    assert(of(300006L).isEmpty && of(300007L).isEmpty, "blank texts are dropped")
     assert(of(300008L).isEmpty, "a null text is dropped")
     // the null-id rows: the one holding the hot splice is reported; the
     // one sharing 9's tokens makes nothing hot
@@ -157,5 +158,12 @@ class DriverSpansSpec extends AnyFunSuite {
     assert(isLocal(Spans.dupSpanCoverage(corpus, "doc_id", "text", K)))
     // a doc is about 3 + its token count in longs: 1 000 is far under them
     assert(!isLocal(coverage(corpus, (1000L, Long.MaxValue))))
+  }
+
+  test("over the fixture written as 4mc: the frame's rows, no Spark job on the driver read, jobs on every fallback") {
+    // a doc is about 3 + its token count in longs: 1 000 is far under them
+    val got = McCorpus.sameOver4mc(corpus, "coverage", Long.MaxValue, Some(1000L))(
+      (docs, bound) => coverage(docs, (bound, Long.MaxValue)))(rows)
+    assert(got.exists(_._1.contains("300001")) && !got.exists(_._1.contains("300006")))
   }
 }

@@ -579,6 +579,18 @@ class OpsSpec extends AnyFunSuite {
     assert(driver.nonEmpty)
   }
 
+  test("keepCanonical over the fixture written as 4mc: the frame's picks, no Spark job on the driver read") {
+    // the pairs of a small corpus are a local relation: their components
+    // run no job either, so the whole call is the sizing pass
+    val corpus = docs.select(col("doc_id"), col("text"))
+    def kept(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Option[Long])] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long]))).toSet
+    val got = McCorpus.sameOver4mc(corpus, "keepCanonical", 0L, None) { (in, _) =>
+      Dedup.keepCanonical(Dedup.nearDupPairs(in, "doc_id", "text", 0.5), in, "doc_id", "text")
+    }(kept)
+    assert(got.nonEmpty)
+  }
+
   test("packedBins is invariant to the partition count (distributed prefix sum is exact)") {
     import spark.implicits._
     def bins(parts: Int) = Packing.packedBins(docs, "doc_id", "text", 512, numParts = parts)

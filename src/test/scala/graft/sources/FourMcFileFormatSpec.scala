@@ -94,6 +94,32 @@ class FourMcFileFormatSpec extends AnyFunSuite {
       recs.map(_.toSeq).sorted(Ordering.Implicits.seqOrdering[Seq, Byte]))
   }
 
+  test("text, binary and eb-proto scans count every block they decompress") {
+    import spark.implicits._
+    // about 10 MB in one file: blocks of the default size (4 MiB)
+    val blobs = (0 until 2500).map(i => Array.fill[Byte](4000)(i.toByte))
+    for ((payload, df) <- Seq("text" -> (0 until 2500).map(i => s"line $i " + "x" * 4000).toDF("value"),
+        "binary" -> blobs.toDF("value"), "eb-proto" -> blobs.toDF("value"))) {
+      val dir = tmpDir()
+      df.coalesce(1).write.format("4mc").option("payload", payload).option("codec", "lz4-fast").save(dir)
+      val f = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".4mc")).head
+      val in = graft.format.McInput.local(f.toPath)
+      val blocks = try graft.format.FourMcReader.readIndex(in).numBlocks finally in.close()
+      assert(blocks > 1, s"$payload: need a multi-block file, got $blocks")
+      // one split: a split's reader also decompresses the block its last
+      // record runs into, so several splits count some blocks twice
+      val split = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+      val saved = split.map(k => k -> spark.conf.getOption(k))
+      split.foreach(spark.conf.set(_, (1L << 30).toString))
+      try {
+        FourMcScanMetrics.reset()
+        val n = spark.read.format("4mc").option("payload", payload).load(dir).select(length($"value")).collect().length
+        assert(n == 2500, payload)
+        assert(FourMcScanMetrics.blocksRead.sum() == blocks, s"$payload: blocks read of $blocks")
+      } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+  }
+
   test("csv payload: typed reader parses only required columns") {
     import spark.implicits._
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
