@@ -147,13 +147,15 @@ object Bpe {
     Seq(("t", "h"), ("a", "n"), ("e", "r"), ("o", "w"), ("l", "i"))
 
   /** Per-language segmentation stats under [[DisjointMerges]]:
-    * (lang, n_docs, n_tokens, n_chars, n_subwords).
+    * (lang, n_docs, n_tokens, n_chars, n_subwords). The explode takes the
+    * tokens expression, not a column holding it: Spark infers a
+    * `size(toks) > 0` filter for a generator over a column and pushes it
+    * below the projection, which would tokenize every row twice.
     */
   def bpeSegmentStats(docs: DataFrame, langCol: String, textCol: String): DataFrame = {
     val toks = docs
       .select(col(langCol).as("lang"), col("doc_id"),
-        TextAnalysis.tokens(col(textCol)).as("toks"))
-      .select(col("lang"), col("doc_id"), explode(col("toks")).as("tok"))
+        explode(TextAnalysis.tokens(col(textCol))).as("tok"))
     toks
       .select(col("lang"), col("doc_id"), col("tok"),
         size(bpe_encode(col("tok"), DisjointMerges)).as("n_sub"))

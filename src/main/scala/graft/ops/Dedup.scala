@@ -266,10 +266,9 @@ object Dedup {
     * just to attach a rank (the single largest avoidable exchange in the
     * op at 700×). 4 M keys ≈ 64 MB raw / ~150 MB hashed relation. Above
     * the cap (a truly open vocabulary at corpus scale) the shuffle join is
-    * the only correct shape. Tunable via
-    * `spark.graft.broadcast.dfreq.maxKeys`.
+    * the only correct shape.
     */
-  private val BroadcastDfreqMaxKeysDefault = 4000000L
+  private val BroadcastDfreqMaxKeys = 4000000L
 
   /** Everything — prefix selection, candidates, AND the verification sets —
     * derives from the same `posts`, so a df-capped postings table yields one
@@ -287,9 +286,7 @@ object Dedup {
     */
   private def prefixFromPosts(posts: DataFrame, dfreq: DataFrame, threshold: Double,
                               nVocab: Long): DataFrame = {
-    val dfreqCap = posts.sparkSession.conf
-      .get("spark.graft.broadcast.dfreq.maxKeys", BroadcastDfreqMaxKeysDefault.toString).toLong
-    val dfreqSide = if (nVocab <= dfreqCap) broadcast(dfreq) else dfreq
+    val dfreqSide = if (nVocab <= BroadcastDfreqMaxKeys) broadcast(dfreq) else dfreq
     val perDoc = posts
       .join(dfreqSide, "w")
       .groupBy(col("doc"))
@@ -357,17 +354,10 @@ object Dedup {
     * entries, comfortably inside the default 1g
     * spark.driver.maxResultSize / broadcast build budget — a run that used
     * to succeed via shuffle join must never start failing in the broadcast
-    * collect because it sits just under the cutoff. Tunable per session via
-    * `spark.graft.broadcast.sizes.maxDocs` for clusters with bigger
-    * drivers; the dispatch itself stays data-driven from the
-    * already-computed sizes aggregate.
+    * collect because it sits just under the cutoff. The dispatch itself
+    * stays data-driven from the already-computed sizes aggregate.
     */
-  private val BroadcastSizesMaxDocsDefault = 8000000L
-
-  private def broadcastSizesMaxDocs(df: DataFrame): Long =
-    df.sparkSession.conf
-      .get("spark.graft.broadcast.sizes.maxDocs", BroadcastSizesMaxDocsDefault.toString)
-      .toLong
+  private val BroadcastSizesMaxDocs = 8000000L
 
   /** Per-doc set sizes ride WITH the postings into the self-join (one small
     * extra column per posting row) instead of joining the candidate-pair
@@ -385,9 +375,9 @@ object Dedup {
     // the exact doc count (a ~16 B/doc shuffle — cheap price for knowing
     // whether the 9 GB postings-by-doc shuffle can be skipped) runs only
     // when the posting count alone does not settle it
-    val maxDocs = broadcastSizesMaxDocs(posts)
     val postsSz =
-      if (nPostings <= maxDocs || sizes.count() <= maxDocs) posts.join(broadcast(sizes), "doc")
+      if (nPostings <= BroadcastSizesMaxDocs || sizes.count() <= BroadcastSizesMaxDocs)
+        posts.join(broadcast(sizes), "doc")
       else posts.join(sizes, "doc")
     val inter = postsSz
       .as("a")

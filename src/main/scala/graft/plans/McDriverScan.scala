@@ -14,8 +14,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{
-  Attribute, CodegenObjectFactoryMode, Expression, JoinedRow, NamedExpression, Predicate,
-  SubqueryExpression, UnsafeProjection, UnsafeRow
+  Attribute, CodegenObjectFactoryMode, Expression, InterpretedProjection, JoinedRow, NamedExpression,
+  Predicate, SubqueryExpression, UnsafeProjection, UnsafeRow
 }
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, DeclarativeAggregate, ImperativeAggregate
@@ -257,10 +257,13 @@ object McDriverScan {
     }
     node.map { exec =>
       McDriverScanExec.interpreted(exec.conf) {
-        // the sink behind each layer, top first
+        // the sink behind each layer, top first; a Project hands the layer
+        // above its values as they are, with no copy into an UnsafeRow (a
+        // token array's copy costs more than the tokenizing)
         val top = layers.foldRight(sink) {
           case (ProjectExec(pl, c), next) =>
-            val project = UnsafeProjection.create(pl, c.output)
+            val project = new InterpretedProjection(pl, c.output)
+            project.initialize(0)
             r => next(project(r))
           case (FilterExec(cond, c), next) =>
             val pass = Predicate.create(cond, c.output)

@@ -6,10 +6,12 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector, OnHeapColumnVector}
+import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector, OnHeapColumnVector,
+  WritableColumnVector}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -30,12 +32,12 @@ import scala.jdk.CollectionConverters._
   * per COLUMN instead of per value (branch-prediction-friendly), writing
   * unboxed primitives into a flat array.
   *
-  * Pushed-filter fail-fast survives vectorization row-major: filter-bound
-  * fields are parsed and tested at BUFFER time (before a line enters the
-  * batch), so a refuted row costs exactly the filter fields' parse — the
-  * same work order as a row-at-a-time parse — and batches arrive
-  * pre-compacted (Spark's ColumnarBatch has no selection vector to mask
-  * dead rows with).
+  * Both csv block layouts, rows and columnar, decode through one decoder
+  * ([[csvDecoder]]): only how a window of rows is found and where a
+  * field's bytes lie differ. Pushed filters evaluate column-major over each
+  * window before the fill, so a refuted row costs only its filter fields'
+  * parse, and batches arrive pre-compacted (Spark's ColumnarBatch has no
+  * selection vector to mask dead rows with).
   *
   * Partition values ride [[ConstantColumnVector]]s (populated once per
   * split); `_metadata` fields arrive as constant columns Spark appends to
@@ -212,8 +214,15 @@ object FourMcVectorizedReader {
     * counted in `blocksSkipped` (those owning a line; an Answered block is
     * the caller's), every block decoded in `blocksRead`.
     *
+    * One decoder serves both block layouts. A [[Window]] is the only part
+    * that knows the layout: it hands the decoder up to [[BatchSize]] rows
+    * at a time and locates a column's value bytes in them (see
+    * [[RowsWindow]], [[ColumnarWindow]]). [[CsvBatches]] then runs the same
+    * steps over every window: the pushed filters column-major, the
+    * adaptive probe, and one fill pass over the rows that pass.
+    *
     * Pushed `filters` may be applied only in part: the adaptive probe
-    * below stops evaluating them on stretches that refuse little, which is
+    * stops evaluating them on stretches that refuse little, which is
     * sound under a Spark Filter; a caller with none above it re-checks.
     */
   private[sources] def csvDecoder(
@@ -225,30 +234,8 @@ object FourMcVectorizedReader {
       tsFmt: String,
       permissive: Boolean
   ): (McInput, FourMcIndex, PartitionedFile, Array[Byte], FileRead) => Iterator[InternalRow] = {
-    val fieldIdx = requiredSchema.fields.map(f => dataSchema.fieldIndex(f.name))
-    val fieldTags: Array[Int] = requiredSchema.fields.map(f => CsvPayload.tagOf(f.dataType))
-    require(!fieldTags.contains(CsvPayload.TagArrInt),
-      "csv payload stores array<int> widened to array<long>; declare array<long> in the read schema")
-    val nFields = requiredSchema.length
-    val totalFields = dataSchema.length
-    val neededFields = if (fieldIdx.isEmpty) 0 else fieldIdx.max + 1
-    // lowest field any consumer reads (starts(src) / starts(src+1)): the
-    // boundary scan popcount-skips delimiters of fields below this
-    val firstField = if (fieldIdx.isEmpty) 1 else math.max(1, fieldIdx.min)
-    val fieldScale: Array[Int] = requiredSchema.fields.map(f => CsvPayload.scaleOf(f.dataType))
-    val fieldPrec: Array[Int] = requiredSchema.fields.map(f => CsvPayload.precisionOf(f.dataType))
-    // decimal precision <= 9 stores its unscaled value in the vector's INT
-    // lane (Spark's compact-decimal vector layout); <= 18 in the long lane
-    val intDecimal: Array[Boolean] =
-      requiredSchema.fields.map(f => CsvPayload.precisionOf(f.dataType) match {
-        case p if p < 0 => false
-        case p          => p <= org.apache.spark.sql.types.Decimal.MAX_INT_DIGITS
-      })
-    val tsMicroDigits = CsvPayload.fixedPatternFracDigits(tsFmt)
-    val fieldPreds = CsvPayload.compileFilters(filters, requiredSchema, fieldTags)
-    // filter-bound fields, evaluated at buffer time in pushdown order
-    val predFields: Array[Int] =
-      (0 until nFields).filter(k => fieldPreds(k).nonEmpty).toArray
+    val fields = new CsvFields(requiredSchema, dataSchema, filters, delim, tsFmt)
+    import fields._
 
     (in, index, file, verdicts, read) => {
       import FourMcFileFormat.BlockVerdict._
@@ -270,982 +257,598 @@ object FourMcVectorizedReader {
         read.onFinish(batch.close())
         erase(countBatches(batch, n))
       } else if (!owned.exists(b => decodes(verdicts(b)))) Iterator.empty
-      else if (index.stats.exists(_.columnar)) {
-      // ======= columnar layout fast path =======
-      // One field per line per stream: value slices come straight off the
-      // per-stream newline index — no boundary scan, no delimiter walk, and
-      // only the projected columns were ever decompressed. Pushed filters
-      // evaluate column-major first (no row-major premium, so no adaptive
-      // probe), then surviving rows late-materialize the remaining columns
-      // through a selection map.
-      lazy val fmt = java.time.format.DateTimeFormatter.ofPattern(tsFmt)
-        .withZone(java.time.ZoneOffset.UTC)
-      val fileCols = index.stats.get.tags.length
-      val neededOrds: Array[Int] = fieldIdx.filter(_ < fileCols).distinct.sorted
-      // required ordinal -> cursor slot (-1 = column absent from the file:
-      // reads as null / empty string, the missing-trailing-field semantics)
-      val slotOf: Array[Int] = fieldIdx.map(src =>
-        if (src < fileCols) java.util.Arrays.binarySearch(neededOrds, src) else -1)
-      val cursor =
-        FourMcFileFormat.columnarCursor(in, index, file, neededOrds, verdicts, permissive, read)
-      // per-FILE parse tags (micros-encoded timestamps carry tag 14)
-      val tags = CsvPayload.fileTags(fieldTags, fieldIdx, index.stats)
+      else {
+        val window =
+          if (index.stats.exists(_.columnar)) {
+            val fileCols = index.stats.get.tags.length
+            val neededOrds: Array[Int] = fieldIdx.filter(_ < fileCols).distinct.sorted
+            // required ordinal -> cursor slot (-1 = column absent from the
+            // file: reads as null, the missing-trailing-field semantics)
+            val slotOf: Array[Int] = fieldIdx.map(src =>
+              if (src < fileCols) java.util.Arrays.binarySearch(neededOrds, src) else -1)
+            new ColumnarWindow(
+              FourMcFileFormat.columnarCursor(in, index, file, neededOrds, verdicts, permissive, read),
+              slotOf, verdicts, elides = predFields.nonEmpty)
+          } else
+            new RowsWindow(fields, FourMcFileFormat.csvLines(in, index, file, verdicts, permissive, read))
+        val dataVectors = OnHeapColumnVector.allocateColumns(BatchSize, requiredSchema)
+        val allVectors: Array[ColumnVector] =
+          dataVectors.map(v => v: ColumnVector) ++ partitionVectors(partitionSchema, file.partitionValues)
+        val batch = new ColumnarBatch(allVectors)
+        read.onFinish(batch.close())
+        // per-FILE parse tags (micros-encoded timestamps carry tag 14)
+        erase(new CsvBatches(fields, CsvPayload.fileTags(fieldTags, fieldIdx, index.stats),
+          window, dataVectors, batch))
+      }
+    }
+  }
 
-      val dataVectors = OnHeapColumnVector.allocateColumns(BatchSize, requiredSchema)
-      val allVectors: Array[ColumnVector] =
-        dataVectors.map(v => v: ColumnVector) ++ partitionVectors(partitionSchema, file.partitionValues)
-      val batch = new ColumnarBatch(allVectors)
-      read.onFinish(batch.close())
+  /** What a csv decoder knows before it opens a file: where each required
+    * field sits in the data schema, how it parses, and the pushed filters
+    * compiled per field.
+    */
+  private final class CsvFields(
+      requiredSchema: StructType,
+      dataSchema: StructType,
+      filters: Seq[Filter],
+      val delim: Byte,
+      val tsFmt: String) extends Serializable {
+    val fieldIdx: Array[Int] = requiredSchema.fields.map(f => dataSchema.fieldIndex(f.name))
+    val fieldTags: Array[Int] = requiredSchema.fields.map(f => CsvPayload.tagOf(f.dataType))
+    require(!fieldTags.contains(CsvPayload.TagArrInt),
+      "csv payload stores array<int> widened to array<long>; declare array<long> in the read schema")
+    val nFields: Int = requiredSchema.length
+    val totalFields: Int = dataSchema.length
+    val neededFields: Int = if (fieldIdx.isEmpty) 0 else fieldIdx.max + 1
+    // lowest field any consumer reads (starts(src) / starts(src+1)): the
+    // boundary scan popcount-skips delimiters of fields below this
+    val firstField: Int = if (fieldIdx.isEmpty) 1 else math.max(1, fieldIdx.min)
+    val fieldScale: Array[Int] = requiredSchema.fields.map(f => CsvPayload.scaleOf(f.dataType))
+    val fieldPrec: Array[Int] = requiredSchema.fields.map(f => CsvPayload.precisionOf(f.dataType))
+    // decimal precision <= 9 stores its unscaled value in the vector's INT
+    // lane (Spark's compact-decimal vector layout); <= 18 in the long lane
+    val intDecimal: Array[Boolean] = fieldPrec.map(p => p >= 0 && p <= Decimal.MAX_INT_DIGITS)
+    val tsMicroDigits: Int = CsvPayload.fixedPatternFracDigits(tsFmt)
+    val fieldPreds: Array[CsvPayload.FieldPred] =
+      CsvPayload.compileFilters(filters, requiredSchema, fieldTags)
+    // filter-bound fields, evaluated in pushdown order
+    val predFields: Array[Int] = (0 until nFields).filter(k => fieldPreds(k).nonEmpty).toArray
+  }
 
-      val nPred = predFields.length
-      val predLongs = new Array[Long](BatchSize * math.max(1, nPred))
-      val predObjs = new Array[AnyRef](BatchSize * math.max(1, nPred))
-      val predNulls = new Array[Boolean](BatchSize * math.max(1, nPred))
-      val predSlot: Array[Int] = Array.fill(nFields)(-1)
-      locally { var pi = 0; while (pi < nPred) { predSlot(predFields(pi)) = pi; pi += 1 } }
-      val keepArr = new Array[Boolean](BatchSize)
-      val selRel = new Array[Int](BatchSize) // surviving row offsets within the batch window
-      // per-predicate dict-entry verdict caches, keyed on the block's
-      // DictStream instance — the entry table is constant for the whole
-      // block, so rebuild per BLOCK, not per 4096-row batch (r15 advice)
-      val predDict = new Array[graft.format.ColumnarBlocks.DictStream](math.max(1, nPred))
-      val predEKeep = new Array[Array[Boolean]](math.max(1, nPred))
-      val predENull = new Array[Array[Boolean]](math.max(1, nPred))
-      val predELong = new Array[Array[Long]](math.max(1, nPred))
-      val predEObj = new Array[Array[AnyRef]](math.max(1, nPred))
+  /** Where a window of up to [[BatchSize]] rows comes from, and where each
+    * row's value of a column lies: the one part of the csv decoder that
+    * knows the block layout.
+    */
+  private abstract class Window {
+    /** The window's first row within its block (dict codes are per block). */
+    var row0 = 0
+    /** Every row of the window passes the pushed filters (a Certain block). */
+    var certain = false
 
-      // Per-column decode tables for DICT-ENCODED streams, rebuilt when the
-      // block's DictStream changes: strings feed the vector's dictionary-id
-      // lane through [[McColumnDictionary]]; primitives parse each of the
-      // ≤64 entries ONCE per block and fill rows by table lookup — a
-      // low-cardinality numeric column (l_discount, l_tax) stops paying a
-      // per-row parse entirely.
-      val dictStreams = new Array[graft.format.ColumnarBlocks.DictStream](nFields)
-      val dictNulls = new Array[Array[Boolean]](nFields)
-      val dictLongs = new Array[Array[Long]](nFields) // primitive lanes, raw bits
-      val dictSpark = new Array[McColumnDictionary](nFields)
+    /** Loads the next window and returns its row count; 0 once the split
+      * is exhausted.
+      */
+    def advance(): Int
 
-      def refreshDict(k: Int, tag: Int, d: graft.format.ColumnarBlocks.DictStream): Unit = {
-        dictStreams(k) = d
+    /** The value slices of required column `k` for the window rows
+      * `sel(0 until n)`: row `sel(p)`'s value is `fb(p)[fs(p), fe(p))`, and
+      * `fs(p) = -1` reads as null (a value the file does not have).
+      */
+    def locate(k: Int, sel: Array[Int], n: Int,
+               fb: Array[Array[Byte]], fs: Array[Int], fe: Array[Int]): Unit
+
+    /** Column `k`'s dict-encoded stream in this window, or null. */
+    def dict(k: Int): graft.format.ColumnarBlocks.DictStream = null
+
+    /** Lets go of the block buffers the window points into. */
+    def release(): Unit = ()
+  }
+
+  /** The rows layout: up to [[BatchSize]] zero-copy line slices of the
+    * split, boundary-scanned as they are buffered. The slices point into
+    * the decompressed block buffers, which are fresh per block, so the few
+    * blocks a window spans stay pinned until [[release]].
+    */
+  private final class RowsWindow(f: CsvFields, lines: FourMcLineIterator) extends Window {
+    import f._
+    private val stride = neededFields + 1
+    private val bufBytes = new Array[Array[Byte]](BatchSize)
+    private val rowEnds = new Array[Int](BatchSize) // exclusive line end per buffered row
+    private val starts = new Array[Int](BatchSize * stride)
+    private var n = 0
+
+    override def advance(): Int = {
+      n = 0
+      while (n < BatchSize && lines.advanceSlice()) {
+        val bytes = lines.sliceBytes
+        CsvPayload.scanBoundaries(bytes, delim, starts, n * stride, neededFields, totalFields,
+          lines.sliceStart, lines.sliceEnd, firstField)
+        bufBytes(n) = bytes
+        rowEnds(n) = lines.sliceEnd
+        n += 1
+      }
+      n
+    }
+
+    override def locate(k: Int, sel: Array[Int], m: Int,
+                        fb: Array[Array[Byte]], fs: Array[Int], fe: Array[Int]): Unit = {
+      val src = fieldIdx(k)
+      var p = 0
+      while (p < m) {
+        val r = sel(p)
+        val bytes = bufBytes(r)
+        val base = r * stride
+        val s = starts(base + src)
+        val to = rowEnds(r)
+        fb(p) = bytes
+        // s past the line end: a trailing field the line does not have (an
+        // older-generation file under positional schema evolution) — null
+        // for every type, unlike a present-but-empty field
+        if (s > to) fs(p) = -1
+        else {
+          fs(p) = s
+          fe(p) = CsvPayload.fieldEnd(bytes, delim, starts, base, src, s, neededFields, totalFields, to)
+        }
+        p += 1
+      }
+    }
+
+    override def release(): Unit = java.util.Arrays.fill(bufBytes.asInstanceOf[Array[AnyRef]], 0, n, null)
+  }
+
+  /** The columnar layout: the next [[BatchSize]] rows of the current block.
+    * One field per line per stream: value slices come straight off the
+    * per-stream newline index, with no boundary scan, and only the
+    * projected columns were ever decompressed. `slotOf` maps a required
+    * column to its cursor slot, -1 for a column the file does not have.
+    * A Certain block's windows skip the filters; with `elides`, each such
+    * block counts in `predElidedBlocks`.
+    */
+  private final class ColumnarWindow(
+      cursor: McColumnarCursor,
+      slotOf: Array[Int],
+      verdicts: Array[Byte],
+      elides: Boolean) extends Window {
+    private var n = 0
+    private var inBlock = false
+
+    // the next block is read when a window is asked for, not after the
+    // previous one is handed out: a consumer that stops (a LIMIT) reads no
+    // block past the one it stopped in
+    override def advance(): Int = {
+      row0 += n
+      n = 0
+      while (!inBlock || row0 >= cursor.rows) {
+        if (!cursor.nextBlock()) return 0
+        inBlock = true
+        row0 = 0
+        // a Certain block's lines all pass: its per-row evaluation (and the
+        // pred-value cache) is a provable no-op
+        certain = verdicts(cursor.blockOrd) == FourMcFileFormat.BlockVerdict.Certain
+        if (certain && elides) FourMcScanMetrics.predElidedBlocks.add(1)
+      }
+      n = math.min(BatchSize, cursor.rows - row0)
+      n
+    }
+
+    override def locate(k: Int, sel: Array[Int], m: Int,
+                        fb: Array[Array[Byte]], fs: Array[Int], fe: Array[Int]): Unit = {
+      val j = slotOf(k)
+      if (j < 0) java.util.Arrays.fill(fs, 0, m, -1)
+      else {
+        val bytes = cursor.colBytes(j)
+        var p = 0
+        while (p < m) {
+          val r = row0 + sel(p)
+          fb(p) = bytes
+          fs(p) = cursor.valStart(j, r)
+          fe(p) = cursor.valEnd(j, r)
+          p += 1
+        }
+      }
+    }
+
+    override def dict(k: Int): graft.format.ColumnarBlocks.DictStream = {
+      val j = slotOf(k)
+      if (j < 0) null else cursor.dictOf(j)
+    }
+  }
+
+  /** The batches of one file: for each [[Window]], the pushed filters
+    * evaluate column-major over the window's rows into the pred-value
+    * cache and narrow the selection `sel`; then one fill pass decodes the
+    * selected rows into the vectors, the filter-bound columns replaying
+    * their cached values. Each per-type kernel is written once:
+    * [[parseBits]] (filters and dict tables), [[putBits]] (cached and dict
+    * values), the plain fill, the array split and the map split.
+    *
+    * ADAPTIVE fail-fast: evaluation costs pred-cache writes, selection
+    * bookkeeping and closure dispatch, pure overhead when a filter keeps
+    * ~everything (the r14 JFR run put the columnar evaluation at 24% of
+    * q1's samples against a 98%-keeping shipdate range the unsorted blocks
+    * cannot prove certain). Probe windows measure refusals; a window that
+    * refuses under ~12.5% of its rows turns evaluation off, and one window
+    * per [[ProbePeriod]] re-probes, catching a selectivity shift the block
+    * stats did not absorb. Skipping is always sound: Spark's post-scan
+    * Filter re-applies every pushed predicate, and the footer-stats
+    * relation re-checks its rows. Certain blocks skip without probing.
+    */
+  private final class CsvBatches(
+      f: CsvFields,
+      tags: Array[Int],
+      win: Window,
+      dataVectors: Array[OnHeapColumnVector],
+      batch: ColumnarBatch) extends Iterator[ColumnarBatch] {
+    import f._
+
+    private lazy val fmt = java.time.format.DateTimeFormatter.ofPattern(tsFmt)
+      .withZone(java.time.ZoneOffset.UTC)
+    private val nPred = predFields.length
+    // parsed filter-field values of the window's rows, so the fill never
+    // parses a filter-bound field twice: primitives as raw long bits,
+    // strings as the unescaped UTF8String, nulls flagged; row r's value of
+    // filter pi sits at r * nPred + pi
+    private val predLongs = new Array[Long](BatchSize * math.max(1, nPred))
+    private val predObjs = new Array[AnyRef](BatchSize * math.max(1, nPred))
+    private val predNulls = new Array[Boolean](BatchSize * math.max(1, nPred))
+    // column ordinal -> slot in the pred cache (-1 = not filter-bound)
+    private val predSlot: Array[Int] = Array.fill(nFields)(-1)
+    locally { var pi = 0; while (pi < nPred) { predSlot(predFields(pi)) = pi; pi += 1 } }
+    // the window rows that enter the batch, ascending
+    private val sel = new Array[Int](BatchSize)
+    // one column's value slices for the rows being evaluated or filled
+    private val fb = new Array[Array[Byte]](BatchSize)
+    private val fs = new Array[Int](BatchSize)
+    private val fe = new Array[Int](BatchSize)
+
+    // Per-column entry tables of DICT-ENCODED streams, rebuilt when the
+    // block's DictStream changes: each of the ≤64 entries is parsed and
+    // tested against the column's filters ONCE per block, so a q6-class
+    // predicate or a low-cardinality column (l_discount, l_tax) stops
+    // paying a per-row parse; strings feed the vector's dictionary-id lane
+    // through [[McColumnDictionary]].
+    private val dStream = new Array[graft.format.ColumnarBlocks.DictStream](nFields)
+    private val dNulls = new Array[Array[Boolean]](nFields)
+    private val dLongs = new Array[Array[Long]](nFields)
+    private val dObjs = new Array[Array[AnyRef]](nFields)
+    private val dKeep = new Array[Array[Boolean]](nFields)
+    private val dSpark = new Array[McColumnDictionary](nFields)
+
+    private val ProbePeriod = 16
+    private var batchOrd = 0
+    private var evalOn = true // the last evaluated window's verdict
+    private var n = 0 // rows in the loaded window
+    private var loaded = false
+
+    override def hasNext: Boolean = {
+      if (!loaded) { n = win.advance(); loaded = true }
+      n > 0
+    }
+
+    override def next(): ColumnarBatch = {
+      if (!hasNext) throw new NoSuchElementException
+      loaded = false
+      var k = 0
+      while (k < nFields) { dataVectors(k).reset(); k += 1 }
+      val evalThis = nPred > 0 && !win.certain && (evalOn || batchOrd % ProbePeriod == 0)
+      val selN =
+        if (!evalThis) {
+          if (nPred > 0) FourMcScanMetrics.predSkipBatches.add(1)
+          var r = 0
+          while (r < n) { sel(r) = r; r += 1 }
+          n
+        } else {
+          FourMcScanMetrics.predEvalBatches.add(1)
+          val s = evalPredicates()
+          evalOn = (n - s).toLong * 8 >= n.toLong
+          s
+        }
+      fillColumns(selN, replay = evalThis)
+      win.release()
+      batchOrd += 1
+      batch.setNumRows(selN)
+      batch
+    }
+
+    private def pass(ps: Array[Any => Boolean], v: Any): Boolean = {
+      var pi = 0
+      while (pi < ps.length) { if (!ps(pi)(v)) return false; pi += 1 }
+      true
+    }
+
+    /** A non-string value of column `k` as raw long bits. */
+    private def parseBits(k: Int, tag: Int, b: Array[Byte], s: Int, e: Int): Long =
+      (tag: @scala.annotation.switch) match {
+        case CsvPayload.TagLong | CsvPayload.TagTimestampMicros => CsvPayload.parseLong(b, s, e)
+        case CsvPayload.TagInt => CsvPayload.parseInt(b, s, e).toLong
+        case CsvPayload.TagDouble =>
+          java.lang.Double.doubleToRawLongBits(CsvPayload.parseDouble(b, s, e))
+        case CsvPayload.TagFloat =>
+          java.lang.Float.floatToRawIntBits(CsvPayload.parseFloat(b, s, e)).toLong
+        case CsvPayload.TagBoolean => if (b(s) == 't' || b(s) == 'T') 1L else 0L
+        case CsvPayload.TagDate    => CsvPayload.parseDateDays(b, s, e).toLong
+        case CsvPayload.TagDecimal => CsvPayload.parseDecimalUnscaled(b, s, e, fieldScale(k))
+        case _ =>
+          if (tsMicroDigits >= 0 && CsvPayload.isFixedLayout(b, s, e))
+            CsvPayload.parseTimestampMicros(b, s, e)
+          else {
+            val inst = java.time.Instant.from(fmt.parse(CsvPayload.ascii(b, s, e)))
+            inst.getEpochSecond * 1000000L + inst.getNano / 1000L
+          }
+      }
+
+    /** Raw bits `x` as the boxed value a filter closure takes. */
+    private def boxed(k: Int, tag: Int, x: Long): Any = (tag: @scala.annotation.switch) match {
+      case CsvPayload.TagInt | CsvPayload.TagDate => x.toInt
+      case CsvPayload.TagDouble  => java.lang.Double.longBitsToDouble(x)
+      case CsvPayload.TagFloat   => java.lang.Float.intBitsToFloat(x.toInt)
+      case CsvPayload.TagBoolean => x == 1L
+      case CsvPayload.TagDecimal => Decimal(x, fieldPrec(k), fieldScale(k))
+      case _                     => x
+    }
+
+    /** Writes raw bits `x` of column `k` at position `p` of `vec`. Compact
+      * decimals store the unscaled value in the int or long lane (the
+      * layout Spark's parquet reader fills); precision picks the lane.
+      */
+    private def putBits(vec: OnHeapColumnVector, p: Int, k: Int, tag: Int, x: Long): Unit =
+      (tag: @scala.annotation.switch) match {
+        case CsvPayload.TagInt | CsvPayload.TagDate => vec.putInt(p, x.toInt)
+        case CsvPayload.TagDouble  => vec.putDouble(p, java.lang.Double.longBitsToDouble(x))
+        case CsvPayload.TagFloat   => vec.putFloat(p, java.lang.Float.intBitsToFloat(x.toInt))
+        case CsvPayload.TagBoolean => vec.putBoolean(p, x == 1L)
+        case CsvPayload.TagDecimal => if (intDecimal(k)) vec.putInt(p, x.toInt) else vec.putLong(p, x)
+        case _                     => vec.putLong(p, x)
+      }
+
+    /** Does the slice `b[s, e)` read as a null of `tag`? An empty slice is
+      * the empty string, and a null of every other type.
+      */
+    @inline private def isNull(tag: Int, b: Array[Byte], s: Int, e: Int): Boolean =
+      s < 0 || CsvPayload.isNullMarker(b, s, e) || (s >= e && tag != CsvPayload.TagString)
+
+    /** Parses one value of column `k` into entry `i` of the given lanes and
+      * tests it against the column's filters `fp`.
+      */
+    private def evalValue(k: Int, tag: Int, fp: CsvPayload.FieldPred, b: Array[Byte], s: Int, e: Int,
+                          nulls: Array[Boolean], longs: Array[Long], objs: Array[AnyRef], i: Int): Boolean =
+      if (isNull(tag, b, s, e)) { nulls(i) = true; fp.nullPasses }
+      else {
+        nulls(i) = false
+        if (tag == CsvPayload.TagString) {
+          val u = if (s >= e) UTF8String.EMPTY_UTF8 else CsvPayload.unescape(b, s, e, delim)
+          objs(i) = u
+          pass(fp.rest, u)
+        } else {
+          val x = parseBits(k, tag, b, s, e)
+          longs(i) = x
+          fp.rangeOk(x) && (fp.rest.length == 0 || pass(fp.rest, boxed(k, tag, x)))
+        }
+      }
+
+    /** Builds column `k`'s entry tables for dict stream `d`, once per block. */
+    private def entries(k: Int, tag: Int, d: graft.format.ColumnarBlocks.DictStream): Unit =
+      if (dStream(k) ne d) {
         val nE = d.nEntries
         val nulls = new Array[Boolean](nE)
-        if (tag == CsvPayload.TagString) {
-          val ents = new Array[Array[Byte]](nE)
-          var e = 0
-          while (e < nE) {
-            val s = d.entryStart(e)
-            val en = d.entryEnd(e)
-            if (CsvPayload.isNullMarker(d.data, s, en)) { nulls(e) = true; ents(e) = Array.emptyByteArray }
-            else if (s >= en) ents(e) = Array.emptyByteArray
-            else ents(e) = CsvPayload.unescape(d.data, s, en, delim).getBytes
-            e += 1
+        val longs = new Array[Long](nE)
+        val objs = new Array[AnyRef](nE)
+        val keep = new Array[Boolean](nE)
+        var en = 0
+        while (en < nE) {
+          keep(en) = evalValue(k, tag, fieldPreds(k), d.data, d.entryStart(en), d.entryEnd(en),
+            nulls, longs, objs, en)
+          en += 1
+        }
+        dStream(k) = d
+        dNulls(k) = nulls; dLongs(k) = longs; dObjs(k) = objs; dKeep(k) = keep
+        dSpark(k) =
+          if (tag != CsvPayload.TagString) null
+          else new McColumnDictionary(Array.tabulate(nE)(en =>
+            if (nulls(en)) Array.emptyByteArray else objs(en).asInstanceOf[UTF8String].getBytes))
+      }
+
+    /** Evaluates the pushed filters over the window's rows, one filter
+      * column at a time over the rows still selected, caching the parsed
+      * values for replay; returns the survivor count, their rows in `sel`.
+      */
+    private def evalPredicates(): Int = {
+      var selN = n
+      var r = 0
+      while (r < n) { sel(r) = r; r += 1 }
+      var pi = 0
+      while (pi < nPred && selN > 0) {
+        val k = predFields(pi)
+        val tag = tags(k)
+        val d = win.dict(k)
+        var kept = 0
+        var p = 0
+        if (d != null) {
+          // dict-encoded stream: two table lookups per row
+          entries(k, tag, d)
+          val nulls = dNulls(k); val longs = dLongs(k); val objs = dObjs(k); val keep = dKeep(k)
+          while (p < selN) {
+            val r = sel(p)
+            val c = d.code(win.row0 + r)
+            val slot = r * nPred + pi
+            predNulls(slot) = nulls(c); predLongs(slot) = longs(c); predObjs(slot) = objs(c)
+            if (keep(c)) { sel(kept) = r; kept += 1 }
+            p += 1
           }
-          dictSpark(k) = new McColumnDictionary(ents)
-          dictLongs(k) = null
         } else {
-          val longs = new Array[Long](nE)
-          var e = 0
-          while (e < nE) {
-            val s = d.entryStart(e)
-            val en = d.entryEnd(e)
-            val bytes = d.data
-            if (CsvPayload.isNullMarker(bytes, s, en) || s >= en) nulls(e) = true
-            else (tag: @scala.annotation.switch) match {
-              case CsvPayload.TagLong    => longs(e) = CsvPayload.parseLong(bytes, s, en)
-              case CsvPayload.TagInt     => longs(e) = CsvPayload.parseInt(bytes, s, en).toLong
-              case CsvPayload.TagDouble  =>
-                longs(e) = java.lang.Double.doubleToRawLongBits(CsvPayload.parseDouble(bytes, s, en))
-              case CsvPayload.TagFloat   =>
-                longs(e) = java.lang.Float.floatToRawIntBits(CsvPayload.parseFloat(bytes, s, en)).toLong
-              case CsvPayload.TagBoolean => longs(e) = if (bytes(s) == 't' || bytes(s) == 'T') 1L else 0L
-              case CsvPayload.TagDate    => longs(e) = CsvPayload.parseDateDays(bytes, s, en).toLong
-              case CsvPayload.TagDecimal =>
-                longs(e) = CsvPayload.parseDecimalUnscaled(bytes, s, en, fieldScale(k))
-              case CsvPayload.TagTimestampMicros => longs(e) = CsvPayload.parseLong(bytes, s, en)
-              case _ =>
-                longs(e) =
-                  if (tsMicroDigits >= 0 && CsvPayload.isFixedLayout(bytes, s, en))
-                    CsvPayload.parseTimestampMicros(bytes, s, en)
-                  else {
-                    val inst = java.time.Instant.from(fmt.parse(CsvPayload.ascii(bytes, s, en)))
-                    inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-                  }
-            }
-            e += 1
-          }
-          dictLongs(k) = longs
-          dictSpark(k) = null
-        }
-        dictNulls(k) = nulls
-      }
-
-      def pass(ps: Array[Any => Boolean], v: Any): Boolean = {
-        var pi = 0
-        while (pi < ps.length) { if (!ps(pi)(v)) return false; pi += 1 }
-        true
-      }
-
-      /** Evaluate the pushed filters over rows [r0, r0+n) of the current
-        * block, caching parsed values for replay; returns the survivor
-        * count with their offsets in `selRel`.
-        */
-      def evalPredicates(r0: Int, n: Int): Int = {
-        java.util.Arrays.fill(keepArr, 0, n, true)
-        var pi = 0
-        while (pi < nPred) {
-          val k = predFields(pi)
+          win.locate(k, sel, selN, fb, fs, fe)
           val fp = fieldPreds(k)
-          val ps = fp.rest
-          val tag = tags(k)
-          val j = slotOf(k)
-          if (j < 0) {
-            // column absent from the file (positional schema evolution,
-            // r15): every value is NULL — same semantics every type,
-            // matching what a parquet reader gives for an added column
-            val keepMissing = fp.nullPasses
-            var r = 0
-            while (r < n) {
-              if (keepArr(r)) {
-                keepArr(r) = keepMissing
-                predNulls(r * nPred + pi) = true
-              }
-              r += 1
+          while (p < selN) {
+            val r = sel(p)
+            if (evalValue(k, tag, fp, fb(p), fs(p), fe(p), predNulls, predLongs, predObjs, r * nPred + pi)) {
+              sel(kept) = r; kept += 1
             }
-          } else if (cursor.dictOf(j) != null) {
-            // dict-encoded stream: evaluate each of the ≤64 ENTRIES once,
-            // then the row loop is two table lookups — a q6-class
-            // predicate over a low-cardinality column stops parsing rows
-            val d = cursor.dictOf(j)
-            val nE = d.nEntries
-            val fresh = predDict(pi) ne d
-            val eKeep = if (fresh) new Array[Boolean](nE) else predEKeep(pi)
-            val eNull = if (fresh) new Array[Boolean](nE) else predENull(pi)
-            val eLong = if (fresh) new Array[Long](nE) else predELong(pi)
-            val eObj = if (fresh) new Array[AnyRef](nE) else predEObj(pi)
-            val bytes = d.data
-            var en = if (fresh) 0 else nE // cached: skip the build loop
-            while (en < nE) {
-              val s = d.entryStart(en)
-              val e = d.entryEnd(en)
-              var keep = true
-              if (CsvPayload.isNullMarker(bytes, s, e) ||
-                  (s >= e && tag != CsvPayload.TagString)) {
-                keep = fp.nullPasses
-                eNull(en) = true
-              } else {
-                (tag: @scala.annotation.switch) match {
-                  case CsvPayload.TagString =>
-                    val u = if (s >= e) org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8
-                            else CsvPayload.unescape(bytes, s, e, delim)
-                    keep = pass(ps, u); eObj(en) = u
-                  case CsvPayload.TagLong =>
-                    val x = CsvPayload.parseLong(bytes, s, e)
-                    keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                    eLong(en) = x
-                  case CsvPayload.TagInt =>
-                    val x = CsvPayload.parseInt(bytes, s, e)
-                    keep = fp.rangeOk(x.toLong) && (ps.length == 0 || pass(ps, x))
-                    eLong(en) = x.toLong
-                  case CsvPayload.TagDouble =>
-                    val x = CsvPayload.parseDouble(bytes, s, e)
-                    keep = pass(ps, x); eLong(en) = java.lang.Double.doubleToRawLongBits(x)
-                  case CsvPayload.TagFloat =>
-                    val x = CsvPayload.parseFloat(bytes, s, e)
-                    keep = pass(ps, x)
-                    eLong(en) = java.lang.Float.floatToRawIntBits(x).toLong
-                  case CsvPayload.TagBoolean =>
-                    val x = bytes(s) == 't' || bytes(s) == 'T'
-                    keep = pass(ps, x); eLong(en) = if (x) 1L else 0L
-                  case CsvPayload.TagDate =>
-                    val x = CsvPayload.parseDateDays(bytes, s, e)
-                    keep = fp.rangeOk(x.toLong) && (ps.length == 0 || pass(ps, x))
-                    eLong(en) = x.toLong
-                  case CsvPayload.TagDecimal =>
-                    val un = CsvPayload.parseDecimalUnscaled(bytes, s, e, fieldScale(k))
-                    keep = fp.rangeOk(un) && (ps.length == 0 ||
-                      pass(ps, org.apache.spark.sql.types.Decimal(un, fieldPrec(k), fieldScale(k))))
-                    eLong(en) = un
-                  case CsvPayload.TagTimestampMicros =>
-                    val x = CsvPayload.parseLong(bytes, s, e)
-                    keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                    eLong(en) = x
-                  case _ =>
-                    val x =
-                      if (tsMicroDigits >= 0 && CsvPayload.isFixedLayout(bytes, s, e))
-                        CsvPayload.parseTimestampMicros(bytes, s, e)
-                      else {
-                        val inst =
-                          java.time.Instant.from(fmt.parse(CsvPayload.ascii(bytes, s, e)))
-                        inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-                      }
-                    keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                    eLong(en) = x
-                }
-              }
-              eKeep(en) = keep
-              en += 1
-            }
-            if (fresh) {
-              predDict(pi) = d
-              predEKeep(pi) = eKeep; predENull(pi) = eNull
-              predELong(pi) = eLong; predEObj(pi) = eObj
-            }
-            var r = 0
-            while (r < n) {
-              if (keepArr(r)) {
-                val c = d.code(r0 + r)
-                val slot = r * nPred + pi
-                predNulls(slot) = eNull(c)
-                predLongs(slot) = eLong(c)
-                predObjs(slot) = eObj(c)
-                keepArr(r) = eKeep(c)
-              }
-              r += 1
-            }
-          } else {
-            val bytes = cursor.colBytes(j)
-            var r = 0
-            while (r < n) {
-              if (keepArr(r)) {
-                val s = cursor.valStart(j, r0 + r)
-                val e = cursor.valEnd(j, r0 + r)
-                val slot = r * nPred + pi
-                var keep = true
-                if (CsvPayload.isNullMarker(bytes, s, e) ||
-                    (s >= e && tag != CsvPayload.TagString)) {
-                  keep = fp.nullPasses
-                  predNulls(slot) = true
-                } else {
-                  predNulls(slot) = false
-                  (tag: @scala.annotation.switch) match {
-                    case CsvPayload.TagString =>
-                      val u = if (s >= e) org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8
-                              else CsvPayload.unescape(bytes, s, e, delim)
-                      keep = pass(ps, u); predObjs(slot) = u
-                    case CsvPayload.TagLong =>
-                      val x = CsvPayload.parseLong(bytes, s, e)
-                      keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                      predLongs(slot) = x
-                    case CsvPayload.TagInt =>
-                      val x = CsvPayload.parseInt(bytes, s, e)
-                      keep = fp.rangeOk(x.toLong) && (ps.length == 0 || pass(ps, x))
-                      predLongs(slot) = x.toLong
-                    case CsvPayload.TagDouble =>
-                      val x = CsvPayload.parseDouble(bytes, s, e)
-                      keep = pass(ps, x); predLongs(slot) = java.lang.Double.doubleToRawLongBits(x)
-                    case CsvPayload.TagFloat =>
-                      val x = CsvPayload.parseFloat(bytes, s, e)
-                      keep = pass(ps, x)
-                      predLongs(slot) = java.lang.Float.floatToRawIntBits(x).toLong
-                    case CsvPayload.TagBoolean =>
-                      val x = bytes(s) == 't' || bytes(s) == 'T'
-                      keep = pass(ps, x); predLongs(slot) = if (x) 1L else 0L
-                    case CsvPayload.TagDate =>
-                      val x = CsvPayload.parseDateDays(bytes, s, e)
-                      keep = fp.rangeOk(x.toLong) && (ps.length == 0 || pass(ps, x))
-                      predLongs(slot) = x.toLong
-                    case CsvPayload.TagDecimal =>
-                      val un = CsvPayload.parseDecimalUnscaled(bytes, s, e, fieldScale(k))
-                      keep = fp.rangeOk(un) && (ps.length == 0 ||
-                        pass(ps, org.apache.spark.sql.types.Decimal(un, fieldPrec(k), fieldScale(k))))
-                      predLongs(slot) = un
-                    case CsvPayload.TagTimestampMicros =>
-                      val x = CsvPayload.parseLong(bytes, s, e)
-                      keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                      predLongs(slot) = x
-                    case _ =>
-                      val x =
-                        if (tsMicroDigits >= 0 && CsvPayload.isFixedLayout(bytes, s, e))
-                          CsvPayload.parseTimestampMicros(bytes, s, e)
-                        else {
-                          val inst =
-                            java.time.Instant.from(fmt.parse(CsvPayload.ascii(bytes, s, e)))
-                          inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-                        }
-                      keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                      predLongs(slot) = x
-                  }
-                }
-                keepArr(r) = keep
-              }
-              r += 1
-            }
+            p += 1
           }
-          pi += 1
         }
-        var selN = 0
-        var r = 0
-        while (r < n) { if (keepArr(r)) { selRel(selN) = r; selN += 1 }; r += 1 }
-        selN
+        selN = kept
+        pi += 1
       }
+      selN
+    }
 
-      /** Decode the surviving rows into the vectors at positions
-        * [0, selN): column-major, pred-bound columns replay their cached
-        * values (when `replay` — an elided block has no cache and parses
-        * directly), selection indices resolve through selRel.
-        */
-      def fillColumns(r0: Int, selN: Int, replay: Boolean): Unit = {
-        var k = 0
-        while (k < nFields) {
-          val vec = dataVectors(k)
-          val tag = tags(k)
-          val j = slotOf(k)
-          val slot0 = predSlot(k)
-          // a dictionary set by a previous batch survives reset(); clear it
-          // unless this batch's dict lane re-sets it below
-          if (vec.hasDictionary) vec.setDictionary(null)
-          if (j < 0) {
-            // absent column: null for every type (schema evolution, r15)
-            var p = 0
-            while (p < selN) { vec.putNull(p); p += 1 }
-          } else if (CsvPayload.isArrayTag(tag)) {
-            val bytes = cursor.colBytes(j)
-            val child = vec.arrayData()
-            var off = 0
-            var p = 0
-            while (p < selN) {
-              val r = r0 + selRel(p)
-              val s = cursor.valStart(j, r)
-              val e = cursor.valEnd(j, r)
-              if (CsvPayload.isNullMarker(bytes, s, e)) vec.putNull(p)
-              else {
-                var cnt = 0
-                if (s < e) {
-                  child.reserve(off + ((e - s) >> 1) + 1)
-                  var ts = s
-                  var more = true
-                  while (more) {
-                    var te = ts
-                    while (te < e && bytes(te) != CsvPayload.ElemSep) te += 1
-                    if (CsvPayload.isNullElem(bytes, ts, te)) child.putNull(off + cnt)
-                    else (tag: @scala.annotation.switch) match {
-                      case CsvPayload.TagArrLong =>
-                        child.putLong(off + cnt, CsvPayload.parseLong(bytes, ts, te))
-                      case CsvPayload.TagArrFloat =>
-                        child.putFloat(off + cnt, CsvPayload.parseFloat(bytes, ts, te))
-                      case _ =>
-                        child.putDouble(off + cnt, CsvPayload.parseDouble(bytes, ts, te))
-                    }
-                    cnt += 1
-                    if (te >= e) more = false else ts = te + 1
-                  }
-                }
-                vec.putArray(p, off, cnt)
-                off += cnt
-              }
-              p += 1
-            }
-          } else if (tag == CsvPayload.TagMap) {
-            val bytes = cursor.colBytes(j)
-            val keyChild = vec.getChild(0)
-            val valChild = vec.getChild(1)
-            var off = 0
-            var p = 0
-            while (p < selN) {
-              val r = r0 + selRel(p)
-              val s = cursor.valStart(j, r)
-              val e = cursor.valEnd(j, r)
-              if (CsvPayload.isNullMarker(bytes, s, e)) vec.putNull(p)
-              else {
-                val cnt = CsvPayload.countEntries(bytes, s, e)
-                keyChild.reserve(off + cnt)
-                valChild.reserve(off + cnt)
-                var ts = s
-                var m = 0
-                while (m < cnt) {
-                  val te = CsvPayload.entryEnd(bytes, ts, e)
-                  val eq = CsvPayload.kvSplit(bytes, ts, te)
-                  val ke = if (eq < 0) te else eq
-                  if (ts >= ke) keyChild.putByteArray(off + m, Array.emptyByteArray, 0, 0)
-                  else {
-                    val u = CsvPayload.unescape(bytes, ts, ke, delim)
-                    keyChild.putByteArray(off + m, u.getBytes, 0, u.numBytes())
-                  }
-                  val vs0 = if (eq < 0) te else eq + 1
-                  if (eq >= 0 && CsvPayload.isNullMarker(bytes, vs0, te)) valChild.putNull(off + m)
-                  else if (vs0 >= te) valChild.putByteArray(off + m, Array.emptyByteArray, 0, 0)
-                  else {
-                    val u = CsvPayload.unescape(bytes, vs0, te, delim)
-                    valChild.putByteArray(off + m, u.getBytes, 0, u.numBytes())
-                  }
-                  ts = te + 1
-                  m += 1
-                }
-                vec.putArray(p, off, cnt)
-                off += cnt
-              }
-              p += 1
-            }
-          } else if (replay && slot0 >= 0) {
-            var p = 0
-            while (p < selN) {
-              val slot = selRel(p) * nPred + slot0
-              if (predNulls(slot)) vec.putNull(p)
+    /** Decodes the selected rows into the vectors at positions [0, selN),
+      * column-major. With `replay`, filter-bound columns take their cached
+      * values (a window that skipped evaluation has none and parses).
+      */
+    private def fillColumns(selN: Int, replay: Boolean): Unit = {
+      var k = 0
+      while (k < nFields) {
+        val vec = dataVectors(k)
+        val tag = tags(k)
+        // a dictionary set by a previous batch survives reset(); clear it
+        // unless this batch's dict lane sets it again
+        if (vec.hasDictionary) vec.setDictionary(null)
+        val nested = CsvPayload.isArrayTag(tag) || tag == CsvPayload.TagMap
+        val slot0 = if (replay) predSlot(k) else -1 // arrays and maps are never filter-bound
+        val d = if (nested) null else win.dict(k)
+        if (slot0 >= 0) {
+          var p = 0
+          while (p < selN) {
+            val slot = sel(p) * nPred + slot0
+            if (predNulls(slot)) vec.putNull(p)
+            else if (tag == CsvPayload.TagString) {
+              val u = predObjs(slot).asInstanceOf[UTF8String]
+              vec.putByteArray(p, u.getBytes, 0, u.numBytes())
+            } else putBits(vec, p, k, tag, predLongs(slot))
+            p += 1
+          }
+        } else if (d != null) {
+          entries(k, tag, d)
+          val nulls = dNulls(k)
+          val longs = dLongs(k)
+          val ids =
+            if (tag != CsvPayload.TagString) null
+            else { vec.setDictionary(dSpark(k)); vec.reserveDictionaryIds(BatchSize) }
+          var p = 0
+          while (p < selN) {
+            val c = d.code(win.row0 + sel(p))
+            if (nulls(c)) vec.putNull(p)
+            else if (ids != null) ids.putInt(p, c)
+            else putBits(vec, p, k, tag, longs(c))
+            p += 1
+          }
+        } else {
+          win.locate(k, sel, selN, fb, fs, fe)
+          if (CsvPayload.isArrayTag(tag)) fillArrays(vec, tag, selN)
+          else if (tag == CsvPayload.TagMap) fillMaps(vec, selN)
+          else fillPlain(vec, k, tag, selN)
+        }
+        k += 1
+      }
+    }
+
+    /** Parses the located values into `vec`. */
+    private def fillPlain(vec: OnHeapColumnVector, k: Int, tag: Int, selN: Int): Unit = {
+      var p = 0
+      while (p < selN) {
+        val b = fb(p)
+        val s = fs(p)
+        val e = fe(p)
+        if (isNull(tag, b, s, e)) vec.putNull(p)
+        else if (tag != CsvPayload.TagString) putBits(vec, p, k, tag, parseBits(k, tag, b, s, e))
+        else if (s >= e) vec.putByteArray(p, Array.emptyByteArray, 0, 0)
+        // the common case copies the block bytes straight into the vector's
+        // contiguous child array: one copy, no allocation
+        else if (CsvPayload.escapeFree(b, s, e)) vec.putByteArray(p, b, s, e - s)
+        else {
+          val u = CsvPayload.unescape(b, s, e, delim)
+          vec.putByteArray(p, u.getBytes, 0, u.numBytes())
+        }
+        p += 1
+      }
+    }
+
+    /** Splits the located `;`-joined numeric arrays into `vec`'s CHILD
+      * vector at explicit indices (one reserve per row, no per-element
+      * append bookkeeping — measured 1.4x over appendLong per element);
+      * putArray records (offset, count) per row. The child was reset with
+      * the parent, so offsets restart at 0.
+      */
+    private def fillArrays(vec: OnHeapColumnVector, tag: Int, selN: Int): Unit = {
+      val child = vec.arrayData()
+      var off = 0
+      var p = 0
+      while (p < selN) {
+        val b = fb(p)
+        val s = fs(p)
+        val e = fe(p)
+        if (s < 0 || CsvPayload.isNullMarker(b, s, e)) vec.putNull(p)
+        else {
+          // single-pass split+parse: tokens ≤ (len+1)/2 bounds the reserve
+          // (1-byte token + separator repeating), so no counting pre-scan
+          // touches the field bytes twice
+          var cnt = 0
+          if (s < e) {
+            child.reserve(off + ((e - s) >> 1) + 1)
+            var ts = s
+            var more = true
+            while (more) {
+              var te = ts
+              while (te < e && b(te) != CsvPayload.ElemSep) te += 1
+              if (CsvPayload.isNullElem(b, ts, te)) child.putNull(off + cnt)
               else (tag: @scala.annotation.switch) match {
-                case CsvPayload.TagString =>
-                  val u = predObjs(slot).asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-                  vec.putByteArray(p, u.getBytes, 0, u.numBytes())
-                case CsvPayload.TagLong      => vec.putLong(p, predLongs(slot))
-                case CsvPayload.TagInt       => vec.putInt(p, predLongs(slot).toInt)
-                case CsvPayload.TagDouble    =>
-                  vec.putDouble(p, java.lang.Double.longBitsToDouble(predLongs(slot)))
-                case CsvPayload.TagFloat     =>
-                  vec.putFloat(p, java.lang.Float.intBitsToFloat(predLongs(slot).toInt))
-                case CsvPayload.TagBoolean   => vec.putBoolean(p, predLongs(slot) == 1L)
-                case CsvPayload.TagDate      => vec.putInt(p, predLongs(slot).toInt)
-                case CsvPayload.TagDecimal   =>
-                  if (intDecimal(k)) vec.putInt(p, predLongs(slot).toInt)
-                  else vec.putLong(p, predLongs(slot))
-                case _                       => vec.putLong(p, predLongs(slot))
+                case CsvPayload.TagArrLong  => child.putLong(off + cnt, CsvPayload.parseLong(b, ts, te))
+                case CsvPayload.TagArrFloat => child.putFloat(off + cnt, CsvPayload.parseFloat(b, ts, te))
+                case _                      => child.putDouble(off + cnt, CsvPayload.parseDouble(b, ts, te))
               }
-              p += 1
-            }
-          } else if (cursor.dictOf(j) != null) {
-            // dict-encoded stream: per-entry decode tables, per-row lookups
-            val d = cursor.dictOf(j)
-            if (dictStreams(k) ne d) refreshDict(k, tag, d)
-            val nulls = dictNulls(k)
-            if (tag == CsvPayload.TagString) {
-              vec.setDictionary(dictSpark(k))
-              val ids = vec.reserveDictionaryIds(BatchSize)
-              var p = 0
-              while (p < selN) {
-                val c = d.code(r0 + selRel(p))
-                if (nulls(c)) vec.putNull(p) else ids.putInt(p, c)
-                p += 1
-              }
-            } else {
-              val longs = dictLongs(k)
-              var p = 0
-              while (p < selN) {
-                val c = d.code(r0 + selRel(p))
-                if (nulls(c)) vec.putNull(p)
-                else (tag: @scala.annotation.switch) match {
-                  case CsvPayload.TagLong    => vec.putLong(p, longs(c))
-                  case CsvPayload.TagInt     => vec.putInt(p, longs(c).toInt)
-                  case CsvPayload.TagDouble  =>
-                    vec.putDouble(p, java.lang.Double.longBitsToDouble(longs(c)))
-                  case CsvPayload.TagFloat   =>
-                    vec.putFloat(p, java.lang.Float.intBitsToFloat(longs(c).toInt))
-                  case CsvPayload.TagBoolean => vec.putBoolean(p, longs(c) == 1L)
-                  case CsvPayload.TagDate    => vec.putInt(p, longs(c).toInt)
-                  case CsvPayload.TagDecimal =>
-                    if (intDecimal(k)) vec.putInt(p, longs(c).toInt) else vec.putLong(p, longs(c))
-                  case _                     => vec.putLong(p, longs(c))
-                }
-                p += 1
-              }
-            }
-          } else {
-            val bytes = cursor.colBytes(j)
-            var p = 0
-            while (p < selN) {
-              val r = r0 + selRel(p)
-              val s = cursor.valStart(j, r)
-              val e = cursor.valEnd(j, r)
-              if (CsvPayload.isNullMarker(bytes, s, e) ||
-                  (s >= e && tag != CsvPayload.TagString))
-                vec.putNull(p)
-              else (tag: @scala.annotation.switch) match {
-                case CsvPayload.TagString =>
-                  if (s >= e) vec.putByteArray(p, Array.emptyByteArray, 0, 0)
-                  else if (CsvPayload.escapeFree(bytes, s, e))
-                    vec.putByteArray(p, bytes, s, e - s)
-                  else {
-                    val u = CsvPayload.unescape(bytes, s, e, delim)
-                    vec.putByteArray(p, u.getBytes, 0, u.numBytes())
-                  }
-                case CsvPayload.TagLong    => vec.putLong(p, CsvPayload.parseLong(bytes, s, e))
-                case CsvPayload.TagInt     => vec.putInt(p, CsvPayload.parseInt(bytes, s, e))
-                case CsvPayload.TagDouble  => vec.putDouble(p, CsvPayload.parseDouble(bytes, s, e))
-                case CsvPayload.TagFloat   => vec.putFloat(p, CsvPayload.parseFloat(bytes, s, e))
-                case CsvPayload.TagBoolean => vec.putBoolean(p, bytes(s) == 't' || bytes(s) == 'T')
-                case CsvPayload.TagDate    => vec.putInt(p, CsvPayload.parseDateDays(bytes, s, e))
-                case CsvPayload.TagDecimal =>
-                  val un = CsvPayload.parseDecimalUnscaled(bytes, s, e, fieldScale(k))
-                  if (intDecimal(k)) vec.putInt(p, un.toInt) else vec.putLong(p, un)
-                case CsvPayload.TagTimestampMicros =>
-                  vec.putLong(p, CsvPayload.parseLong(bytes, s, e))
-                case _ =>
-                  val x =
-                    if (tsMicroDigits >= 0 && CsvPayload.isFixedLayout(bytes, s, e))
-                      CsvPayload.parseTimestampMicros(bytes, s, e)
-                    else {
-                      val inst = java.time.Instant.from(fmt.parse(CsvPayload.ascii(bytes, s, e)))
-                      inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-                    }
-                  vec.putLong(p, x)
-              }
-              p += 1
+              cnt += 1
+              if (te >= e) more = false else ts = te + 1
             }
           }
-          k += 1
+          vec.putArray(p, off, cnt)
+          off += cnt
         }
+        p += 1
       }
+    }
 
-      erase(new Iterator[ColumnarBatch] {
-        private var r0 = 0
-        private var inBlock = false
-        private var blockCertain = false
-        // ADAPTIVE fail-fast, the columnar mirror of the rows layout's probe:
-        // column-major eval is cheaper than row-major, but its bookkeeping
-        // (pred-cache writes, keep/selection maps, closure dispatch) is
-        // still pure overhead when a filter keeps ~everything — the r14
-        // JFR run put evalPredicates at 24% of columnar q1 samples against
-        // a 98%-keeping shipdate range the UNSORTED blocks can't prove
-        // certain. Probe batches measure refusals; low-refusal stretches
-        // skip evaluation (always sound: Spark's post-scan Filter
-        // re-applies every pushed predicate, and the footer-stats relation
-        // re-checks its rows), one batch per period re-probes. Certain
-        // blocks skip without probing at all.
-        private val ProbePeriod = 16
-        private var batchOrd = 0
-        private var evalOn = true // last evaluated batch's verdict
-        private def ensureRows(): Boolean = {
-          while (!inBlock || r0 >= cursor.rows) {
-            if (!cursor.nextBlock()) return false
-            inBlock = true
-            r0 = 0
-            // a Certain block's lines all pass: its per-row evaluation
-            // (and the pred-value cache) is a provable no-op
-            blockCertain = verdicts(cursor.blockOrd) == Certain
-            if (blockCertain && nPred > 0) FourMcScanMetrics.predElidedBlocks.add(1)
+    /** Splits the located map<string,string> values: unescaped keys and
+      * values land in the two child string vectors at SHARED offsets;
+      * putArray records the per-row (offset, count) the ColumnarMap
+      * accessor reads back. An empty field is an empty map.
+      */
+    private def fillMaps(vec: OnHeapColumnVector, selN: Int): Unit = {
+      val keyChild = vec.getChild(0)
+      val valChild = vec.getChild(1)
+      def put(child: WritableColumnVector, i: Int, b: Array[Byte], s: Int, e: Int): Unit =
+        if (s >= e) child.putByteArray(i, Array.emptyByteArray, 0, 0)
+        else {
+          val u = CsvPayload.unescape(b, s, e, delim)
+          child.putByteArray(i, u.getBytes, 0, u.numBytes())
+        }
+      var off = 0
+      var p = 0
+      while (p < selN) {
+        val b = fb(p)
+        val s = fs(p)
+        val e = fe(p)
+        if (s < 0 || CsvPayload.isNullMarker(b, s, e)) vec.putNull(p)
+        else {
+          val cnt = CsvPayload.countEntries(b, s, e)
+          keyChild.reserve(off + cnt)
+          valChild.reserve(off + cnt)
+          var ts = s
+          var m = 0
+          while (m < cnt) {
+            val te = CsvPayload.entryEnd(b, ts, e)
+            val eq = CsvPayload.kvSplit(b, ts, te)
+            put(keyChild, off + m, b, ts, if (eq < 0) te else eq)
+            val vs = if (eq < 0) te else eq + 1
+            if (eq >= 0 && CsvPayload.isNullMarker(b, vs, te)) valChild.putNull(off + m)
+            else put(valChild, off + m, b, vs, te)
+            ts = te + 1
+            m += 1
           }
-          true
+          vec.putArray(p, off, cnt)
+          off += cnt
         }
-        // the next block is read when a batch is asked for, not after the
-        // previous one is handed out: a consumer that stops (a LIMIT)
-        // reads no block past the one it stopped in
-        private var pending = false
-        private var primed = false
-        override def hasNext: Boolean = {
-          if (!primed) { pending = ensureRows(); primed = true }
-          pending
-        }
-        override def next(): ColumnarBatch = {
-          if (!hasNext) throw new NoSuchElementException
-          primed = false
-          var k = 0
-          while (k < nFields) { dataVectors(k).reset(); k += 1 }
-          val n = math.min(BatchSize, cursor.rows - r0)
-          val evalThis = nPred > 0 && !blockCertain &&
-            (evalOn || batchOrd % ProbePeriod == 0)
-          val selN =
-            if (!evalThis) {
-              if (nPred > 0) FourMcScanMetrics.predSkipBatches.add(1)
-              var r = 0
-              while (r < n) { selRel(r) = r; r += 1 }
-              n
-            } else {
-              FourMcScanMetrics.predEvalBatches.add(1)
-              val s = evalPredicates(r0, n)
-              // keep evaluating only when refusals clear ~12.5% of the batch
-              evalOn = (n - s).toLong * 8 >= n.toLong
-              s
-            }
-          fillColumns(r0, selN, replay = evalThis)
-          batchOrd += 1
-          r0 += n
-          batch.setNumRows(selN)
-          batch
-        }
-      })
-      } else {
-      lazy val fmt = java.time.format.DateTimeFormatter.ofPattern(tsFmt)
-        .withZone(java.time.ZoneOffset.UTC)
-      val lines =
-        FourMcFileFormat.csvLines(in, index, file, verdicts, permissive, read)
-      // per-FILE parse tags (micros-encoded timestamps carry tag 14)
-      val tags = CsvPayload.fileTags(fieldTags, fieldIdx, index.stats)
-
-      val dataVectors = OnHeapColumnVector.allocateColumns(BatchSize, requiredSchema)
-      val allVectors: Array[ColumnVector] =
-        dataVectors.map(v => v: ColumnVector) ++ partitionVectors(partitionSchema, file.partitionValues)
-      val batch = new ColumnarBatch(allVectors)
-      read.onFinish(batch.close())
-
-      val stride = neededFields + 1
-      val bufBytes = new Array[Array[Byte]](BatchSize)
-      val rowEnds = new Array[Int](BatchSize) // exclusive line end per buffered row
-      val starts = new Array[Int](BatchSize * stride)
-      // parsed filter-field values cached at buffer time so the column
-      // decode never parses a filter-bound field twice: primitives as raw
-      // long bits, strings as the unescaped UTF8String, nulls flagged
-      val nPred = predFields.length
-      val predLongs = new Array[Long](BatchSize * math.max(1, nPred))
-      val predObjs = new Array[AnyRef](BatchSize * math.max(1, nPred))
-      val predNulls = new Array[Boolean](BatchSize * math.max(1, nPred))
-      // column ordinal -> slot in the pred scratch (-1 = not filter-bound)
-      val predSlot: Array[Int] = Array.fill(nFields)(-1)
-      locally { var pi = 0; while (pi < nPred) { predSlot(predFields(pi)) = pi; pi += 1 } }
-
-      def pass(ps: Array[Any => Boolean], v: Any): Boolean = {
-        var pi = 0
-        while (pi < ps.length) { if (!ps(pi)(v)) return false; pi += 1 }
-        true
-      }
-
-      /** End offset of field `src` for buffered row `r` (exclusive) — the
-        * shared [[CsvPayload.fieldEnd]] semantics, flat-array base offset,
-        * bounded by the row's line end (slices live inside block buffers).
-        */
-      def fieldEnd(bytes: Array[Byte], base: Int, src: Int, s: Int, lineEnd: Int): Int =
-        CsvPayload.fieldEnd(bytes, delim, starts, base, src, s, neededFields, totalFields, lineEnd)
-
-      /** Boundary-scan the line slice `bytes[from, to)` into row slot `r`;
-        * evaluate the pushed filters on their fields; true = the row enters
-        * the batch.
-        */
-      def bufferLine(bytes: Array[Byte], from: Int, to: Int, r: Int): Boolean = {
-        val base = r * stride
-        CsvPayload.scanBoundaries(bytes, delim, starts, base, neededFields, totalFields,
-          from, to, firstField)
-        var pi = 0
-        while (pi < nPred) {
-          val k = predFields(pi)
-          val fp = fieldPreds(k)
-          val ps = fp.rest
-          val src = fieldIdx(k)
-          val s = starts(base + src)
-          val e = fieldEnd(bytes, base, src, s, to)
-          val tag = tags(k)
-          val slot = r * nPred + pi
-          var keep = true
-          // s > to: MISSING trailing field (an older-generation file under
-          // positional schema evolution) — null for every type, unlike a
-          // present-but-empty field (empty string for TagString)
-          if (s > to || CsvPayload.isNullMarker(bytes, s, e) ||
-              (s >= e && tag != CsvPayload.TagString)) {
-            keep = fp.nullPasses
-            predNulls(slot) = true
-          } else {
-            predNulls(slot) = false
-            (tag: @scala.annotation.switch) match {
-              case CsvPayload.TagString =>
-                val u = if (s >= e) org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8
-                        else CsvPayload.unescape(bytes, s, e, delim)
-                keep = pass(ps, u); predObjs(slot) = u
-              case CsvPayload.TagLong =>
-                val x = CsvPayload.parseLong(bytes, s, e)
-                keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                predLongs(slot) = x
-              case CsvPayload.TagInt =>
-                val x = CsvPayload.parseInt(bytes, s, e)
-                keep = fp.rangeOk(x.toLong) && (ps.length == 0 || pass(ps, x))
-                predLongs(slot) = x.toLong
-              case CsvPayload.TagDouble =>
-                val x = CsvPayload.parseDouble(bytes, s, e)
-                keep = pass(ps, x); predLongs(slot) = java.lang.Double.doubleToRawLongBits(x)
-              case CsvPayload.TagFloat =>
-                val x = CsvPayload.parseFloat(bytes, s, e)
-                keep = pass(ps, x); predLongs(slot) = java.lang.Float.floatToRawIntBits(x).toLong
-              case CsvPayload.TagBoolean =>
-                val x = bytes(s) == 't' || bytes(s) == 'T'
-                keep = pass(ps, x); predLongs(slot) = if (x) 1L else 0L
-              case CsvPayload.TagDate =>
-                val x = CsvPayload.parseDateDays(bytes, s, e)
-                keep = fp.rangeOk(x.toLong) && (ps.length == 0 || pass(ps, x))
-                predLongs(slot) = x.toLong
-              case CsvPayload.TagDecimal =>
-                val un = CsvPayload.parseDecimalUnscaled(bytes, s, e, fieldScale(k))
-                keep = fp.rangeOk(un) && (ps.length == 0 ||
-                  pass(ps, org.apache.spark.sql.types.Decimal(un, fieldPrec(k), fieldScale(k))))
-                predLongs(slot) = un
-              case CsvPayload.TagTimestampMicros =>
-                val x = CsvPayload.parseLong(bytes, s, e)
-                keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                predLongs(slot) = x
-              case _ =>
-                val x =
-                  if (tsMicroDigits >= 0 && CsvPayload.isFixedLayout(bytes, s, e))
-                    CsvPayload.parseTimestampMicros(bytes, s, e)
-                  else {
-                    val inst = java.time.Instant.from(fmt.parse(CsvPayload.ascii(bytes, s, e)))
-                    inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-                  }
-                keep = fp.rangeOk(x) && (ps.length == 0 || pass(ps, x))
-                predLongs(slot) = x
-            }
-          }
-          if (!keep) return false
-          pi += 1
-        }
-        bufBytes(r) = bytes
-        rowEnds(r) = to
-        true
-      }
-
-      /** Boundary-scan only (no predicate evaluation): rows always enter
-        * the batch; used when predicates are absent or adaptively skipped.
-        */
-      def bufferPlain(bytes: Array[Byte], from: Int, to: Int, r: Int): Unit = {
-        CsvPayload.scanBoundaries(bytes, delim, starts, r * stride, neededFields, totalFields,
-          from, to, firstField)
-        bufBytes(r) = bytes
-        rowEnds(r) = to
-      }
-
-      /** Column-major decode of buffered rows [0, n) into the vectors;
-        * with `replay`, filter-bound columns reuse the values parsed at
-        * buffer time (only valid for batches that ran [[bufferLine]]).
-        */
-      def decodeColumns(n: Int, replay: Boolean): Unit = {
-        var k = 0
-        while (k < nFields) {
-          val vec = dataVectors(k)
-          val src = fieldIdx(k)
-          val tag = tags(k)
-          val slot0 = if (replay) predSlot(k) else -1
-          if (CsvPayload.isArrayTag(tag)) {
-            // dedicated column loop: elements land in the CHILD vector at
-            // explicit indices (one reserve per row, no per-element append
-            // bookkeeping — measured 1.4x over appendLong-per-element),
-            // putArray records (offset, count) per row. child was reset with
-            // the parent (reset() cascades), so offsets restart at 0.
-            val child = vec.arrayData()
-            var off = 0
-            var r = 0
-            while (r < n) {
-              val bytes = bufBytes(r)
-              val base = r * stride
-              val s = starts(base + src)
-              val e = fieldEnd(bytes, base, src, s, rowEnds(r))
-              // s > rowEnds(r): missing trailing field (schema evolution) -> null
-              if (s > rowEnds(r) || CsvPayload.isNullMarker(bytes, s, e)) vec.putNull(r)
-              else {
-                // single-pass split+parse: tokens ≤ (len+1)/2 bounds the
-                // reserve (1-byte token + separator repeating), so no
-                // counting pre-scan touches the field bytes twice
-                var j = 0
-                if (s < e) {
-                  child.reserve(off + ((e - s) >> 1) + 1)
-                  var ts = s
-                  var more = true
-                  while (more) {
-                    var te = ts
-                    while (te < e && bytes(te) != CsvPayload.ElemSep) te += 1
-                    if (CsvPayload.isNullElem(bytes, ts, te)) child.putNull(off + j)
-                    else (tag: @scala.annotation.switch) match {
-                      case CsvPayload.TagArrLong =>
-                        child.putLong(off + j, CsvPayload.parseLong(bytes, ts, te))
-                      case CsvPayload.TagArrFloat =>
-                        child.putFloat(off + j, CsvPayload.parseFloat(bytes, ts, te))
-                      case _ =>
-                        child.putDouble(off + j, CsvPayload.parseDouble(bytes, ts, te))
-                    }
-                    j += 1
-                    if (te >= e) more = false else ts = te + 1
-                  }
-                }
-                vec.putArray(r, off, j)
-                off += j
-              }
-              r += 1
-            }
-            k += 1
-          } else if (tag == CsvPayload.TagMap) {
-            // map<string,string>: unescaped keys/values land in the two
-            // child string vectors at SHARED offsets; putArray records the
-            // per-row (offset, count) the ColumnarMap accessor reads back.
-            // Maps are never filter-bound (compileFilters refuses them), so
-            // there is no replay variant.
-            val keyChild = vec.getChild(0)
-            val valChild = vec.getChild(1)
-            var off = 0
-            var r = 0
-            while (r < n) {
-              val bytes = bufBytes(r)
-              val base = r * stride
-              val s = starts(base + src)
-              val e = fieldEnd(bytes, base, src, s, rowEnds(r))
-              // s > rowEnds(r): missing trailing field (schema evolution) -> null
-              if (s > rowEnds(r) || CsvPayload.isNullMarker(bytes, s, e)) vec.putNull(r)
-              else {
-                val cnt = CsvPayload.countEntries(bytes, s, e) // empty field = empty map
-                keyChild.reserve(off + cnt)
-                valChild.reserve(off + cnt)
-                var ts = s
-                var j = 0
-                while (j < cnt) {
-                  val te = CsvPayload.entryEnd(bytes, ts, e)
-                  val eq = CsvPayload.kvSplit(bytes, ts, te)
-                  val ke = if (eq < 0) te else eq
-                  if (ts >= ke) keyChild.putByteArray(off + j, Array.emptyByteArray, 0, 0)
-                  else {
-                    val u = CsvPayload.unescape(bytes, ts, ke, delim)
-                    keyChild.putByteArray(off + j, u.getBytes, 0, u.numBytes())
-                  }
-                  val vs0 = if (eq < 0) te else eq + 1
-                  if (eq >= 0 && CsvPayload.isNullMarker(bytes, vs0, te)) valChild.putNull(off + j)
-                  else if (vs0 >= te) valChild.putByteArray(off + j, Array.emptyByteArray, 0, 0)
-                  else {
-                    val u = CsvPayload.unescape(bytes, vs0, te, delim)
-                    valChild.putByteArray(off + j, u.getBytes, 0, u.numBytes())
-                  }
-                  ts = te + 1
-                  j += 1
-                }
-                vec.putArray(r, off, cnt)
-                off += cnt
-              }
-              r += 1
-            }
-            k += 1
-          } else if (slot0 >= 0) {
-            var r = 0
-            while (r < n) {
-              val slot = r * nPred + slot0
-              if (predNulls(slot)) vec.putNull(r)
-              else (tag: @scala.annotation.switch) match {
-                case CsvPayload.TagString =>
-                  val u = predObjs(slot).asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-                  vec.putByteArray(r, u.getBytes, 0, u.numBytes())
-                case CsvPayload.TagLong      => vec.putLong(r, predLongs(slot))
-                case CsvPayload.TagInt       => vec.putInt(r, predLongs(slot).toInt)
-                case CsvPayload.TagDouble    =>
-                  vec.putDouble(r, java.lang.Double.longBitsToDouble(predLongs(slot)))
-                case CsvPayload.TagFloat     =>
-                  vec.putFloat(r, java.lang.Float.intBitsToFloat(predLongs(slot).toInt))
-                case CsvPayload.TagBoolean   => vec.putBoolean(r, predLongs(slot) == 1L)
-                case CsvPayload.TagDate      => vec.putInt(r, predLongs(slot).toInt)
-                case CsvPayload.TagDecimal   =>
-                  if (intDecimal(k)) vec.putInt(r, predLongs(slot).toInt)
-                  else vec.putLong(r, predLongs(slot))
-                case _                       => vec.putLong(r, predLongs(slot))
-              }
-              r += 1
-            }
-            k += 1
-          } else {
-          var r = 0
-          while (r < n) {
-            val bytes = bufBytes(r)
-            val base = r * stride
-            val s = starts(base + src)
-            val e = fieldEnd(bytes, base, src, s, rowEnds(r))
-            // (no array-tag clause: array columns are captured by the
-            // dedicated branch above and never reach this scalar loop)
-            if (s > rowEnds(r) || CsvPayload.isNullMarker(bytes, s, e) ||
-                (s >= e && tag != CsvPayload.TagString))
-              vec.putNull(r)
-            else (tag: @scala.annotation.switch) match {
-              case CsvPayload.TagString =>
-                if (s >= e) vec.putByteArray(r, Array.emptyByteArray, 0, 0)
-                else if (CsvPayload.escapeFree(bytes, s, e))
-                  // the common case writes the line bytes straight into the
-                  // vector's contiguous child array: one copy, zero
-                  // allocation (the old UTF8String round-trip allocated a
-                  // fresh byte[] per value via getBytes — ~2 allocations/row
-                  // on q1's two group-by strings at 30M rows)
-                  vec.putByteArray(r, bytes, s, e - s)
-                else {
-                  val u = CsvPayload.unescape(bytes, s, e, delim)
-                  vec.putByteArray(r, u.getBytes, 0, u.numBytes())
-                }
-              case CsvPayload.TagLong    => vec.putLong(r, CsvPayload.parseLong(bytes, s, e))
-              case CsvPayload.TagInt     => vec.putInt(r, CsvPayload.parseInt(bytes, s, e))
-              case CsvPayload.TagDouble  => vec.putDouble(r, CsvPayload.parseDouble(bytes, s, e))
-              case CsvPayload.TagFloat   => vec.putFloat(r, CsvPayload.parseFloat(bytes, s, e))
-              case CsvPayload.TagBoolean => vec.putBoolean(r, bytes(s) == 't' || bytes(s) == 'T')
-              case CsvPayload.TagDate    => vec.putInt(r, CsvPayload.parseDateDays(bytes, s, e))
-              case CsvPayload.TagDecimal =>
-                // compact decimals store the unscaled value in the vector's
-                // int/long lanes (the same layout Spark's parquet reader
-                // fills); precision picks the lane
-                val un = CsvPayload.parseDecimalUnscaled(bytes, s, e, fieldScale(k))
-                if (intDecimal(k)) vec.putInt(r, un.toInt) else vec.putLong(r, un)
-              case CsvPayload.TagTimestampMicros =>
-                vec.putLong(r, CsvPayload.parseLong(bytes, s, e))
-              case _ =>
-                val x =
-                  if (tsMicroDigits >= 0 && CsvPayload.isFixedLayout(bytes, s, e))
-                    CsvPayload.parseTimestampMicros(bytes, s, e)
-                  else {
-                    val inst = java.time.Instant.from(fmt.parse(CsvPayload.ascii(bytes, s, e)))
-                    inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-                  }
-                vec.putLong(r, x)
-            }
-            r += 1
-          }
-          k += 1
-          }
-        }
-      }
-
-      erase(new Iterator[ColumnarBatch] {
-        // ADAPTIVE fail-fast: buffer-time predicate evaluation parses
-        // filter-bound fields row-major, which costs ~2-3x their
-        // column-major decode. That is a bargain when rows get refuted
-        // (refuted rows skip batch entry entirely) and pure overhead when
-        // the filter passes ~everything (Spark's post-scan Filter
-        // re-applies every pushed predicate, and the footer-stats relation
-        // re-checks its rows, so skipping evaluation here is always
-        // sound). Probe batches measure the refusal rate; when
-        // a probe refuses almost nothing, the next PROBE_PERIOD-1 batches
-        // skip evaluation and decode column-major, then one batch
-        // re-probes (catches mid-file selectivity shifts the block-stats
-        // pruning didn't already absorb).
-        private val ProbePeriod = 16
-        // Keep evaluation only when refusals BUY more than the row-major
-        // premium costs. A refused row saves ~nFields column decodes plus
-        // its batch slot; a kept row pays ~1-2 extra field-decodes of
-        // row-major parse premium (the value itself replays from the pred
-        // cache). Break-even refusal is therefore a double-digit
-        // percentage, not the old 1.6%: the r13 JFR run showed q1's
-        // ~3.5%-refusing shipdate filter keeping evaluation ON and
-        // bufferLine at 23% of all samples — pure loss. q6-class filters
-        // (>90% refused) sit far above any sane threshold either way.
-        private val MinRefusals = BatchSize / 8 // < 12.5% refused → skip
-        private var batchOrd = 0
-        private var evalOn = true // last probe's verdict
-        // zero-copy lookahead: slices point into the decompressed block
-        // buffers (no per-line array, no per-line tuple); the buffered
-        // offsets stay valid because block buffers are fresh per block and
-        // bufBytes pins the few blocks a batch spans
-        private var pending = lines.advanceSlice()
-
-        override def hasNext: Boolean = pending
-        override def next(): ColumnarBatch = {
-          var k = 0
-          while (k < nFields) { dataVectors(k).reset(); k += 1 }
-          var n = 0
-          if (nPred == 0) {
-            while (n < BatchSize && pending) {
-              bufferPlain(lines.sliceBytes, lines.sliceStart, lines.sliceEnd, n)
-              n += 1
-              pending = lines.advanceSlice()
-            }
-            decodeColumns(n, replay = false)
-          } else if (evalOn || batchOrd % ProbePeriod == 0) {
-            var refused = 0
-            while (n < BatchSize && pending) {
-              if (bufferLine(lines.sliceBytes, lines.sliceStart, lines.sliceEnd, n)) n += 1
-              else refused += 1
-              pending = lines.advanceSlice()
-            }
-            evalOn = refused >= MinRefusals
-            decodeColumns(n, replay = true)
-          } else {
-            // skip-evaluation mode: rows enter the batch unfiltered and the
-            // filter-bound columns decode column-major like any other
-            // (Spark's post-scan Filter applies the predicates)
-            while (n < BatchSize && pending) {
-              bufferPlain(lines.sliceBytes, lines.sliceStart, lines.sliceEnd, n)
-              n += 1
-              pending = lines.advanceSlice()
-            }
-            decodeColumns(n, replay = false)
-          }
-          batchOrd += 1
-          // release block-buffer references so a consumed batch doesn't pin
-          // decompressed blocks
-          var r = 0
-          while (r < n) { bufBytes(r) = null; r += 1 }
-          batch.setNumRows(n)
-          batch
-        }
-      })
+        p += 1
       }
     }
   }

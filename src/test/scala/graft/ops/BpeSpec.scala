@@ -135,4 +135,15 @@ class BpeSpec extends AnyFunSuite {
       assert(viaGreedy == viaArith, s"identity broke on '$tok'")
     }
   }
+
+  test("bpeSegmentStats tokenizes each row once in the optimized plan") {
+    import spark.implicits._
+    // a range source: a local relation would be folded by the optimizer
+    val docs = spark.range(4).select(lit("en").as("lang"), $"id".as("doc_id"),
+      concat(lit("the other answer "), $"id".cast("string")).as("text"))
+    val plan = Bpe.bpeSegmentStats(docs, "lang", "text").queryExecution.optimizedPlan
+    val tokenizes = plan.collect { case n => n.expressions.map(_.collect {
+      case t: graft.functions.TokensExpr => t }.size).sum }.sum
+    assert(tokenizes == 1, plan.treeString)
+  }
 }
