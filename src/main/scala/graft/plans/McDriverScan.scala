@@ -258,8 +258,7 @@ object McDriverScan {
     node.map { exec =>
       McDriverScanExec.interpreted(exec.conf) {
         // the sink behind each layer, top first; a Project hands the layer
-        // above its values as they are, with no copy into an UnsafeRow (a
-        // token array's copy costs more than the tokenizing)
+        // above its values as they are, with no copy into an UnsafeRow
         val top = layers.foldRight(sink) {
           case (ProjectExec(pl, c), next) =>
             val project = new InterpretedProjection(pl, c.output)
